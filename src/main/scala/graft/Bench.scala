@@ -352,7 +352,7 @@ object Bench {
     val calibRef: Double =
       if (contended) prevCalibMed.getOrElse(median(calib)) else median(calib)
     val envJson =
-      s"""{"cpus":$envCpus,"load_start":${f2(loadStart)},"load_end":${f2(loadEnd)},"proc_cpu_cores":${f2(ourCores)},"ext_load":${f2(extLoad)},"steal_pct":${f2(stealPct)},"calib":[${calib.map(f3).mkString(",")}],"calib_ref":${f3(calibRef)},"calib_drift_pct":${f2(calibDriftPct)},"calib_vs_prev_pct":${f2(calibVsPrevPct)},"retry_load":${
+      s"""{"cpus":$envCpus,"cpus_requested":$cpus,"load_start":${f2(loadStart)},"load_end":${f2(loadEnd)},"proc_cpu_cores":${f2(ourCores)},"ext_load":${f2(extLoad)},"steal_pct":${f2(stealPct)},"calib":[${calib.map(f3).mkString(",")}],"calib_ref":${f3(calibRef)},"calib_drift_pct":${f2(calibDriftPct)},"calib_vs_prev_pct":${f2(calibVsPrevPct)},"retry_load":${
         retryLoad.map { case (k, v) => "\"" + k + "\":" + f2(v) }
           .mkString("{", ",", "}")},"contended":$contended}"""
     // The harness that collects this output keeps only the LAST ~2000

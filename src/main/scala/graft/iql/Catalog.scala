@@ -438,6 +438,10 @@ final class Catalog(val spark: SparkSession) {
     }
   }
 
+  /** Cells (queries × (dim + nprobe)) up to which a distributed
+    * [[hnswSearchBatch]] bakes its queries into the plan as literals. */
+  @volatile private[graft] var batchLiteralCells: Long = 8192L
+
   /** k-NN probe of an index → DataFrame(id, distance), joinable with the
     * base relation (the HnswScan node, reference `src/ir/mod.rs:361-376`). */
   def hnswSearch(rel: String, vecCol: String, query: Array[Float], k: Int,
@@ -535,13 +539,9 @@ final class Catalog(val spark: SparkSession) {
           //    limits at the batch sizes the API targets.
           val dim = queries.head.length
           val literalCells = queries.length.toLong * (dim + nprobe)
-          // threshold overridable for tests (CatalogSpec forces the
-          // broadcast carrier on a small batch to pin row equality)
-          val literalCap = sys.props.get("graft.batchLiteralCells")
-            .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(8192L)
           import org.apache.spark.sql.functions.{array, explode, struct, typedLit}
           val cand: DataFrame =
-            if (literalCells <= literalCap) {
+            if (literalCells <= batchLiteralCells) {
               // small batch: (qi, qv, pc) bake into the plan as struct
               // literals under one per-row explode — no join, no
               // broadcast-exchange jobs (A/B: the broadcast carrier cost

@@ -15,44 +15,47 @@ import graft.plans.Fixpoint
   * recursive: semi-naive fixpoint via [[Fixpoint]]).
   */
 object Engine {
-  /** Closure-size bound for the DRIVER-LOCAL linear-TC maintenance fast
-    * path; above it the distributed affected-source path serves. Tests
-    * shrink it to pin the distributed path on small fixtures. */
-  @volatile private[graft] var tcLocalClosureCap: Long = 1000000L
-  /** Kill-switch for the driver-local rank riding round (A/B probing
-    * and a safety hatch; tests may pin the distributed algebra). */
-  @volatile private[graft] var rankLocalRideEnabled: Boolean =
-    sys.props.get("graft.rank.localRide").forall(_ != "false")
-  /** Kill-switch for the driver-resident aggregate-support mode. */
-  @volatile private[graft] var aggLocalSupportEnabled: Boolean =
-    sys.props.get("graft.agg.localSupport").forall(_ != "false")
-  /** Kill-switch for the over-cap keyed-parquet support path (tests pin
-    * the distributed anti-join commit with it off). */
-  @volatile private[graft] var supportParquetEnabled: Boolean =
-    sys.props.get("graft.agg.supportParquet").forall(_ != "false")
-  /** Driver-resident cap (rows) for the rank prefix-buffer local ride;
-    * tests shrink it to force the keyed-parquet PARTIAL mode on small
-    * fixtures. */
-  @volatile private[graft] var rankBufLocalCap: Long = 65536L
-  /** Row cap under which a within_radius view keeps the per-round
-    * literal materialize (driver-collectable = small); above it the
-    * parquet base + driver bag carry rides. Tests shrink it to force
-    * the carry on small fixtures. */
-  @volatile private[graft] var radiusCarryMinRows: Long = 65536L
-  /** Overlay-entry count past which a carrier folds into a fresh base
-    * write (one amortized state-sized pass per ~24 over-cap rounds).
-    * Tunable so fuzz can pin it low and exercise base-rewrite +
-    * grace-dir retirement interleaved with riding rounds. */
-  @volatile private[graft] var carrierFoldCap: Long = 49152L
+  /** Per-engine tuning: the caps and switches that pick each maintenance
+    * family's driver-local or distributed path. Defaults are production. */
+  final case class Limits(
+    /** Closure-size bound for the DRIVER-LOCAL linear-TC maintenance fast
+      * path; above it the distributed affected-source path serves. Tests
+      * shrink it to pin the distributed path on small fixtures. */
+    tcLocalClosureCap: Long = 1000000L,
+    /** Kill-switch for the driver-local rank riding round (A/B probing
+      * and a safety hatch; tests may pin the distributed algebra). */
+    rankLocalRideEnabled: Boolean = true,
+    /** Kill-switch for the driver-resident aggregate-support mode. */
+    aggLocalSupportEnabled: Boolean = true,
+    /** Kill-switch for the over-cap keyed-parquet support path (tests pin
+      * the distributed anti-join commit with it off). */
+    supportParquetEnabled: Boolean = true,
+    /** Driver-resident cap (rows) for the rank prefix-buffer local ride;
+      * tests shrink it to force the keyed-parquet PARTIAL mode on small
+      * fixtures. */
+    rankBufLocalCap: Long = 65536L,
+    /** Row cap under which a within_radius view keeps the per-round
+      * literal materialize (driver-collectable = small); above it the
+      * parquet base + driver bag carry rides. Tests shrink it to force
+      * the carry on small fixtures. */
+    radiusCarryMinRows: Long = 65536L,
+    /** Overlay-entry count past which a carrier folds into a fresh base
+      * write (one amortized state-sized pass per ~24 over-cap rounds).
+      * Tunable so fuzz can pin it low and exercise base-rewrite +
+      * grace-dir retirement interleaved with riding rounds. */
+    carrierFoldCap: Long = 49152L,
+    /** Test hook: force the distributed path (FixpointSpec-style pinning). */
+    localEval: Boolean = true)
+
+  /** Default caps, also read by name from outside the engine. */
+  val tcLocalClosureCap: Long = Limits().tcLocalClosureCap
+  val rankBufLocalCap: Long = Limits().rankBufLocalCap
+
   /** Base-size ceiling (plan-stats bytes) under which a conditional
     * delete probes for the eager literal-tombstone path; above it the
     * lazy replace defers the body scan into the next maintenance round
-    * (see the gate comment in [[Engine.deleteWhere]]). Tunable for
-    * tests/profiling. */
-  @volatile private[graft] var deleteLiteralMaxBaseBytes: Long =
-    sys.props.get("graft.delete.literalMaxBaseBytes")
-      .orElse(sys.env.get("GRAFT_DELETE_LITERAL_MAX")) // forked-JVM A/B
-      .map(_.toLong).getOrElse(524288L)
+    * (see the gate comment in [[Engine.deleteWhere]]). */
+  private val DeleteLiteralMaxBaseBytes = 524288L
 
   /** JVM-wide scratch root for over-cap support-table parquet layouts;
     * removed on JVM exit (individual dirs retire on compaction, one
@@ -91,7 +94,10 @@ object Engine {
   }
 }
 
-final class Engine(val catalog: Catalog) {
+final class Engine(val catalog: Catalog,
+    /** This engine's tuning, replaced whole. Volatile — tests flip it on
+      * one thread while server/engine threads read it. */
+    @volatile private[graft] var limits: Engine.Limits = Engine.Limits()) {
 
   /** First-k rows per group under a total sort order (reference
     * `src/code_generator/mod.rs:2462-2560` heap-based top-k). Grouped:
@@ -430,6 +436,9 @@ final class Engine(val catalog: Catalog) {
   /** Observability: how many resolves were served by incremental
     * maintenance instead of recomputation (tests assert on this). */
   private[graft] var maintainedCount: Long = 0L
+  /** Observability: linear-TC maintenance rounds served by the
+    * driver-local closure pass (under [[Engine.Limits.tcLocalClosureCap]]). */
+  private[graft] var tcLocalRounds: Long = 0L
 
   /** Auxiliary per-view COUNT_DISTINCT state: for a maintained view with
     * a count_distinct head column, the (group-keys, value) binding
@@ -504,7 +513,7 @@ final class Engine(val catalog: Catalog) {
     * by the delta, never the view. The served frame is base ANTI
     * overlay-keys UNION overlay-survivors, rebuilt per commit from the
     * same two parts (constant plan depth); when the overlay outgrows
-    * [[Engine.aggLocalSupportEnabled]]'s 64k sibling cap it folds into
+    * [[Engine.Limits.aggLocalSupportEnabled]]'s 64k sibling cap it folds into
     * a fresh base write (one amortized view-sized pass per ~24 over-cap
     * rounds). The reference holds this state as DD arrangements updated
     * in place (`src/incremental.rs:77-80`); a log-structured
@@ -562,7 +571,7 @@ final class Engine(val catalog: Catalog) {
     * key in [[carrierNo]]. */
   private def carrierOpen(key: String, frame: DataFrame,
       keyNames: Seq[String], servedMarker: DataFrame = null): Option[Carrier] = {
-    if (!Engine.supportParquetEnabled || carrierNo(key)) return None
+    if (!limits.supportParquetEnabled || carrierNo(key)) return None
     try {
       val dir = Engine.supportDir(key)
       val keyCols = keyNames.map(col)
@@ -631,7 +640,7 @@ final class Engine(val catalog: Catalog) {
         st.overlay.valuesIterator.flatten.toSeq: _*), st.litSchema)
     def ovAnti: DataFrame = sideOn(st.base,
       keyLit(st.overlay.keys, st.base, st.keyNames), st.keyNames, anti = true)
-    if (math.max(st.overlay.size.toLong, st.overlayRows) > Engine.carrierFoldCap) {
+    if (math.max(st.overlay.size.toLong, st.overlayRows) > limits.carrierFoldCap) {
       val dir2 = Engine.supportDir(st.tag)
       val keyCols = st.keyNames.map(col)
       ovAnti.union(ovLit).repartitionByRange(32, keyCols: _*)
@@ -662,20 +671,20 @@ final class Engine(val catalog: Catalog) {
     * semantics), and serve base.exceptAll(remLit).union(insLit) at
     * constant plan depth; bags past the cap fold into a fresh base
     * write (amortized). Gated to plan-stats-big views
-    * ([[Engine.radiusCarryMinRows]]) — small views keep the literal
+    * ([[Engine.Limits.radiusCarryMinRows]]) — small views keep the literal
     * materialize round the test corpus pins. None → the caller falls
     * back to that literal round. */
   private def radiusCarryRound(name: String, cached: DataFrame,
       cols: Seq[String], remRanked: DataFrame,
       insRanked: DataFrame): Option[DataFrame] = {
     val key = name + "#radius"
-    if (!Engine.supportParquetEnabled || carrierNo(key)) return None
+    if (!limits.supportParquetEnabled || carrierNo(key)) return None
     val spark = catalog.spark
     def drop(): Unit =
       carriers.remove(key).foreach(_.dirs.foreach(Engine.retireDir))
     val carried = carriers.get(key).filter(_.served eq cached)
     if (carried.isEmpty &&
-        collectMemoized(cached, Engine.radiusCarryMinRows).isDefined)
+        collectMemoized(cached, limits.radiusCarryMinRows).isDefined)
       return None // small view: the corpus-pinned literal round serves
     val remRows = Fixpoint.collectUpTo(remRanked, 8192L).getOrElse {
       drop(); return None // over-cap delta: fall back
@@ -732,7 +741,7 @@ final class Engine(val catalog: Catalog) {
         val out = untouched.union(kept)
         if (st.insBag.isEmpty) out else out.union(bagLit(st.insBag.toSeq))
       }
-    if (st.remBag.size + st.insBag.size > Engine.carrierFoldCap) {
+    if (st.remBag.size + st.insBag.size > limits.carrierFoldCap) {
       // fold the bags into a fresh base write (amortized); the
       // displaced dir ages through the grace queue
       try {
@@ -1293,7 +1302,7 @@ final class Engine(val catalog: Catalog) {
       } && reaches(r.head.rel))
     }
     val probed =
-      if (baseBytes > Engine.deleteLiteralMaxBaseBytes && feedsRankView) None
+      if (baseBytes > Engine.DeleteLiteralMaxBaseBytes && feedsRankView) None
       else graft.plans.Fixpoint.collectUpTo(castM, if (wide) 4096L else 65536L)
     probed match {
       case Some(rowsM) => catalog.deletePresent(atom.rel, rowsM.toSeq)
@@ -1931,7 +1940,7 @@ final class Engine(val catalog: Catalog) {
         // distributed semi/anti updates serve (the 100 TB shape), and
         // the view stops probing.
         val combinedLocal: Option[Array[org.apache.spark.sql.Row]] =
-          if (!Engine.aggLocalSupportEnabled || aggLocalBig(name)) None
+          if (!limits.aggLocalSupportEnabled || aggLocalBig(name)) None
           else aggLocalSupport.get(name).filter(_._1 eq combined).map(_._2)
             .orElse {
               val got = Fixpoint.collectUpTo(combined, 65536L)
@@ -2031,7 +2040,7 @@ final class Engine(val catalog: Catalog) {
               // resident-copy mode for the pairs table — same contract
               // as the combined frame above (identity-keyed, cap-gated)
               val pairsLocal: Option[Array[org.apache.spark.sql.Row]] =
-                if (!Engine.aggLocalSupportEnabled || aggLocalBig((name, i))) None
+                if (!limits.aggLocalSupportEnabled || aggLocalBig((name, i))) None
                 else aggLocalPairs.get((name, i)).filter(_._1 eq auxPRaw).map(_._2)
                   .orElse {
                     val got = Fixpoint.collectUpTo(auxP, 65536L)
@@ -2651,7 +2660,7 @@ final class Engine(val catalog: Catalog) {
         * fixed-width numerics and booleans order locally (strings are
         * still fine as EQUALITY-only merge keys). */
       def localRide(): Option[DataFrame] = {
-        if (!Engine.rankLocalRideEnabled) return None
+        if (!limits.rankLocalRideEnabled) return None
         def ordOk(dt: DataType): Boolean = dt match {
           case LongType | IntegerType | ShortType | ByteType | DoubleType |
                FloatType | BooleanType => true
@@ -2722,7 +2731,7 @@ final class Engine(val catalog: Catalog) {
           if (pqR.isDefined) None
           else rankLocalBuf.get(name).filter(_._1 eq buf0).map(_._2).orElse {
             if (aggLocalBig(("rank", name))) None
-            else Fixpoint.collectUpTo(buf0, Engine.rankBufLocalCap).orElse {
+            else Fixpoint.collectUpTo(buf0, limits.rankBufLocalCap).orElse {
               // memoized so later rounds skip the wasted probe (a
               // reseed clears it — the one event that can shrink it);
               // the first over-cap round transitions to parquet NOW
@@ -4529,7 +4538,7 @@ final class Engine(val catalog: Catalog) {
               acc.flatMap(a => Fixpoint.collectUpTo(f, Fixpoint.LocalEdgeRows).map(a ++ _))
             }
           val local = for {
-            cachedRows <- Fixpoint.collectUpTo(cached, Engine.tcLocalClosureCap)
+            cachedRows <- Fixpoint.collectUpTo(cached, limits.tcLocalClosureCap)
             insRows <- collectAll(insFrames)
             remRows <- collectAll(remFrames)
             // the post-change EDGE relation is only needed for deletes
@@ -4628,7 +4637,7 @@ final class Engine(val catalog: Catalog) {
               pairsDf(out.toSeq)
             }
           }
-          local match { case Some(df) => return Some(df); case None => () }
+          local match { case Some(df) => tcLocalRounds += 1; return Some(df); case None => () }
           // DISTRIBUTED affected-source maintenance — the same algorithm
           // past the driver caps: a pair (x, y) can only change if x
           // reached some changed edge's TAIL in the OLD closure (the
@@ -5334,7 +5343,7 @@ final class Engine(val catalog: Catalog) {
         removedOf: Map[String, DataFrame], deltaOf: Map[String, DataFrame],
         negChanged: Set[String], name: String,
         curOf: (String, Int) => DataFrame): Option[Map[String, DataFrame]] = {
-      if (LocalEval.disabled) return None
+      if (!limits.localEval) return None
       import org.apache.spark.sql.Row
       import scala.collection.immutable.ArraySeq
       val members = scc.toSeq
@@ -5764,7 +5773,7 @@ final class Engine(val catalog: Catalog) {
       * sizes, value types, or a demand restriction rule it out. */
     private def localSccFastPath(scc: Set[String],
         sccRules: Seq[Rule]): Option[Map[String, DataFrame]] = {
-      if (LocalEval.disabled || demand.nonEmpty) return None
+      if (!limits.localEval || demand.nonEmpty) return None
       val recRules = sccRules.filter(_.body.exists {
         case Pos(a) => scc(a.rel)
         case _ => false

@@ -46,11 +46,6 @@ import Ast._
   */
 object LocalEval {
 
-  /** Test hook: force the distributed path (FixpointSpec-style pinning).
-    * Volatile — tests flip it on one thread while server/engine threads
-    * read it. */
-  @volatile private[graft] var disabled = false
-
   /** Total derived-tuple budget across the SCC; past it the distributed
     * loop must run (matches the spirit of `Fixpoint.LocalTcNodes`'s
     * output bound — local results must fit comfortably on the driver). */

@@ -22,7 +22,8 @@ object Repl {
 
 final class Session(val spark: SparkSession,
                     val loadBasePath: String = ".",
-                    sharedKgs: mutable.LinkedHashMap[String, Catalog] = null) {
+                    sharedKgs: mutable.LinkedHashMap[String, Catalog] = null,
+                    limits: Engine.Limits = Engine.Limits()) {
   import Repl._
 
   /** KG map — injectable so a server can share persistent catalogs across
@@ -38,7 +39,7 @@ final class Session(val spark: SparkSession,
   def kg: String = currentKg
 
   def catalog: Catalog = kgs.synchronized { kgs(currentKg) }
-  def engine: Engine = engines.getOrElseUpdate(currentKg, new Engine(catalog))
+  def engine: Engine = engines.getOrElseUpdate(currentKg, new Engine(catalog, limits))
 
   /** WAL-lite durability (reference `src/storage/persist/wal.rs:14-21`
     * SEMANTICS, not format: mutations since the last snapshot replay on
@@ -336,7 +337,7 @@ final class Session(val spark: SparkSession,
     flag match {
       case Some("--replace") =>
         val tmp = new Catalog(spark)
-        new Engine(tmp).run(src)
+        new Engine(tmp, limits).run(src)
         tmp.relationNames.foreach(n => catalog.register(n, tmp.relation(n).get))
         tmp.rules.foreach(catalog.addRule)
         Text(Seq(s"loaded $p (replaced ${tmp.relationNames.length} relations)"))

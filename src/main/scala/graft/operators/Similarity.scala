@@ -254,13 +254,9 @@ object Similarity {
       else if (c2 == null) 1
       else {
         val x = c1.doubleValue(); val y = c2.doubleValue()
-        // Spark's nan-safe double ordering: x == y covers -0.0 vs 0.0,
-        // NaN == NaN, NaN greater than everything else
-        if (x == y) 0
-        else if (x < y) -1
-        else if (x > y) 1
-        else if (java.lang.Double.isNaN(x)) 1
-        else -1
+        // Spark's nan-safe double ordering: x == y covers -0.0 vs 0.0;
+        // Double.compare has NaN == NaN, NaN greater than everything else
+        if (x == y) 0 else java.lang.Double.compare(x, y)
       }
     if (byCos != 0) byCos > 0
     else if (p1 == null) p2 != null // ASC NULLS FIRST on the partner id

@@ -31,12 +31,7 @@ package graft.plans
   * binding scratch, loop deltas) skip the graveyard and release
   * eagerly. */
 object Graveyard {
-  // grace override for A/B drag measurement (seconds); default 10 min
-  // a malformed override falls back to the default — a bare .toLong here
-  // would throw at class init and break every retirement for the session
-  private val GraceNanos = sys.props.get("graft.graveyard.graceSec")
-    .orElse(sys.env.get("GRAFT_GRAVEYARD_GRACE_SEC"))
-    .flatMap(_.toLongOption).getOrElse(600L) * 1000L * 1000 * 1000
+  private val GraceNanos = 600L * 1000 * 1000 * 1000L // 10 min
   private val MinGraceNanos = 60L * 1000 * 1000 * 1000L // 1 min floor
   private val Max = 32
   private val MaxBytes = 2L * 1024 * 1024 * 1024 // 2 GiB of retired blocks

@@ -10,7 +10,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.iql.{Catalog, Repl, Session}
+import graft.iql.{Catalog, Engine, Repl, Session}
 
 /** Wire-protocol server: HTTP REST + WebSocket on one port, mirroring the
   * reference's production surface (`src/protocol/` — "HTTP Endpoints:
@@ -46,7 +46,8 @@ final class WireServer(spark: SparkSession, port: Int = 0,
                        // uncapped is explicit opt-in (constructor 0 or a
                        // per-message max_result_rows: 0 override)
                        maxResultRows: Long = 100000L,
-                       authEnabled: Boolean = false) {
+                       authEnabled: Boolean = false,
+                       limits: Engine.Limits = Engine.Limits()) {
 
   // ------------------------------------------------------------- auth
   // (reference `src/auth.rs`: random 64-hex API keys stored as SHA-256
@@ -212,7 +213,7 @@ final class WireServer(spark: SparkSession, port: Int = 0,
 
   def actualPort: Int = serverSocket.getLocalPort
 
-  private def newSession(): Session = new Session(spark, sharedKgs = kgs)
+  private def newSession(): Session = new Session(spark, sharedKgs = kgs, limits = limits)
 
   private val acceptThread = new Thread(() => {
     while (running) {

@@ -53,9 +53,9 @@ object ProfileOvercap {
     }
 
     if (what == "radius") (1 to 2).foreach { run =>
-      graft.iql.Engine.supportParquetEnabled = run == 2 // run 1 = legacy
       println(s"=== radius run $run (n=$n, carry=${run == 2}) ===")
-      val e = new graft.iql.Engine(new graft.iql.Catalog(spark))
+      val e = new graft.iql.Engine(new graft.iql.Catalog(spark),
+        graft.iql.Engine.Limits(supportParquetEnabled = run == 2)) // run 1 = legacy
       e.catalog.register("wbase", spark.range(n).select(
         col("id"), pmod(col("id"), lit(100L)).as("dept"),
         pmod(col("id") * 48271L, lit(500L)).as("sal")).localCheckpoint(true))

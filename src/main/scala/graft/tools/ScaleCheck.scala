@@ -383,7 +383,15 @@ object ScaleCheck {
     // covers the other naming family (plain lower via the
     // link-restricted recompute).
     def stackedAggProbe(n: Long): (Double, Long) = {
-      val e = new graft.iql.Engine(new graft.iql.Catalog(spark))
+      // pin BOTH scales onto the carrier: at 60k groups the support
+      // fits the driver-resident cap and rides a zero-Spark-action
+      // fast path, so the unpinned ratio compared two different modes
+      // (job counts 14 vs 19 — the carrier's IN-pruned dirty read is
+      // ~5 scheduler-latency jobs the resident mode never runs, a
+      // constant that read as a fake 100x slope). Carrier-vs-carrier
+      // isolates the claim under test: riding rounds stay delta-bound.
+      val e = new graft.iql.Engine(new graft.iql.Catalog(spark),
+        graft.iql.Engine.Limits(aggLocalSupportEnabled = false))
       e.catalog.register("pbase", spark.range(n).select(
         col("id"), pmod(col("id"), lit(100L)).as("dept"),
         pmod(col("id") * 48271L, lit(500L)).as("sal")).localCheckpoint(true))
@@ -410,14 +418,6 @@ object ScaleCheck {
       (med(samples.map(_._1)), samples.last._2)
     }
     try {
-      // pin BOTH scales onto the carrier: at 60k groups the support
-      // fits the driver-resident cap and rides a zero-Spark-action
-      // fast path, so the unpinned ratio compared two different modes
-      // (job counts 14 vs 19 — the carrier's IN-pruned dirty read is
-      // ~5 scheduler-latency jobs the resident mode never runs, a
-      // constant that read as a fake 100x slope). Carrier-vs-carrier
-      // isolates the claim under test: riding rounds stay delta-bound.
-      graft.iql.Engine.aggLocalSupportEnabled = false
       stackedAggProbe(60000L) // warm
       val (t1, n1) = stackedAggProbe(60000L)
       val (t10, n10) = stackedAggProbe(600000L)
@@ -435,7 +435,7 @@ object ScaleCheck {
     } catch {
       case ex: Throwable => println(
         s"""{"name":"stacked_agg_lower_requery","error":"${ex.getClass.getSimpleName}"}""")
-    } finally graft.iql.Engine.aggLocalSupportEnabled = true
+    }
 
     // ---- OVER-CAP RANK BUFFER riding rounds (r14): a top_k view with
     // a VIEW-SIZED group count (one group per id) carries a prefix
@@ -491,14 +491,15 @@ object ScaleCheck {
     // tracks the base — a view-sized re-query count would drown the
     // maintenance signal — hence the radius binds the ID column
     // (id <= 1000: exactly ~1001 rows at ANY base size) and the carry
-    // gate is pinned open (radiusCarryMinRows = 0, the fuzz seam) so
-    // the small fixture still rides the production bag-carry path.
+    // gate is pinned open (radiusCarryMinRows = 0, as the radius fuzz
+    // pins it) so the small fixture still rides the production bag-carry path.
     // Timed quantity: five riding rounds' median — two delta-bound
     // collects plus driver bag math per round; the delete statement's
     // presence check is the only base-sized term (IN-pruned on the
     // parquet bases).
     def radiusProbe(n: Long, parquetBase: Boolean)(dummy: Long): (Double, Long) = {
-      val e = new graft.iql.Engine(new graft.iql.Catalog(spark))
+      val e = new graft.iql.Engine(new graft.iql.Catalog(spark),
+        graft.iql.Engine.Limits(radiusCarryMinRows = 0L))
       val base0 = spark.range(n).select(
         col("id"), pmod(col("id"), lit(100L)).as("dept"),
         pmod(col("id") * 48271L, lit(500L)).as("sal"))
@@ -524,7 +525,6 @@ object ScaleCheck {
       (med(samples.map(_._1)), samples.last._2)
     }
     try {
-      graft.iql.Engine.radiusCarryMinRows = 0L // force the carry path
       radiusProbe(60000L, parquetBase = false)(0L) // warm
       val (t1, n1) = radiusProbe(60000L, parquetBase = false)(0L)
       val (t10, n10) = radiusProbe(600000L, parquetBase = false)(0L)
@@ -538,7 +538,7 @@ object ScaleCheck {
     } catch {
       case ex: Throwable => println(
         s"""{"name":"radius_retract_requery","error":"${ex.getClass.getSimpleName}"}""")
-    } finally graft.iql.Engine.radiusCarryMinRows = 65536L
+    }
 
     // ---- MID-SIZE CONDITIONAL DELETE rounds at scale (r13 directive
     // #6: the conditional-delete literal path had no ScaleCheck entry).

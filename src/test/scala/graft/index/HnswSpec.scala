@@ -348,12 +348,10 @@ class HnswSpec extends SparkSpec {
     // r16: LARGE batches ride a broadcast (qi, qv, pc) frame instead of
     // plan literals — force that carrier on the same small batch and
     // pin row equality against the literal carrier's results
-    System.setProperty("graft.batchLiteralCells", "0")
-    try {
-      for (ef <- Seq(64, 16 * 16))
-        assert(batchRows(catD, "bvecs", ef) == singleRows(catD, "bvecs", ef),
-          s"broadcast-carrier batch != per-query at efSearch=$ef")
-    } finally System.clearProperty("graft.batchLiteralCells")
+    catD.batchLiteralCells = 0L
+    for (ef <- Seq(64, 16 * 16))
+      assert(batchRows(catD, "bvecs", ef) == singleRows(catD, "bvecs", ef),
+        s"broadcast-carrier batch != per-query at efSearch=$ef")
   }
 
   test("tombstone ratio past threshold auto-rebuilds the graph") {

@@ -9,7 +9,8 @@ class EngineSpec extends SparkSpec {
 
   private def engine = new Engine(new Catalog(spark))
 
-  private def query(src: String): Set[Seq[Any]] = rows(engine.run(src).last)
+  private def query(src: String, limits: Engine.Limits = Engine.Limits()): Set[Seq[Any]] =
+    rows(new Engine(new Catalog(spark), limits).run(src).last)
 
   test("analyze stats steer the join order toward the smallest relation") {
     import org.apache.spark.sql.functions.col
@@ -445,22 +446,41 @@ class EngineSpec extends SparkSpec {
         |""".stripMargin)
     assert(rows(e.run("?r(X, Y)").last).size == 9)
     val before = e.maintainedCount
-    Engine.tcLocalClosureCap = 1L // pin the distributed path
-    try {
-      // delete inside the 1-2-3-4 chain: the 10-11-12 component is
-      // UNAFFECTED and must pass through verbatim (the anti-join side)
+    e.limits = e.limits.copy(tcLocalClosureCap = 1L) // pin the distributed path
+    // delete inside the 1-2-3-4 chain: the 10-11-12 component is
+    // UNAFFECTED and must pass through verbatim (the anti-join side)
+    e.run("-ed[(2, 3)]")
+    assert(rows(e.run("?r(X, Y)").last) == Set(
+      Seq(1L, 2L), Seq(3L, 4L),
+      Seq(10L, 11L), Seq(10L, 12L), Seq(11L, 12L)))
+    assert(e.maintainedCount == before + 1,
+      "distributed affected-source delete should maintain, not recompute")
+    // mixed round: delete one component's edge + insert a bridge
+    e.run("-ed[(10, 11)]\n+ed[(2, 4)]")
+    assert(rows(e.run("?r(X, Y)").last) == Set(
+      Seq(1L, 2L), Seq(1L, 4L), Seq(2L, 4L), Seq(3L, 4L), Seq(11L, 12L)))
+    assert(e.maintainedCount == before + 2)
+  }
+
+  test("two engines on one session maintain a TC view in parallel, each under its own limits") {
+    // run at the same time on the shared session, each engine's delete
+    // round takes the path its OWN closure cap picks
+    val Seq(capped, default) = Seq(Engine.Limits(tcLocalClosureCap = 1L), Engine.Limits())
+      .map(l => new Engine(new Catalog(spark), l))
+    val results = new java.util.concurrent.ConcurrentHashMap[Engine, Set[Seq[Any]]]()
+    inParallel(Seq(capped, default), threads = 2) { e =>
+      assert(rows(e.run("+ed[(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)]\n" +
+        "+r(X, Y) <- ed(X, Y)\n+r(X, Z) <- r(X, Y), ed(Y, Z)\n?r(X, Y)").last).size == 9)
+      val before = e.maintainedCount
       e.run("-ed[(2, 3)]")
-      assert(rows(e.run("?r(X, Y)").last) == Set(
-        Seq(1L, 2L), Seq(3L, 4L),
-        Seq(10L, 11L), Seq(10L, 12L), Seq(11L, 12L)))
-      assert(e.maintainedCount == before + 1,
-        "distributed affected-source delete should maintain, not recompute")
-      // mixed round: delete one component's edge + insert a bridge
-      e.run("-ed[(10, 11)]\n+ed[(2, 4)]")
-      assert(rows(e.run("?r(X, Y)").last) == Set(
-        Seq(1L, 2L), Seq(1L, 4L), Seq(2L, 4L), Seq(3L, 4L), Seq(11L, 12L)))
-      assert(e.maintainedCount == before + 2)
-    } finally Engine.tcLocalClosureCap = 1000000L
+      results.put(e, rows(e.run("?r(X, Y)").last))
+      assert(e.maintainedCount == before + 1, "a delete round recomputed")
+    }
+    assert(results.get(capped) == results.get(default))
+    assert(results.get(capped) == Set(Seq(1L, 2L), Seq(3L, 4L),
+      Seq(10L, 11L), Seq(10L, 12L), Seq(11L, 12L)))
+    assert(capped.tcLocalRounds == 0L, "capped engine maintained driver-locally")
+    assert(default.tcLocalRounds == 1L, "default engine left the driver-local pass")
   }
 
   test("negation-dependent maintenance: inserts into a negated rel kill, removals create") {
@@ -1426,14 +1446,12 @@ class EngineSpec extends SparkSpec {
         |""".stripMargin)
     assert(rows(e.run("?p(X, Y)").last).size == 6)
     val before = e.maintainedCount
-    LocalEval.disabled = true
-    try {
-      e.run("-e[(2, 3)]")
-      e.run("+e[(2, 4)]")
-      assert(rows(e.run("?p(X, Y)").last) ==
-        Set(Seq(1L, 2L), Seq(3L, 4L), Seq(2L, 4L), Seq(1L, 4L)))
-      assert(e.maintainedCount == before + 1, "distributed mixed batch recomputed")
-    } finally LocalEval.disabled = false
+    e.limits = e.limits.copy(localEval = false)
+    e.run("-e[(2, 3)]")
+    e.run("+e[(2, 4)]")
+    assert(rows(e.run("?p(X, Y)").last) ==
+      Set(Seq(1L, 2L), Seq(3L, 4L), Seq(2L, 4L), Seq(1L, 4L)))
+    assert(e.maintainedCount == before + 1, "distributed mixed batch recomputed")
   }
 
   test("decremental shortest path: edge deletes maintain via suspect restart") {
@@ -1764,12 +1782,10 @@ class EngineSpec extends SparkSpec {
         |""".stripMargin)
     assert(rows(e.run("?tc(X, Y)").last).size == 6)
     val before = e.maintainedCount
-    LocalEval.disabled = true
-    try {
-      e.run("-edge[(2, 3)]")
-      assert(rows(e.run("?tc(X, Y)").last) ==
-        Set(Seq(1L, 2L), Seq(3L, 4L), Seq(1L, 3L), Seq(1L, 4L)))
-    } finally LocalEval.disabled = false
+    e.limits = e.limits.copy(localEval = false)
+    e.run("-edge[(2, 3)]")
+    assert(rows(e.run("?tc(X, Y)").last) ==
+      Set(Seq(1L, 2L), Seq(3L, 4L), Seq(1L, 3L), Seq(1L, 4L)))
     assert(e.maintainedCount == before + 1,
       "distributed recursive DRed should maintain when the local path is off")
   }
@@ -1785,12 +1801,10 @@ class EngineSpec extends SparkSpec {
     assert(rows(e.run("?odd(X, Y)").last).size == 4)
     assert(rows(e.run("?even(X, Y)").last).size == 2)
     val before = e.maintainedCount
-    LocalEval.disabled = true
-    try {
-      e.run("-edge[(2, 3)]")
-      assert(rows(e.run("?odd(X, Y)").last) == Set(Seq(1L, 2L), Seq(3L, 4L)))
-      assert(rows(e.run("?even(X, Y)").last) == Set.empty[Seq[Any]])
-    } finally LocalEval.disabled = false
+    e.limits = e.limits.copy(localEval = false)
+    e.run("-edge[(2, 3)]")
+    assert(rows(e.run("?odd(X, Y)").last) == Set(Seq(1L, 2L), Seq(3L, 4L)))
+    assert(rows(e.run("?even(X, Y)").last) == Set.empty[Seq[Any]])
     assert(e.maintainedCount >= before + 1,
       "distributed mutual-recursion DRed should maintain when the local path is off")
   }
@@ -1908,8 +1922,7 @@ class EngineSpec extends SparkSpec {
     * with it pinned off (distributed loop) — and require identical rows. */
   private def localVsDistributed(src: String): Set[Seq[Any]] = {
     val local = query(src)
-    LocalEval.disabled = true
-    val dist = try query(src) finally LocalEval.disabled = false
+    val dist = query(src, Engine.Limits(localEval = false))
     assert(local == dist, "local SCC fast path diverges from distributed loop")
     local
   }
@@ -1945,8 +1958,8 @@ class EngineSpec extends SparkSpec {
     e.run(s"+up[$ups]\n+down[$downs]\n+person[$persons]")
     e.run("+sg(X, X) <- person(X)\n+sg(X, Y) <- up(X, Z1), sg(Z1, Z2), down(Z2, Y)")
     val local = rows(e.run("?sg(5, Y)").last)
-    LocalEval.disabled = true
-    val dist = try rows(e.run("?sg(5, Y)").last) finally LocalEval.disabled = false
+    e.limits = e.limits.copy(localEval = false)
+    val dist = rows(e.run("?sg(5, Y)").last)
     assert(local == dist)
     assert(local.map(_.last) == Set(3L, 4L, 5L, 6L)) // 5's generation (depth 2)
   }
@@ -2001,9 +2014,7 @@ class EngineSpec extends SparkSpec {
         |?r(X, Y)
         |""".stripMargin
     val localErr = intercept[Exception](query(src)).getMessage
-    LocalEval.disabled = true
-    val distErr = try intercept[Exception](query(src)).getMessage
-      finally LocalEval.disabled = false
+    val distErr = intercept[Exception](query(src, Engine.Limits(localEval = false))).getMessage
     assert(localErr == distErr)
     assert(localErr.contains("shares no variables"))
   }

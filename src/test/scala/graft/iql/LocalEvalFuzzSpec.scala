@@ -12,6 +12,8 @@ import scala.util.Random
   * guards, and stratified negation. Seed is fixed — failures reproduce. */
 class LocalEvalFuzzSpec extends SparkSpec {
 
+  private val distributedLoop = Engine.Limits(localEval = false) // local SCC evaluator off
+
   private def randomProgram(rng: Random): String = {
     val nNodes = 4 + rng.nextInt(5)
     val nEdges = 4 + rng.nextInt(8)
@@ -67,10 +69,7 @@ class LocalEvalFuzzSpec extends SparkSpec {
     val t0 = System.nanoTime
     val local = nn(rows(new Engine(new Catalog(spark)).run(src).last))
     val localSec = (System.nanoTime - t0) / 1e9
-    LocalEval.disabled = true
-    val dist =
-      try nn(rows(new Engine(new Catalog(spark)).run(src).last))
-      finally LocalEval.disabled = false
+    val dist = nn(rows(new Engine(new Catalog(spark), distributedLoop).run(src).last))
     assert(local == dist)
     assert(local == Set(Seq(1L, "NaN"), Seq(2L, "NaN"), Seq(3L, "NaN")))
     assert(localSec < 30.0, s"NaN tuples churned instead of deduping ($localSec s)")
@@ -218,11 +217,9 @@ class LocalEvalFuzzSpec extends SparkSpec {
       val local =
         try Right(rows(new Engine(new Catalog(spark)).run(src).last))
         catch { case ex: Exception => Left(ex.getClass.getName) }
-      LocalEval.disabled = true
       val dist =
-        try Right(rows(new Engine(new Catalog(spark)).run(src).last))
+        try Right(rows(new Engine(new Catalog(spark), distributedLoop).run(src).last))
         catch { case ex: Exception => Left(ex.getClass.getName) }
-        finally LocalEval.disabled = false
       assert(local == dist,
         s"case $i diverged:\n$src\nlocal=$local\ndistributed=$dist")
     }

@@ -75,44 +75,42 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("distributed affected-source TC maintenance equals fresh recomputation on random graphs") {
     val rng = new Random(20260819L)
-    Engine.tcLocalClosureCap = 1L // pin the distributed path
-    try {
-      (1 to fuzzCases(8)).foreach { c =>
-        val nNodes = 5 + rng.nextInt(5)
-        val edgeSet = scala.collection.mutable.LinkedHashSet.from(
-          Seq.fill(6 + rng.nextInt(8))((rng.nextInt(nNodes), rng.nextInt(nNodes))))
-        def edgeStr(es: Iterable[(Int, Int)]) =
-          es.map { case (a, b) => s"($a, $b)" }.mkString(",")
-        val rules = "+r(X, Y) <- ed(X, Y)\n+r(X, Z) <- r(X, Y), ed(Y, Z)\n"
-        val e1 = new Engine(new Catalog(spark))
-        e1.run(s"+ed[${edgeStr(edgeSet)}]\n$rules")
-        e1.run("?r(X, Y)")
-        val m0 = e1.maintainedCount
-        var rounds = 0
-        (0 until 2).foreach { round =>
-          val dels = Seq.fill(1 + rng.nextInt(2))(
-            edgeSet.toSeq(rng.nextInt(edgeSet.size))).distinct
-          dels.foreach(edgeSet.remove)
-          val ins =
-            if (rng.nextBoolean()) {
-              val t = (rng.nextInt(nNodes), rng.nextInt(nNodes))
-              if (edgeSet.add(t)) Some(t) else None
-            } else None
-          e1.run(s"-ed[${edgeStr(dels)}]" +
-            ins.map(t => s"\n+ed[${edgeStr(Seq(t))}]").getOrElse(""))
-          rounds += 1
-          val maintained = rows(e1.run("?r(X, Y)").last)
-          val e2 = new Engine(new Catalog(spark))
-          if (edgeSet.nonEmpty) {
-            e2.run(s"+ed[${edgeStr(edgeSet)}]\n$rules")
-            assert(maintained == rows(e2.run("?r(X, Y)").last),
-              s"case $c round $round diverged; edges=$edgeSet dels=$dels ins=$ins")
-          } else assert(maintained.isEmpty)
-        }
-        assert(e1.maintainedCount == m0 + rounds,
-          s"case $c: a TC round recomputed instead of maintaining")
+    val limits = Engine.Limits(tcLocalClosureCap = 1L) // pin the distributed path
+    (1 to fuzzCases(8)).foreach { c =>
+      val nNodes = 5 + rng.nextInt(5)
+      val edgeSet = scala.collection.mutable.LinkedHashSet.from(
+        Seq.fill(6 + rng.nextInt(8))((rng.nextInt(nNodes), rng.nextInt(nNodes))))
+      def edgeStr(es: Iterable[(Int, Int)]) =
+        es.map { case (a, b) => s"($a, $b)" }.mkString(",")
+      val rules = "+r(X, Y) <- ed(X, Y)\n+r(X, Z) <- r(X, Y), ed(Y, Z)\n"
+      val e1 = new Engine(new Catalog(spark), limits)
+      e1.run(s"+ed[${edgeStr(edgeSet)}]\n$rules")
+      e1.run("?r(X, Y)")
+      val m0 = e1.maintainedCount
+      var rounds = 0
+      (0 until 2).foreach { round =>
+        val dels = Seq.fill(1 + rng.nextInt(2))(
+          edgeSet.toSeq(rng.nextInt(edgeSet.size))).distinct
+        dels.foreach(edgeSet.remove)
+        val ins =
+          if (rng.nextBoolean()) {
+            val t = (rng.nextInt(nNodes), rng.nextInt(nNodes))
+            if (edgeSet.add(t)) Some(t) else None
+          } else None
+        e1.run(s"-ed[${edgeStr(dels)}]" +
+          ins.map(t => s"\n+ed[${edgeStr(Seq(t))}]").getOrElse(""))
+        rounds += 1
+        val maintained = rows(e1.run("?r(X, Y)").last)
+        val e2 = new Engine(new Catalog(spark), limits)
+        if (edgeSet.nonEmpty) {
+          e2.run(s"+ed[${edgeStr(edgeSet)}]\n$rules")
+          assert(maintained == rows(e2.run("?r(X, Y)").last),
+            s"case $c round $round diverged; edges=$edgeSet dels=$dels ins=$ins")
+        } else assert(maintained.isEmpty)
       }
-    } finally Engine.tcLocalClosureCap = 1000000L
+      assert(e1.maintainedCount == m0 + rounds,
+        s"case $c: a TC round recomputed instead of maintaining")
+    }
   }
 
   test("negation-dependent maintenance equals fresh recomputation on random mutation streams") {
@@ -575,12 +573,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
   }
 
   private def topkFuzz(forcePartial: Boolean): Unit = {
-    if (forcePartial) Engine.rankBufLocalCap = 0L
-    try topkFuzzBody(forcePartial)
-    finally Engine.rankBufLocalCap = 65536L
-  }
-
-  private def topkFuzzBody(forcePartial: Boolean): Unit = {
+    val limits = if (forcePartial) Engine.Limits(rankBufLocalCap = 0L) else Engine.Limits()
     val rng = new Random(20260830L)
     (1 to fuzzCases(8)).foreach { c =>
       val groups = Seq("a", "b")
@@ -610,7 +603,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       def bag(e: Engine): Map[Seq[Any], Int] =
         e.run("?v(G, N, X)").last.collect().toSeq.map(_.toSeq)
           .groupBy(identity).view.mapValues(_.size).toMap
-      val e1 = new Engine(new Catalog(spark))
+      val e1 = new Engine(new Catalog(spark), limits)
       e1.run(s"+t[${insBatch(10 + rng.nextInt(8))}]\n$rule")
       e1.run("?v(G, N, X)")
       val decStart = e1.rankDecrementCount
@@ -633,7 +626,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
         val expected =
           if (live.isEmpty) Map.empty[Seq[Any], Int]
           else {
-            val e2 = new Engine(new Catalog(spark))
+            val e2 = new Engine(new Catalog(spark), limits)
             e2.run(s"+t[${live.mkString(",")}]\n$rule")
             bag(e2)
           }
@@ -652,7 +645,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
   }
 
   test("within_radius mutation streams equal fresh recomputation (literal rounds)") {
-    radiusFuzz(forceCarry = false)
+    radiusFuzz(Engine.Limits())
   }
 
   test("within_radius mutation streams via the BIG-VIEW parquet carry (gate pinned to 0)") {
@@ -660,7 +653,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // rem/ins bags (the r14 scale path for view-sized radius filters)
     // and must still equal fresh recomputation — including the
     // sequential bag semantics the ins-cancel preserves
-    radiusFuzz(forceCarry = true)
+    radiusFuzz(Engine.Limits(radiusCarryMinRows = 0L))
   }
 
   test("within_radius carry folds mid-stream (fold cap pinned low)") {
@@ -670,72 +663,66 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // and retires the displaced dir, under the same differential
     // comparison (the radius filter passes ~1/3 of mutations, so a
     // small positive cap rarely fires on these fixtures)
-    radiusFuzz(forceCarry = true, foldCap = 0L)
+    radiusFuzz(Engine.Limits(radiusCarryMinRows = 0L, carrierFoldCap = 0L))
   }
 
-  private def radiusFuzz(forceCarry: Boolean, foldCap: Long = 49152L): Unit = {
-    if (forceCarry) Engine.radiusCarryMinRows = 0L
-    Engine.carrierFoldCap = foldCap
+  private def radiusFuzz(limits: Engine.Limits): Unit = {
+    val forceCarry = limits.radiusCarryMinRows == 0L
     var totalFolds = 0L
-    try {
-      val rng = new Random(20260916L)
-      (1 to fuzzCases(6)).foreach { c =>
-        val groups = Seq("a", "b")
-        var nextId = 0
-        val live = scala.collection.mutable.ArrayBuffer.empty[String]
-        def mkTuple(): String = {
-          nextId += 1
-          s"""($nextId, "${groups(rng.nextInt(groups.size))}", ${rng.nextInt(12)})"""
-        }
-        def insBatch(n: Int): String = (0 until n).map { _ =>
-          val t = mkTuple(); live += t; t
-        }.mkString(",")
-        val rule = "+w(G, within_radius<3, I, X>) <- t(I, G, X)\n"
-        def bag(e: Engine): Map[Seq[Any], Int] =
-          e.run("?w(G, I, X)").last.collect().toSeq.map(_.toSeq)
-            .groupBy(identity).view.mapValues(_.size).toMap
-        val e1 = new Engine(new Catalog(spark))
-        e1.run(s"+t[${insBatch(10 + rng.nextInt(8))}]\n$rule")
-        e1.run("?w(G, I, X)")
-        (0 until 3 + rng.nextInt(2)).foreach { round =>
-          val nDel = math.min(live.size, rng.nextInt(4))
-          val dels = scala.collection.mutable.ArrayBuffer.empty[String]
-          (0 until nDel).foreach { _ =>
-            val i = rng.nextInt(live.size)
-            dels += live.remove(i)
-          }
-          if (rng.nextBoolean()) dels += s"""(9999, "a", 0)""" // phantom
-          val stmts = Seq.newBuilder[String]
-          if (dels.nonEmpty) stmts += s"-t[${dels.mkString(",")}]"
-          if (rng.nextBoolean()) stmts += s"+t[${insBatch(1 + rng.nextInt(3))}]"
-          val prog = stmts.result().mkString("\n")
-          if (prog.nonEmpty) e1.run(prog)
-          val maintained = bag(e1)
-          val expected =
-            if (live.isEmpty) Map.empty[Seq[Any], Int]
-            else {
-              val e2 = new Engine(new Catalog(spark))
-              e2.run(s"+t[${live.mkString(",")}]\n$rule")
-              bag(e2)
-            }
-          assert(maintained == expected,
-            s"case $c round $round diverged (forceCarry=$forceCarry); live=$live")
-        }
-        if (forceCarry)
-          assert(e1.radiusCarryRides > 0L,
-            s"case $c never rode the radius carry")
-        else
-          assert(e1.radiusCarryRides == 0L,
-            "literal run must not touch the radius carry")
-        totalFolds += e1.carrierFolds
+    val rng = new Random(20260916L)
+    (1 to fuzzCases(6)).foreach { c =>
+      val groups = Seq("a", "b")
+      var nextId = 0
+      val live = scala.collection.mutable.ArrayBuffer.empty[String]
+      def mkTuple(): String = {
+        nextId += 1
+        s"""($nextId, "${groups(rng.nextInt(groups.size))}", ${rng.nextInt(12)})"""
       }
-      if (foldCap < 100L)
-        assert(totalFolds >= 3L,
-          s"expected >=3 mid-stream radius folds across cases, saw $totalFolds")
-    } finally {
-      Engine.radiusCarryMinRows = 65536L
-      Engine.carrierFoldCap = 49152L
+      def insBatch(n: Int): String = (0 until n).map { _ =>
+        val t = mkTuple(); live += t; t
+      }.mkString(",")
+      val rule = "+w(G, within_radius<3, I, X>) <- t(I, G, X)\n"
+      def bag(e: Engine): Map[Seq[Any], Int] =
+        e.run("?w(G, I, X)").last.collect().toSeq.map(_.toSeq)
+          .groupBy(identity).view.mapValues(_.size).toMap
+      val e1 = new Engine(new Catalog(spark), limits)
+      e1.run(s"+t[${insBatch(10 + rng.nextInt(8))}]\n$rule")
+      e1.run("?w(G, I, X)")
+      (0 until 3 + rng.nextInt(2)).foreach { round =>
+        val nDel = math.min(live.size, rng.nextInt(4))
+        val dels = scala.collection.mutable.ArrayBuffer.empty[String]
+        (0 until nDel).foreach { _ =>
+          val i = rng.nextInt(live.size)
+          dels += live.remove(i)
+        }
+        if (rng.nextBoolean()) dels += s"""(9999, "a", 0)""" // phantom
+        val stmts = Seq.newBuilder[String]
+        if (dels.nonEmpty) stmts += s"-t[${dels.mkString(",")}]"
+        if (rng.nextBoolean()) stmts += s"+t[${insBatch(1 + rng.nextInt(3))}]"
+        val prog = stmts.result().mkString("\n")
+        if (prog.nonEmpty) e1.run(prog)
+        val maintained = bag(e1)
+        val expected =
+          if (live.isEmpty) Map.empty[Seq[Any], Int]
+          else {
+            val e2 = new Engine(new Catalog(spark), limits)
+            e2.run(s"+t[${live.mkString(",")}]\n$rule")
+            bag(e2)
+          }
+        assert(maintained == expected,
+          s"case $c round $round diverged (forceCarry=$forceCarry); live=$live")
+      }
+      if (forceCarry)
+        assert(e1.radiusCarryRides > 0L,
+          s"case $c never rode the radius carry")
+      else
+        assert(e1.radiusCarryRides == 0L,
+          "literal run must not touch the radius carry")
+      totalFolds += e1.carrierFolds
     }
+    if (limits.carrierFoldCap < 100L)
+      assert(totalFolds >= 3L,
+        s"expected >=3 mid-stream radius folds across cases, saw $totalFolds")
   }
 
   test("global aggregate decrement equals fresh recomputation on random streams") {
@@ -1229,109 +1216,96 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // differential comparison — each round's overlay commit, fold
     // write, and post-fold serve must all stay exact while dirs churn
     // through the retirement queue.
-    Engine.aggLocalSupportEnabled = false
-    Engine.carrierFoldCap = 8L
-    try {
-      val rng = new Random(20260816L)
-      val e1 = new Engine(new Catalog(spark))
+    val limits = Engine.Limits(aggLocalSupportEnabled = false, carrierFoldCap = 8L)
+    val rng = new Random(20260816L)
+    val e1 = new Engine(new Catalog(spark), limits)
+    var nextId = 0
+    val live = scala.collection.mutable.ArrayBuffer.empty[String]
+    def mkTuple(): String = {
+      nextId += 1
+      s"($nextId, ${rng.nextInt(12)}, ${rng.nextInt(5)})"
+    }
+    def insBatch(n: Int): String = (0 until n).map { _ =>
+      val t = mkTuple(); live += t; t
+    }.mkString(",")
+    val rule = "+v(G, sum<X>, count<X>, count_distinct<X>) <- t(I, G, X)\n"
+    e1.run(s"+t[${insBatch(40)}]\n$rule")
+    e1.run("?v(G, S, C, D)")
+    (0 until 14).foreach { round =>
+      val nDel = math.min(live.size, 1 + rng.nextInt(3))
+      val dels = (0 until nDel).map(_ => live.remove(rng.nextInt(live.size)))
+      val stmts = Seq.newBuilder[String]
+      stmts += s"-t[${dels.mkString(",")}]"
+      if (rng.nextBoolean()) stmts += s"+t[${insBatch(1 + rng.nextInt(2))}]"
+      e1.run(stmts.result().mkString("\n"))
+      val maintained = rows(e1.run("?v(G, S, C, D)").last)
+      val expected =
+        if (live.isEmpty) Set.empty[Seq[Any]]
+        else {
+          val e2 = new Engine(new Catalog(spark), limits)
+          e2.run(s"+t[${live.mkString(",")}]\n$rule")
+          rows(e2.run("?v(G, S, C, D)").last)
+        }
+      assert(maintained == expected, s"round $round diverged; live=$live")
+    }
+    assert(e1.supportParquetRounds > 0L,
+      "the run never committed via the carrier overlay")
+    assert(e1.carrierFolds >= 3L,
+      s"expected >=3 mid-stream folds, saw ${e1.carrierFolds}")
+  }
+
+  private def distributedAggFuzz(pinLegacyCommit: Boolean): Unit = {
+    val limits = Engine.Limits(aggLocalSupportEnabled = false,
+      rankLocalRideEnabled = false, supportParquetEnabled = !pinLegacyCommit)
+    val rng = new Random(20260917L)
+    (1 to fuzzCases(4)).foreach { c =>
+      val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
       def mkTuple(): String = {
         nextId += 1
-        s"($nextId, ${rng.nextInt(12)}, ${rng.nextInt(5)})"
+        s"""($nextId, "${groups(rng.nextInt(groups.size))}", ${rng.nextInt(5)})"""
       }
       def insBatch(n: Int): String = (0 until n).map { _ =>
         val t = mkTuple(); live += t; t
       }.mkString(",")
       val rule = "+v(G, sum<X>, count<X>, count_distinct<X>) <- t(I, G, X)\n"
-      e1.run(s"+t[${insBatch(40)}]\n$rule")
+      val e1 = new Engine(new Catalog(spark), limits)
+      e1.run(s"+t[${insBatch(8 + rng.nextInt(6))}]\n$rule")
       e1.run("?v(G, S, C, D)")
-      (0 until 14).foreach { round =>
-        val nDel = math.min(live.size, 1 + rng.nextInt(3))
-        val dels = (0 until nDel).map(_ => live.remove(rng.nextInt(live.size)))
+      val decStart = e1.aggDecrementCount
+      (0 until 3).foreach { round =>
+        val nDel = math.min(live.size, rng.nextInt(4))
+        val dels = scala.collection.mutable.ArrayBuffer.empty[String]
+        (0 until nDel).foreach { _ =>
+          val i = rng.nextInt(live.size)
+          dels += live.remove(i)
+        }
         val stmts = Seq.newBuilder[String]
-        stmts += s"-t[${dels.mkString(",")}]"
-        if (rng.nextBoolean()) stmts += s"+t[${insBatch(1 + rng.nextInt(2))}]"
-        e1.run(stmts.result().mkString("\n"))
+        if (dels.nonEmpty) stmts += s"-t[${dels.mkString(",")}]"
+        if (rng.nextBoolean()) stmts += s"+t[${insBatch(1 + rng.nextInt(3))}]"
+        val prog = stmts.result().mkString("\n")
+        if (prog.nonEmpty) e1.run(prog)
         val maintained = rows(e1.run("?v(G, S, C, D)").last)
         val expected =
           if (live.isEmpty) Set.empty[Seq[Any]]
           else {
-            val e2 = new Engine(new Catalog(spark))
+            val e2 = new Engine(new Catalog(spark), limits)
             e2.run(s"+t[${live.mkString(",")}]\n$rule")
             rows(e2.run("?v(G, S, C, D)").last)
           }
-        assert(maintained == expected, s"round $round diverged; live=$live")
+        assert(maintained == expected,
+          s"case $c round $round diverged; live=$live")
       }
-      assert(e1.supportParquetRounds > 0L,
-        "the run never committed via the carrier overlay")
-      assert(e1.carrierFolds >= 3L,
-        s"expected >=3 mid-stream folds, saw ${e1.carrierFolds}")
-    } finally {
-      Engine.aggLocalSupportEnabled = true
-      Engine.carrierFoldCap = 49152L
-    }
-  }
-
-  private def distributedAggFuzz(pinLegacyCommit: Boolean): Unit = {
-    Engine.aggLocalSupportEnabled = false
-    Engine.rankLocalRideEnabled = false
-    if (pinLegacyCommit) Engine.supportParquetEnabled = false
-    try {
-      val rng = new Random(20260917L)
-      (1 to fuzzCases(4)).foreach { c =>
-        val groups = Seq("a", "b", "c")
-        var nextId = 0
-        val live = scala.collection.mutable.ArrayBuffer.empty[String]
-        def mkTuple(): String = {
-          nextId += 1
-          s"""($nextId, "${groups(rng.nextInt(groups.size))}", ${rng.nextInt(5)})"""
-        }
-        def insBatch(n: Int): String = (0 until n).map { _ =>
-          val t = mkTuple(); live += t; t
-        }.mkString(",")
-        val rule = "+v(G, sum<X>, count<X>, count_distinct<X>) <- t(I, G, X)\n"
-        val e1 = new Engine(new Catalog(spark))
-        e1.run(s"+t[${insBatch(8 + rng.nextInt(6))}]\n$rule")
-        e1.run("?v(G, S, C, D)")
-        val decStart = e1.aggDecrementCount
-        (0 until 3).foreach { round =>
-          val nDel = math.min(live.size, rng.nextInt(4))
-          val dels = scala.collection.mutable.ArrayBuffer.empty[String]
-          (0 until nDel).foreach { _ =>
-            val i = rng.nextInt(live.size)
-            dels += live.remove(i)
-          }
-          val stmts = Seq.newBuilder[String]
-          if (dels.nonEmpty) stmts += s"-t[${dels.mkString(",")}]"
-          if (rng.nextBoolean()) stmts += s"+t[${insBatch(1 + rng.nextInt(3))}]"
-          val prog = stmts.result().mkString("\n")
-          if (prog.nonEmpty) e1.run(prog)
-          val maintained = rows(e1.run("?v(G, S, C, D)").last)
-          val expected =
-            if (live.isEmpty) Set.empty[Seq[Any]]
-            else {
-              val e2 = new Engine(new Catalog(spark))
-              e2.run(s"+t[${live.mkString(",")}]\n$rule")
-              rows(e2.run("?v(G, S, C, D)").last)
-            }
-          assert(maintained == expected,
-            s"case $c round $round diverged; live=$live")
-        }
-        assert(e1.aggLocalRounds == 0L, "local mode must stay off under the flag")
-        assert(e1.aggDecrementCount > decStart,
-          s"case $c never took the subtractable decrement path")
-        if (pinLegacyCommit)
-          assert(e1.supportParquetRounds == 0L,
-            "legacy run must not touch the parquet overlay path")
-        else
-          assert(e1.supportParquetRounds > 0L,
-            s"case $c never committed via the parquet overlay")
-      }
-    } finally {
-      Engine.aggLocalSupportEnabled = true
-      Engine.rankLocalRideEnabled = true
-      Engine.supportParquetEnabled = true
+      assert(e1.aggLocalRounds == 0L, "local mode must stay off under the flag")
+      assert(e1.aggDecrementCount > decStart,
+        s"case $c never took the subtractable decrement path")
+      if (pinLegacyCommit)
+        assert(e1.supportParquetRounds == 0L,
+          "legacy run must not touch the parquet overlay path")
+      else
+        assert(e1.supportParquetRounds > 0L,
+          s"case $c never committed via the parquet overlay")
     }
   }
 }

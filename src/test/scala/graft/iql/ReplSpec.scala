@@ -76,34 +76,32 @@ class ReplSpec extends SparkSpec {
     // build carried state (scale path forced), save, "kill" (drop the
     // session), open fresh, mutate, and compare against an oracle
     // engine that never carried anything.
-    Engine.aggLocalSupportEnabled = false
-    try {
-      val s = new Session(spark)
-      val dir = Files.createTempDirectory("graft_kg").toString
-      val tuples = (1 to 60).map(i => s"($i, ${i % 8}, ${i % 5})")
-      s.execute(s"+t[${tuples.mkString(",")}]")
-      s.execute("+v(G, sum<X>, count<X>) <- t(I, G, X)")
-      s.execute("?v(G, S, C)")
-      s.execute("-t[(1, 1, 1), (2, 2, 2)]") // round 1: seeds
-      s.execute("?v(G, S, C)")
-      s.execute("-t[(3, 3, 3), (4, 4, 4)]") // round 2: rides the carrier
-      s.execute("?v(G, S, C)")
-      assert(s.engine.supportParquetRounds > 0L,
-        "fixture never engaged the carrier — the test would prove nothing")
-      s.execute(s".save $dir")
-      // s "crashes" here; its carrier scratch dies with it
-      val s2 = new Session(spark)
-      s2.execute(s".open $dir")
-      s2.execute("-t[(5, 5, 0), (6, 6, 1)]") // mutate through the reopened view
-      val got = rows(table(s2.execute("?v(G, S, C)").head))
-      val oracle = new Engine(new Catalog(spark))
-      val liveTuples = tuples.filterNot(t => Seq("(1, 1, 1)", "(2, 2, 2)",
-        "(3, 3, 3)", "(4, 4, 4)", "(5, 5, 0)", "(6, 6, 1)").contains(t))
-      oracle.run(s"+t[${liveTuples.mkString(",")}]\n" +
-        "+v(G, sum<X>, count<X>) <- t(I, G, X)")
-      assert(got == rows(oracle.run("?v(G, S, C)").last),
-        "post-restart maintained view diverged from recompute")
-    } finally Engine.aggLocalSupportEnabled = true
+    val limits = Engine.Limits(aggLocalSupportEnabled = false)
+    val s = new Session(spark, limits = limits)
+    val dir = Files.createTempDirectory("graft_kg").toString
+    val tuples = (1 to 60).map(i => s"($i, ${i % 8}, ${i % 5})")
+    s.execute(s"+t[${tuples.mkString(",")}]")
+    s.execute("+v(G, sum<X>, count<X>) <- t(I, G, X)")
+    s.execute("?v(G, S, C)")
+    s.execute("-t[(1, 1, 1), (2, 2, 2)]") // round 1: seeds
+    s.execute("?v(G, S, C)")
+    s.execute("-t[(3, 3, 3), (4, 4, 4)]") // round 2: rides the carrier
+    s.execute("?v(G, S, C)")
+    assert(s.engine.supportParquetRounds > 0L,
+      "fixture never engaged the carrier — the test would prove nothing")
+    s.execute(s".save $dir")
+    // s "crashes" here; its carrier scratch dies with it
+    val s2 = new Session(spark, limits = limits)
+    s2.execute(s".open $dir")
+    s2.execute("-t[(5, 5, 0), (6, 6, 1)]") // mutate through the reopened view
+    val got = rows(table(s2.execute("?v(G, S, C)").head))
+    val oracle = new Engine(new Catalog(spark), limits)
+    val liveTuples = tuples.filterNot(t => Seq("(1, 1, 1)", "(2, 2, 2)",
+      "(3, 3, 3)", "(4, 4, 4)", "(5, 5, 0)", "(6, 6, 1)").contains(t))
+    oracle.run(s"+t[${liveTuples.mkString(",")}]\n" +
+      "+v(G, sum<X>, count<X>) <- t(I, G, X)")
+    assert(got == rows(oracle.run("?v(G, S, C)").last),
+      "post-restart maintained view diverged from recompute")
   }
 
   test("ranking-aggregate rule round-trips through .rule list and .save/.open") {

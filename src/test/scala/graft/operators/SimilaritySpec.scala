@@ -152,7 +152,6 @@ class SimilaritySpec extends SparkSpec {
     // element and a null vector (null cos sorts last), a hub, and a
     // length-mismatched vector (null dot, but 0 against the zero vec).
     import org.apache.spark.sql.{Row => SRow}
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(42)
     def vec(): Seq[java.lang.Float] =
@@ -176,13 +175,7 @@ class SimilaritySpec extends SparkSpec {
         else vec()
       SRow(java.lang.Long.valueOf(i), v)
     }
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = true),
-      StructField("embedding", ArrayType(FloatType, containsNull = true), nullable = true)))
-    val a = spark.createDataFrame(java.util.Arrays.asList(aRows: _*), schema)
-      .localCheckpoint(true)
-    val b = spark.createDataFrame(java.util.Arrays.asList(bRows: _*), schema)
-      .localCheckpoint(true)
+    val (a, b) = (vecFrame(aRows), vecFrame(bRows))
     // reference: the pre-r16 pipeline — one scored cross join, full
     // rank windows on both sides, the identical margin algebra
     def reference(k: Int, tau: Double): Array[SRow] = {
@@ -220,6 +213,40 @@ class SimilaritySpec extends SparkSpec {
       assert(got == ref, s"k=$k tau=$tau: block-local miner diverged\n" +
         s"missing=${ref -- got}\nextra=${got -- ref}")
     }
+  }
+
+  private def vecFrame(rows: Seq[org.apache.spark.sql.Row]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = true),
+      StructField("embedding", ArrayType(FloatType, containsNull = true), nullable = true)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).localCheckpoint(true)
+  }
+
+  /** a_id -> mined b_id at each of the bit-for-bit test's (k, tau), over
+    * a ids 0-11 and b ids 100-119 of random vectors where the ids in
+    * `nan` hold a NaN element (every cosine they take part in is NaN). */
+  private def minedWithNaN(seed: Int, nan: Set[Long]): Seq[Map[Any, Any]] = {
+    val rnd = new scala.util.Random(seed)
+    def side(ids: Seq[Long]) = vecFrame(ids.map { i =>
+      val v = Seq.fill(8)(java.lang.Float.valueOf(rnd.nextGaussian().toFloat))
+      org.apache.spark.sql.Row(i, if (nan(i)) v.updated(2, java.lang.Float.valueOf(Float.NaN)) else v)
+    })
+    val (a, b) = (side(0L until 12L), side(100L until 120L))
+    Seq((3, 0.8), (4, 1.0), (1, 0.0)).map { case (k, tau) =>
+      Similarity.marginMining(a, b, k = k, tau = tau).collect().map(r => r.get(0) -> r.get(1)).toMap
+    }
+  }
+
+  // Spark's window sorts NaN cosines greatest and breaks NaN ties to the
+  // ascending partner id; NaN margins pass any tau
+  test("an a-side NaN element mines the partner-ascending b_id, as Spark's window does") {
+    minedWithNaN(7, Set(5L)).foreach(m => assert(m(5L) == 100L, m))
+  }
+
+  test("several NaN-scoring b vectors mine the partner-ascending b_id, as Spark's window does") {
+    val nanB = Set(103L, 106L, 109L, 112L, 115L) // fill every a row's top-k
+    minedWithNaN(11, nanB).foreach(m => assert(m == (0L until 12L).map(_ -> 103L).toMap, m))
   }
 
   test("sharded HNSW: executor-built shards probe with high recall, deterministically") {

@@ -407,8 +407,7 @@ class WireServerSpec extends SparkSpec {
     // pin the distributed loop: THIS test proves the Spark job-group
     // kill; the driver-local evaluator (which would otherwise solve the
     // bounded program quickly) has its own cancellation test below
-    graft.iql.LocalEval.disabled = true
-    val server = new WireServer(spark)
+    val server = new WireServer(spark, limits = graft.iql.Engine.Limits(localEval = false))
     try {
       val q = new LinkedBlockingQueue[String]()
       val ws = wsConnect(server, q)
@@ -424,10 +423,7 @@ class WireServerSpec extends SparkSpec {
       assert(ok("type") == "result" || ok("type") == "error") // served, not wedged
       assert(wsSend(ws, q, Map("type" -> "ping"))("type") == "pong")
       ws.sendClose(WebSocket.NORMAL_CLOSURE, "").join()
-    } finally {
-      server.stop()
-      graft.iql.LocalEval.disabled = false
-    }
+    } finally server.stop()
   }
 
   test("query timeout cancels a driver-local fixpoint too") {
@@ -453,8 +449,7 @@ class WireServerSpec extends SparkSpec {
   test("a slow query on one connection does not block another") {
     // distributed loop again: the slow side must still be mid-flight when
     // the fast query answers
-    graft.iql.LocalEval.disabled = true
-    val server = new WireServer(spark)
+    val server = new WireServer(spark, limits = graft.iql.Engine.Limits(localEval = false))
     try {
       val (qSlow, qFast) = (new LinkedBlockingQueue[String](), new LinkedBlockingQueue[String]())
       val (wsSlow, wsFast) = (wsConnect(server, qSlow), wsConnect(server, qFast))
@@ -478,10 +473,7 @@ class WireServerSpec extends SparkSpec {
       assert(slow("type") == "error")
       wsSlow.sendClose(WebSocket.NORMAL_CLOSURE, "").join()
       wsFast.sendClose(WebSocket.NORMAL_CLOSURE, "").join()
-    } finally {
-      server.stop()
-      graft.iql.LocalEval.disabled = false
-    }
+    } finally server.stop()
   }
 
   test("proof trees round-trip over the wire for .why queries") {
