@@ -524,6 +524,82 @@ class TextAnalysisSpec extends SparkSpec {
     assert(scores(sLocal) == scores(sDist), "scores diverged")
   }
 
+  /** Gopher repetition written from its definition, one document at a
+    * time: normalize (space-only trim, `\s+` → one space, lower case),
+    * tokenize the trimmed normalized text, give token p the 1-based
+    * start Σ_{j<p}(len_j + 1) + 1 with lengths in code points, then the
+    * most frequent n-gram (count DESC, first start ASC) and the union of
+    * recurring `dupN`-gram intervals (an island breaks when a start
+    * exceeds the running max end + 1). */
+  private def gopherReference(text: String, topNs: Seq[Int], dupN: Int): Seq[Double] = {
+    def spaceTrim(s: String) = s.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+    def round6(x: Double) = java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    if (text == null) return Seq.fill(topNs.size + 1)(0.0)
+    val nt = spaceTrim(text).replaceAll("\\s+", " ").toLowerCase(java.util.Locale.ROOT)
+    val total = nt.codePointCount(0, nt.length).toLong
+    val tk = if (spaceTrim(nt).isEmpty) Vector.empty[String]
+             else spaceTrim(nt).split("\\s+", -1).toVector
+    val lens = tk.map(t => t.codePointCount(0, t.length).toLong)
+    val starts = lens.scanLeft(1L)(_ + _ + 1L)
+    def grams(n: Int) = (0 to tk.length - n).map { p =>
+      (tk.slice(p, p + n), starts(p), starts(p + n - 1) + lens(p + n - 1) - 1L)
+    }
+    val tops = topNs.map { n =>
+      val gs = grams(n)
+      if (gs.isEmpty) 0.0
+      else {
+        val (g, occ) = gs.groupBy(_._1).toSeq
+          .minBy { case (_, o) => (-o.size, o.map(_._2).min) }
+        round6((occ.size * (occ.head._3 - occ.head._2 + 1L)).toDouble / total.toDouble)
+      }
+    }
+    val rep = grams(dupN).groupBy(_._1).values.filter(_.size >= 2).flatten.toSeq.sortBy(_._2)
+    val cover = rep.foldLeft(List.empty[(Long, Long)]) {
+      case ((s, e) :: rest, (_, st, en)) if st <= e + 1L => (s, math.max(e, en)) :: rest
+      case (acc, (_, st, en)) => (st, en) :: acc
+    }.map { case (s, e) => e - s + 1L }.sum
+    tops :+ (if (rep.isEmpty) 0.0 else round6(cover.toDouble / total.toDouble))
+  }
+
+  test("gopher repetition equals a per-document reference on adversarial text") {
+    val fixed = Seq(
+      null, "", "   ", "\t", "\tthe cat the cat", "  lead and trail  ",
+      "one", "two words", "a b c",
+      // top-gram ties go to the first occurrence
+      "x y z q x y w z q", "b a a b c c d d",
+      // overlapping and back-to-back repeated 5-grams
+      "a a a a a a a a a a a a", "p q r s t p q r s t p q r s t",
+      "p q r s t u p q r s t u v p q r s t",
+      // supplementary-plane characters (two UTF-16 units, one code point)
+      "𝔘 𝔘 x 𝔘 𝔘 x 𝔘 𝔘",
+      "The Cat the CAT tHe cat THE cat the cat",
+      "mixed\t\twhite\n space \r\n mixed white space mixed white space")
+    val rng = new scala.util.Random(20261017L)
+    val words = Vector("the", "The", "cat", "CAT", "a", "𝔘x", "naïve", "zz")
+    val seps = Vector(" ", " ", " ", "  ", "\t", "\n")
+    val random = (0 until 200).map { _ =>
+      val n = rng.nextInt(40)
+      val lead = if (rng.nextInt(4) == 0) seps(rng.nextInt(seps.length)) else ""
+      lead + (0 until n).map(_ => words(rng.nextInt(words.length)))
+        .map(_ + seps(rng.nextInt(seps.length))).mkString
+    }
+    val texts = fixed ++ random
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val got = TextAnalysis.gopherRepetition(docs).collect()
+      .map(r => r.getLong(0) -> (1 to 4).map(r.getDouble)).toMap
+    assert(got.size == texts.size)
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val want = gopherReference(t, Seq(2, 3, 4), 5)
+      assert(got(i.toLong).map(java.lang.Double.doubleToRawLongBits) ==
+        want.map(java.lang.Double.doubleToRawLongBits),
+        s"doc $i ${Option(t).map(_.take(60))}: got ${got(i.toLong)} want $want")
+    }
+    // spot values: the tab survives the space-only trim, so `total`
+    // counts a leading space (2 × "the cat" = 14 of 16 characters)
+    assert(got(4L) == Seq(0.875, 0.6875, 0.9375, 0.0))
+  }
+
   test("classifier trains null-predicate rows as negatives (the oracle's labeling)") {
     val docs = Seq(
       (1L, "en", "clean fluent text with many proper words"),
