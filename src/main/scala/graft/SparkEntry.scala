@@ -1314,7 +1314,8 @@ object SparkEntry {
 
     // --- pipeline: GOPHER repetition filters — top-{2,3,4}-gram char
     //     fraction + duplicated-5-gram char COVERAGE (islands merge,
-    //     overlaps counted once); everything partitions by document ----
+    //     overlaps counted once); one map-only pass per document row, no
+    //     explode, window, join or shuffle ------------------------------
     "q157_gopher_repetition" -> ((s, dir) =>
       TextAnalysis.gopherRepetition(T(s, dir, "documents"))),
 
@@ -2779,7 +2780,7 @@ object SparkEntry {
     // all-pairs token Jaccard must equal the prefix-filtered plan
     "q156_setsim_join" -> Dedup.setSimilarityOracleSql(num = 1, den = 2),
 
-    // gopher repetition: gram strings stand in for gram hashes, same
+    // gopher repetition: gram strings stand in for token sequences, an
     // offsets cumsum, same top tie-break, same island merge, 6-dp
     "q157_gopher_repetition" -> TextAnalysis.gopherOracleSql(),
 

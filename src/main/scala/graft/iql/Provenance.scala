@@ -59,6 +59,8 @@ object Provenance {
 
   private def explain(engine: Engine, rel: String, values: Seq[Any],
                       depth: Int, visiting: Set[(String, Seq[Any])]): Option[Proof] = {
+    // a job-group cancel stops only the running job; poll before the next
+    graft.QueryGuard.checkCancelled()
     if (depth <= 0 || visiting((rel, values))) return None
     val cat = engine.catalog
     // EDB fact?

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 
@@ -165,73 +164,109 @@ object TextAnalysis {
     * standard repeated-boilerplate gates one level above
     * [[repetitionStats]]' token ratios.
     *
-    * Scale shape: everything partitions by document — position explode,
-    * per-doc window cumsum for character offsets, per-(doc, gram)
-    * counts, per-doc island merge; no cross-document shuffle at all.
-    * Grams group as multi-arg xxhash64 over the token hashes (8-byte
-    * keys, never gram strings; equality ≡ gram equality up to 2⁻⁶⁴),
-    * and the top-gram tie-break is (count DESC, first occurrence ASC) —
-    * position-based, so the oracle needs no hash replication. */
+    * Scale shape: one map-only pass per row — no explode, window, join
+    * or shuffle. Spark expressions build the input (`TF.normText`, its
+    * `length` and `TF.tokens`, so case folding, `trim` and the `\s+`
+    * rules are Spark's own) and finish the output (the division, 6-dp
+    * `round` and `coalesce`); only the integer numerators come from
+    * [[gopherNumerators]], a per-row UDF whose memory is one document's
+    * grams. Each row is scored on its own, also when ids repeat. */
   def gopherRepetition(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                        topNs: Seq[Int] = Seq(2, 3, 4), dupN: Int = 5): DataFrame = {
-    val base = docs.select(col(idCol).as("id"), TF.normText(col(textCol)).as("nt"))
-      .select(col("id"), length(col("nt")).cast("long").as("total"),
-        TF.tokens(col("nt")).as("tk"))
-    val wOrd = Window.partitionBy("id").orderBy("p")
-    val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, -1)
-    // 1-based char offset of each token inside nt (tokens join by one
-    // space in the normalized text): start_p = Σ_{j<p}(len_j + 1) + 1
-    val tpos = base.select(col("id"), col("total"),
-        posexplode(col("tk")).as(Seq("p", "tok")))
-      .withColumn("th", xxhash64(col("tok")))
-      .withColumn("start",
-        coalesce(sum(length(col("tok")).cast("long") + 1L).over(wPrev), lit(0L)) + 1L)
-      .withColumn("tend", col("start") + length(col("tok")) - 1L)
-    def gramsOf(n: Int): DataFrame = {
-      val parts = (0 until n).map(i =>
-        if (i == 0) col("th") else lead(col("th"), i).over(wOrd))
-      tpos
-        .withColumn("gh", xxhash64(parts: _*))
-        .withColumn("gend", if (n == 1) col("tend") else lead(col("tend"), n - 1).over(wOrd))
-        .where(col("gend").isNotNull)
-        .select(col("id"), col("total"), col("start"), col("gend"), col("gh"))
-    }
-    def topFrac(n: Int): DataFrame = {
-      val counts = gramsOf(n).groupBy("id", "gh")
-        .agg(count(lit(1)).as("cnt"), min(col("start")).as("ms"),
-          min(col("gend") - col("start") + 1L).as("glen"), min(col("total")).as("tt"))
-      val wTop = Window.partitionBy("id")
-        .orderBy(col("cnt").desc, col("ms").asc)
-      counts.withColumn("rn", row_number().over(wTop)).where(col("rn") === 1)
-        .select(col("id"),
-          round((col("cnt") * col("glen")).cast("double") / col("tt").cast("double"), 6)
-            .as(s"top${n}_frac"))
-    }
-    val wCnt = Window.partitionBy("id", "gh")
-    val wIsl = Window.partitionBy("id").orderBy("start")
-    val dup = gramsOf(dupN)
-      .withColumn("cnt", count(lit(1)).over(wCnt))
-      .where(col("cnt") >= 2)
-      .withColumn("pmax", max(col("gend")).over(wIsl.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("nb", when(col("pmax").isNull || col("start") > col("pmax") + 1L, 1)
-        .otherwise(0))
-      .withColumn("grp", sum(col("nb")).over(wIsl))
-      .groupBy(col("id"), col("grp"))
-      .agg((max(col("gend")) - min(col("start")) + 1L).as("cov"), min(col("total")).as("tt"))
-      .groupBy("id")
-      .agg(round(sum(col("cov")).cast("double") / min(col("tt")).cast("double"), 6)
-        .as(s"dup${dupN}_cover"))
-    val out = topNs.map(topFrac).foldLeft(base.select(col("id"))) {
-      (acc, f) => acc.join(f, Seq("id"), "left")
-    }.join(dup, Seq("id"), "left")
-    val fracCols = topNs.map(n => coalesce(col(s"top${n}_frac"), lit(0.0)).as(s"top${n}_frac")) :+
-      coalesce(col(s"dup${dupN}_cover"), lit(0.0)).as(s"dup${dupN}_cover")
-    out.select(col("id").as(idCol) +: fracCols: _*)
+    val numUdf = udf((ts: Seq[String]) => gopherNumerators(ts, topNs, dupN))
+    val names = topNs.map(n => s"top${n}_frac") :+ s"dup${dupN}_cover"
+    docs.select(col(idCol), TF.normText(col(textCol)).as("__nt"))
+      .select(col(idCol), length(col("__nt")).cast("long").as("__total"),
+        numUdf(TF.tokens(col("__nt"))).as("__num"))
+      .select(col(idCol) +: names.zipWithIndex.map { case (name, i) =>
+        coalesce(round(col("__num").getItem(i).cast("double") /
+          col("__total").cast("double"), 6), lit(0.0)).as(name)
+      }: _*)
   }
 
-  /** DuckDB replication of [[gopherRepetition]]: gram strings in place
-    * of gram hashes (grouping by string ≡ grouping by hash), the same
-    * char-offset cumsum, the same (count DESC, first-start ASC) top
+  /** Per-document numerators of [[gopherRepetition]] over the token
+    * array `ts`: for each n in `topNs`, count × character length of the
+    * most frequent n-gram (count DESC, first start ASC), then the
+    * character coverage of the `dupN`-grams that occur at least twice.
+    * An entry is None when the document has no such gram; `ts == null`
+    * gives null. Token p starts at Σ_{j<p}(len_j + 1) + 1 with lengths in
+    * code points, as Spark's `length` counts them; an island of recurring
+    * grams breaks when a start exceeds the running max end + 1.
+    *
+    * Grams compare by token sequence: level-n gram ids intern the pair
+    * (level-(n−1) id at p, token id at p + n − 1), so equal ids ⇔ equal
+    * token sequences, with no hashing of gram strings. */
+  private[operators] def gopherNumerators(ts: Seq[String], topNs: Seq[Int],
+                                          dupN: Int): Seq[Option[Long]] =
+    if (ts == null) null
+    else {
+      val t = ts.length
+      val toks = new java.util.HashMap[String, Integer]()
+      val ids = new Array[Int](t)
+      val start = new Array[Long](t + 1) // start(p + 1) = start(p) + len_p + 1
+      start(0) = 1L
+      var p = 0
+      while (p < t) {
+        val tok = ts(p)
+        ids(p) = toks.computeIfAbsent(tok, _ => toks.size)
+        start(p + 1) = start(p) + tok.codePointCount(0, tok.length) + 1L
+        p += 1
+      }
+      val maxN = (dupN +: topNs).max
+      // levels(n) = gram ids of every n-gram, with the number of distinct ids
+      val levels = new Array[(Array[Int], Int)](maxN + 1)
+      levels(1) = (ids, toks.size)
+      var n = 2
+      while (n <= maxN) {
+        val (prev, _) = levels(n - 1)
+        val m = math.max(0, t - n + 1)
+        val seen = new java.util.HashMap[java.lang.Long, Integer]()
+        val g = new Array[Int](m)
+        var q = 0
+        while (q < m) {
+          g(q) = seen.computeIfAbsent((prev(q).toLong << 32) | ids(q + n - 1), _ => seen.size)
+          q += 1
+        }
+        levels(n) = (g, seen.size)
+        n += 1
+      }
+      def gend(q: Int, n: Int): Long = start(q + n) - 2L
+      def counts(n: Int): (Array[Int], Array[Int]) = {
+        val (g, k) = levels(n)
+        (g, g.foldLeft(new Array[Int](k)) { (c, id) => c(id) += 1; c })
+      }
+      val tops = topNs.map { n =>
+        val (g, cnt) = counts(n)
+        var best = -1 // first start of the top gram; ties keep the earlier one
+        var q = 0
+        while (q < g.length) {
+          if (best < 0 || cnt(g(q)) > cnt(g(best))) best = q
+          q += 1
+        }
+        if (best < 0) None
+        else Some(cnt(g(best)).toLong * (gend(best, n) - start(best) + 1L))
+      }
+      val (g, cnt) = counts(dupN)
+      var cover = 0L
+      var islandStart, pmax = -1L
+      var q = 0
+      while (q < g.length) {
+        if (cnt(g(q)) >= 2) {
+          if (islandStart < 0 || start(q) > pmax + 1L) {
+            if (islandStart >= 0) cover += pmax - islandStart + 1L
+            islandStart = start(q)
+          }
+          pmax = math.max(pmax, gend(q, dupN))
+        }
+        q += 1
+      }
+      tops :+ (if (islandStart < 0) None else Some(cover + pmax - islandStart + 1L))
+    }
+
+  /** DuckDB replication of [[gopherRepetition]]: gram strings stand in
+    * for token sequences (tokens hold no space, so grouping by the
+    * space-joined string ≡ grouping by the sequence), a char-offset
+    * cumsum for the starts, the same (count DESC, first-start ASC) top
     * pick, the same island merge, the same single-division 6-dp
     * rounding. */
   def gopherOracleSql(topNs: Seq[Int] = Seq(2, 3, 4), dupN: Int = 5): String = {

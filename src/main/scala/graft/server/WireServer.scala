@@ -704,12 +704,15 @@ final class WireServer(spark: SparkSession, port: Int = 0,
         case "ping" => Seq(Map("type" -> "pong"))
         // `.why <atom>` over the wire returns structured proof trees in
         // the result (reference `QueryResult.proof_trees`,
-        // `src/protocol/wire.rs:323-325`), not just rendered text
+        // `src/protocol/wire.rs:323-325`), not just rendered text; the
+        // proof search runs under the same timeout as any query
         case "query" if msg("query").toString.trim.startsWith(".why ") =>
+          val src = msg("query").toString.trim
           val t0 = System.nanoTime()
-          val atom = graft.iql.Repl.parseGroundAtom(
-            msg("query").toString.trim.stripPrefix(".why ").trim)
-          val proof = graft.iql.Provenance.why(session.engine, atom)
+          val proof = graft.QueryGuard.withTimeout(spark, msgLong("timeout_ms", queryTimeoutMs), src) {
+            graft.iql.Provenance.why(session.engine,
+              graft.iql.Repl.parseGroundAtom(src.stripPrefix(".why ").trim))
+          }
           queriesServed.incrementAndGet()
           Seq(Map(
             "type" -> "result",

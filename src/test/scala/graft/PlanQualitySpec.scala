@@ -67,6 +67,16 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("q157 gopher repetition is one map-only pass with one kernel call per row") {
+    assume(new java.io.File(s"$sf/documents.parquet").exists)
+    val plan = planOf("q157_gopher_repetition")
+    Seq("Exchange", "Window", "Generate", "Join", "Aggregate").foreach { op =>
+      assert(!plan.contains(op), s"q157 gained a $op:\n$plan")
+    }
+    // the numerators array is projected once and read four times
+    assert("UDF\\(".r.findAllIn(plan).length == 1, s"kernel evaluated more than once:\n$plan")
+  }
+
   test("q185 blocked bitext mining never broadcasts a corpus side") {
     assume(new java.io.File(s"$sf/embeddings.parquet").exists)
     // the blocked generator is an equi-join on cell — Catalyst may

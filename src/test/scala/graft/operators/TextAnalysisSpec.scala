@@ -524,6 +524,25 @@ class TextAnalysisSpec extends SparkSpec {
     assert(scores(sLocal) == scores(sDist), "scores diverged")
   }
 
+  test("GD replay and the distributed loop agree on NaN and overflowing gradient terms") {
+    // a numeric target column feeds y straight into err = σ̃(m) − y: y = NaN
+    // makes every gradient term NaN, y = 1e9 makes a term overflow
+    // decimal(38,30). Cast semantics decide the distributed Sum's
+    // behaviour: ANSI (the session default) raises, non-ANSI would skip
+    // the term. Both paths must end the same way under the real setting.
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    Seq(Double.NaN, 1e9).foreach { bad =>
+      val docs = Seq((1L, 1.0, "alpha beta"), (2L, 0.0, "gamma"), (3L, bad, "delta"))
+        .toDF("doc_id", "y", "text")
+      def train(localTrainDocs: Long) = scala.util.Try(TextAnalysis.qualityClassifierTrain(
+        docs, col("y"), localTrainDocs = localTrainDocs)._1.map(java.lang.Double.doubleToRawLongBits).toSeq)
+      val (local, dist) = (train(TextAnalysis.LocalTrainDocs), train(0L))
+      assert(local.isFailure == dist.isFailure, s"y = $bad: local $local, distributed $dist")
+      if (ansi) assert(dist.isFailure, s"y = $bad: ANSI cast should raise, got $dist")
+      else assert(local == dist, s"y = $bad: local $local, distributed $dist")
+    }
+  }
+
   /** Gopher repetition written from its definition, one document at a
     * time: normalize (space-only trim, `\s+` → one space, lower case),
     * tokenize the trimmed normalized text, give token p the 1-based
@@ -598,6 +617,19 @@ class TextAnalysisSpec extends SparkSpec {
     // spot values: the tab survives the space-only trim, so `total`
     // counts a leading space (2 × "the cat" = 14 of 16 characters)
     assert(got(4L) == Seq(0.875, 0.6875, 0.9375, 0.0))
+  }
+
+  test("gopher repetition scores rows that share an id one by one") {
+    val texts = Seq("a b a b", "c d c d e", "p q r s t p q r s t")
+    val docs = texts.map(t => (7L, t)).toDF("doc_id", "text")
+    val got = TextAnalysis.gopherRepetition(docs).collect()
+      .map(r => (r.getLong(0), (1 to 4).map(r.getDouble))).toSeq.sortBy(_._2.head)
+    assert(got.map(_._1) == Seq(7L, 7L, 7L))
+    assert(got.map(_._2).toSet == texts.map(gopherReference(_, Seq(2, 3, 4), 5)).toSet)
+    assert(got.map(_._2) == Seq(
+      Seq(0.315789, 0.526316, 0.736842, 0.947368),
+      Seq(0.666667, 0.555556, 0.777778, 0.0),
+      Seq(0.857143, 0.714286, 1.0, 0.0)))
   }
 
   test("classifier trains null-predicate rows as negatives (the oracle's labeling)") {

@@ -501,6 +501,28 @@ class WireServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test(".why over the wire honours the query timeout") {
+    val server = new WireServer(spark)
+    try {
+      val q = new LinkedBlockingQueue[String]()
+      val ws = wsConnect(server, q)
+      wsSend(ws, q, Map("type" -> "query", "query" ->
+        ("+tedge[(1,2),(2,3),(3,4),(4,5),(5,6)]\n+treach(X, Y) <- tedge(X, Y)\n" +
+          "+treach(X, Z) <- treach(X, Y), tedge(Y, Z)")))
+      // a five-hop proof runs Spark jobs at every hop: the 1 ms deadline
+      // either kills a running job or stops the search before the next
+      val err = wsSend(ws, q, Map("type" -> "query", "query" -> ".why treach(1, 6)",
+        "timeout_ms" -> 1L))
+      assert(err("type") == "error", s"expected the timeout error, got $err")
+      assert(err("message").toString.toLowerCase.contains("timeout"), err)
+      val res = wsSend(ws, q, Map("type" -> "query", "query" -> ".why treach(1, 6)"))
+      assert(res("type") == "result" && res("derivable") == true, res)
+      val root = res("proof_trees").asInstanceOf[Vector[Any]].head.asInstanceOf[Map[String, Any]]
+      assert(root("relation") == "treach" && root("values") == Vector(1L, 6L))
+      ws.sendClose(WebSocket.NORMAL_CLOSURE, "").join()
+    } finally server.stop()
+  }
+
   test("per-user ACLs: user CRUD, per-KG roles, owner override, key revocation") {
     val server = new WireServer(spark, authEnabled = true)
     try {
