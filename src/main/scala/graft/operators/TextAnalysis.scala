@@ -1205,6 +1205,9 @@ object TextAnalysis {
               j = 0
               while (j < bs.length) {
                 val t = err * vs(j)
+                // a NaN or out-of-range term raises, as the distributed
+                // loop's ANSI cast to decimal(38,30) does (ANSI is the
+                // session default; non-ANSI would null-skip the term)
                 val d = org.apache.spark.sql.types.Decimal(t)
                 require(d.changePrecision(38, 30),
                   s"gradient term $t does not fit decimal(38,30)")

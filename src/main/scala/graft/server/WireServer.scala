@@ -567,13 +567,9 @@ final class WireServer(spark: SparkSession, port: Int = 0,
       throw new IllegalArgumentException("missing Sec-WebSocket-Key"))
     val accept = Base64.getEncoder.encodeToString(
       MessageDigest.getInstance("SHA-1").digest((key + WsGuid).getBytes(UTF_8)))
-    out.write(("HTTP/1.1 101 Switching Protocols\r\nUpgrade: websocket\r\n" +
-      s"Connection: Upgrade\r\nSec-WebSocket-Accept: $accept\r\n\r\n").getBytes(UTF_8))
-    out.flush()
     val session = newSession()
     val writeLock = new Object
     val conn = new WsConn(out, writeLock, sock)
-    wsConnections.add(conn)
     // fragmented-message assembly (RFC 6455 §5.4): a data frame with
     // FIN=0 starts a message, continuation frames (opcode 0) append,
     // FIN=1 completes; control frames may interleave
@@ -592,6 +588,15 @@ final class WireServer(spark: SparkSession, port: Int = 0,
         writeLock.synchronized { writeFrame(out, 0x1, Json.render(r).getBytes(UTF_8)) })
     }
     try {
+      // register before the handshake completes, so a client that has its
+      // 101 already receives every later notification; holding the write
+      // lock keeps a notification frame from preceding the 101
+      writeLock.synchronized {
+        wsConnections.add(conn)
+        out.write(("HTTP/1.1 101 Switching Protocols\r\nUpgrade: websocket\r\n" +
+          s"Connection: Upgrade\r\nSec-WebSocket-Accept: $accept\r\n\r\n").getBytes(UTF_8))
+        out.flush()
+      }
       var open = true
       while (open) {
         readFrame(in) match {
