@@ -196,8 +196,8 @@ object TextAnalysis {
     * Grams compare by token sequence: level-n gram ids intern the pair
     * (level-(n−1) id at p, token id at p + n − 1), so equal ids ⇔ equal
     * token sequences, with no hashing of gram strings. */
-  private[operators] def gopherNumerators(ts: Seq[String], topNs: Seq[Int],
-                                          dupN: Int): Seq[Option[Long]] =
+  private def gopherNumerators(ts: Seq[String], topNs: Seq[Int],
+                               dupN: Int): Seq[Option[Long]] =
     if (ts == null) null
     else {
       val t = ts.length
@@ -237,7 +237,7 @@ object TextAnalysis {
       }
       val tops = topNs.map { n =>
         val (g, cnt) = counts(n)
-        var best = -1 // first start of the top gram; ties keep the earlier one
+        var best = -1 // first occurrence of the top gram; ties keep the earlier gram
         var q = 0
         while (q < g.length) {
           if (best < 0 || cnt(g(q)) > cnt(g(best))) best = q

@@ -568,7 +568,7 @@ class TextAnalysisSpec extends SparkSpec {
       val gs = grams(n)
       if (gs.isEmpty) 0.0
       else {
-        val (g, occ) = gs.groupBy(_._1).toSeq
+        val (_, occ) = gs.groupBy(_._1).toSeq
           .minBy { case (_, o) => (-o.size, o.map(_._2).min) }
         round6((occ.size * (occ.head._3 - occ.head._2 + 1L)).toDouble / total.toDouble)
       }
