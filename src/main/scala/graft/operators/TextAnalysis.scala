@@ -190,77 +190,43 @@ object TextAnalysis {
     * character coverage of the `dupN`-grams that occur at least twice.
     * An entry is None when the document has no such gram; `ts == null`
     * gives null. Token p starts at Σ_{j<p}(len_j + 1) + 1 with lengths in
-    * code points, as Spark's `length` counts them; an island of recurring
-    * grams breaks when a start exceeds the running max end + 1.
-    *
-    * Grams compare by token sequence: level-n gram ids intern the pair
-    * (level-(n−1) id at p, token id at p + n − 1), so equal ids ⇔ equal
-    * token sequences, with no hashing of gram strings. */
+    * code points, as Spark's `length` counts them; grams compare by
+    * token sequence; an island of recurring grams breaks when a start
+    * exceeds the running max end + 1. */
   private def gopherNumerators(ts: Seq[String], topNs: Seq[Int],
                                dupN: Int): Seq[Option[Long]] =
     if (ts == null) null
     else {
-      val t = ts.length
-      val toks = new java.util.HashMap[String, Integer]()
-      val ids = new Array[Int](t)
-      val start = new Array[Long](t + 1) // start(p + 1) = start(p) + len_p + 1
-      start(0) = 1L
-      var p = 0
-      while (p < t) {
-        val tok = ts(p)
-        ids(p) = toks.computeIfAbsent(tok, _ => toks.size)
-        start(p + 1) = start(p) + tok.codePointCount(0, tok.length) + 1L
-        p += 1
-      }
-      val maxN = (dupN +: topNs).max
-      // levels(n) = gram ids of every n-gram, with the number of distinct ids
-      val levels = new Array[(Array[Int], Int)](maxN + 1)
-      levels(1) = (ids, toks.size)
-      var n = 2
-      while (n <= maxN) {
-        val (prev, _) = levels(n - 1)
-        val m = math.max(0, t - n + 1)
-        val seen = new java.util.HashMap[java.lang.Long, Integer]()
-        val g = new Array[Int](m)
-        var q = 0
-        while (q < m) {
-          g(q) = seen.computeIfAbsent((prev(q).toLong << 32) | ids(q + n - 1), _ => seen.size)
-          q += 1
-        }
-        levels(n) = (g, seen.size)
-        n += 1
-      }
-      def gend(q: Int, n: Int): Long = start(q + n) - 2L
-      def counts(n: Int): (Array[Int], Array[Int]) = {
-        val (g, k) = levels(n)
-        (g, g.foldLeft(new Array[Int](k)) { (c, id) => c(id) += 1; c })
+      val tok = ts.toIndexedSeq
+      val start = tok.scanLeft(1L)((s, w) => s + w.codePointCount(0, w.length) + 1L)
+      def end(p: Int, n: Int): Long = start(p + n) - 2L
+      // grams(n)(p) = the n-gram at token p, with its count in the document
+      def grams(n: Int): (IndexedSeq[IndexedSeq[String]], Map[IndexedSeq[String], Int]) = {
+        val gs = (0 to tok.length - n).map(p => tok.slice(p, p + n))
+        (gs, gs.groupMapReduce(identity)(_ => 1)(_ + _))
       }
       val tops = topNs.map { n =>
-        val (g, cnt) = counts(n)
-        var best = -1 // first occurrence of the top gram; ties keep the earlier gram
-        var q = 0
-        while (q < g.length) {
-          if (best < 0 || cnt(g(q)) > cnt(g(best))) best = q
-          q += 1
+        val (gs, cnt) = grams(n)
+        if (gs.isEmpty) None
+        else {
+          val p = gs.indices.minBy(p => (-cnt(gs(p)), p))
+          Some(cnt(gs(p)).toLong * (end(p, n) - start(p) + 1L))
         }
-        if (best < 0) None
-        else Some(cnt(g(best)).toLong * (gend(best, n) - start(best) + 1L))
       }
-      val (g, cnt) = counts(dupN)
-      var cover = 0L
-      var islandStart, pmax = -1L
-      var q = 0
-      while (q < g.length) {
-        if (cnt(g(q)) >= 2) {
-          if (islandStart < 0 || start(q) > pmax + 1L) {
-            if (islandStart >= 0) cover += pmax - islandStart + 1L
-            islandStart = start(q)
+      val (gs, cnt) = grams(dupN)
+      val rep = gs.indices.filter(p => cnt(gs(p)) >= 2)
+      val dup = if (rep.isEmpty) None else {
+        var (cover, islandStart, pmax) = (0L, start(rep.head), end(rep.head, dupN))
+        rep.tail.foreach { p =>
+          if (start(p) > pmax + 1L) {
+            cover += pmax - islandStart + 1L
+            islandStart = start(p)
           }
-          pmax = math.max(pmax, gend(q, dupN))
+          pmax = math.max(pmax, end(p, dupN))
         }
-        q += 1
+        Some(cover + pmax - islandStart + 1L)
       }
-      tops :+ (if (islandStart < 0) None else Some(cover + pmax - islandStart + 1L))
+      tops :+ dup
     }
 
   /** DuckDB replication of [[gopherRepetition]]: gram strings stand in

@@ -528,18 +528,18 @@ class TextAnalysisSpec extends SparkSpec {
     // a numeric target column feeds y straight into err = σ̃(m) − y: y = NaN
     // makes every gradient term NaN, y = 1e9 makes a term overflow
     // decimal(38,30). Cast semantics decide the distributed Sum's
-    // behaviour: ANSI (the session default) raises, non-ANSI would skip
-    // the term. Both paths must end the same way under the real setting.
-    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    // behaviour: ANSI (the session default) raises; non-ANSI would skip
+    // the term, which the replay does not do. Under the session's real
+    // setting both paths raise.
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
     Seq(Double.NaN, 1e9).foreach { bad =>
       val docs = Seq((1L, 1.0, "alpha beta"), (2L, 0.0, "gamma"), (3L, bad, "delta"))
         .toDF("doc_id", "y", "text")
       def train(localTrainDocs: Long) = scala.util.Try(TextAnalysis.qualityClassifierTrain(
         docs, col("y"), localTrainDocs = localTrainDocs)._1.map(java.lang.Double.doubleToRawLongBits).toSeq)
       val (local, dist) = (train(TextAnalysis.LocalTrainDocs), train(0L))
-      assert(local.isFailure == dist.isFailure, s"y = $bad: local $local, distributed $dist")
-      if (ansi) assert(dist.isFailure, s"y = $bad: ANSI cast should raise, got $dist")
-      else assert(local == dist, s"y = $bad: local $local, distributed $dist")
+      assert(dist.isFailure && local.isFailure,
+        s"y = $bad, spark.sql.ansi.enabled = $ansi: local $local, distributed $dist")
     }
   }
 
