@@ -200,7 +200,7 @@ object TextAnalysis {
       val tok = ts.toIndexedSeq
       val start = tok.scanLeft(1L)((s, w) => s + w.codePointCount(0, w.length) + 1L)
       def end(p: Int, n: Int): Long = start(p + n) - 2L
-      // grams(n)(p) = the n-gram at token p, with its count in the document
+      // the n-gram starting at each token p, and each gram's count in the document
       def grams(n: Int): (IndexedSeq[IndexedSeq[String]], Map[IndexedSeq[String], Int]) = {
         val gs = (0 to tok.length - n).map(p => tok.slice(p, p + n))
         (gs, gs.groupMapReduce(identity)(_ => 1)(_ + _))
