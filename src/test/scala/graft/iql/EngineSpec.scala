@@ -2066,6 +2066,19 @@ class EngineSpec extends SparkSpec {
     assert(e.linkMaintains >= l0 + 2)
   }
 
+  test("catalog overlay keys a NaN row by value: re-insert is a no-op, delete removes it") {
+    // Spark's <=> and set operations treat NaN = NaN; the overlay
+    // buffers must key the row the same way or each insert adds a copy
+    // and a delete misses them all
+    val cat = new Catalog(spark)
+    cat.insert("r", Seq(Seq[Any](1L, 1.0)))
+    cat.insert("r", Seq(Seq[Any](2L, Double.NaN)))
+    cat.insert("r", Seq(Seq[Any](2L, Double.NaN)))
+    assert(cat.relation("r").get.count() == 2L)
+    cat.delete("r", Seq(Seq[Any](2L, Double.NaN)))
+    assert(rows(cat.relation("r").get) == Set(Seq(1L, 1.0)))
+  }
+
   test("literal churn keeps the relation plan at constant depth") {
     val e = new Engine(new Catalog(spark))
     e.run("+chr[(1, 1), (2, 2), (3, 3)]")

@@ -68,6 +68,16 @@ class FixpointSpec extends SparkSpec {
     assert(rows(Fixpoint.connectedComponents(e, maxIter = 50)) == exp)
   }
 
+  test("connected components: the local path labels by Spark's UTF-8 string order") {
+    // U+E000 sorts before U+1F600 as UTF-8 bytes (EE.. < F0..), which is
+    // how the distributed loop's min() orders them; as UTF-16 code units
+    // the surrogate pair (D83D..) sorts first
+    val e = Seq(("\uE000", "\uD83D\uDE00")).toDF("a", "b")
+    val exp = Set[Seq[Any]](Seq("\uE000", "\uE000"), Seq("\uD83D\uDE00", "\uE000"))
+    assert(rows(Fixpoint.connectedComponents(e, maxIter = 50)) == exp)
+    assert(rows(Fixpoint.connectedComponents(e)) == exp)
+  }
+
   test("connected components: semi-naive distributed loop matches union-find on a random graph") {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(400)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
