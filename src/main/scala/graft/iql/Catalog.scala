@@ -830,21 +830,12 @@ final class Catalog(val spark: SparkSession) {
         r.toSeq.iterator.map(sz).sum).sum / rows.size)
     math.min(1L << 20, math.max(1L << 14, (128L << 20) / width)).toInt
   }
-  /** Buffer key for a typed literal row: value sequence with -0.0
-    * folded to 0.0, recursively through array values (the plan-side
-    * anti join compares with `<=>`, whose float normalization also
-    * recurses into arrays — the buffers must agree or a delete of
-    * [0.0] would miss a buffered [-0.0] and the rebuild would union
-    * the tombstoned row back in). */
-  private def overlayKey(r: org.apache.spark.sql.Row): Seq[Any] = {
-    def norm(v: Any): Any = v match {
-      case d: Double if d == 0.0 => 0.0
-      case f: Float if f == 0.0f => 0.0f
-      case s: Seq[_] => s.map(norm)
-      case other => other
-    }
-    r.toSeq.map(norm)
-  }
+  /** Buffer key for a typed literal row: the plan-side anti join
+    * compares with `<=>`, so the buffers must key rows the same way or
+    * a delete of [0.0] would miss a buffered [-0.0] (or a NaN row its
+    * twin) and the rebuild would union the tombstoned row back in. */
+  private def overlayKey(r: org.apache.spark.sql.Row): Seq[Any] =
+    r.toSeq.map(graft.plans.SparkValues.key)
   /** Retire an overlay entry: a compaction checkpoint WE created goes
     * to the Graveyard (handed-out results may still read it lazily —
     * the grace window covers them, the same contract as displaced

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import Ast._
-import graft.plans.Fixpoint
+import graft.plans.{Fixpoint, SparkValues}
 
 /** IQL execution engine: statements → catalog updates; queries →
   * DataFrames. The Spark analogue of the reference compile pipeline
@@ -698,9 +698,8 @@ final class Engine(val catalog: Catalog,
     // cancel fresh removals against the carried INSERT bag first (any
     // matching between equal rows is equivalent in a bag); the leftover
     // joins the rem bag, whose copies exact-removal guarantees exist in
-    // the base. ndNorm mirrors Spark's set-op equality (NaN = NaN,
-    // -0.0 = 0.0).
-    def bagKey(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map(ndNorm)
+    // the base. Keys follow Spark's set-op equality.
+    def bagKey(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map(SparkValues.key)
     val remain = mutable.HashMap.empty[Seq[Any], Int]
     st.insBag.foreach(r =>
       remain.updateWith(bagKey(r))(c => Some(c.getOrElse(0) + 1)))
@@ -835,22 +834,6 @@ final class Engine(val catalog: Catalog,
       rem: Seq[org.apache.spark.sql.Row]): Unit =
     if (ins.length <= 4096 && rem.length <= 4096)
       namedDeltas(view) = (v0, catalog.version, ins, rem)
-  /** Driver-side view-row equality matching Spark's null-safe compare:
-    * -0.0 folds to 0.0 (grouping/ordering normalization) and NaN equals
-    * NaN (boxed Double.equals already does), elementwise through
-    * arrays. */
-  private def ndNorm(v: Any): Any = v match {
-    case d: java.lang.Double if d.doubleValue() == 0.0 =>
-      java.lang.Double.valueOf(0.0)
-    case f: java.lang.Float if f.floatValue() == 0.0f =>
-      java.lang.Float.valueOf(0.0f)
-    case s: Seq[_] => s.map(ndNorm)
-    case x => x
-  }
-  private def ndRowEq(a: org.apache.spark.sql.Row,
-                      b: org.apache.spark.sql.Row): Boolean =
-    a.length == b.length &&
-      (0 until a.length).forall(i => ndNorm(a.get(i)) == ndNorm(b.get(i)))
   /** Views whose first tiny-literal-delete round took the dirty-group
     * path instead of seeding a support table (the 2-competitive seed
     * deferral in [[maintainAggSubtractable]]) — a second such round
@@ -1518,11 +1501,9 @@ final class Engine(val catalog: Catalog,
       // column-type contract: counts i64; sums i64 (view-value
       // subtractable) or f64 (decimal-carried); avg f64 (derived from a
       // decimal-carried sum + the non-null contributor count); min/max
-      // i64, f64, or STRING (the top-2 carry compares driver-side —
-      // Long.compare / Double.compare match Spark's orderings, and
-      // strings compare as unsigned UTF-8 bytes, which IS Spark's
-      // binary string order where Java's compareTo is UTF-16 code-unit
-      // order — other types bail to dirty-group)
+      // i64, f64, or STRING (the top-2 carry compares driver-side in
+      // Spark's order, SparkValues.compare — other types bail to
+      // dirty-group)
       if (aggSpecs.exists { case (f, i) =>
         val dt = named.schema(i).dataType
         f match {
@@ -1786,25 +1767,14 @@ final class Engine(val catalog: Catalog,
           aggDecrementCount += 1
           return Some(cached)
         }
-        def keyOk(v: Any): Boolean = v match {
-          case null => false
-          case d: Double => !d.isNaN
-          case f: Float => !f.isNaN
-          case _: Number | _: String | _: Boolean => true
-          case _ => false
-        }
-        if (dirty.exists(row => (0 until kLen).exists(j => !keyOk(row.get(j)))))
+        if (dirty.exists(row =>
+            (0 until kLen).exists(j => !SparkValues.literalKey(row.get(j)))))
           return None
-        def normKey(v: Any): Any = v match {
-          case d: Double if d == 0.0 => 0.0
-          case f: Float if f == 0.0f => 0.0f
-          case other => other
-        }
         val vPos = aggSpecs.map(_._2).zipWithIndex.map { case (i, p) => i -> (kLen + p) }.toMap
         val dnPos = kLen + aggSpecs.length
         val nnPos = nnSpecs.zipWithIndex.map { case (i, p) => i -> (dnPos + 1 + p) }.toMap
         val dMap: Map[Seq[Any], org.apache.spark.sql.Row] =
-          dirty.map(row => (0 until kLen).map(j => normKey(row.get(j))).toSeq -> row).toMap
+          dirty.map(row => (0 until kLen).map(j => SparkValues.key(row.get(j))).toSeq -> row).toMap
 
         // COMBINED per-group state: the view row PLUS its support counts
         // in one materialized frame — the returned view is a projection of
@@ -1960,11 +1930,11 @@ final class Engine(val catalog: Catalog,
             .orElse(carrierOpen(name, combined, keyNames))
         val dirtyCombined = combinedLocal match {
           case Some(rows) => rows.filter(row =>
-            dMap.contains(keyIdx.map(i => normKey(row.get(i))).toSeq))
+            dMap.contains(keyIdx.map(i => SparkValues.key(row.get(i))).toSeq))
           case None => pqState match {
             case Some(st) =>
               carrierDirty(st, dMap.keysIterator.toSeq, 2048,
-                row => keyIdx.map(i => normKey(row.get(i))))
+                row => keyIdx.map(i => SparkValues.key(row.get(i))))
                 .getOrElse(return None)
             case None => sideOn(combined, dirtyKeysDf, keyNames, anti = false)
               .limit(2050).collect()
@@ -2017,10 +1987,10 @@ final class Engine(val catalog: Catalog,
                     row.getLong(kLen + 1)))
               }
             if (touched.length > 2048 ||
-                touched.exists { case (p, _) => !keyOk(p(kLen)) }) false
+                touched.exists { case (p, _) => !SparkValues.literalKey(p(kLen)) }) false
             else {
               val tMap = touched.map { case (p, dc) =>
-                (p.map(normKey), dc)
+                (p.map(SparkValues.key), dc)
               }.toMap
               val (auxPRaw, auxP) = auxPairsCache.get((name, i)) match {
                 case Some((v, df)) if v == v0 =>
@@ -2065,13 +2035,13 @@ final class Engine(val catalog: Catalog,
                     servedMarker = auxPRaw))
               val auxTouchedOpt = pairsLocal match {
                 case Some(rows) => Some(rows.filter { row =>
-                  val p: Seq[Any] = (0 to kLen).map(j => normKey(row.get(j)))
+                  val p: Seq[Any] = (0 to kLen).map(j => SparkValues.key(row.get(j)))
                   tMap.contains(p)
                 })
                 case None => pqP match {
                   case Some(st) =>
                     carrierDirty(st, tMap.keysIterator.toSeq, 2048,
-                      row => (0 to kLen).map(j => normKey(row.get(j))))
+                      row => (0 to kLen).map(j => SparkValues.key(row.get(j))))
                   case None => Some(sideOn(auxP, touchedDf, pairNames,
                     anti = false).limit(2050).collect())
                 }
@@ -2080,7 +2050,7 @@ final class Engine(val catalog: Catalog,
               if (auxTouchedOpt.isEmpty || auxTouched.length > 2048) false
               else {
                 val sMap: Map[Seq[Any], Long] = auxTouched.map { row =>
-                  ((0 to kLen).map(j => normKey(row.get(j))): Seq[Any]) ->
+                  ((0 to kLen).map(j => SparkValues.key(row.get(j))): Seq[Any]) ->
                     row.getLong(kLen + 1)
                 }.toMap
                 val alive = Seq.newBuilder[org.apache.spark.sql.Row]
@@ -2106,7 +2076,7 @@ final class Engine(val catalog: Catalog,
                   cdAuxNew += (((name, i), () => pairsLocal match {
                     case Some(copy) =>
                       val full = copy.filterNot { row =>
-                        val p: Seq[Any] = (0 to kLen).map(j => normKey(row.get(j)))
+                        val p: Seq[Any] = (0 to kLen).map(j => SparkValues.key(row.get(j)))
                         tMap.contains(p)
                       } ++ aliveRows
                       (sp.createDataFrame(
@@ -2117,7 +2087,7 @@ final class Engine(val catalog: Catalog,
                         // O(delta) overlay commit — alive pairs replace,
                         // dead pairs tombstone; base parquet immutable
                         val newByKey = aliveRows.iterator.map(row =>
-                          ((0 to kLen).map(j => normKey(row.get(j))): Seq[Any]) -> row)
+                          ((0 to kLen).map(j => SparkValues.key(row.get(j))): Seq[Any]) -> row)
                           .toMap
                         val servedNew = carrierCommit(st,
                           tMap.keysIterator.map(p => p -> newByKey.get(p).toSeq))
@@ -2150,7 +2120,7 @@ final class Engine(val catalog: Catalog,
           i -> (cols.length + 1 + nnSpecs.length + decSpecs.length + 3 * p) }.toMap
         val oldMap = mutable.HashMap.empty[Seq[Any], org.apache.spark.sql.Row]
         dirtyCombined.foreach { row =>
-          oldMap(keyIdx.map(i => normKey(row.get(i))).toSeq) = row
+          oldMap(keyIdx.map(i => SparkValues.key(row.get(i))).toSeq) = row
         }
 
         // ---- min/max: top-2 carry update. Per column, ONE bounded
@@ -2184,10 +2154,10 @@ final class Engine(val catalog: Catalog,
                 .limit(2050).collect()
               if (touched.length > 2048) return None
               val byKey: Map[Seq[Any], Map[Any, Long]] = touched.groupBy { row =>
-                  val kk: Seq[Any] = (0 until kLen).map(j => normKey(row.get(j)))
+                  val kk: Seq[Any] = (0 until kLen).map(j => SparkValues.key(row.get(j)))
                   kk
                 }.map { case (k, rws) => k -> rws.map(row =>
-                  normKey(row.get(kLen)) -> row.getLong(kLen + 1)).toMap }
+                  SparkValues.key(row.get(kLen)) -> row.getLong(kLen + 1)).toMap }
               term -> byKey
             }.toMap
           val mmNets: Map[Int, Map[Seq[Any], Map[Any, Long]]] =
@@ -2198,27 +2168,7 @@ final class Engine(val catalog: Catalog,
             val n1 = old.map(_.getLong(nPos)).getOrElse(0L) + dRow.getLong(dnPos)
             if (n1 > 0) mmSpecs.foreach { case (f, i) =>
               def cmp(a: Any, b: Any): Int = {
-                val c = (a, b) match {
-                  case (x: java.lang.Long, y: java.lang.Long) =>
-                    java.lang.Long.compare(x, y)
-                  case (x: java.lang.Double, y: java.lang.Double) =>
-                    java.lang.Double.compare(x, y)
-                  case (x: String, y: String) =>
-                    // Spark orders strings as unsigned UTF-8 bytes;
-                    // String.compareTo (UTF-16 code units) disagrees for
-                    // supplementary characters vs U+E000..U+FFFF
-                    val xa = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                    val ya = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                    val n2 = math.min(xa.length, ya.length)
-                    var j = 0; var r = 0
-                    while (r == 0 && j < n2) {
-                      r = java.lang.Integer.compare(xa(j) & 0xff, ya(j) & 0xff)
-                      j += 1
-                    }
-                    if (r != 0) r
-                    else java.lang.Integer.compare(xa.length, ya.length)
-                  case _ => 0
-                }
+                val c = SparkValues.compare(a, b)
                 if (f == "min") c else -c
               }
               val nn1i = old.map(_.getLong(nnPosC(i))).getOrElse(0L) +
@@ -2227,9 +2177,9 @@ final class Engine(val catalog: Catalog,
               val (b1, k1, b2, k2): (Any, Long, Any, Long) = old match {
                 case None => (null, 0L, null, 0L) // fresh group: no priors
                 case Some(o) =>
-                  (Option(o.get(i)).map(normKey).orNull,
+                  (Option(o.get(i)).map(SparkValues.key).orNull,
                    if (o.isNullAt(mmPosC(i))) 0L else o.getLong(mmPosC(i)),
-                   Option(o.get(mmPosC(i) + 1)).map(normKey).orNull,
+                   Option(o.get(mmPosC(i) + 1)).map(SparkValues.key).orNull,
                    if (o.isNullAt(mmPosC(i) + 2)) 0L else o.getLong(mmPosC(i) + 2))
               }
               if (nn1i == 0L) {
@@ -2281,7 +2231,7 @@ final class Engine(val catalog: Catalog,
                     onlyKeys = Some(keyLit(ksAll, combined, keyNames)))
                   .limit(2050).collect()
                   .map { row =>
-                    val kk: Seq[Any] = (0 until kLen).map(j => normKey(row.get(j)))
+                    val kk: Seq[Any] = (0 until kLen).map(j => SparkValues.key(row.get(j)))
                     kk -> row
                   }.toMap
                 specs.zipWithIndex.foreach { case ((_, i), si) =>
@@ -2355,7 +2305,7 @@ final class Engine(val catalog: Catalog,
         val (combinedOut, combinedOutRows) = combinedLocal match {
           case Some(copy) =>
             val full = copy.filterNot(row =>
-              dMap.contains(keyIdx.map(i => normKey(row.get(i))).toSeq)) ++ rows
+              dMap.contains(keyIdx.map(i => SparkValues.key(row.get(i))).toSeq)) ++ rows
             (spark.createDataFrame(
               java.util.Arrays.asList(full.toSeq: _*), combSchema), Some(full))
           case None => pqState match {
@@ -2365,7 +2315,7 @@ final class Engine(val catalog: Catalog,
               // base parquet never rewrites on the round path
               // ([[carrierCommit]] folds past the cap, amortized)
               val newByKey = rows.iterator.map(row =>
-                (keyIdx.map(i => normKey(row.get(i))): Seq[Any]) -> row).toMap
+                (keyIdx.map(i => SparkValues.key(row.get(i))): Seq[Any]) -> row).toMap
               val servedNew = carrierCommit(st,
                 dMap.keysIterator.map(kk => kk -> newByKey.get(kk).toSeq))
               supportParquetRounds += 1
@@ -2435,7 +2385,7 @@ final class Engine(val catalog: Catalog,
         locally {
           val newByKey: Map[Seq[Any], org.apache.spark.sql.Row] =
             rows.iterator.map(row =>
-              (keyIdx.map(i => normKey(row.get(i))): Seq[Any]) -> row).toMap
+              (keyIdx.map(i => SparkValues.key(row.get(i))): Seq[Any]) -> row).toMap
           def proj(row: org.apache.spark.sql.Row): org.apache.spark.sql.Row =
             org.apache.spark.sql.Row.fromSeq(cols.indices.map(row.get))
           val insB = Seq.newBuilder[org.apache.spark.sql.Row]
@@ -2444,7 +2394,8 @@ final class Engine(val catalog: Catalog,
             val o = oldMap.get(kk).map(proj)
             val nw = newByKey.get(kk).map(proj)
             (o, nw) match {
-              case (Some(a), Some(b)) if ndRowEq(a, b) => ()
+              case (Some(a), Some(b))
+                  if SparkValues.key(a.toSeq) == SparkValues.key(b.toSeq) => ()
               case _ => o.foreach(remB += _); nw.foreach(insB += _)
             }
           }
@@ -2654,43 +2605,22 @@ final class Engine(val catalog: Catalog,
         * frames (no lineage, no checkpoint to retire). Falls through
         * to the distributed algebra unchanged on ANY complication:
         * caps exceeded, a group needing a refill, contract violations
-        * (the distributed viol path decides those), or sort/key types
-        * whose driver compare can't mirror Spark's ordering — strings
-        * sort by UTF-8 bytes there but UTF-16 code units here, so only
-        * fixed-width numerics and booleans order locally (strings are
-        * still fine as EQUALITY-only merge keys). */
+        * (the distributed viol path decides those), or column types
+        * that [[SparkValues.compare]] does not order. */
       def localRide(): Option[DataFrame] = {
         if (!limits.rankLocalRideEnabled) return None
-        def ordOk(dt: DataType): Boolean = dt match {
+        if (!cols.indices.forall(i => named.schema(i).dataType match {
           case LongType | IntegerType | ShortType | ByteType | DoubleType |
-               FloatType | BooleanType => true
+               FloatType | BooleanType | StringType => true
           case _ => false
-        }
-        def keyOk(dt: DataType): Boolean = ordOk(dt) || dt == StringType
-        if (!sortIdx.forall(i => ordOk(named.schema(i).dataType))) return None
-        if (!cols.indices.forall(i => keyOk(named.schema(i).dataType))) return None
+        })) return None
         if (remLit.exists(_._2 < 0L) || insLit.exists(_._2 < 0L)) return None
         val nc = cols.length
-        // Spark normalizes -0.0 to 0.0 in grouping and ordering — boxed
-        // java equality does not; normalize so driver keys merge the
-        // same rows a shuffle would
-        def normV(v: Any): Any = v match {
-          case d: java.lang.Double if d.doubleValue() == 0.0 =>
-            java.lang.Double.valueOf(0.0)
-          case f: java.lang.Float if f.floatValue() == 0.0f =>
-            java.lang.Float.valueOf(0.0f)
-          case x => x
-        }
+        // null or NaN sort values: the distributed viol path decides
         def anomalous(r: org.apache.spark.sql.Row): Boolean =
-          sortIdx.exists { i =>
-            r.isNullAt(i) || (r.get(i) match {
-              case d: java.lang.Double => d.isNaN
-              case f: java.lang.Float => f.isNaN
-              case _ => false
-            })
-          }
+          sortIdx.exists(i => !SparkValues.literalKey(r.get(i)))
         def keyOf(r: org.apache.spark.sql.Row): Vector[Any] =
-          Vector.tabulate(nc)(j => normV(r.get(j)))
+          Vector.tabulate(nc)(j => SparkValues.key(r.get(j)))
         def gkeyOf(key: Vector[Any]): Vector[Any] = groupIdx.map(key).toVector
         // one bounded grouped collect per change side — the only jobs
         def sideCounts(l: Option[(DataFrame, Long)]):
@@ -2750,28 +2680,12 @@ final class Engine(val catalog: Catalog,
         }
         if (bufRows.exists(r => anomalous(r) || r.isNullAt(nc) || r.isNullAt(nc + 1)))
           return None
-        val schemaDt = cols.indices.map(i => named.schema(i).dataType)
-        def cmpAt(i: Int, a: Any, b: Any): Int = schemaDt(i) match {
-          case DoubleType =>
-            val x = a.asInstanceOf[java.lang.Number].doubleValue()
-            val y = b.asInstanceOf[java.lang.Number].doubleValue()
-            if (x < y) -1 else if (x > y) 1 else 0
-          case FloatType =>
-            val x = a.asInstanceOf[java.lang.Number].floatValue()
-            val y = b.asInstanceOf[java.lang.Number].floatValue()
-            if (x < y) -1 else if (x > y) 1 else 0
-          case BooleanType => java.lang.Boolean.compare(
-            a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-          case _ => java.lang.Long.compare(
-            a.asInstanceOf[java.lang.Number].longValue(),
-            b.asInstanceOf[java.lang.Number].longValue())
-        }
         def rankCmp(a: Vector[Any], b: Vector[Any]): Int = {
-          var c = cmpAt(orderIdx, a(orderIdx), b(orderIdx))
+          var c = SparkValues.compare(a(orderIdx), b(orderIdx))
           if (rank.desc) c = -c
           if (c != 0) return c
           outIdx.foreach { i =>
-            val d = cmpAt(i, a(i), b(i)); if (d != 0) return d
+            val d = SparkValues.compare(a(i), b(i)); if (d != 0) return d
           }
           0
         }
@@ -2836,12 +2750,7 @@ final class Engine(val catalog: Catalog,
         // slices are ≤ k+slack rows each) and merged here — the scan is
         // the only distributed work of the round. Non-literal keys fall
         // through (the distributed path bails those to dirty-group).
-        if (refillG.exists(_.exists(v => v == null || (v match {
-          case d: java.lang.Double => d.isNaN
-          case f: java.lang.Float => f.isNaN
-          case _: java.lang.Number | _: String | _: java.lang.Boolean => false
-          case _ => true
-        })))) return None
+        if (refillG.exists(_.exists(v => !SparkValues.literalKey(v)))) return None
         val refillRows: Map[Vector[Any], Seq[(Vector[Any], Long, Long)]] =
           if (refillG.isEmpty) Map.empty
           else {
@@ -3156,12 +3065,7 @@ final class Engine(val catalog: Catalog,
           needRows.map(row => gN.indices.map(row.get)).toSeq
         // refill keys must be literal-representable (the same contract
         // as dirty-group's key predicate)
-        if (refillKeys.exists(_.exists(v => v == null || (v match {
-          case d: Double => d.isNaN
-          case f: Float => f.isNaN
-          case _: Number | _: String | _: Boolean => false
-          case _ => true
-        })))) return None
+        if (refillKeys.exists(_.exists(v => !SparkValues.literalKey(v)))) return None
 
         val wOrd = W.partitionBy(gCols: _*).orderBy(sortCols: _*)
         val keptRows = updMat.where(col("__keep"))
@@ -3339,7 +3243,7 @@ final class Engine(val catalog: Catalog,
         val newRow = org.apache.spark.sql.Row.fromSeq(vals)
         // exact single-row swap for stacked-view consumers
         old match {
-          case Some(o) if ndRowEq(o, newRow) =>
+          case Some(o) if SparkValues.key(o.toSeq) == SparkValues.key(newRow.toSeq) =>
             recordNamedDelta(name, v0, Nil, Nil)
           case _ => recordNamedDelta(name, v0, Seq(newRow), old.toSeq)
         }
@@ -3748,13 +3652,7 @@ final class Engine(val catalog: Catalog,
         }
         // null/NaN/non-primitive keys: a literal <=> predicate can't
         // reproduce the grouping semantics — recompute
-        if (dirty.exists(_.toSeq.exists(v => v == null ||
-          (v match {
-            case d: Double => d.isNaN
-            case f: Float => f.isNaN
-            case _: Number | _: String | _: Boolean => false
-            case _ => true
-          })))) return None
+        if (dirty.exists(_.toSeq.exists(v => !SparkValues.literalKey(v)))) return None
         def dirtyPred: Column = dirty.map { row =>
           keyIdx.indices.map { j =>
             col(cols(keyIdx(j))) <=> lit(row.get(j))
@@ -3782,7 +3680,7 @@ final class Engine(val catalog: Catalog,
             def keyed(rs: Array[org.apache.spark.sql.Row])
                 : Map[Seq[Any], org.apache.spark.sql.Row] =
               rs.iterator.map(r =>
-                (r.toSeq.map(ndNorm): Seq[Any]) -> r).toMap
+                (r.toSeq.map(SparkValues.key): Seq[Any]) -> r).toMap
             val om = keyed(oldRows); val nm = keyed(newRows)
             recordNamedDelta(name, v0,
               nm.collect { case (kk, r) if !om.contains(kk) => r }.toSeq,
@@ -4030,10 +3928,9 @@ final class Engine(val catalog: Catalog,
                 Fixpoint.collectUpTo(df, Fixpoint.LocalEdgeRows)
                   .map(_.map(_.toSeq.map(aggNorm)))
               val cachedRows = collectNorm(cached.toDF(cols: _*)).getOrElse(return None)
-              // null/NaN labels break in-memory structural equality (the
-              // distributed tight-join compares with <=>) — let it run
-              if (cachedRows.exists(_.exists(v => v == null ||
-                (v.isInstanceOf[Double] && v.asInstanceOf[Double].isNaN)))) return None
+              // only literal labels keep in-memory structural equality
+              // equal to the distributed tight-join's <=> — let it run
+              if (cachedRows.exists(_.exists(v => !SparkValues.literalKey(v)))) return None
               val othRows: Seq[Array[Seq[Any]]] = shapes.map { case (_, _, oth) =>
                 collectNorm(resolve(oth.rel, oth.args.length)).getOrElse(return None)
               }
@@ -4385,22 +4282,9 @@ final class Engine(val catalog: Catalog,
         // BENCHMARKS.md:91-93; this is its Spark analogue for the
         // overwhelmingly common small-group-count case)
         object MergeBail extends scala.util.control.ControlThrowable
-        def numLt(a: Any, b: Any): Boolean = (a, b) match {
-          case (x: Long, y: Long) => x < y
-          case (x: Int, y: Int) => x < y
-          case (x: Number, y: Number) =>
-            // Double.compare orders NaN largest and -0.0 < 0.0 — Spark's
-            // least/greatest ordering for doubles (plain < would let a
-            // cached NaN min survive forever)
-            java.lang.Double.compare(x.doubleValue, y.doubleValue) < 0
-          case (x: String, y: String) =>
-            // Spark least/greatest order strings by UTF-8 bytes; Java by
-            // UTF-16 chars — equivalent only for ASCII
-            if (x.exists(_ >= 128) || y.exists(_ >= 128)) throw MergeBail
-            x.compareTo(y) < 0
-          case (x: Boolean, y: Boolean) => !x && y
-          case _ => throw MergeBail
-        }
+        // Spark's min/max order (NaN largest, so a cached NaN min cannot
+        // survive forever; strings by UTF-8 bytes)
+        def lt(a: Any, b: Any): Boolean = SparkValues.compare(a, b) < 0
         val localMerged = try for {
           newRows <- Fixpoint.collectUpTo(deltaAggDf, Fixpoint.LocalEdgeRows)
           oldRows <-
@@ -4411,25 +4295,12 @@ final class Engine(val catalog: Catalog,
           cached
         } else {
           val keyIdx = cols.indices.filterNot(aggIdxSet)
-          // One shared boxed NaN: Seq[Any] equality goes through
-          // BoxesRunTime.equals, whose reference-equality short-circuit
-          // makes the shared instance equal (and hash-consistent) to
-          // itself — so NaN group keys merge like the distributed
-          // full_outer <=> join does. A freshly boxed NaN never equals
-          // another and would silently split the group into two rows.
-          val canonNaN: java.lang.Double = java.lang.Double.valueOf(Double.NaN)
+          // keys as the distributed full_outer <=> join matches them
           def key(row: org.apache.spark.sql.Row): Seq[Any] = keyIdx.map { i =>
-            row.get(i) match { // <=> folds -0.0 into 0.0 and NaN equal
-              case d: Double if d.isNaN => canonNaN
-              case d: Double if d == 0.0 => 0.0
-              case f: Float if f.isNaN => canonNaN
-              case f: Float if f == 0.0f => 0.0f
-              case v @ (null | _: Int | _: Long | _: Double | _: Float |
-                        _: String | _: Boolean | _: java.lang.Short |
-                        _: java.lang.Byte) => v
-              case _ => throw MergeBail // Array[Byte] & friends: value
-              // equality is reference equality here but <=> distributed —
-              // a local merge would mis-split groups
+            row.get(i) match {
+              case _: Array[_] => throw MergeBail // binary: reference
+              // equality here but value equality under <=>
+              case v => SparkValues.key(v)
             }
           }
           val m = mutable.LinkedHashMap.empty[Seq[Any], Array[Any]]
@@ -4452,10 +4323,10 @@ final class Engine(val catalog: Catalog,
                     else if (ov == null) nv else if (nv == null) ov else addNum(ov, nv)
                   case "min" => // least/greatest skip nulls
                     if (ov == null) nv else if (nv == null) ov
-                    else if (numLt(nv, ov)) nv else ov
+                    else if (lt(nv, ov)) nv else ov
                   case _ =>
                     if (ov == null) nv else if (nv == null) ov
-                    else if (numLt(ov, nv)) nv else ov
+                    else if (lt(ov, nv)) nv else ov
                 }
               }
             }
@@ -4476,7 +4347,8 @@ final class Engine(val catalog: Catalog,
               val nw = m.get(kk)
                 .map(a => org.apache.spark.sql.Row.fromSeq(a.toSeq))
               (o, nw) match {
-                case (Some(a), Some(b)) if ndRowEq(a, b) => ()
+                case (Some(a), Some(b))
+                    if SparkValues.key(a.toSeq) == SparkValues.key(b.toSeq) => ()
                 case _ => o.foreach(remB += _); nw.foreach(insB += _)
               }
             }
@@ -4485,7 +4357,10 @@ final class Engine(val catalog: Catalog,
           catalog.spark.createDataFrame(
             catalog.spark.sparkContext.parallelize(out,
               Fixpoint.parallelizeParts(out.size.toLong)), schema)
-        } catch { case MergeBail => None }
+        } catch {
+          // a min/max type SparkValues.compare does not order
+          case MergeBail | _: IllegalArgumentException => None
+        }
         localMerged.foreach(df => return Some(df))
         val deltaAgg = Fixpoint.materialize(deltaAggDf)
         if (deltaAgg.count == 0) {
@@ -4562,19 +4437,9 @@ final class Engine(val catalog: Catalog,
               catalog.spark.createDataFrame(
                 catalog.spark.sparkContext.parallelize(rows,
                   Fixpoint.parallelizeParts(rows.size.toLong)), schema)
-            // normalize float zeros/NaN so raw driver-side literals
-            // (rawDelta) and Spark-normalized cached values agree in the
-            // hash sets below (Spark folds -0.0 into 0.0 and treats NaN
-            // equal in grouping; a fresh-boxed NaN would never dedup)
-            val canonNaN: java.lang.Double = java.lang.Double.valueOf(Double.NaN)
-            val canonNaNF: java.lang.Float = java.lang.Float.valueOf(Float.NaN)
-            def nv(v: Any): Any = v match {
-              case d: Double if d.isNaN => canonNaN
-              case d: Double if d == 0.0 => 0.0
-              case f: Float if f.isNaN => canonNaNF
-              case f: Float if f == 0.0f => 0.0f
-              case other => other
-            }
+            // raw driver-side literals (rawDelta) and Spark-normalized
+            // cached values must agree in the hash sets below
+            import SparkValues.{key => nv}
             if (remRows.isEmpty) {
               // INSERT-ONLY: seed with paths through the new edges, then
               // propagate forward over old-closure successors (one hop
@@ -4827,8 +4692,10 @@ final class Engine(val catalog: Catalog,
                 .map(row => links.map { case (p, q) => (p, row.get(q)) })
                 .toSeq.distinct
               // literal-expressible link values only: <=> literals are
-              // null- and NaN-safe, but array/struct/any-typed values
-              // have no faithful literal — those rounds take DRed
+              // null- and NaN-safe (so this admits more than
+              // SparkValues.literalKey, which also guards driver hash
+              // keys), but array/struct/any-typed values have no
+              // faithful literal — those rounds take DRed
               vals.foreach(_.foreach { case (_, v) => v match {
                 case null | _: java.lang.Number | _: String |
                      _: java.lang.Boolean | _: java.sql.Timestamp |
@@ -4866,7 +4733,7 @@ final class Engine(val catalog: Catalog,
                 def keyed(rs: Array[org.apache.spark.sql.Row])
                     : Map[Seq[Any], org.apache.spark.sql.Row] =
                   rs.iterator.map(r =>
-                    (r.toSeq.map(ndNorm): Seq[Any]) -> r).toMap
+                    (r.toSeq.map(SparkValues.key): Seq[Any]) -> r).toMap
                 val om = keyed(oldRows); val nm = keyed(newRows)
                 recordNamedDelta(name, v0,
                   nm.collect { case (kk, r) if !om.contains(kk) => r }.toSeq,
@@ -5487,18 +5354,15 @@ final class Engine(val catalog: Catalog,
         // normalization (Int/Short/Byte widened — mirroring
         // LocalEval.norm exactly, or del rows normalized to Long would
         // never match raw narrow-typed cached rows and deleted tuples
-        // would silently survive — NaN canonicalized, -0.0 folded)
-        val myNaN: java.lang.Double = java.lang.Double.valueOf(Double.NaN)
+        // would silently survive)
         def keyf(row: Row, n: Int): ArraySeq[Any] = ArraySeq.unsafeWrapArray(
           Array.tabulate[Any](n) { i =>
             row.get(i) match {
               case x: Int => x.toLong
               case x: Short => x.toLong
               case x: Byte => x.toLong
-              case d: Double if d.isNaN => myNaN
-              case d: Double if d == 0.0 => 0.0
               case _: Float => throw LB
-              case v => v
+              case v => SparkValues.key(v)
             }
           })
         val keptRows = members.map { m =>

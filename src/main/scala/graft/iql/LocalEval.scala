@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
+import graft.plans.SparkValues
 
 import Ast._
 
@@ -70,25 +71,19 @@ object LocalEval {
     case _ => bail() // vectors, timestamps, … — distributed path handles
   }
 
-  /** One shared boxed NaN: `ArraySeq[Any]` equality goes through
-    * `BoxesRunTime.equals`, whose reference-equality short-circuit makes
-    * the shared instance compare (and hash) equal to itself — so set/pend
-    * dedup agrees with [[valEq]]'s NaN=NaN, matching Spark's normalized
-    * comparison. A freshly boxed NaN would never dedup and churn every
-    * round until MaxDerived. */
-  private val CanonNaN: java.lang.Double = java.lang.Double.valueOf(Double.NaN)
-
   /** Normalize collected/constant values to the widened kinds the
-    * distributed path's unions settle on (Int→Long), and -0.0→0.0 /
-    * NaN→[[CanonNaN]] so hash-set dedup matches Spark's normalized
-    * comparison. Float scalars bail: `RuleCompiler.cmpTyped` applies the
-    * 1e-10 tolerance only to static DoubleType, so a Float-sourced column
-    * compares exactly distributed but would compare tolerantly here. */
+    * distributed path's unions settle on (Int→Long), and doubles to
+    * their [[SparkValues.key]] so hash-set dedup matches Spark's
+    * normalized comparison (a freshly boxed NaN would never dedup and
+    * churn every round until MaxDerived). Float scalars bail:
+    * `RuleCompiler.cmpTyped` applies the 1e-10 tolerance only to static
+    * DoubleType, so a Float-sourced column compares exactly distributed
+    * but would compare tolerantly here. */
   private def norm(v: Any): Any = v match {
     case i: Int => i.toLong
     case s: Short => s.toLong
     case b: Byte => b.toLong
-    case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) CanonNaN else d
+    case d: Double => SparkValues.key(d)
     case _: Long | _: String | _: Boolean | null => v
     case _ => bail() // Float scalars, vectors, timestamps, … — distributed path handles
   }
@@ -211,8 +206,8 @@ object LocalEval {
     * reference's 1e-10 tolerance when either side is a double; ordered
     * comparisons are SQL-style (null operand → not selected). Cross-kind
     * comparisons (string vs number) would go through Spark's implicit
-    * casts — bail. Non-ASCII string ordering differs between UTF-8 bytes
-    * (Spark) and UTF-16 chars (Java) — bail there too. */
+    * casts — bail. Ordered comparisons use Spark's order
+    * ([[SparkValues.compare]]). */
   private def cmpVal(op: String, a: Any, b: Any): Boolean = {
     val isD = a.isInstanceOf[Double] || b.isInstanceOf[Double]
     if (op == "=" || op == "!=") {
@@ -232,12 +227,9 @@ object LocalEval {
     } else {
       if (a == null || b == null) return false
       val c = (a, b) match {
-        case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-        case (x: String, y: String) =>
-          if (!isAscii(x) || !isAscii(y)) bail()
-          x.compareTo(y)
-        case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
-        case _ if isD => java.lang.Double.compare(numD(a), numD(b))
+        case (_: Long, _: Long) | (_: String, _: String) |
+             (_: Boolean, _: Boolean) => SparkValues.compare(a, b)
+        case _ if isD => SparkValues.compare(numD(a), numD(b))
         case _ => bail()
       }
       op match {
@@ -254,12 +246,6 @@ object LocalEval {
     case l: Long => l.toDouble
     case d: Double => d
     case _ => bail()
-  }
-
-  private def isAscii(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) { if (s.charAt(i) >= 128) return false; i += 1 }
-    true
   }
 
   /** One relation's tuples + per-column kind lattice + lazy hash indexes
@@ -397,7 +383,7 @@ object LocalEval {
           }.toList
           val key = mask.map(i => a.args(i) match {
             case Const(c) => norm(c)
-            case Var(n) => env(n)
+            case Var(n) => SparkValues.key(env(n))
             case _ => bail()
           })
           val it = st.lookup(mask, key)
@@ -563,11 +549,12 @@ object LocalEval {
         case Wildcard => ()
         case Const(c) =>
           val v = t(i)
-          if (v == null || !valEq(norm(c), v)) return None
+          if (v == null || norm(c) != v) return None
         case Var(n) =>
           val v = t(i)
           env.get(n) match {
-            case Some(b) => if (b == null || v == null || !valEq(b, v)) return None
+            case Some(b) =>
+              if (b == null || v == null || SparkValues.key(b) != v) return None
             case None => env = env.updated(n, v)
           }
         case _ => bail()
@@ -575,16 +562,6 @@ object LocalEval {
       i += 1
     }
     Some(env)
-  }
-
-  /** Non-null value equality. Kinds are already store-consistent (mixed
-    * kinds bail at insert/lookup), so this is same-kind comparison; NaN
-    * equals NaN and -0.0 was normalized away, matching Spark. */
-  private def valEq(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Double, y: Double) => x == y || (x.isNaN && y.isNaN)
-    case (x: Long, y: Double) => x.toDouble == y
-    case (x: Double, y: Long) => x == y.toDouble
-    case _ => a == b
   }
 
   private def toFrame(spark: SparkSession, st: Store, rows: Array[Row]): DataFrame = {

@@ -252,12 +252,7 @@ object Similarity {
       if (c1 == null && c2 == null) 0
       else if (c1 == null) -1 // NULL cos sorts last under DESC
       else if (c2 == null) 1
-      else {
-        val x = c1.doubleValue(); val y = c2.doubleValue()
-        // Spark's nan-safe double ordering: x == y covers -0.0 vs 0.0;
-        // Double.compare has NaN == NaN, NaN greater than everything else
-        if (x == y) 0 else java.lang.Double.compare(x, y)
-      }
+      else graft.plans.SparkValues.compare(c1.doubleValue(), c2.doubleValue())
     if (byCos != 0) byCos > 0
     else if (p1 == null) p2 != null // ASC NULLS FIRST on the partner id
     else if (p2 == null) false

@@ -384,9 +384,10 @@ object Fixpoint {
     }
 
   /** Driver-local connected components: union-find over collected edges,
-    * component label = min member id (matches the distributed variant). */
+    * component label = min member id in Spark's order (matches the
+    * distributed variant's min()). */
   private def localComponents(und: Mat): DataFrame = {
-    val pairs = und.df.collect().map(r => (r.get(0), r.get(1)))
+    val pairs = und.df.collect().map(r => (SparkValues.key(r.get(0)), SparkValues.key(r.get(1))))
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
@@ -400,18 +401,10 @@ object Fixpoint {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(ra) = rb
     }
-    val ord = new Ordering[Any] {
-      def compare(x: Any, y: Any): Int = (x, y) match {
-        case (a: Long, b: Long) => java.lang.Long.compare(a, b)
-        case (a: Int, b: Int) => Integer.compare(a, b)
-        case (a: Number, b: Number) => java.lang.Double.compare(a.doubleValue, b.doubleValue)
-        case (a, b) => a.toString.compareTo(b.toString)
-      }
-    }
     val byRoot = parent.keys.toSeq.groupBy(find)
     var total = 0L
     val grouped = byRoot.values.map { members =>
-      val comp = members.min(ord)
+      val comp = members.reduce((a, b) => if (SparkValues.compare(a, b) <= 0) a else b)
       total += members.size
       org.apache.spark.sql.Row(comp, members)
     }.toSeq

@@ -1527,6 +1527,44 @@ class EngineSpec extends SparkSpec {
     assert(out.collect { case Seq(k: Double, s: Double) if k.isNaN => s } == Set(17.0))
   }
 
+  test("non-ASCII string order: the local merge and local eval serve it and agree with Spark") {
+    // Spark orders strings as UTF-8 bytes: U+E000 < U+FFFF < U+1F600.
+    // UTF-16 order puts U+1F600 (a surrogate pair) first. A frame served
+    // by a driver-local path reads no checkpointed RDD.
+    def local(df: org.apache.spark.sql.DataFrame): Boolean =
+      graft.plans.Fixpoint.checkpointRddOf(df).isEmpty
+    val (pua, top, emoji) = ("\uE000", "\uFFFF", "\uD83D\uDE00")
+    val rule = "+v(G, min<X>, max<X>) <- t(I, G, X)\n"
+    val e = new Engine(new Catalog(spark))
+    e.run(s"""+t[(1, "g", "a"), (2, "g", "$pua")]\n$rule""")
+    e.run("?v(G, L, H)")
+    e.run(s"""+t[(3, "g", "$emoji"), (4, "g", "$top"), (5, "h", "$emoji"), (6, "h", "$pua")]""")
+    val merged = e.run("?v(G, L, H)").last
+    assert(local(merged), "the insert-only min/max round should merge on the driver")
+    val fresh = new Engine(new Catalog(spark))
+    fresh.run(s"""+t[(1, "g", "a"), (2, "g", "$pua"), (3, "g", "$emoji"), """ +
+      s"""(4, "g", "$top"), (5, "h", "$emoji"), (6, "h", "$pua")]\n$rule""")
+    val expected = Set[Seq[Any]](Seq("g", "a", emoji), Seq("h", pua, emoji))
+    assert(rows(merged) == expected)
+    assert(rows(fresh.run("?v(G, L, H)").last) == expected)
+
+    // a recursive rule guarded by a string comparison: under UTF-16
+    // order the emoji -> U+E000 step would pass and derive (a, U+E000)
+    val prog =
+      s"""+e[("a", "$emoji"), ("$emoji", "$pua"), ("$pua", "$top")]
+         |r(X, Y) <- e(X, Y)
+         |r(X, Z) <- r(X, Y), e(Y, Z), Y < Z
+         |?r(X, Y)
+         |""".stripMargin
+    val viaLocal = new Engine(new Catalog(spark)).run(prog).last
+    val viaDist = new Engine(new Catalog(spark), Engine.Limits(localEval = false)).run(prog).last
+    assert(local(viaLocal), "the recursive SCC should evaluate on the driver")
+    assert(!local(viaDist))
+    assert(rows(viaLocal) == rows(viaDist))
+    assert(rows(viaLocal) == Set[Seq[Any]](Seq("a", emoji), Seq(emoji, pua),
+      Seq(pua, top), Seq(emoji, top)))
+  }
+
   test("incremental maintenance: base relation self-join (two occurrences of the changed rel)") {
     val e = new Engine(new Catalog(spark))
     e.run(
