@@ -38,8 +38,8 @@ object SparkValues {
   /** Spark's ascending order of two atomic values of one column type,
     * nulls first. Integral numbers compare as longs, two floats as
     * floats, any other pair of numbers as doubles. Throws
-    * `IllegalArgumentException` for values Spark would not order with
-    * each other here (arrays, structs, timestamps, mixed kinds). */
+    * `IllegalArgumentException` for other pairs (a string against a
+    * number, arrays, structs, timestamps). */
   def compare(a: Any, b: Any): Int = (a, b) match {
     case (null, null) => 0
     case (null, _) => -1
