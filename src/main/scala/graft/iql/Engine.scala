@@ -1249,8 +1249,8 @@ final class Engine(val catalog: Catalog,
     })
     // EAGER-LITERAL GATE: the probe's body-join collect is a base-sized
     // scan paid at DELETE-STATEMENT time. The r14 job-count adjudication
-    // of the r13 q191/q193 watch items (ProfileQ191 on HEAD vs the r12
-    // commit, same session) found the probe is pure added latency for
+    // of the r13 q191/q193 watch items (q191's rounds on HEAD vs the
+    // r12 commit, same session) found the probe is pure added latency for
     // RANK-view consumers — 3-4 probe jobs (~0.4-1.0 s) per delete on a
     // 150k-row base while the prefix-buffer ride gains nothing (the
     // lazy replace fuses the same scan into the next round's netted
@@ -1485,7 +1485,7 @@ final class Engine(val catalog: Catalog,
         changedOccs: Seq[Int], changedRels: Set[String],
         deltaOf: Map[String, DataFrame], removedOf: Map[String, DataFrame],
         cached: DataFrame, v0: Long,
-        tinyLiteralRound: Boolean = false): Option[DataFrame] = {
+        tinyLiteralRound: Boolean): Option[DataFrame] = {
       if (changedOccs.length != 1 || keyIdx.isEmpty) return None
       if (aggSpecs.isEmpty || !aggSpecs.forall { case (f, _) =>
         f == "sum" || f == "count" || f == "count_distinct" || f == "avg" ||
@@ -3576,7 +3576,7 @@ final class Engine(val catalog: Catalog,
           }
         }
       def insertPhase(viewsNow: Map[String, DataFrame]): Option[DataFrame] =
-        insertPhaseOf(name, scc, sccRules, changedRels, deltaOf, deltaDerive,
+        insertPhaseOf(name, scc, sccRules, deltaOf, deltaDerive,
           isRecursive, viewsNow, negSeedsFor,
           // the continuation's frontier deltas name the exact view delta
           // only when the round starts from the v0 snapshot itself
@@ -4777,7 +4777,7 @@ final class Engine(val catalog: Catalog,
             case None => ()
           }
           localDRed(scc, sccRules, sccCached, changedRels,
-              removedOf, deltaOf, negChanged, name, midFrame) match {
+              removedOf, deltaOf, negChanged, midFrame) match {
             case Some(vs) => return afterDelete(vs)
             case None => ()
           }
@@ -5000,13 +5000,12 @@ final class Engine(val catalog: Catalog,
       * any SCC member. Shares the enclosing [[tryMaintain]] invocation's
       * gates — callers have already vetted shapes and deltas. */
     private def insertPhaseOf(name: String, scc: Set[String], sccRules: Seq[Rule],
-        changedRels: Set[String], deltaOf: Map[String, DataFrame],
+        deltaOf: Map[String, DataFrame],
         deltaDerive: (Rule, Int, String => Option[DataFrame]) => DataFrame,
         isRecursive: Boolean,
         viewsNow: Map[String, DataFrame],
-        negSeedsFor: (String, String => Option[DataFrame]) => Seq[DataFrame] =
-          (_, _) => Seq.empty,
-        exactFromV0: Option[Long] = None): Option[DataFrame] = {
+        negSeedsFor: (String, String => Option[DataFrame]) => Seq[DataFrame],
+        exactFromV0: Option[Long]): Option[DataFrame] = {
       val cached = viewsNow(name)
       val arity = cached.columns.length
       val cols = (0 until arity).map(i => s"c$i")
@@ -5208,7 +5207,7 @@ final class Engine(val catalog: Catalog,
     private def localDRed(scc: Set[String], sccRules: Seq[Rule],
         sccCached: Map[String, DataFrame], changedRels: Set[String],
         removedOf: Map[String, DataFrame], deltaOf: Map[String, DataFrame],
-        negChanged: Set[String], name: String,
+        negChanged: Set[String],
         curOf: (String, Int) => DataFrame): Option[Map[String, DataFrame]] = {
       if (!limits.localEval) return None
       import org.apache.spark.sql.Row
@@ -5917,7 +5916,7 @@ final class Engine(val catalog: Catalog,
       val parts = baseOf(rel).map(b => b.toDF(cols: _*)).toSeq ++
         baseRules.map(deriveRule(_).toDF(cols: _*))
       if (parts.isEmpty) { memo(rel) = emptyFrame(arity); return }
-      var acc = Fixpoint.materialize(reduce(parts.reduce(_ union _)))
+      val acc = Fixpoint.materialize(reduce(parts.reduce(_ union _)))
       localAggFastPath(rel, recRules, acc, func, aggIdx).foreach { df =>
         memo(rel) = df
         return
@@ -6058,9 +6057,11 @@ final class Engine(val catalog: Catalog,
       case other => other.toString.toDouble
     }
 
+    /** Whether a candidate label beats the held one, in Spark's order:
+      * NaN ranks above every number, so it wins a max and loses a min. */
     private def aggBetter(func: String): (Any, Any) => Boolean =
-      if (func == "min") (n, o) => aggToD(n) < aggToD(o)
-      else (n, o) => aggToD(n) > aggToD(o)
+      if (func == "min") (n, o) => SparkValues.compare(aggToD(n), aggToD(o)) < 0
+      else (n, o) => SparkValues.compare(aggToD(n), aggToD(o)) > 0
 
     private def aggEvalT(t: Term, env: collection.Map[String, Any]): Any = t match {
       case Var(n) => env.getOrElse(n, null)

@@ -166,9 +166,6 @@ object Parser {
     case t => p.fail(s"unexpected token $t at statement start")
   }
 
-  private val SchemaTypes = Set("int", "float", "symbol", "string", "bool",
-    "timestamp", "any", "vector")
-
   /** `+rel(...)`, `+rel[(...),...]`, `+head(...) <- body`, or a schema
     * declaration `+Rel(field: type, ...)`. */
   private def parsePlus(p: P): Statement = {
@@ -370,7 +367,7 @@ object Parser {
     * `X:desc` (annotations collected into `sorts` when provided —
     * reference `src/statement/parser.rs:533-583`). */
   private def parseHeadTerm(p: P,
-      sorts: scala.collection.mutable.ArrayBuffer[SortKey] = null): Term = p.peek match {
+      sorts: scala.collection.mutable.ArrayBuffer[SortKey]): Term = p.peek match {
     case TIdent(f) if RankFuncs(f) && p.peek2 == TSym("<") =>
       p.next(); p.expectSym("<")
       // terms with optional :asc/:desc annotations, ">"-terminated

@@ -2,7 +2,6 @@ package graft.iql
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import Ast._
 import graft.functions.{LshFunctions => LF, TemporalFunctions => TempF,
@@ -264,14 +263,6 @@ object RuleCompiler {
     case Func(name, args) => builtin(name.toLowerCase, args.map(term(_, frame)))
     case Agg(f, _) => throw new IllegalArgumentException(s"aggregate $f<> outside rule head")
   }
-
-  private def isIntegral(c: Column, frame: DataFrame): Boolean =
-    try {
-      frame.select(c).schema.head.dataType match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      }
-    } catch { case _: Throwable => false }
 
   /** Int/float promotion like the reference (`code_generator/mod.rs:3510-3558`).
     * Division is ALWAYS float — the reference's own snapshot corpus shows

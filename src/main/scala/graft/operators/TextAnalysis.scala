@@ -630,8 +630,6 @@ object TextAnalysis {
        |GROUP BY 1, 2 HAVING count(*) >= $minShared""".stripMargin
 
   def fingerprintOracleSql(): String = {
-    def mm(a: String, b: String): String = mmSql(a, b)
-    def u(v: Long): String = uSql(v)
     def foldMix(src: String, out: String): String = foldMixSql(src, out)
     def toSigned(e: String): String = toSignedSql(e)
     val pow2 = (0 until 64).map(j => s"($j, ${java.lang.Long.toUnsignedString(1L << j)}::HUGEINT)")
@@ -1014,7 +1012,6 @@ object TextAnalysis {
                              idCol: String = "doc_id",
                              textCol: String = "text",
                              localTrainDocs: Long = LocalTrainDocs): (Array[Double], DataFrame) = {
-    val spark = docs.sparkSession
     // a NULL predicate result labels 0 (the oracle's CASE ... ELSE 0):
     // without the coalesce those rows would train with y = NULL —
     // contributing nothing to any gradient — while the oracle trains

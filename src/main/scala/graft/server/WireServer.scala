@@ -369,7 +369,7 @@ final class WireServer(spark: SparkSession, port: Int = 0,
   }
 
   private def route(method: String, path: String, body: String,
-                    ident: Auth.Identity = Auth.Identity(None, "admin")): (String, String) = {
+                    ident: Auth.Identity): (String, String) = {
     val role = ident.role
     (method, path) match {
       case ("GET", "/health") | ("GET", "/live") | ("GET", "/ready") =>
@@ -562,7 +562,7 @@ final class WireServer(spark: SparkSession, port: Int = 0,
   private def webSocket(headers: mutable.Map[String, String],
                         in: DataInputStream, out: DataOutputStream,
                         sock: Socket,
-                        ident: Auth.Identity = Auth.Identity(None, "admin")): Unit = {
+                        ident: Auth.Identity): Unit = {
     val key = headers.getOrElse("sec-websocket-key",
       throw new IllegalArgumentException("missing Sec-WebSocket-Key"))
     val accept = Base64.getEncoder.encodeToString(
@@ -662,7 +662,7 @@ final class WireServer(spark: SparkSession, port: Int = 0,
 
   /** Single-message dispatch (REST surface — no streaming). */
   private def dispatch(session: Session, msg: Map[String, Any],
-                       ident: Auth.Identity = Auth.Identity(None, "admin")): Map[String, Any] =
+                       ident: Auth.Identity): Map[String, Any] =
     dispatchAll(session, msg, chunked = false, ident = ident).head
 
   /** Statement dispatch runs CONCURRENTLY across connections: queries are
@@ -678,7 +678,7 @@ final class WireServer(spark: SparkSession, port: Int = 0,
     * 0 = unlimited is explicit opt-in per message or constructor). */
   private def dispatchAll(session: Session, msg: Map[String, Any],
                           chunked: Boolean = true,
-                          ident: Auth.Identity = Auth.Identity(None, "admin")): Seq[Map[String, Any]] = {
+                          ident: Auth.Identity): Seq[Map[String, Any]] = {
     val role = ident.role
     // role gating for statements that can touch persistent state
     msg.getOrElse("type", "") match {

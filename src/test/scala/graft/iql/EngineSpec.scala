@@ -755,6 +755,47 @@ class EngineSpec extends SparkSpec {
     assert(e.auxSupportSeeds == s0 + 1, "all rounds rode one seeded table")
   }
 
+  test("recursive min/max aggregates rank a NaN label greatest on every path (Spark semantics)") {
+    // Spark's min/max order NaN above every number. The local solver
+    // serves the 2-atom shape; the `D2 = D + 1` binding is a shape it
+    // rejects, so that program runs the distributed value-iteration loop.
+    import spark.implicits._
+    def local(df: org.apache.spark.sql.DataFrame): Boolean =
+      graft.plans.Fixpoint.checkpointRddOf(df).isEmpty
+    def solve(func: String, seeds: Seq[(Long, Double)], viaLoop: Boolean,
+        limits: Engine.Limits): (Set[Seq[Any]], Boolean) = {
+      val cat = new Catalog(spark)
+      cat.register("seed", seeds.toDF("c0", "c1"))
+      val rec =
+        if (viaLoop) s"+p(Y, $func<D2>) <- p(X, D), edge(X, Y), D2 = D + 1"
+        else s"+p(Y, $func<D + 1>) <- p(X, D), edge(X, Y)"
+      val df = new Engine(cat, limits).run(
+        s"""+edge[(1, 2), (2, 3)]
+           |+p(X, D) <- seed(X, D)
+           |$rec
+           |?p(X, D)
+           |""".stripMargin).last
+      (rows(df).map(graft.plans.SparkValues.key(_).asInstanceOf[Seq[Any]]), local(df))
+    }
+    val nan = graft.plans.SparkValues.key(Double.NaN)
+    // min: node 2's NaN seed loses to the derived 1.0; max: node 1's NaN
+    // seed wins at node 2 over its 5.0 seed and carries on to node 3
+    Seq(
+      ("min", Seq(1L -> 0.0, 2L -> Double.NaN),
+        Set(Seq[Any](1L, 0.0), Seq[Any](2L, 1.0), Seq[Any](3L, 2.0))),
+      ("max", Seq(1L -> Double.NaN, 2L -> 5.0),
+        Set(Seq[Any](1L, nan), Seq[Any](2L, nan), Seq[Any](3L, nan)))
+    ).foreach { case (func, seeds, expected) =>
+      for (limits <- Seq(Engine.Limits(), Engine.Limits(localEval = false))) {
+        val (viaSolver, solverLocal) = solve(func, seeds, viaLoop = false, limits)
+        val (viaLoop, loopLocal) = solve(func, seeds, viaLoop = true, limits)
+        assert(solverLocal && !loopLocal, s"$func: paths not as intended")
+        assert(viaLoop == expected, s"$func distributed loop")
+        assert(viaSolver == expected, s"$func local solver under $limits")
+      }
+    }
+  }
+
   test("f64 min/max deletes decrement with NaN ordered greatest (Spark semantics)") {
     val e = new Engine(new Catalog(spark))
     e.run(
