@@ -861,7 +861,7 @@ final class Catalog(val spark: SparkSession) {
     }
   // INVARIANT every mutation path must keep: the served frame is a NEW
   // DataFrame object on every rebuild/replace. Engine-side caches
-  // (localCollectMemo/localCollectBig, aggLocalSupport, rankLocalBuf)
+  // (localCollectMemo/localCollectBig, the resident copies in ViewState)
   // key by frame identity and treat an identical object as unchanged
   // data — serving a mutated relation through a reused object would
   // make them silently stale.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import Ast._
+import Engine.{Part, Tier}
 import graft.plans.{Fixpoint, SparkValues}
 
 /** IQL execution engine: statements → catalog updates; queries →
@@ -15,41 +16,51 @@ import graft.plans.{Fixpoint, SparkValues}
   * recursive: semi-naive fixpoint via [[Fixpoint]]).
   */
 object Engine {
-  /** Per-engine tuning: the caps and switches that pick each maintenance
-    * family's driver-local or distributed path. Defaults are production. */
+  /** Which maintenance tier serves a view's carried state. */
+  sealed trait Tier extends Product with Serializable
+  object Tier {
+    /** Production: each gate picks the driver-resident copy, the parquet
+      * carrier or the Spark plan by the state's size. */
+    case object Auto extends Tier
+    /** Every state with a carrier form (agg support, cd pairs, grouped
+      * rank buffers, within_radius views) rides its parquet carrier at
+      * any size; states with no carrier form choose as under [[Auto]]. */
+    case object Carrier extends Tier
+    /** No driver-local twin and no carrier: the local SCC evaluator and
+      * DRed, the local TC closure, the rank ride, the resident agg
+      * support and the carriers are off; the distributed algebra serves. */
+    case object Distributed extends Tier
+  }
+
+  /** One carried sub-state of a view that can ride a carrier: its agg
+    * support table, the pairs table of one count_distinct head column,
+    * its rank prefix buffer, or the whole within_radius view. */
+  private[iql] sealed trait Part extends Product with Serializable
+  private[iql] object Part {
+    case object Support extends Part
+    final case class Pairs(col: Int) extends Part
+    case object Rank extends Part
+    case object Radius extends Part
+  }
+
+  /** Per-engine tuning. Defaults are production; tests pin a tier. */
   final case class Limits(
-    /** Closure-size bound for the DRIVER-LOCAL linear-TC maintenance fast
-      * path; above it the distributed affected-source path serves. Tests
-      * shrink it to pin the distributed path on small fixtures. */
-    tcLocalClosureCap: Long = 1000000L,
-    /** Kill-switch for the driver-local rank riding round (A/B probing
-      * and a safety hatch; tests may pin the distributed algebra). */
-    rankLocalRideEnabled: Boolean = true,
-    /** Kill-switch for the driver-resident aggregate-support mode. */
-    aggLocalSupportEnabled: Boolean = true,
-    /** Kill-switch for the over-cap keyed-parquet support path (tests pin
-      * the distributed anti-join commit with it off). */
-    supportParquetEnabled: Boolean = true,
-    /** Driver-resident cap (rows) for the rank prefix-buffer local ride;
-      * tests shrink it to force the keyed-parquet PARTIAL mode on small
-      * fixtures. */
-    rankBufLocalCap: Long = 65536L,
-    /** Row cap under which a within_radius view keeps the per-round
-      * literal materialize (driver-collectable = small); above it the
-      * parquet base + driver bag carry rides. Tests shrink it to force
-      * the carry on small fixtures. */
-    radiusCarryMinRows: Long = 65536L,
+    tier: Tier = Tier.Auto,
     /** Overlay-entry count past which a carrier folds into a fresh base
       * write (one amortized state-sized pass per ~24 over-cap rounds).
       * Tunable so fuzz can pin it low and exercise base-rewrite +
       * grace-dir retirement interleaved with riding rounds. */
-    carrierFoldCap: Long = 49152L,
-    /** Test hook: force the distributed path (FixpointSpec-style pinning). */
-    localEval: Boolean = true)
+    carrierFoldCap: Long = 49152L)
 
-  /** Default caps, also read by name from outside the engine. */
-  val tcLocalClosureCap: Long = Limits().tcLocalClosureCap
-  val rankBufLocalCap: Long = Limits().rankBufLocalCap
+  /** Closure-size bound for the driver-local linear-TC maintenance pass;
+    * above it the distributed affected-source path serves. */
+  val tcLocalClosureCap: Long = 1000000L
+  /** Driver-resident cap (rows) for the rank prefix-buffer local ride;
+    * above it a grouped buffer rides its carrier. */
+  val rankBufLocalCap: Long = 65536L
+  /** Row cap under which a within_radius view keeps the per-round
+    * literal materialize; above it the radius carrier rides. */
+  private val RadiusCarryMinRows = 65536L
 
   /** Base-size ceiling (plan-stats bytes) under which a conditional
     * delete probes for the eager literal-tombstone path; above it the
@@ -334,63 +345,30 @@ final class Engine(val catalog: Catalog,
     // entries unreachable — this is purely a memory release.
     localCollectMemo.clear()
     localCollectBig.clear()
-    // sweep the aux key sets directly — they cover every view with
-    // carried state, including ones whose matCache entry a fallback
-    // round already displaced; left in place, a later round at a
-    // matching version would merge against pre-clear state. Keyless
-    // global-agg views carry ONLY a globalAggNN entry (no support or
-    // pairs table), so its keys must join the sweep: session changes
-    // don't bump the catalog version, and a stale non-null count
-    // flips the sum-goes-null transition the wrong way.
-    (auxSupportCache.keysIterator.toSet ++
-      auxPairsCache.keysIterator.map(_._1).toSet ++
-      globalAggNN.keysIterator.toSet ++
-      carriers.keysIterator.map(_.takeWhile(_ != '#')).toSet ++
-      namedDeltas.keysIterator.toSet).foreach(evictAuxFor)
+    // sweep the carried state of EVERY view, including ones whose
+    // matCache entry a fallback round already displaced; left in place,
+    // a later round at a matching version would merge against pre-clear
+    // state (session changes don't bump the catalog version)
+    views.keys.toSeq.foreach(evictAuxFor)
   }
-  /** Evict `view`'s carried aggregate-support state ([[auxSupportCache]],
-    * [[auxPairsCache]]) alongside its materialization. Without this, a
-    * session rule/fact change (which does NOT bump the catalog version)
-    * leaves the support tables stamped at the pre-change version, and
-    * the next catalog delete's freshness check (`_._1 == v0`) would
-    * merge against pre-change state — wrong rows for every group, since
-    * the served view is a projection of the support frame. Retirement
-    * goes through the grace-period Graveyard (results handed out may
-    * still read these checkpoints lazily); an RDD is buried at most once
-    * even when several evicted frames share it. */
-  private def evictAuxFor(view: String): Unit = {
+  /** Evict `view`'s carried state ([[ViewState]]) alongside its
+    * materialization. Without this, a session rule/fact change (which
+    * does NOT bump the catalog version) leaves the support tables
+    * stamped at the pre-change version, and the next catalog delete's
+    * freshness check (`_._1 == v0`) would merge against pre-change
+    * state — wrong rows for every group, since the served view is a
+    * projection of the support frame. Checkpoints retire through the
+    * grace-period Graveyard (results handed out may still read them
+    * lazily; an RDD is buried at most once even when several evicted
+    * frames share it), carrier dirs through the bounded grace queue.
+    * Dropping the record also clears the over-cap markers and the
+    * carrier deny-list, so a re-created view probes afresh. */
+  private def evictAuxFor(view: String): Unit = views.remove(view).foreach { st =>
     val buried = mutable.HashSet.empty[Int]
-    def bury(df: DataFrame): Unit =
+    (st.support.iterator ++ st.pairs.valuesIterator).foreach { case (_, df) =>
       Fixpoint.checkpointRddOf(df).foreach { r =>
-        if (buried.add(r.id)) graft.plans.Graveyard.buryAndDrain(Some(r)) }
-    auxSupportCache.remove(view).foreach { case (_, df) => bury(df) }
-    rankLocalBuf.remove(view) // driver copies of the evicted state
-    aggLocalSupport.remove(view)
-    // carrier state ties to the evicted served frame; its dirs retire
-    // through the bounded grace queue (earlier results may still read
-    // them lazily for one carrier generation). Sub-state entries are
-    // keyed "<view>#cd<i>"/"<view>#rank"/"<view>#radius" — sweep those
-    // too, and clear the deny-list so a re-created view gets a fresh
-    // parquet attempt instead of being pinned to the legacy commit.
-    def ofView(k: String): Boolean = k == view || k.startsWith(view + "#")
-    carriers.keysIterator.filter(ofView).toSeq.foreach { k =>
-      carriers.remove(k).foreach(_.dirs.foreach(Engine.retireDir)) }
-    carrierNo.filterInPlace(k => !ofView(k))
-    globalAggNN.remove(view)
-    namedDeltas.remove(view)
-    auxPairsCache.keysIterator.filter(_._1 == view).toSeq.foreach { k =>
-      auxPairsCache.remove(k).foreach { case (_, df) => bury(df) }
-      aggLocalPairs.remove(k) }
-    // sweep ALL of the view's over-cap markers (support, every pairs
-    // column — cached or not — and the rank buffer): a marker left from
-    // a bailed seeding round would otherwise outlive re-registration
-    // with smaller data
-    aggLocalBig.filterInPlace {
-      case s: String => s != view
-      case ("rank", s: String) => s != view // rank buffer marker
-      case (s: String, _) => s != view // pairs-column markers
-      case _ => true
-    }
+        if (buried.add(r.id)) graft.plans.Graveyard.buryAndDrain(Some(r)) } }
+    st.carriers.valuesIterator.foreach(_.dirs.foreach(Engine.retireDir))
   }
   /** Dependency invalidation for session rule/fact changes naming ONE
     * relation: only cached views whose rule closure (over the
@@ -420,86 +398,113 @@ final class Engine(val catalog: Catalog,
     matCache.foreach { case ((r, _), df) =>
       if (affected(r)) retireDisplacedView(df, None) }
     matCache.filterInPlace { case ((r, _), _) => !affected(r) }
-    // the carried support/pairs tables of an affected view are state of
-    // the displaced rule set — evict them with the materialization (they
-    // keep their version stamp otherwise, and session changes don't bump
-    // the catalog version, so the stale-version freshness check alone
-    // cannot catch them). Aux entries can exist without a live matCache
-    // entry, so the affected set is recomputed over the aux keys.
-    (auxSupportCache.keysIterator.toSet ++
-      auxPairsCache.keysIterator.map(_._1).toSet ++
-      globalAggNN.keysIterator.toSet ++ // keyless views: NN map only
-      carriers.keysIterator.map(_.takeWhile(_ != '#')).toSet ++
-      namedDeltas.keysIterator.toSet)
-      .filter(v => closure(v)(changedRel)).foreach(evictAuxFor)
+    // the carried state of an affected view belongs to the displaced
+    // rule set — evict it with the materialization (it keeps its version
+    // stamp otherwise, and session changes don't bump the catalog
+    // version, so the stale-version freshness check alone cannot catch
+    // it). Carried state can exist without a live matCache entry, so the
+    // affected set is recomputed over the carried views.
+    views.keys.filter(v => closure(v)(changedRel)).toSeq.foreach(evictAuxFor)
   }
   /** Observability: how many resolves were served by incremental
     * maintenance instead of recomputation (tests assert on this). */
   private[graft] var maintainedCount: Long = 0L
   /** Observability: linear-TC maintenance rounds served by the
-    * driver-local closure pass (under [[Engine.Limits.tcLocalClosureCap]]). */
+    * driver-local closure pass (under [[Engine.tcLocalClosureCap]]). */
   private[graft] var tcLocalRounds: Long = 0L
 
-  /** Auxiliary per-view COUNT_DISTINCT state: for a maintained view with
-    * a count_distinct head column, the (group-keys, value) binding
-    * pairs at the stored version WITH their binding-support counts
-    * (`__s`) — what makes count_distinct maintenance O(delta) in both
-    * directions: inserts anti-join for genuinely-new pairs (per-group
-    * increments merge by addition) and bump supports of matched pairs;
-    * deletes decrement supports, and only a pair whose LAST binding
-    * goes (support hits 0) decrements the distinct count — per-group
-    * multiset semantics without per-dirty-group recomputation. Keyed
-    * (view, head column index); seeded lazily from the pre-change body
-    * state on the first maintenance round, carried forward materialized
-    * thereafter. The reference keeps the analogous per-group multiset
-    * in its DD arrangements (`src/derived_relations.rs:1-60`). Bounded:
-    * one entry per count_distinct column of a maintained view, newest
-    * version only. */
-  private val auxPairsCache =
-    mutable.HashMap.empty[(String, Int), (Long, DataFrame)]
   /** Observability: count_distinct delta-merges served (tests pin the
     * path, not just the result). */
   private[graft] var cdMergedCount: Long = 0L
-
-  /** COMBINED per-group state for subtractable-aggregate maintenance
-    * (sum/count under DELETES): the view row itself plus, per group,
-    * the body-binding count `__n` and per sum column i the
-    * non-null-value count `__nn_i` — what a per-group DECREMENT needs
-    * that the view alone doesn't carry (a group whose support hits 0
-    * must VANISH, and a sum whose last non-null contributor left must
-    * go null; neither is decidable from the cached sum). The served
-    * view is a projection of this one materialized frame, so each
-    * round is one dirty collect + one map-only update pass. Seeded
-    * lazily from the pre-change body state on the first delete round,
-    * then carried forward O(delta)-updated — like [[auxPairsCache]],
-    * the Spark analogue of the reference's arranged per-group multiset
-    * state (`src/derived_relations.rs:1-60`, BENCHMARKS.md:91-93).
-    * Newest version only. */
-  private val auxSupportCache =
-    mutable.HashMap.empty[String, (Long, DataFrame)]
-  /** Driver-resident copy of a rank view's carried prefix buffer —
-    * valid only while its frame IS the live [[auxSupportCache]] entry
-    * (identity-checked on read, so stale entries are inert): lets the
-    * local riding round ([[maintainRankBuffered]]) read the buffer rows
-    * with zero Spark jobs. Bounded by the local-ride collect cap;
-    * removed with the support state. */
-  private val rankLocalBuf =
-    mutable.HashMap.empty[String, (DataFrame, Array[org.apache.spark.sql.Row])]
   /** Observability: rank riding rounds merged entirely driver-locally
     * (the cap-gated fast path; tests pin it). */
   private[graft] var rankLocalRides: Long = 0L
-  /** Driver-resident copies of aggregate SUPPORT tables (and cd PAIRS
-    * tables), identity-keyed like [[rankLocalBuf]]: a maintenance round
-    * whose support fits the cap reads dirty rows by map lookup and
-    * commits a literal frame — no support-sized Spark action. Views
-    * whose support once exceeded the cap stop probing
-    * ([[aggLocalBig]]); the distributed update is the scale shape. */
-  private val aggLocalSupport =
-    mutable.HashMap.empty[String, (DataFrame, Array[org.apache.spark.sql.Row])]
-  private val aggLocalPairs =
-    mutable.HashMap.empty[(String, Int), (DataFrame, Array[org.apache.spark.sql.Row])]
-  private val aggLocalBig = mutable.HashSet.empty[Any]
-  /** OVER-CAP support tables on the keyed-parquet scale path. Past the
+
+  /** Everything a maintained view carries between rounds besides its
+    * materialization — the Spark analogue of the per-group multiset the
+    * reference keeps in its DD arrangements
+    * (`src/derived_relations.rs:1-60`, BENCHMARKS.md:91-93). Seeded
+    * lazily on a view's first maintenance round that needs it, carried
+    * forward O(delta)-updated, newest version only, and dropped whole
+    * by [[evictAuxFor]]. */
+  private final class ViewState {
+    /** COMBINED per-group state for subtractable-aggregate maintenance
+      * (sum/count under DELETES): the view row itself plus, per group,
+      * the body-binding count `__n` and per sum column i the
+      * non-null-value count `__nn_i` — what a per-group DECREMENT needs
+      * that the view alone doesn't carry (a group whose support hits 0
+      * must VANISH, and a sum whose last non-null contributor left must
+      * go null; neither is decidable from the cached sum). The served
+      * view is a projection of this one materialized frame, so each
+      * round is one dirty collect + one map-only update pass. For a
+      * top_k view this slot holds the carried prefix buffer instead
+      * ([[maintainRankBuffered]]). Version-stamped. */
+    var support: Option[(Long, DataFrame)] = None
+    /** COUNT_DISTINCT state by head column: the (group-keys, value)
+      * binding pairs WITH their binding-support counts (`__s`) — what
+      * makes count_distinct maintenance O(delta) in both directions:
+      * inserts anti-join for genuinely-new pairs (per-group increments
+      * merge by addition) and bump supports of matched pairs; deletes
+      * decrement supports, and only a pair whose LAST binding goes
+      * (support hits 0) decrements the distinct count. Version-stamped. */
+    val pairs = mutable.HashMap.empty[Int, (Long, DataFrame)]
+    /** Driver-resident row copies of the support table, the pairs tables
+      * and the rank buffer, valid only while their frame IS the live
+      * entry (identity-checked on read, so stale copies are inert): a
+      * round whose state fits the cap reads dirty rows by map lookup and
+      * commits a literal frame — no state-sized Spark action. */
+    val local = mutable.HashMap.empty[Part, (DataFrame, Array[org.apache.spark.sql.Row])]
+    /** Parts whose state once exceeded the resident cap — they stop
+      * probing; the carrier or the distributed update is their shape. */
+    val big = mutable.HashSet.empty[Part]
+    val carriers = mutable.HashMap.empty[Part, Carrier]
+    /** Parts whose state failed the parquet round-trip — the legacy
+      * distributed commit keeps serving those until the view is evicted
+      * (a transient IO failure must not pin a re-created view to the
+      * O(view) commit for the engine's lifetime). */
+    val carrierNo = mutable.HashSet.empty[Part]
+    /** NON-NULL contributor counts per sum column of a GLOBAL (key-less)
+      * sum view, version-stamped — decides the sum-goes-null transition
+      * the cached single row can't see (the grouped analogue carries
+      * `__nn` on the support table). Seeded from the post-change body on
+      * the first decrement round, then moved in lockstep with the count
+      * (deltas are null-free by the side-aggregate bail). */
+    var globalNN: Option[(Long, Map[Int, Long])] = None
+    /** Exact VIEW-LEVEL delta surfaced by a maintenance path that can
+      * NAME its change (per-group decrement replacements, rank
+      * prefix-buffer merges, global-agg row swaps, dirty-group
+      * replacements): (fromVersion, toVersion, inserted view rows,
+      * removed view rows), driver-local and bounded. Consumed by the
+      * stacked-view stratum-diff injection in [[IdbEvaluator.tryMaintain]]
+      * — an upper view maintaining through a positive/negated DERIVED
+      * dependency reads the lower stratum's delta HERE instead of
+      * re-deriving it by two view-sized old-vs-new anti-joins (the
+      * reference propagates the lower stratum's delta directly through
+      * its stacked DD arrangements, `src/incremental.rs:77-80`). Rows are
+      * the SET-level diff (new ∖ old / old ∖ new under Spark's <=> float
+      * normalization), so downstream delta binding, decrement, and DRed
+      * reconstruction see exactly what the anti-join diff would have
+      * produced. Consumed only when BOTH stamps match the consumer's
+      * round (fromVersion == the upper view's v0 snapshot version,
+      * toVersion == the current catalog version) — anything stale misses
+      * and falls back to the anti-join diff. */
+    var namedDelta: Option[(Long, Long, Seq[org.apache.spark.sql.Row],
+      Seq[org.apache.spark.sql.Row])] = None
+    /** A round that proved the view unchanged from `from` to `to` moves
+      * every state stamped `from` along — stranded at `from`, the next
+      * REAL round would reseed from a full body pass. */
+    def restamp(from: Long, to: Long): Unit = {
+      def re(v: Long) = if (v == from) to else v
+      support = support.map { case (v, df) => (re(v), df) }
+      pairs.mapValuesInPlace { case (_, (v, df)) => (re(v), df) }
+      globalNN = globalNN.map { case (v, m) => (re(v), m) }
+    }
+  }
+  private val views = mutable.HashMap.empty[String, ViewState]
+  private def state(view: String): ViewState =
+    views.getOrElseUpdate(view, new ViewState)
+
+  /** OVER-CAP carried state on the keyed-parquet scale path. Past the
     * driver-resident cap the old commit re-materialized the WHOLE
     * support table behind an anti-join every round — O(lower-view) per
     * 20-tuple delta (the r13 `stacked_agg_lower_requery` 1.81×-at-10×
@@ -513,22 +518,21 @@ final class Engine(val catalog: Catalog,
     * by the delta, never the view. The served frame is base ANTI
     * overlay-keys UNION overlay-survivors, rebuilt per commit from the
     * same two parts (constant plan depth); when the overlay outgrows
-    * [[Engine.Limits.aggLocalSupportEnabled]]'s 64k sibling cap it folds into
-    * a fresh base write (one amortized view-sized pass per ~24 over-cap
-    * rounds). The reference holds this state as DD arrangements updated
-    * in place (`src/incremental.rs:77-80`); a log-structured
-    * base+overlay is the storage-backed equivalent — an LSM level-0 in
-    * driver memory over an immutable sorted run. */
-  /** The ONE log-structured carrier every over-cap carried state rides
-    * (the r15 consolidation of three hand-rolled copies): agg support
-    * tables (map key = view name), cd pairs tables (`<view>#cd<i>`),
-    * rank prefix buffers (`<view>#rank`), and big within_radius views
-    * (`<view>#radius`). KEYED carriers hold a driver overlay of per-key
-    * replacement row-sets (empty set = tombstone) over the immutable
-    * base — [[carrierOpen]]/[[carrierDirty]]/[[carrierCommit]] are the
-    * shared lifecycle; the RADIUS carrier is a bag filter (base ∖ rem ⊎
-    * ins), so it keeps its two bags and shares only the base/fold/
-    * retire plumbing ([[radiusCarryRound]]). */
+    * [[Engine.Limits.carrierFoldCap]] it folds into a fresh base write
+    * (one amortized view-sized pass per ~24 over-cap rounds). The
+    * reference holds this state as DD arrangements updated in place
+    * (`src/incremental.rs:77-80`); a log-structured base+overlay is the
+    * storage-backed equivalent — an LSM level-0 in driver memory over
+    * an immutable sorted run.
+    *
+    * ONE carrier class serves every [[Part]] of a view's state: the agg
+    * support table, the cd pairs tables, the rank prefix buffer and a
+    * big within_radius view. KEYED carriers hold a driver overlay of
+    * per-key replacement row-sets (empty set = tombstone) over the
+    * immutable base — [[carrierOpen]]/[[carrierDirty]]/[[carrierCommit]]
+    * are the shared lifecycle; the RADIUS carrier is a bag filter
+    * (base ∖ rem ⊎ ins), so it keeps its two bags and shares only the
+    * base/fold/retire plumbing ([[radiusCarryRound]]). */
   private final class Carrier(
       val tag: String, val colNames: Seq[String], val keyNames: Seq[String],
       var dir: String, var base: DataFrame,
@@ -544,13 +548,6 @@ final class Engine(val catalog: Catalog,
     val insBag = mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     def dirs: Seq[String] = dir +: prevDir.toSeq
   }
-  private val carriers = mutable.HashMap.empty[String, Carrier]
-  /** Carrier keys whose state schema failed the parquet round-trip —
-    * the legacy distributed commit keeps serving those. Swept with
-    * [[evictAuxFor]] so a dropped/re-created view gets a fresh attempt
-    * (a transient IO failure used to pin the view to the O(view)
-    * commit for the engine's lifetime). */
-  private val carrierNo = mutable.HashSet.empty[String]
   /** Observability: over-cap rounds committed via the overlay. */
   private[graft] var supportParquetRounds: Long = 0L
   /** Observability: over-cap rank rounds committed via the overlay. */
@@ -561,19 +558,21 @@ final class Engine(val catalog: Catalog,
     * fuzz pins the cap low and asserts several fire mid-stream. */
   private[graft] var carrierFolds: Long = 0L
 
-  /** Transition `frame` into a carrier under `key`: ONE
+  /** Transition `frame` into `view`'s `part` carrier: ONE
     * range-partitioned key-SORTED parquet write (min/max row-group and
     * page stats make key-point scans pruned; an unkeyed radius base
     * writes as-is), read back as the immutable `base`. `servedMarker`
     * overrides the served identity when the caller serves a different
     * frame object (cd pairs, radius). Replacing an existing carrier
     * retires its dirs through the grace queue; a failed write lands the
-    * key in [[carrierNo]]. */
-  private def carrierOpen(key: String, frame: DataFrame,
+    * part in the view's [[ViewState.carrierNo]]. */
+  private def carrierOpen(view: String, part: Part, frame: DataFrame,
       keyNames: Seq[String], servedMarker: DataFrame = null): Option[Carrier] = {
-    if (!limits.supportParquetEnabled || carrierNo(key)) return None
+    val vs = state(view)
+    if (limits.tier == Tier.Distributed || vs.carrierNo(part)) return None
     try {
-      val dir = Engine.supportDir(key)
+      val tag = s"$view-$part"
+      val dir = Engine.supportDir(tag)
       val keyCols = keyNames.map(col)
       val laidOut =
         if (keyNames.isEmpty) frame
@@ -582,15 +581,15 @@ final class Engine(val catalog: Catalog,
       laidOut.write.mode("overwrite").parquet(dir)
       val base = catalog.spark.read.parquet(dir)
         .select(frame.columns.map(col).toSeq: _*)
-      carriers.remove(key).foreach(_.dirs.foreach(Engine.retireDir))
-      val st = new Carrier(key, frame.columns.toSeq, keyNames, dir, base,
+      vs.carriers.remove(part).foreach(_.dirs.foreach(Engine.retireDir))
+      val st = new Carrier(tag, frame.columns.toSeq, keyNames, dir, base,
         Option(servedMarker).getOrElse(frame), None)
       st.litSchema = org.apache.spark.sql.types.StructType(
         frame.schema.fields.map(_.copy(nullable = true)))
-      carriers(key) = st
+      vs.carriers(part) = st
       Some(st)
     } catch { case scala.util.control.NonFatal(_) =>
-      carrierNo += key; None }
+      vs.carrierNo += part; None }
   }
 
   /** Touched-key rows of a keyed carrier: overlay hits plus ONE
@@ -671,20 +670,21 @@ final class Engine(val catalog: Catalog,
     * semantics), and serve base.exceptAll(remLit).union(insLit) at
     * constant plan depth; bags past the cap fold into a fresh base
     * write (amortized). Gated to plan-stats-big views
-    * ([[Engine.Limits.radiusCarryMinRows]]) — small views keep the literal
+    * ([[Engine.RadiusCarryMinRows]]) — small views keep the literal
     * materialize round the test corpus pins. None → the caller falls
     * back to that literal round. */
   private def radiusCarryRound(name: String, cached: DataFrame,
       cols: Seq[String], remRanked: DataFrame,
       insRanked: DataFrame): Option[DataFrame] = {
-    val key = name + "#radius"
-    if (!limits.supportParquetEnabled || carrierNo(key)) return None
+    val vs = state(name)
+    if (limits.tier == Tier.Distributed || vs.carrierNo(Part.Radius)) return None
     val spark = catalog.spark
     def drop(): Unit =
-      carriers.remove(key).foreach(_.dirs.foreach(Engine.retireDir))
-    val carried = carriers.get(key).filter(_.served eq cached)
+      vs.carriers.remove(Part.Radius).foreach(_.dirs.foreach(Engine.retireDir))
+    val carried = vs.carriers.get(Part.Radius).filter(_.served eq cached)
     if (carried.isEmpty &&
-        collectMemoized(cached, limits.radiusCarryMinRows).isDefined)
+        collectMemoized(cached,
+          if (limits.tier == Tier.Carrier) 0L else Engine.RadiusCarryMinRows).isDefined)
       return None // small view: the corpus-pinned literal round serves
     val remRows = Fixpoint.collectUpTo(remRanked, 8192L).getOrElse {
       drop(); return None // over-cap delta: fall back
@@ -693,7 +693,7 @@ final class Engine(val catalog: Catalog,
       drop(); return None
     }
     val st = carried.orElse(
-      carrierOpen(key, cached.toDF(cols: _*), Seq.empty,
+      carrierOpen(name, Part.Radius, cached.toDF(cols: _*), Seq.empty,
         servedMarker = cached)).getOrElse(return None)
     // cancel fresh removals against the carried INSERT bag first (any
     // matching between equal rows is equivalent in a bag); the leftover
@@ -753,7 +753,7 @@ final class Engine(val catalog: Catalog,
         st.remBag.clear(); st.insBag.clear()
         carrierFolds += 1
       } catch { case scala.util.control.NonFatal(_) =>
-        drop(); carrierNo += key; return None }
+        drop(); vs.carrierNo += Part.Radius; return None }
     }
     val served = serveFrame()
     st.served = served
@@ -793,35 +793,6 @@ final class Engine(val catalog: Catalog,
     }.reduce(_ && _)
   /** Observability: subtractable rounds committed via the resident copy. */
   private[graft] var aggLocalRounds: Long = 0L
-  /** Per-view NON-NULL contributor counts for GLOBAL (key-less) sum
-    * views, version-stamped — decides the sum-goes-null transition the
-    * cached single row can't see (the grouped analogue carries `__nn`
-    * on the support table). Seeded from the post-change body on the
-    * first decrement round, then moved in lockstep with the count
-    * (deltas are null-free by the side-aggregate bail). */
-  private val globalAggNN =
-    mutable.HashMap.empty[String, (Long, Map[Int, Long])]
-  /** Exact VIEW-LEVEL deltas surfaced by maintenance paths that can
-    * NAME their change (per-group decrement replacements, rank
-    * prefix-buffer merges, global-agg row swaps, dirty-group
-    * replacements): view → (fromVersion, toVersion, inserted view rows,
-    * removed view rows), driver-local and bounded. Consumed by the
-    * stacked-view stratum-diff injection in [[IdbEvaluator.tryMaintain]]
-    * — an upper view maintaining through a positive/negated DERIVED
-    * dependency reads the lower stratum's delta HERE instead of
-    * re-deriving it by two view-sized old-vs-new anti-joins (the
-    * reference propagates the lower stratum's delta directly through
-    * its stacked DD arrangements, `src/incremental.rs:77-80`; this is
-    * the Spark-side O(delta) equivalent). Rows are the SET-level diff
-    * (new ∖ old / old ∖ new under Spark's <=> float normalization), so
-    * downstream delta binding, decrement, and DRed reconstruction see
-    * exactly what the anti-join diff would have produced. Entries are
-    * only consumed when BOTH stamps match the consumer's round
-    * (fromVersion == the upper view's v0 snapshot version, toVersion ==
-    * the current catalog version) — anything stale misses and falls
-    * back to the anti-join diff. */
-  private val namedDeltas = mutable.HashMap
-    .empty[String, (Long, Long, Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row])]
   /** Views whose exact delta a consumer wants THIS resolve — lets paths
     * where naming costs extra Spark actions (dirty-group's bounded
     * old/new collects) skip the work on ordinary top-level rounds. */
@@ -833,7 +804,30 @@ final class Engine(val catalog: Catalog,
       ins: Seq[org.apache.spark.sql.Row],
       rem: Seq[org.apache.spark.sql.Row]): Unit =
     if (ins.length <= 4096 && rem.length <= 4096)
-      namedDeltas(view) = (v0, catalog.version, ins, rem)
+      state(view).namedDelta = Some((v0, catalog.version, ins, rem))
+  /** NAME the view-level delta of a round that can only change rows
+    * matching `dirtyPred`, when a stacked-view consumer asked for it:
+    * two bounded key-filtered collects (a filter scan each — no join,
+    * no shuffle) pin the exact old/new dirty slices; everything else is
+    * provably unchanged. Gated on demand — an ordinary top-level round
+    * must not pay the two extra jobs. */
+  private def recordDirtySliceDelta(view: String, v0: Long,
+      before: DataFrame, after: DataFrame, dirtyPred: Column): Unit =
+    if (namedDeltaWanted(view)) {
+      for {
+        oldRows <- Fixpoint.collectUpTo(before.where(dirtyPred), 4096L)
+        newRows <- Fixpoint.collectUpTo(after.where(dirtyPred), 4096L)
+      } {
+        def keyed(rs: Array[org.apache.spark.sql.Row])
+            : Map[Seq[Any], org.apache.spark.sql.Row] =
+          rs.iterator.map(r =>
+            (r.toSeq.map(SparkValues.key): Seq[Any]) -> r).toMap
+        val om = keyed(oldRows); val nm = keyed(newRows)
+        recordNamedDelta(view, v0,
+          nm.collect { case (kk, r) if !om.contains(kk) => r }.toSeq,
+          om.collect { case (kk, r) if !nm.contains(kk) => r }.toSeq)
+      }
+    }
   /** Views whose first tiny-literal-delete round took the dirty-group
     * path instead of seeding a support table (the 2-competitive seed
     * deferral in [[maintainAggSubtractable]]) — a second such round
@@ -1474,7 +1468,7 @@ final class Engine(val catalog: Catalog,
       *
       * Group death (support hits 0 → the row must vanish) and
       * sum-goes-null (last non-null contributor left) are decided from
-      * the carried [[auxSupportCache]] table. Scale shape: the signed
+      * the carried [[ViewState.support]] table. Scale shape: the signed
       * per-group delta ΔG is bounded-collected (≤1024 dirty groups —
       * beyond that dirty-group recomputation is the better plan
       * anyway); the view and support table then update in ONE map-only
@@ -1560,7 +1554,7 @@ final class Engine(val catalog: Catalog,
         named.schema(i).dataType == org.apache.spark.sql.types.DoubleType) ++ avgSpecs
       val DecT = "decimal(38,12)"
       // count_distinct columns maintain through the support-counted
-      // PAIRS tables ([[auxPairsCache]]) — per-pair births/deaths below
+      // PAIRS tables ([[ViewState.pairs]]) — per-pair births/deaths below
       val cdSpecsS: Seq[(Term, Int)] = r.head.args.zipWithIndex.collect {
         case (Agg("count_distinct", t), i) => (t, i)
       }
@@ -1576,10 +1570,10 @@ final class Engine(val catalog: Catalog,
       // every later round rides the carried table O(delta). Small
       // literal-built bases (cheap seeds) and rounds with a live carried
       // table are unaffected.
+      val vs = state(name)
       if (tinyLiteralRound) {
-        val carried = auxSupportCache.get(name).exists(_._1 == v0) ||
-          cdSpecsS.exists { case (_, i) =>
-            auxPairsCache.get((name, i)).exists(_._1 == v0) }
+        val carried = vs.support.exists(_._1 == v0) ||
+          cdSpecsS.exists { case (_, i) => vs.pairs.get(i).exists(_._1 == v0) }
         if (!carried && seedDeferredOnce.add(name)) return None
       }
       val kLen = keyIdx.length
@@ -1616,15 +1610,8 @@ final class Engine(val catalog: Catalog,
       // a round that nets to nothing still re-stamps the carried
       // support/pairs tables to the new version — stranding them at v0
       // would force a body-scan reseed on the next REAL delete round
-      def restampAux(): Unit = {
-        auxSupportCache.get(name).foreach { case (v, df) =>
-          if (v == v0) auxSupportCache(name) = (catalog.version, df) }
-        cdSpecsS.foreach { case (_, i) =>
-          auxPairsCache.get((name, i)).foreach { case (v, df) =>
-            if (v == v0) auxPairsCache((name, i)) = (catalog.version, df) } }
-      }
       if (parts.isEmpty) {
-        restampAux(); recordNamedDelta(name, v0, Nil, Nil)
+        vs.restamp(v0, catalog.version); recordNamedDelta(name, v0, Nil, Nil)
         return Some(cached)
       }
 
@@ -1762,7 +1749,7 @@ final class Engine(val catalog: Catalog,
         if (dirty.isEmpty) {
           // nothing changed in this view (phantom delete, netted
           // delete+reinsert): keep the carried tables current
-          restampAux()
+          vs.restamp(v0, catalog.version)
           recordNamedDelta(name, v0, Nil, Nil)
           aggDecrementCount += 1
           return Some(cached)
@@ -1859,8 +1846,8 @@ final class Engine(val catalog: Catalog,
         // a STALE support entry (left in place by an earlier fallback
         // round precisely because its checkpoint backed the served view
         // then) is displaced by this round's commit and released there
-        val staleSupport = auxSupportCache.get(name).filter(_._1 != v0)
-        val combined = auxSupportCache.get(name) match {
+        val staleSupport = vs.support.filter(_._1 != v0)
+        val combined = vs.support match {
           case Some((v, df)) if v == v0 => df
           case _ =>
             auxSupportSeeds += 1
@@ -1910,13 +1897,13 @@ final class Engine(val catalog: Catalog,
         // distributed semi/anti updates serve (the 100 TB shape), and
         // the view stops probing.
         val combinedLocal: Option[Array[org.apache.spark.sql.Row]] =
-          if (!limits.aggLocalSupportEnabled || aggLocalBig(name)) None
-          else aggLocalSupport.get(name).filter(_._1 eq combined).map(_._2)
+          if (limits.tier != Tier.Auto || vs.big(Part.Support)) None
+          else vs.local.get(Part.Support).filter(_._1 eq combined).map(_._2)
             .orElse {
               val got = Fixpoint.collectUpTo(combined, 65536L)
               got match {
-                case Some(rows) => aggLocalSupport(name) = (combined, rows)
-                case None => aggLocalBig += name
+                case Some(rows) => vs.local(Part.Support) = (combined, rows)
+                case None => vs.big += Part.Support
               }
               got
             }
@@ -1926,8 +1913,8 @@ final class Engine(val catalog: Catalog,
         // never a view-sized pass
         val pqState: Option[Carrier] =
           if (combinedLocal.isDefined) None
-          else carriers.get(name).filter(_.served eq combined)
-            .orElse(carrierOpen(name, combined, keyNames))
+          else vs.carriers.get(Part.Support).filter(_.served eq combined)
+            .orElse(carrierOpen(name, Part.Support, combined, keyNames))
         val dirtyCombined = combinedLocal match {
           case Some(rows) => rows.filter(row =>
             dMap.contains(keyIdx.map(i => SparkValues.key(row.get(i))).toSeq))
@@ -1954,7 +1941,7 @@ final class Engine(val catalog: Catalog,
         // committed lazily on success: each thunk yields the new pairs
         // frame plus its driver rows when the resident-copy mode built
         // it as a literal (None = distributed anti∪literal materialize)
-        val cdAuxNew = Seq.newBuilder[((String, Int),
+        val cdAuxNew = Seq.newBuilder[(Int,
           () => (DataFrame, Option[Array[org.apache.spark.sql.Row]]))]
         if (cdSpecsS.nonEmpty) {
           // __c sits last in the fused pair-grain rows
@@ -1992,7 +1979,7 @@ final class Engine(val catalog: Catalog,
               val tMap = touched.map { case (p, dc) =>
                 (p.map(SparkValues.key), dc)
               }.toMap
-              val (auxPRaw, auxP) = auxPairsCache.get((name, i)) match {
+              val (auxPRaw, auxP) = vs.pairs.get(i) match {
                 case Some((v, df)) if v == v0 =>
                   (df, df.toDF((keyNames :+ "__v" :+ "__s"): _*))
                 case _ =>
@@ -2010,28 +1997,28 @@ final class Engine(val catalog: Catalog,
               // resident-copy mode for the pairs table — same contract
               // as the combined frame above (identity-keyed, cap-gated)
               val pairsLocal: Option[Array[org.apache.spark.sql.Row]] =
-                if (!limits.aggLocalSupportEnabled || aggLocalBig((name, i))) None
-                else aggLocalPairs.get((name, i)).filter(_._1 eq auxPRaw).map(_._2)
+                if (limits.tier != Tier.Auto || vs.big(Part.Pairs(i))) None
+                else vs.local.get(Part.Pairs(i)).filter(_._1 eq auxPRaw).map(_._2)
                   .orElse {
                     val got = Fixpoint.collectUpTo(auxP, 65536L)
                     got match {
-                      case Some(rows) => aggLocalPairs((name, i)) = (auxPRaw, rows)
-                      case None => aggLocalBig += ((name, i))
+                      case Some(rows) => vs.local(Part.Pairs(i)) = (auxPRaw, rows)
+                      case None => vs.big += Part.Pairs(i)
                     }
                     got
                   }
               val pairNames = keyNames :+ "__v"
               val touchedDf = keyLit(tMap.keys, auxP, pairNames)
               // over-cap pairs tables ride the same [[Carrier]] as the
-              // combined frame (keyed "<view>#cd<i>"): touched-pair
+              // combined frame (part Pairs(i)): touched-pair
               // reads are overlay lookups + one IN-pruned base scan,
               // commits mutate the overlay — no pairs-table-sized pass
               // per round
               val pqP: Option[Carrier] =
                 if (pairsLocal.isDefined) None
-                else carriers.get(s"$name#cd$i")
+                else vs.carriers.get(Part.Pairs(i))
                   .filter(_.served eq auxPRaw)
-                  .orElse(carrierOpen(s"$name#cd$i", auxP, pairNames,
+                  .orElse(carrierOpen(name, Part.Pairs(i), auxP, pairNames,
                     servedMarker = auxPRaw))
               val auxTouchedOpt = pairsLocal match {
                 case Some(rows) => Some(rows.filter { row =>
@@ -2073,7 +2060,7 @@ final class Engine(val catalog: Catalog,
                   val schema = org.apache.spark.sql.types.StructType(
                     auxP.schema.fields.map(_.copy(nullable = true)))
                   val aliveRows = alive.result()
-                  cdAuxNew += (((name, i), () => pairsLocal match {
+                  cdAuxNew += ((i, () => pairsLocal match {
                     case Some(copy) =>
                       val full = copy.filterNot { row =>
                         val p: Seq[Any] = (0 to kLen).map(j => SparkValues.key(row.get(j)))
@@ -2342,11 +2329,11 @@ final class Engine(val catalog: Catalog,
           Fixpoint.checkpointRddOf(combined).foreach(_.unpersist(false))
         else
           graft.plans.Graveyard.buryAndDrain(Fixpoint.checkpointRddOf(combined))
-        auxSupportCache(name) = (catalog.version, combinedOut)
+        vs.support = Some((catalog.version, combinedOut))
         combinedOutRows match {
           case Some(full) =>
-            aggLocalSupport(name) = (combinedOut, full); aggLocalRounds += 1
-          case None => aggLocalSupport.remove(name)
+            vs.local(Part.Support) = (combinedOut, full); aggLocalRounds += 1
+          case None => vs.local.remove(Part.Support)
         }
         // a displaced STALE support table (left in place by an earlier
         // fallback round) was served too — same grace-window retirement,
@@ -2358,13 +2345,13 @@ final class Engine(val catalog: Catalog,
               graft.plans.Graveyard.buryAndDrain(Some(s)) } }
         // commit the updated pairs tables the same way
         val vNow = catalog.version
-        cdAuxNew.result().foreach { case (key, build) =>
+        cdAuxNew.result().foreach { case (i, build) =>
           val (out, localRows) = build()
           localRows match {
-            case Some(rows) => aggLocalPairs(key) = (out, rows)
-            case None => aggLocalPairs.remove(key)
+            case Some(rows) => vs.local(Part.Pairs(i)) = (out, rows)
+            case None => vs.local.remove(Part.Pairs(i))
           }
-          auxPairsCache.put(key, (vNow, out)).foreach { case (_, old) =>
+          vs.pairs.put(i, (vNow, out)).foreach { case (_, old) =>
             if (!(old eq out))
               Fixpoint.checkpointRddOf(old).foreach(_.unpersist(false))
           }
@@ -2416,7 +2403,7 @@ final class Engine(val catalog: Catalog,
     }
 
     /** RANK-view (`top_k` / `top_k_threshold`) delete maintenance through
-      * a carried PREFIX BUFFER on [[auxSupportCache]] — the Spark
+      * a carried PREFIX BUFFER on [[ViewState.support]] — the Spark
       * analogue of the reference's arranged per-group heaps (the DD
       * arrangement behind `src/code_generator/mod.rs:2462-2560` keeps
       * every group's multiset resident; a bounded prefix with refill is
@@ -2460,7 +2447,8 @@ final class Engine(val catalog: Catalog,
       if (ordT != LongType && ordT != DoubleType) return None
       if (!outIdx.forall(i => cmpOk(named.schema(i).dataType))) return None
 
-      val carried0 = auxSupportCache.get(name).filter(_._1 == v0).map(_._2)
+      val vs = state(name)
+      val carried0 = vs.support.filter(_._1 == v0).map(_._2)
       // 2-competitive seed deferral (same policy as the aggregate
       // support tables): a one-off tiny literal delete on a big base
       // doesn't amortize the full-body seed pass
@@ -2555,12 +2543,12 @@ final class Engine(val catalog: Catalog,
         }
         // a STALE buffer left in place by an earlier fallback round is
         // displaced by this commit — grace-window retirement
-        auxSupportCache.put(name, (catalog.version, seedMat))
-          .foreach { case (_, old) => retireSuperseded(old) }
-        rankLocalBuf.remove(name) // a reseed invalidates the driver copy
-        carriers.remove(name + "#rank") // ...and the parquet overlay state
+        vs.support.foreach { case (_, old) => retireSuperseded(old) }
+        vs.support = Some((catalog.version, seedMat))
+        vs.local.remove(Part.Rank) // a reseed invalidates the driver copy
+        vs.carriers.remove(Part.Rank) // ...and the parquet overlay state
           .foreach(_.dirs.foreach(Engine.retireDir))
-        aggLocalBig.remove(("rank", name)) // ...and may have shrunk it
+        vs.big.remove(Part.Rank) // ...and may have shrunk it
         rankBufferSeeds += 1
         rankDecrementCount += 1
         return Some(expand(seedMat))
@@ -2585,9 +2573,7 @@ final class Engine(val catalog: Catalog,
           hnswFrame, catalog.statRows)
       val remLit = removedOf.get(changedRel).map(asLiteral)
       val insLit = deltaOf.get(changedRel).map(asLiteral)
-      def restamp(): Unit =
-        auxSupportCache.get(name).foreach { case (v, df) =>
-          if (v == v0) auxSupportCache(name) = (catalog.version, df) }
+      def restamp(): Unit = vs.restamp(v0, catalog.version)
       if (remLit.forall(_._2 == 0L) && insLit.forall(_._2 == 0L) &&
           (remLit.nonEmpty || insLit.nonEmpty)) {
         restamp(); recordNamedDelta(name, v0, Nil, Nil)
@@ -2608,7 +2594,7 @@ final class Engine(val catalog: Catalog,
         * (the distributed viol path decides those), or column types
         * that [[SparkValues.compare]] does not order. */
       def localRide(): Option[DataFrame] = {
-        if (!limits.rankLocalRideEnabled) return None
+        if (limits.tier == Tier.Distributed) return None
         if (!cols.indices.forall(i => named.schema(i).dataType match {
           case LongType | IntegerType | ShortType | ByteType | DoubleType |
                FloatType | BooleanType | StringType => true
@@ -2651,22 +2637,23 @@ final class Engine(val catalog: Catalog,
         // ungrouped head stays full-copy (one group; over-cap means a
         // genuinely huge single buffer — the distributed algebra's
         // shape).
-        val rankKey = name + "#rank"
         var pqR: Option[Carrier] =
           if (groupIdx.isEmpty) None
-          else carriers.get(rankKey).filter(_.served eq buf0)
-        if (pqR.isEmpty && groupIdx.nonEmpty && aggLocalBig(("rank", name)))
-          pqR = carrierOpen(rankKey, buf0, groupNames)
+          else vs.carriers.get(Part.Rank).filter(_.served eq buf0)
+        if (pqR.isEmpty && groupIdx.nonEmpty && vs.big(Part.Rank))
+          pqR = carrierOpen(name, Part.Rank, buf0, groupNames)
         val fullRows: Option[Array[org.apache.spark.sql.Row]] =
           if (pqR.isDefined) None
-          else rankLocalBuf.get(name).filter(_._1 eq buf0).map(_._2).orElse {
-            if (aggLocalBig(("rank", name))) None
-            else Fixpoint.collectUpTo(buf0, limits.rankBufLocalCap).orElse {
+          else vs.local.get(Part.Rank).filter(_._1 eq buf0).map(_._2).orElse {
+            if (vs.big(Part.Rank)) None
+            else Fixpoint.collectUpTo(buf0,
+              if (limits.tier == Tier.Carrier && groupIdx.nonEmpty) 0L
+              else Engine.rankBufLocalCap).orElse {
               // memoized so later rounds skip the wasted probe (a
               // reseed clears it — the one event that can shrink it);
               // the first over-cap round transitions to parquet NOW
-              aggLocalBig += (("rank", name))
-              if (groupIdx.nonEmpty) pqR = carrierOpen(rankKey, buf0, groupNames)
+              vs.big += Part.Rank
+              if (groupIdx.nonEmpty) pqR = carrierOpen(name, Part.Rank, buf0, groupNames)
               None
             }
           }
@@ -2801,8 +2788,8 @@ final class Engine(val catalog: Catalog,
           val servedBuf = carrierCommit(st,
             allG.iterator.map(g => (g: Seq[Any]) -> fresh(g)))
           retireSuperseded(buf0)
-          auxSupportCache(name) = (catalog.version, servedBuf)
-          rankLocalBuf.remove(name)
+          vs.support = Some((catalog.version, servedBuf))
+          vs.local.remove(Part.Rank)
           rankDecrementCount += 1
           rankParquetRides += 1
           // named delta: same touched-group diff as the full-copy mode
@@ -2890,8 +2877,8 @@ final class Engine(val catalog: Catalog,
         val servedDf = spark.createDataFrame(
           java.util.Arrays.asList(servedRows.toSeq: _*), servedSchema)
         retireSuperseded(buf0)
-        auxSupportCache(name) = (catalog.version, bufDf)
-        rankLocalBuf(name) = (bufDf, outBufRows.toArray)
+        vs.support = Some((catalog.version, bufDf))
+        vs.local(Part.Rank) = (bufDf, outBufRows.toArray)
         rankDecrementCount += 1
         rankLocalRides += 1
         // NAME the exact view-level delta: only TOUCHED groups (a delta
@@ -3093,8 +3080,8 @@ final class Engine(val catalog: Catalog,
         // the superseded carried buffer backed the previously served
         // view — grace-window retirement, same as the agg support table
         retireSuperseded(buf0)
-        auxSupportCache(name) = (catalog.version, outBuf)
-        rankLocalBuf.remove(name) // driver copy of the displaced buffer
+        vs.support = Some((catalog.version, outBuf))
+        vs.local.remove(Part.Rank) // driver copy of the displaced buffer
         rankDecrementCount += 1
         committed = true
         Some(expand(outBuf))
@@ -3181,14 +3168,12 @@ final class Engine(val catalog: Catalog,
         }
         if (nn.exists(_._2 != n)) None else Some((n, sums))
       }
-      def restampNN(): Unit =
-        globalAggNN.get(name).foreach { case (v, m) =>
-          if (v == v0) globalAggNN(name) = (catalog.version, m) }
+      val vs = state(name)
       try {
         val rm = removedOf.get(changedRel).map(f => sideAgg(f).getOrElse(return None))
         val ins = deltaOf.get(changedRel).map(f => sideAgg(f).getOrElse(return None))
         if (rm.isEmpty && ins.isEmpty) {
-          restampNN(); recordNamedDelta(name, v0, Nil, Nil)
+          vs.restamp(v0, catalog.version); recordNamedDelta(name, v0, Nil, Nil)
           return Some(cached)
         }
         val newN = oldN + ins.map(_._1).getOrElse(0L) - rm.map(_._1).getOrElse(0L)
@@ -3200,7 +3185,7 @@ final class Engine(val catalog: Catalog,
         // CURRENT (post-change) body with one aggregate whose row count
         // doubles as a consistency check. Deltas are null-free by the
         // sideAgg bail, so nn moves in lockstep with n.
-        val nn: Map[Int, Long] = globalAggNN.get(name)
+        val nn: Map[Int, Long] = vs.globalNN
           .filter(_._1 == v0).map { case (_, m) =>
             m.map { case (i, v) => i -> (v + (newN - oldN)) }
           }.getOrElse {
@@ -3220,7 +3205,7 @@ final class Engine(val catalog: Catalog,
         val spark = catalog.spark
         val schema = StructType(named.schema.fields.map(_.copy(nullable = true)))
         aggDecrementCount += 1
-        globalAggNN(name) = (catalog.version, nn)
+        vs.globalNN = Some((catalog.version, nn))
         if (newN == 0L) {
           // view dies to empty: the old single row is the exact removal
           recordNamedDelta(name, v0, Nil, old.toSeq)
@@ -3296,13 +3281,7 @@ final class Engine(val catalog: Catalog,
         // alongside the view (cachePut moves it to the new version) —
         // stranded at v0 it would read stale on the next REAL round and
         // force a full-body reseed of the buffer/support tables
-        auxSupportCache.get(name).foreach { case (v, df) =>
-          if (v == v0) auxSupportCache(name) = (catalog.version, df) }
-        auxPairsCache.keysIterator.filter(_._1 == name).toSeq.foreach { k =>
-          auxPairsCache.get(k).foreach { case (v, df) =>
-            if (v == v0) auxPairsCache(k) = (catalog.version, df) } }
-        globalAggNN.get(name).foreach { case (v, m) =>
-          if (v == v0) globalAggNN(name) = (catalog.version, m) }
+        views.get(name).foreach(_.restamp(v0, catalog.version))
         return Some(cached)
       }
       val scc = Stratifier.sccOf(rules).getOrElse(name, Set(name))
@@ -3494,7 +3473,7 @@ final class Engine(val catalog: Catalog,
                   Fixpoint.parallelizeParts(rows.length.toLong)),
                 org.apache.spark.sql.types.StructType(
                   oldN.schema.fields.map(_.copy(nullable = true))))
-            namedDeltas.get(n) match {
+            views.get(n).flatMap(_.namedDelta) match {
               case Some((f, t, insRows, remRows))
                   if f == v0 && t == catalog.version =>
                 // the lower stratum's maintenance path NAMED its exact
@@ -3665,28 +3644,8 @@ final class Engine(val catalog: Catalog,
         // left lazy, repeated maintenance rounds would nest filters
         // without bound
         val out = Fixpoint.materialize(clean.union(dirtyNew)).df
-        // NAME the view-level delta when a stacked-view consumer asked
-        // for it: rows can only change inside the dirty groups, so two
-        // bounded key-filtered collects (a filter scan each — no join,
-        // no shuffle) pin the exact old/new dirty slices; everything
-        // else is provably unchanged. Gated on demand — an ordinary
-        // top-level round must not pay the two extra jobs.
-        if (namedDeltaWanted(name)) {
-          for {
-            oldRows <- Fixpoint.collectUpTo(
-              cached.toDF(cols: _*).where(dirtyPred), 4096L)
-            newRows <- Fixpoint.collectUpTo(out.where(dirtyPred), 4096L)
-          } {
-            def keyed(rs: Array[org.apache.spark.sql.Row])
-                : Map[Seq[Any], org.apache.spark.sql.Row] =
-              rs.iterator.map(r =>
-                (r.toSeq.map(SparkValues.key): Seq[Any]) -> r).toMap
-            val om = keyed(oldRows); val nm = keyed(newRows)
-            recordNamedDelta(name, v0,
-              nm.collect { case (kk, r) if !om.contains(kk) => r }.toSeq,
-              om.collect { case (kk, r) if !nm.contains(kk) => r }.toSeq)
-          }
-        }
+        // rows can only change inside the dirty groups
+        recordDirtySliceDelta(name, v0, cached.toDF(cols: _*), out, dirtyPred)
         Some(out)
       }
 
@@ -3748,7 +3707,8 @@ final class Engine(val catalog: Catalog,
         }
         val relRemoved = removedExactOf.get(changedRel)
         val relDelta = deltaOf.get(changedRel)
-        val bufferLive = auxSupportCache.get(name).exists(_._1 == v0)
+        val vs = state(name)
+        val bufferLive = vs.support.exists(_._1 == v0)
         // INSERT-ONLY rounds on a view already riding the carry keep
         // riding it (an empty rem side appends to the ins bag): the
         // merged-union path below would materialize a NEW cached frame,
@@ -3757,7 +3717,7 @@ final class Engine(val catalog: Catalog,
         // alternating insert/delete workloads the carry degenerated to
         // one view-sized write per delete round.
         val radiusCarried = rank.func == "within_radius" &&
-          carriers.get(name + "#radius").exists(_.served eq cached)
+          vs.carriers.get(Part.Radius).exists(_.served eq cached)
         if (changedOccs.size == 1 && rank.func == "within_radius" &&
             (relRemoved.nonEmpty || radiusCarried)) {
           val remRanked = relRemoved match {
@@ -4114,10 +4074,10 @@ final class Engine(val catalog: Catalog,
         // SUBTRACTABLE-AGGREGATE rounds: sum/count are group-wise
         // subtractable, so deletes maintain by per-group DECREMENT
         // (reference BENCHMARKS.md:91-93 shape) riding the carried
-        // [[auxSupportCache]] support table instead of dirty-group
+        // [[ViewState.support]] table instead of dirty-group
         // recomputation. Insert rounds that find a live support table
         // route through the same path so the table stays current.
-        if (hasRemovals || auxSupportCache.get(name).exists(_._1 == v0)) {
+        if (hasRemovals || views.get(name).exists(_.support.exists(_._1 == v0))) {
           // tiny-literal-delete rounds over big/unknown-size bases don't
           // amortize a first-round seed (see the gate in
           // maintainAggSubtractable); literal-built small bases and any
@@ -4211,10 +4171,10 @@ final class Engine(val catalog: Catalog,
             deltaB.groupBy(groups: _*)
               .agg(aggsAll.head, aggsAll.tail: _*).drop("__nb")
           }
-          val auxUpdates = Seq.newBuilder[((String, Int), DataFrame)]
+          val auxUpdates = Seq.newBuilder[(Int, DataFrame)]
           val pairCols = keyCols :+ "__v"
           cdSpecs.foreach { case (arg, i) =>
-            val aux = auxPairsCache.get((name, i)) match {
+            val aux = state(name).pairs.get(i) match {
               case Some((v, df)) if v == v0 => df
               case _ =>
                 cdPairsSeeds += 1
@@ -4254,15 +4214,15 @@ final class Engine(val catalog: Catalog,
               "left")
             acc = dj.select(col("__l.*"),
               coalesce(col(s"__r.c$i"), lit(0L)).as(s"c$i"))
-            auxUpdates += (((name, i), tagged.select((pairCols :+ "__s").map(col): _*)))
+            auxUpdates += ((i, tagged.select((pairCols :+ "__s").map(col): _*)))
           }
           val vNow = catalog.version
-          auxUpdates.result().foreach { case (k, df) =>
+          auxUpdates.result().foreach { case (i, df) =>
             // release the superseded pairs table's checkpoint blocks —
             // the updated table is materialized independent of it, and
             // leaving them persisted accumulates for the session under
             // repeated maintenance (the TextAnalysis scratch leak class)
-            auxPairsCache.put(k, (vNow, df)).foreach { case (_, old) =>
+            state(name).pairs.put(i, (vNow, df)).foreach { case (_, old) =>
               if (!(old eq df))
                 Fixpoint.checkpointRddOf(old).foreach(_.unpersist(false))
             }
@@ -4413,7 +4373,8 @@ final class Engine(val catalog: Catalog,
               acc.flatMap(a => Fixpoint.collectUpTo(f, Fixpoint.LocalEdgeRows).map(a ++ _))
             }
           val local = for {
-            cachedRows <- Fixpoint.collectUpTo(cached, limits.tcLocalClosureCap)
+            cachedRows <- Fixpoint.collectUpTo(cached,
+              if (limits.tier == Tier.Distributed) 1L else Engine.tcLocalClosureCap)
             insRows <- collectAll(insFrames)
             remRows <- collectAll(remFrames)
             // the post-change EDGE relation is only needed for deletes
@@ -4720,26 +4681,8 @@ final class Engine(val catalog: Catalog,
               .reduce(_ union _).where(dirtyPred).distinct()
             val out = Fixpoint.materialize(
               cached.toDF(cols: _*).where(!dirtyPred).union(fresh)).df
-            // NAME the view-level delta on demand (stacked-view
-            // consumer): rows can only change where the link predicate
-            // matches — two bounded filter-scan collects pin the exact
-            // old/new dirty slices (same contract as dirty-group's).
-            if (namedDeltaWanted(name)) {
-              for {
-                oldRows <- Fixpoint.collectUpTo(
-                  cached.toDF(cols: _*).where(dirtyPred), 4096L)
-                newRows <- Fixpoint.collectUpTo(out.where(dirtyPred), 4096L)
-              } {
-                def keyed(rs: Array[org.apache.spark.sql.Row])
-                    : Map[Seq[Any], org.apache.spark.sql.Row] =
-                  rs.iterator.map(r =>
-                    (r.toSeq.map(SparkValues.key): Seq[Any]) -> r).toMap
-                val om = keyed(oldRows); val nm = keyed(newRows)
-                recordNamedDelta(name, v0,
-                  nm.collect { case (kk, r) if !om.contains(kk) => r }.toSeq,
-                  om.collect { case (kk, r) if !nm.contains(kk) => r }.toSeq)
-              }
-            }
+            // rows can only change where the link predicate matches
+            recordDirtySliceDelta(name, v0, cached.toDF(cols: _*), out, dirtyPred)
             Some(out)
           }
           // Path order: on PROVABLY-SMALL inputs (every base relation in
@@ -5209,7 +5152,7 @@ final class Engine(val catalog: Catalog,
         removedOf: Map[String, DataFrame], deltaOf: Map[String, DataFrame],
         negChanged: Set[String],
         curOf: (String, Int) => DataFrame): Option[Map[String, DataFrame]] = {
-      if (!limits.localEval) return None
+      if (limits.tier == Tier.Distributed) return None
       import org.apache.spark.sql.Row
       import scala.collection.immutable.ArraySeq
       val members = scc.toSeq
@@ -5636,7 +5579,7 @@ final class Engine(val catalog: Catalog,
       * sizes, value types, or a demand restriction rule it out. */
     private def localSccFastPath(scc: Set[String],
         sccRules: Seq[Rule]): Option[Map[String, DataFrame]] = {
-      if (!limits.localEval || demand.nonEmpty) return None
+      if (limits.tier == Tier.Distributed || demand.nonEmpty) return None
       val recRules = sccRules.filter(_.body.exists {
         case Pos(a) => scc(a.rel)
         case _ => false

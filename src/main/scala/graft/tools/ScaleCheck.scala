@@ -336,7 +336,7 @@ object ScaleCheck {
     // An upper aggregate view over a DERIVED lower view that is itself
     // base-sized: the round's lower-stratum delta used to be re-derived
     // by two view-sized anti-joins; the maintenance paths now NAME their
-    // exact delta (namedDeltas) and the stratum-diff injection consumes
+    // exact delta (ViewState.namedDelta) and the stratum-diff injection consumes
     // it directly, leaving only map-only key-pruned scans as the
     // base-sized terms. Fixed 20-tuple base delete per round; timed
     // quantity is the riding rounds (seed rounds untimed) — flat means
@@ -391,7 +391,7 @@ object ScaleCheck {
       // constant that read as a fake 100x slope). Carrier-vs-carrier
       // isolates the claim under test: riding rounds stay delta-bound.
       val e = new graft.iql.Engine(new graft.iql.Catalog(spark),
-        graft.iql.Engine.Limits(aggLocalSupportEnabled = false))
+        graft.iql.Engine.Limits(tier = graft.iql.Engine.Tier.Carrier))
       e.catalog.register("pbase", spark.range(n).select(
         col("id"), pmod(col("id"), lit(100L)).as("dept"),
         pmod(col("id") * 48271L, lit(500L)).as("sal")).localCheckpoint(true))
@@ -491,15 +491,15 @@ object ScaleCheck {
     // tracks the base — a view-sized re-query count would drown the
     // maintenance signal — hence the radius binds the ID column
     // (id <= 1000: exactly ~1001 rows at ANY base size) and the carry
-    // gate is pinned open (radiusCarryMinRows = 0, as the radius fuzz
-    // pins it) so the small fixture still rides the production bag-carry path.
+    // gate is pinned open (the Carrier tier, as the radius fuzz pins it)
+    // so the small fixture still rides the production bag-carry path.
     // Timed quantity: five riding rounds' median — two delta-bound
     // collects plus driver bag math per round; the delete statement's
     // presence check is the only base-sized term (IN-pruned on the
     // parquet bases).
     def radiusProbe(n: Long, parquetBase: Boolean)(dummy: Long): (Double, Long) = {
       val e = new graft.iql.Engine(new graft.iql.Catalog(spark),
-        graft.iql.Engine.Limits(radiusCarryMinRows = 0L))
+        graft.iql.Engine.Limits(tier = graft.iql.Engine.Tier.Carrier))
       val base0 = spark.range(n).select(
         col("id"), pmod(col("id"), lit(100L)).as("dept"),
         pmod(col("id") * 48271L, lit(500L)).as("sal"))

@@ -189,7 +189,6 @@ class PlanQualitySpec extends SparkSpec {
     // ABOVE the prefix self-join — the only aggregates allowed are the
     // upstream df/rank/sets builds. Guard: the kernel is present and no
     // HashAggregate keys on the pair columns.
-    import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
     val rnd = new scala.util.Random(1)
@@ -221,7 +220,6 @@ class PlanQualitySpec extends SparkSpec {
     // shuffle here is the O(base-shuffle)-per-maintenance-round shape
     // the round-12 fix removed (ScaleCheck retract probes 1.9x -> ~1.0x)
     val cat = new graft.iql.Catalog(spark)
-    import spark.implicits._
     cat.register("pbase", spark.range(50000L).selectExpr(
       "id", "id % 100 AS dept", "(id * 48271) % 500 AS sal"))
     // (7,7,397) and (8,8,168) are present; the third tuple is a phantom

@@ -10,18 +10,6 @@ trait SparkSpec extends AnyFunSuite {
   def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq.toVector: Seq[Any]).toSet
 
-  /** Fuzz case budget: the differential fuzz suites dominated the test
-    * wall clock (MaintenanceFuzzSpec alone was 702 s of the 30-minute
-    * run — far past the collecting harness's test window), so by
-    * default each fuzz loop runs a PREFIX of its case stream — the SAME
-    * deterministic cases (the shared seeded Random is drawn in the same
-    * order), just fewer of them — and `SPARK_GRAFT_FUZZ_DEEP=1`
-    * restores every case for deep local runs (this round's full-depth
-    * run: 443+ green before the caps went in). */
-  def fuzzCases(full: Int): Int =
-    if (sys.env.contains("SPARK_GRAFT_FUZZ_DEEP")) full
-    else math.max(3, (full + 2) / 3)
-
   /** Run independent test cases on a small thread pool (guide §2.6:
     * Spark schedules concurrent jobs fine; these suites are latency-
     * bound on tiny data, so overlapping cases cuts wall-clock ~4×

@@ -238,7 +238,6 @@ class HnswSpec extends SparkSpec {
     // cell is probed, so the fallback top-k must EQUAL brute force —
     // the exact anchor.
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val vs = mkVecs(60, 8)
     val df = vs.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
     val cat = new graft.iql.Catalog(spark)
@@ -287,7 +286,6 @@ class HnswSpec extends SparkSpec {
     // report measures the same floor oracle-exactly; the r14 untrained
     // first-16 centroids measured 0.49 here).
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val vs = mkVecs(240, 8)
     val df = vs.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
     val cat = new graft.iql.Catalog(spark)

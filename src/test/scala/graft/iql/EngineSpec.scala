@@ -446,7 +446,7 @@ class EngineSpec extends SparkSpec {
         |""".stripMargin)
     assert(rows(e.run("?r(X, Y)").last).size == 9)
     val before = e.maintainedCount
-    e.limits = e.limits.copy(tcLocalClosureCap = 1L) // pin the distributed path
+    e.limits = Engine.Limits(Engine.Tier.Distributed) // pin the distributed path
     // delete inside the 1-2-3-4 chain: the 10-11-12 component is
     // UNAFFECTED and must pass through verbatim (the anti-join side)
     e.run("-ed[(2, 3)]")
@@ -465,7 +465,7 @@ class EngineSpec extends SparkSpec {
   test("two engines on one session maintain a TC view in parallel, each under its own limits") {
     // run at the same time on the shared session, each engine's delete
     // round takes the path its OWN closure cap picks
-    val Seq(capped, default) = Seq(Engine.Limits(tcLocalClosureCap = 1L), Engine.Limits())
+    val Seq(capped, default) = Seq(Engine.Limits(Engine.Tier.Distributed), Engine.Limits())
       .map(l => new Engine(new Catalog(spark), l))
     val results = new java.util.concurrent.ConcurrentHashMap[Engine, Set[Seq[Any]]]()
     inParallel(Seq(capped, default), threads = 2) { e =>
@@ -786,7 +786,7 @@ class EngineSpec extends SparkSpec {
       ("max", Seq(1L -> Double.NaN, 2L -> 5.0),
         Set(Seq[Any](1L, nan), Seq[Any](2L, nan), Seq[Any](3L, nan)))
     ).foreach { case (func, seeds, expected) =>
-      for (limits <- Seq(Engine.Limits(), Engine.Limits(localEval = false))) {
+      for (limits <- Seq(Engine.Limits(), Engine.Limits(Engine.Tier.Distributed))) {
         val (viaSolver, solverLocal) = solve(func, seeds, viaLoop = false, limits)
         val (viaLoop, loopLocal) = solve(func, seeds, viaLoop = true, limits)
         assert(solverLocal && !loopLocal, s"$func: paths not as intended")
@@ -1487,7 +1487,7 @@ class EngineSpec extends SparkSpec {
         |""".stripMargin)
     assert(rows(e.run("?p(X, Y)").last).size == 6)
     val before = e.maintainedCount
-    e.limits = e.limits.copy(localEval = false)
+    e.limits = Engine.Limits(Engine.Tier.Distributed)
     e.run("-e[(2, 3)]")
     e.run("+e[(2, 4)]")
     assert(rows(e.run("?p(X, Y)").last) ==
@@ -1598,7 +1598,8 @@ class EngineSpec extends SparkSpec {
          |?r(X, Y)
          |""".stripMargin
     val viaLocal = new Engine(new Catalog(spark)).run(prog).last
-    val viaDist = new Engine(new Catalog(spark), Engine.Limits(localEval = false)).run(prog).last
+    val viaDist = new Engine(new Catalog(spark), Engine.Limits(Engine.Tier.Distributed))
+      .run(prog).last
     assert(local(viaLocal), "the recursive SCC should evaluate on the driver")
     assert(!local(viaDist))
     assert(rows(viaLocal) == rows(viaDist))
@@ -1861,7 +1862,7 @@ class EngineSpec extends SparkSpec {
         |""".stripMargin)
     assert(rows(e.run("?tc(X, Y)").last).size == 6)
     val before = e.maintainedCount
-    e.limits = e.limits.copy(localEval = false)
+    e.limits = Engine.Limits(Engine.Tier.Distributed)
     e.run("-edge[(2, 3)]")
     assert(rows(e.run("?tc(X, Y)").last) ==
       Set(Seq(1L, 2L), Seq(3L, 4L), Seq(1L, 3L), Seq(1L, 4L)))
@@ -1880,7 +1881,7 @@ class EngineSpec extends SparkSpec {
     assert(rows(e.run("?odd(X, Y)").last).size == 4)
     assert(rows(e.run("?even(X, Y)").last).size == 2)
     val before = e.maintainedCount
-    e.limits = e.limits.copy(localEval = false)
+    e.limits = Engine.Limits(Engine.Tier.Distributed)
     e.run("-edge[(2, 3)]")
     assert(rows(e.run("?odd(X, Y)").last) == Set(Seq(1L, 2L), Seq(3L, 4L)))
     assert(rows(e.run("?even(X, Y)").last) == Set.empty[Seq[Any]])
@@ -2001,7 +2002,7 @@ class EngineSpec extends SparkSpec {
     * with it pinned off (distributed loop) — and require identical rows. */
   private def localVsDistributed(src: String): Set[Seq[Any]] = {
     val local = query(src)
-    val dist = query(src, Engine.Limits(localEval = false))
+    val dist = query(src, Engine.Limits(Engine.Tier.Distributed))
     assert(local == dist, "local SCC fast path diverges from distributed loop")
     local
   }
@@ -2037,7 +2038,7 @@ class EngineSpec extends SparkSpec {
     e.run(s"+up[$ups]\n+down[$downs]\n+person[$persons]")
     e.run("+sg(X, X) <- person(X)\n+sg(X, Y) <- up(X, Z1), sg(Z1, Z2), down(Z2, Y)")
     val local = rows(e.run("?sg(5, Y)").last)
-    e.limits = e.limits.copy(localEval = false)
+    e.limits = Engine.Limits(Engine.Tier.Distributed)
     val dist = rows(e.run("?sg(5, Y)").last)
     assert(local == dist)
     assert(local.map(_.last) == Set(3L, 4L, 5L, 6L)) // 5's generation (depth 2)
@@ -2093,7 +2094,7 @@ class EngineSpec extends SparkSpec {
         |?r(X, Y)
         |""".stripMargin
     val localErr = intercept[Exception](query(src)).getMessage
-    val distErr = intercept[Exception](query(src, Engine.Limits(localEval = false))).getMessage
+    val distErr = intercept[Exception](query(src, Engine.Limits(Engine.Tier.Distributed))).getMessage
     assert(localErr == distErr)
     assert(localErr.contains("shares no variables"))
   }
@@ -2315,5 +2316,78 @@ class EngineSpec extends SparkSpec {
     assert(rows(e.run("?vt9(D, S, C)").last) == Set(Seq(3L, 30L, 1L)))
     assert(e.auxSupportSeeds == s0 + 1,
       "unrelated change must not force a support reseed")
+  }
+
+  test("delete rounds serve the same rows under every tier, each by its own path") {
+    val prog =
+      """+emp[(1, "a", 10), (2, "a", 20), (3, "a", 60), (4, "b", 30), (5, "b", 40), (6, "c", 50)]
+        |+ed[(1, 2), (2, 3), (3, 4), (4, 5)]
+        |+dsum(D, sum<S>, count<S>) <- emp(I, D, S)
+        |+dtop(D, top_k<2, I, S:desc>) <- emp(I, D, S)
+        |+gtop(top_k<3, I, S:desc>) <- emp(I, D, S)
+        |+reach(X, Y) <- ed(X, Y)
+        |+reach(X, Z) <- reach(X, Y), ed(Y, Z)
+        |""".stripMargin
+    val queries = Seq("?dsum(D, S, C)", "?dtop(D, I, S)", "?gtop(I, S)", "?reach(X, Y)")
+    def views(e: Engine): Seq[Set[Seq[Any]]] = queries.map(q => rows(e.run(q).last))
+    def counters(e: Engine): Map[String, Long] = Map("maintainedCount" -> e.maintainedCount,
+      "aggLocalRounds" -> e.aggLocalRounds, "rankLocalRides" -> e.rankLocalRides,
+      "rankParquetRides" -> e.rankParquetRides,
+      "supportParquetRounds" -> e.supportParquetRounds, "tcLocalRounds" -> e.tcLocalRounds)
+    // the first delete seeds the carried state (support table, prefix
+    // buffers); the compared round then deletes from each base relation
+    // on its own, since the agg and TC paths maintain one changed
+    // relation at a time
+    val seedRound = Seq("-emp[(1, \"a\", 10)]")
+    val round = Seq("-emp[(4, \"b\", 30)]", "-ed[(2, 3)]")
+    val tiers = Seq(Engine.Tier.Auto, Engine.Tier.Carrier, Engine.Tier.Distributed)
+    val moved: Map[Engine.Tier, (Seq[Set[Seq[Any]]], Map[String, Long])] = tiers.map { tier =>
+      val e = new Engine(new Catalog(spark), Engine.Limits(tier))
+      e.run(prog); views(e)
+      seedRound.foreach { d => e.run(d); views(e) }
+      val before = counters(e)
+      val got = round.map { d => e.run(d); views(e) }.last
+      val after = counters(e)
+      tier -> (got, after.map { case (k, v) => k -> (v - before(k)) })
+    }.toMap
+    val fresh = new Engine(new Catalog(spark))
+    (prog +: (seedRound ++ round)).foreach(fresh.run)
+    val expected = views(fresh)
+    tiers.foreach(t => assert(moved(t)._1 == expected, s"$t rows differ from a fresh engine"))
+    // every tier maintains all four views in both rounds, none recomputes...
+    assert(tiers.map(moved(_)._2("maintainedCount")).distinct == Seq(8L))
+    // ...each through its own paths
+    def ran(t: Engine.Tier): Set[String] =
+      (moved(t)._2 - "maintainedCount").collect { case (k, n) if n > 0 => k }.toSet
+    assert(ran(Engine.Tier.Auto) == Set("aggLocalRounds", "rankLocalRides", "tcLocalRounds"))
+    // the ungrouped top_k and the TC closure have no carrier form, so
+    // they stay driver-local under Carrier
+    assert(ran(Engine.Tier.Carrier) ==
+      Set("supportParquetRounds", "rankParquetRides", "rankLocalRides", "tcLocalRounds"))
+    assert(ran(Engine.Tier.Distributed).isEmpty)
+  }
+
+  test("evicting a view clears its carrier deny-list, so a re-created view rides the carrier") {
+    import org.apache.spark.sql.functions.{col, lit, struct}
+    // an empty struct column cannot be written to parquet: the first
+    // radius carrier open fails and denies the view's carrier. That
+    // denial is the view's only carried state; clearSession must still
+    // drop it
+    val cat = new Catalog(spark)
+    val e = new Engine(cat, Engine.Limits(Engine.Tier.Carrier))
+    def base(g: org.apache.spark.sql.Column) =
+      spark.range(1, 13).select(col("id").as("i"), g.as("g"), (col("id") % 5).as("x"))
+    cat.register("vt", base(struct()))
+    e.run("+w(G, within_radius<3, I, X>) <- vt(I, G, X)\n?w(G, I, X)")
+    e.run("-vt(I, G, X) <- vt(I, G, X), I = 3")
+    e.run("?w(G, I, X)")
+    assert(e.radiusCarryRides == 0L, "the empty struct should have failed the carrier write")
+    e.clearSession()
+    cat.register("vt", base(lit("a")))
+    e.run("?w(G, I, X)")
+    e.run("-vt(I, G, X) <- vt(I, G, X), I = 2")
+    // radius 3 over X = I % 5 drops the X = 4 rows
+    assert(rows(e.run("?w(G, I, X)").last).map(_(1)) == (1L to 12L).toSet -- Set(2L, 4L, 9L))
+    assert(e.radiusCarryRides == 1L, "the re-created view never retried its carrier")
   }
 }

@@ -12,7 +12,7 @@ import scala.util.Random
   * guards, and stratified negation. Seed is fixed — failures reproduce. */
 class LocalEvalFuzzSpec extends SparkSpec {
 
-  private val distributedLoop = Engine.Limits(localEval = false) // local SCC evaluator off
+  private val distributedLoop = Engine.Limits(Engine.Tier.Distributed) // local SCC evaluator off
 
   private def randomProgram(rng: Random): String = {
     val nNodes = 4 + rng.nextInt(5)
@@ -84,7 +84,7 @@ class LocalEvalFuzzSpec extends SparkSpec {
     // MaintenanceFuzzSpec streams can't reach (their view shapes are
     // fixed). Seeded; 50 (program, stream) pairs.
     val rng = new Random(20260915L)
-    (1 to fuzzCases(50)).foreach { i =>
+    (1 to 50).foreach { i =>
       val nNodes = 4 + rng.nextInt(5)
       val live = scala.collection.mutable.LinkedHashSet.empty[(Int, Int)]
       val blk = scala.collection.mutable.LinkedHashSet.empty[Int]
@@ -212,7 +212,7 @@ class LocalEvalFuzzSpec extends SparkSpec {
 
   test("local and distributed SCC evaluation agree on random programs") {
     val rng = new Random(20260812L)
-    (1 to fuzzCases(14)).foreach { i =>
+    (1 to 14).foreach { i =>
       val src = randomProgram(rng)
       val local =
         try Right(rows(new Engine(new Catalog(spark)).run(src).last))

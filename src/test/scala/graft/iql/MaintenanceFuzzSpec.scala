@@ -16,7 +16,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("maintained mutations equal fresh recomputation on random recursive programs") {
     val rng = new Random(20260813L)
-    (1 to fuzzCases(12)).foreach { i =>
+    (1 to 12).foreach { i =>
       val nNodes = 4 + rng.nextInt(5)
       val edgeSet = Seq.fill(5 + rng.nextInt(8))(
         (rng.nextInt(nNodes), rng.nextInt(nNodes))).distinct
@@ -75,8 +75,8 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("distributed affected-source TC maintenance equals fresh recomputation on random graphs") {
     val rng = new Random(20260819L)
-    val limits = Engine.Limits(tcLocalClosureCap = 1L) // pin the distributed path
-    (1 to fuzzCases(8)).foreach { c =>
+    val limits = Engine.Limits(Engine.Tier.Distributed) // pin the distributed path
+    (1 to 8).foreach { c =>
       val nNodes = 5 + rng.nextInt(5)
       val edgeSet = scala.collection.mutable.LinkedHashSet.from(
         Seq.fill(6 + rng.nextInt(8))((rng.nextInt(nNodes), rng.nextInt(nNodes))))
@@ -115,7 +115,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("negation-dependent maintenance equals fresh recomputation on random mutation streams") {
     val rng = new Random(20260817L)
-    (1 to fuzzCases(10)).foreach { c =>
+    (1 to 10).foreach { c =>
       val nNodes = 4 + rng.nextInt(4)
       val edgeSet = Seq.fill(5 + rng.nextInt(7))(
         (rng.nextInt(nNodes), rng.nextInt(nNodes))).distinct
@@ -176,7 +176,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("DERIVED-negated-dependency maintenance equals fresh recomputation on random streams") {
     val rng = new Random(20260824L)
-    (1 to fuzzCases(10)).foreach { c =>
+    (1 to 10).foreach { c =>
       val nNodes = 5 + rng.nextInt(4)
       val p0 = (0 until nNodes).map(i => s"($i)").mkString(",")
       val flag0 = Seq.fill(1 + rng.nextInt(2))(rng.nextInt(nNodes)).distinct
@@ -257,7 +257,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("min-agg value-iteration continuation equals fresh recomputation on random graphs") {
     val rng = new Random(20260814L)
-    (1 to fuzzCases(8)).foreach { i =>
+    (1 to 8).foreach { i =>
       val nNodes = 4 + rng.nextInt(5)
       val edgeSet = Seq.fill(6 + rng.nextInt(8))(
         (rng.nextInt(nNodes), rng.nextInt(nNodes), 1 + rng.nextInt(9))).distinct
@@ -307,7 +307,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("sum/count decrement maintenance equals fresh recomputation on random mutation streams") {
     val rng = new Random(20260815L)
-    (1 to fuzzCases(8)).foreach { c =>
+    (1 to 8).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -356,7 +356,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("avg + f64-sum decrement equals fresh recomputation on random mutation streams") {
     val rng = new Random(20260821L)
-    (1 to fuzzCases(6)).foreach { c =>
+    (1 to 6).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -409,7 +409,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // so maintained avg/sum may differ from an IEEE rescan by ~5e-13 per
     // value — group membership and counts must still be EXACT
     val rng = new Random(20260823L)
-    (1 to fuzzCases(4)).foreach { c =>
+    (1 to 4).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -463,7 +463,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("min/max decrement equals fresh recomputation on random mutation streams") {
     val rng = new Random(20260822L)
-    (1 to fuzzCases(8)).foreach { c =>
+    (1 to 8).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -516,7 +516,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // domain forces shared extremum supports and runner-up promotions
     val rng = new Random(20260918L)
     val words = Seq("ant", "bee", "cow", "doe", "elk", "fox")
-    (1 to fuzzCases(5)).foreach { c =>
+    (1 to 5).foreach { c =>
       val groups = Seq("a", "b")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -573,9 +573,9 @@ class MaintenanceFuzzSpec extends SparkSpec {
   }
 
   private def topkFuzz(forcePartial: Boolean): Unit = {
-    val limits = if (forcePartial) Engine.Limits(rankBufLocalCap = 0L) else Engine.Limits()
+    val limits = if (forcePartial) Engine.Limits(Engine.Tier.Carrier) else Engine.Limits()
     val rng = new Random(20260830L)
-    (1 to fuzzCases(8)).foreach { c =>
+    (1 to 8).foreach { c =>
       val groups = Seq("a", "b")
       val names = Seq("p", "q", "r")
       // narrow value domain → shared head rows (multiplicities) and
@@ -653,7 +653,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // rem/ins bags (the r14 scale path for view-sized radius filters)
     // and must still equal fresh recomputation — including the
     // sequential bag semantics the ins-cancel preserves
-    radiusFuzz(Engine.Limits(radiusCarryMinRows = 0L))
+    radiusFuzz(Engine.Limits(Engine.Tier.Carrier))
   }
 
   test("within_radius carry folds mid-stream (fold cap pinned low)") {
@@ -663,14 +663,14 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // and retires the displaced dir, under the same differential
     // comparison (the radius filter passes ~1/3 of mutations, so a
     // small positive cap rarely fires on these fixtures)
-    radiusFuzz(Engine.Limits(radiusCarryMinRows = 0L, carrierFoldCap = 0L))
+    radiusFuzz(Engine.Limits(Engine.Tier.Carrier, carrierFoldCap = 0L))
   }
 
   private def radiusFuzz(limits: Engine.Limits): Unit = {
-    val forceCarry = limits.radiusCarryMinRows == 0L
+    val forceCarry = limits.tier == Engine.Tier.Carrier
     var totalFolds = 0L
     val rng = new Random(20260916L)
-    (1 to fuzzCases(6)).foreach { c =>
+    (1 to 6).foreach { c =>
       val groups = Seq("a", "b")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -727,7 +727,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("global aggregate decrement equals fresh recomputation on random streams") {
     val rng = new Random(20260902L)
-    (1 to fuzzCases(8)).foreach { c =>
+    (1 to 8).foreach { c =>
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
       def mkTuple(): String = {
@@ -773,7 +773,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("stacked views equal fresh recomputation on random mutation streams") {
     val rng = new Random(20260901L)
-    (1 to fuzzCases(8)).foreach { c =>
+    (1 to 8).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -833,7 +833,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // directions at once — the composition the per-class fuzz samples
     // thinly.
     val rng = new Random(20260913L)
-    (1 to fuzzCases(9)).foreach { c =>
+    (1 to 9).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -895,7 +895,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // sign (maintenance must recompute); this pins that the exclusion
     // actually routes to a correct answer rather than a stale ride
     val rng = new Random(20260914L)
-    (1 to fuzzCases(6)).foreach { c =>
+    (1 to 6).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -945,7 +945,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("agg/rank views with negated deps equal fresh recomputation on random streams") {
     val rng = new Random(20260831L)
-    (1 to fuzzCases(8)).foreach { c =>
+    (1 to 8).foreach { c =>
       val groups = Seq("a", "b", "c", "d")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1002,7 +1002,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("count_distinct decrement equals fresh recomputation on random mutation streams") {
     val rng = new Random(20260818L)
-    (1 to fuzzCases(6)).foreach { c =>
+    (1 to 6).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1043,7 +1043,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("count_distinct delta-merge equals fresh recomputation on random insert streams") {
     val rng = new Random(20260814L)
-    (1 to fuzzCases(8)).foreach { c =>
+    (1 to 8).foreach { c =>
       val groups = Seq("a", "b", "c", "d")
       var nextId = 0
       def batch(n: Int): String = (0 until n).map { _ =>
@@ -1079,7 +1079,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // engine, through both an aggregate view and a plain negated view,
     // over enough rounds that buffers carry forward and interleave
     val rng = new Random(20260915L)
-    (1 to fuzzCases(6)).foreach { c =>
+    (1 to 6).foreach { c =>
       var nextId = 0
       val live = scala.collection.mutable.LinkedHashMap.empty[Int, (Int, Int)]
       def insBatch(n: Int): String = (0 until n).map { _ =>
@@ -1144,7 +1144,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // group death, and the collected refill — against fresh recompute
     val rng = new Random(20260916L)
     var localRides = 0L
-    (1 to fuzzCases(6)).foreach { c =>
+    (1 to 6).foreach { c =>
       val groups = Seq(1L, 2L)
       val xDom = if (c % 2 == 0) 6 else 40
       var nextId = 0
@@ -1216,7 +1216,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     // differential comparison — each round's overlay commit, fold
     // write, and post-fold serve must all stay exact while dirs churn
     // through the retirement queue.
-    val limits = Engine.Limits(aggLocalSupportEnabled = false, carrierFoldCap = 8L)
+    val limits = Engine.Limits(Engine.Tier.Carrier, carrierFoldCap = 8L)
     val rng = new Random(20260816L)
     val e1 = new Engine(new Catalog(spark), limits)
     var nextId = 0
@@ -1255,10 +1255,10 @@ class MaintenanceFuzzSpec extends SparkSpec {
   }
 
   private def distributedAggFuzz(pinLegacyCommit: Boolean): Unit = {
-    val limits = Engine.Limits(aggLocalSupportEnabled = false,
-      rankLocalRideEnabled = false, supportParquetEnabled = !pinLegacyCommit)
+    val limits = Engine.Limits(
+      if (pinLegacyCommit) Engine.Tier.Distributed else Engine.Tier.Carrier)
     val rng = new Random(20260917L)
-    (1 to fuzzCases(4)).foreach { c =>
+    (1 to 4).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -76,7 +76,7 @@ class ReplSpec extends SparkSpec {
     // build carried state (scale path forced), save, "kill" (drop the
     // session), open fresh, mutate, and compare against an oracle
     // engine that never carried anything.
-    val limits = Engine.Limits(aggLocalSupportEnabled = false)
+    val limits = Engine.Limits(Engine.Tier.Carrier)
     val s = new Session(spark, limits = limits)
     val dir = Files.createTempDirectory("graft_kg").toString
     val tuples = (1 to 60).map(i => s"($i, ${i % 8}, ${i % 5})")

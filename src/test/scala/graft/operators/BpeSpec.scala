@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Trained BPE: the merge loop, the inference loop, and the count
   * operator, each pinned against an independent quadratic

@@ -115,7 +115,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("semdedup hot-cell guard: blocked join equals the plain path on a degenerate cell") {
-    import org.apache.spark.sql.functions._
     // every vector lands in ONE cell (single centroid) — the adversarial
     // shape: threshold 0 forces the whole cell through the blocked join
     val guarded = Dedup.semanticPairs(sfEmb, Array(Array.fill(64)(0.0)),

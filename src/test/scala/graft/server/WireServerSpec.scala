@@ -407,7 +407,8 @@ class WireServerSpec extends SparkSpec {
     // pin the distributed loop: THIS test proves the Spark job-group
     // kill; the driver-local evaluator (which would otherwise solve the
     // bounded program quickly) has its own cancellation test below
-    val server = new WireServer(spark, limits = graft.iql.Engine.Limits(localEval = false))
+    val server = new WireServer(spark,
+      limits = graft.iql.Engine.Limits(graft.iql.Engine.Tier.Distributed))
     try {
       val q = new LinkedBlockingQueue[String]()
       val ws = wsConnect(server, q)
@@ -449,7 +450,8 @@ class WireServerSpec extends SparkSpec {
   test("a slow query on one connection does not block another") {
     // distributed loop again: the slow side must still be mid-flight when
     // the fast query answers
-    val server = new WireServer(spark, limits = graft.iql.Engine.Limits(localEval = false))
+    val server = new WireServer(spark,
+      limits = graft.iql.Engine.Limits(graft.iql.Engine.Tier.Distributed))
     try {
       val (qSlow, qFast) = (new LinkedBlockingQueue[String](), new LinkedBlockingQueue[String]())
       val (wsSlow, wsFast) = (wsConnect(server, qSlow), wsConnect(server, qFast))
