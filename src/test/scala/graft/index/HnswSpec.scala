@@ -462,4 +462,58 @@ class HnswSpec extends SparkSpec {
       bruteFiltered(_ => true, 5))
   }
 
+
+  test("pinned results: search and searchFiltered ids and distance bits per metric") {
+    // A CRC32 over every (id, distance bits) pair that search (efSearch
+    // 16, 64 and 200) and searchFiltered return for 40 seeded queries,
+    // on a fresh 2,000-vector build and again after a seeded
+    // upsert/removeMatching/remove sequence. Every 25th vector repeats
+    // an earlier one, so exact distance ties (and the order they come
+    // back in) are part of what is pinned. The storage and inner loops
+    // may change; these values may not.
+    def crcOf(idx: Hnsw, qs: Seq[Array[Float]]): Long = {
+      val crc = new java.util.zip.CRC32
+      val buf = java.nio.ByteBuffer.allocate(16)
+      def add(r: Seq[(Long, Double)]): Unit = r.foreach { case (id, d) =>
+        buf.clear()
+        buf.putLong(id).putLong(java.lang.Double.doubleToLongBits(d))
+        crc.update(buf.array, 0, 16)
+      }
+      qs.foreach { q =>
+        Seq(16, 64, 200).foreach(ef => add(idx.search(q, 10, ef)))
+        add(idx.searchFiltered(q, 10, 64, _ % 3 == 0))
+      }
+      crc.getValue
+    }
+    def pinned(metric: String, seed: Int): (Long, Long) = {
+      val rnd = new scala.util.Random(seed)
+      val dim = 32
+      def vec() = Array.fill(dim)(rnd.nextGaussian().toFloat)
+      val vs = Array.tabulate(2000)(i => if (i % 25 == 24) null else vec())
+      (0 until 2000).foreach(i => if (vs(i) == null) vs(i) = vs(rnd.nextInt(i)))
+      val qs = Seq.fill(40)(vec())
+      val idx = new Hnsw(dim, metric)
+      vs.indices.foreach(i => idx.insert(i.toLong, vs(i)))
+      val fresh = crcOf(idx, qs)
+      (1 to 400).foreach { _ =>
+        val id = rnd.nextInt(2200).toLong
+        rnd.nextInt(5) match {
+          case 0 => idx.upsert(id, vec())
+          case 1 => if (id < 2000) idx.upsert(id, vs(id.toInt))
+          case 2 => if (id < 2000) idx.removeMatching(id, vs(id.toInt))
+          case 3 => idx.removeMatching(id, vec())
+          case _ => idx.remove(id)
+        }
+      }
+      (fresh, crcOf(idx, qs))
+    }
+    val got = Seq("cosine" -> 11, "euclidean" -> 12, "dot" -> 13)
+      .map { case (metric, seed) => metric -> pinned(metric, seed) }
+    val expect = Seq(
+      "cosine" -> (765663186L, 3112544909L),
+      "euclidean" -> (140449943L, 3048345509L),
+      "dot" -> (3075524048L, 3838965567L))
+    assert(got == expect)
+  }
+
 }
