@@ -9,12 +9,12 @@ import org.apache.spark.sql.SparkSession
   * cooperative AtomicBool cancel flag + timeout wrapper; thread-local
   * flag set before computation, `src/code_generator/mod.rs:44-75`).
   *
-  * Spark realization: queries run under a per-query JOB GROUP whose
-  * running jobs a timer cancels at the deadline
-  * (`SparkContext.cancelJobGroup`), and a thread-local cooperative flag
-  * stops driver-side fixpoint loops BETWEEN jobs — job-group
-  * cancellation alone can't, because each loop iteration submits a new
-  * job that wouldn't itself be cancelled.
+  * Spark realization: queries run under a per-query JOB GROUP that a
+  * timer cancels at the deadline, together with every job the group
+  * submits later (`SparkContext.cancelJobGroupAndFutureJobs`: a query
+  * past its deadline in driver-only work must not run its next job to
+  * the end), and a thread-local cooperative flag stops driver-side
+  * fixpoint loops between jobs without waiting for their next job.
   */
 object QueryGuard {
 
@@ -36,8 +36,9 @@ object QueryGuard {
   }
 
   /** Runs `body` with a timeout: Spark jobs submitted by this thread are
-    * tagged with a job group that a timer cancels at the deadline, and
-    * the cooperative flag stops driver-side loops between jobs.
+    * tagged with a job group that a timer cancels at the deadline, with
+    * the jobs it would start after that, and the cooperative flag stops
+    * driver-side loops between jobs.
     * `timeoutMs <= 0` = no timeout (reference config semantics). */
   def withTimeout[T](spark: SparkSession, timeoutMs: Long, desc: String = "query")(body: => T): T = {
     if (timeoutMs <= 0) return body
@@ -51,7 +52,7 @@ object QueryGuard {
     val task = timer.schedule(new Runnable {
       def run(): Unit = {
         f.set(true)
-        try sc.cancelJobGroup(group) catch { case _: Throwable => () }
+        try sc.cancelJobGroupAndFutureJobs(group) catch { case _: Throwable => () }
       }
     }, timeoutMs, TimeUnit.MILLISECONDS)
     try body

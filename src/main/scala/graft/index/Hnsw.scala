@@ -16,7 +16,15 @@ import scala.collection.mutable
   *
   * Determinism: level assignment hashes the insertion id (no RNG state),
   * so rebuilding from the same data yields the same graph everywhere.
+  *
+  * Storage is primitive arrays grown by doubling: no boxed adjacency,
+  * visited set or tuple heap on the insert and search paths. Each
+  * adjacency list keeps every neighbour's distance beside its node
+  * number, so trimming an overflowing list sorts stored values instead
+  * of recomputing them; the value is exact, because `dist(a, b)` and
+  * `dist(b, a)` multiply the same pairs in the same order.
   */
+@SerialVersionUID(1L)
 final class Hnsw(val dim: Int, val metric: String = "cosine",
                  val m: Int = 16, val efConstruction: Int = 200)
   extends Serializable {
@@ -27,20 +35,35 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
   private val mMax0 = 2 * m
   private val levelMult = 1.0 / math.log(m.toDouble)
 
-  // node storage: ids, vectors, per-level adjacency
-  private val ids = mutable.ArrayBuffer.empty[Long]
-  private val vecs = mutable.ArrayBuffer.empty[Array[Float]]
-  private val levels = mutable.ArrayBuffer.empty[Int]
-  /** neighbors(node)(level) = ArrayBuffer[nodeIdx] */
-  private val neighbors = mutable.ArrayBuffer.empty[Array[mutable.ArrayBuffer[Int]]]
+  // node storage, indexed by node number 0 until n
+  private var n = 0
+  private var ids = new Array[Long](16)
+  private var vecs = new Array[Array[Float]](16)
+  /** links(node)(level): neighbour node numbers, with room for one past
+    * the level's bound (an insert appends, then [[shrink]] trims);
+    * linkDist(node)(level) holds each neighbour's distance to the node
+    * and linkCount(node)(level) the fill. A node's level is
+    * `linkCount(node).length - 1`. */
+  private var links = new Array[Array[Array[Int]]](16)
+  private var linkDist = new Array[Array[Array[Double]]](16)
+  private var linkCount = new Array[Array[Int]](16)
   private var entryPoint: Int = -1
   private var maxLevel: Int = -1
-  private val deleted = mutable.HashSet.empty[Int]
+  private val deleted = new java.util.BitSet
+  private var nDeleted = 0
   /** id → node index (O(1) removal; re-inserted ids point at the newest
     * node, so removing after a re-insert tombstones the live one). */
   private val idToIdx = mutable.HashMap.empty[Long, Int]
 
-  def size: Int = synchronized { ids.length - deleted.size }
+  // Search scratch, used only under the instance lock and rebuilt after
+  // deserialization: `seen(node) == epoch` marks a node visited by the
+  // current layer search; `cand` and `res` are its two heaps.
+  @transient private var seen: Array[Int] = _
+  @transient private var epoch = 0
+  @transient private var cand: Hnsw.Heap = _
+  @transient private var res: Hnsw.Heap = _
+
+  def size: Int = synchronized { n - nDeleted }
 
   /** Distance (lower = closer) under the configured metric. */
   def distance(a: Array[Float], b: Array[Float]): Double = {
@@ -100,13 +123,24 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
     (-math.log(u) * levelMult).toInt
   }
 
+  private def bound(l: Int): Int = if (l == 0) mMax0 else m
+
   def insert(id: Long, v0: Array[Float]): Unit = synchronized {
     require(v0.length == dim, s"vector dim ${v0.length} != index dim $dim")
     val v = prep(v0)
-    val idx = ids.length
+    if (n == ids.length) {
+      val cap = 2 * n
+      ids = Array.copyOf(ids, cap); vecs = Array.copyOf(vecs, cap)
+      links = Array.copyOf(links, cap); linkDist = Array.copyOf(linkDist, cap)
+      linkCount = Array.copyOf(linkCount, cap)
+    }
+    val idx = n
     val lvl = levelFor(id)
-    ids += id; vecs += v; levels += lvl; idToIdx(id) = idx
-    neighbors += Array.fill(lvl + 1)(mutable.ArrayBuffer.empty[Int])
+    ids(idx) = id; vecs(idx) = v; idToIdx(id) = idx
+    links(idx) = Array.tabulate(lvl + 1)(l => new Array[Int](bound(l) + 1))
+    linkDist(idx) = Array.tabulate(lvl + 1)(l => new Array[Double](bound(l) + 1))
+    linkCount(idx) = new Array[Int](lvl + 1)
+    n += 1
     if (entryPoint < 0) { entryPoint = idx; maxLevel = lvl; return }
 
     var ep = entryPoint
@@ -116,27 +150,33 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
     // insert at each level from min(lvl, maxLevel) down to 0
     l = math.min(lvl, maxLevel)
     while (l >= 0) {
-      val cands = searchLayer(v, ep, efConstruction, l)
-      val mAtL = if (l == 0) mMax0 else m
-      val selected = cands.take(mAtL)
-      selected.foreach { case (_, c) =>
-        neighbors(idx)(l) += c
-        neighbors(c)(l) += idx
-        if (neighbors(c)(l).length > mAtL) shrink(c, l, mAtL)
+      val found = searchLayer(v, ep, efConstruction, l, null)
+      val mAtL = bound(l)
+      var i = 1
+      while (i <= math.min(found, mAtL)) {
+        val c = res.nodes(i); val d = res.keys(i)
+        addLink(idx, l, c, d)
+        addLink(c, l, idx, d)
+        if (linkCount(c)(l) > mAtL) shrink(c, l, mAtL)
+        i += 1
       }
-      ep = cands.head._2
+      ep = res.nodes(1)
       l -= 1
     }
     if (lvl > maxLevel) { maxLevel = lvl; entryPoint = idx }
   }
 
-  /** Keep the mBound closest neighbors of node at level l. */
+  private def addLink(node: Int, l: Int, to: Int, d: Double): Unit = {
+    val k = linkCount(node)(l)
+    links(node)(l)(k) = to; linkDist(node)(l)(k) = d
+    linkCount(node)(l) = k + 1
+  }
+
+  /** Keep the mBound closest neighbors of node at level l (a stable
+    * sort, so equal distances keep their list order). */
   private def shrink(node: Int, l: Int, mBound: Int): Unit = {
-    val v = vecs(node)
-    val kept = neighbors(node)(l).distinct
-      .sortBy(n => dist(v, n)).take(mBound)
-    neighbors(node)(l).clear()
-    neighbors(node)(l) ++= kept
+    Hnsw.stableSort(linkDist(node)(l), links(node)(l), 0, linkCount(node)(l))
+    linkCount(node)(l) = mBound
   }
 
   private def greedyClosest(q: Array[Float], start: Int, l: Int): Int = {
@@ -145,64 +185,93 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
     var improved = true
     while (improved) {
       improved = false
-      neighbors(cur)(l).foreach { n =>
-        val d = dist(q, n)
-        if (d < curDist) { cur = n; curDist = d; improved = true }
+      val nbrs = links(cur)(l); val cnt = linkCount(cur)(l)
+      var i = 0
+      while (i < cnt) {
+        val d = dist(q, nbrs(i))
+        if (d < curDist) { cur = nbrs(i); curDist = d; improved = true }
+        i += 1
       }
     }
     cur
   }
 
-  /** Beam search over one layer; returns (dist, node) ascending.
-    * `admit` gates RESULT membership only
-    * — the frontier always explores through non-admissible nodes, which
-    * is what lets [[searchFiltered]] survive selective predicates; the
-    * default admits everything, reproducing the classic loop exactly
-    * (with admit-all, `res` is seeded and never empty, so every guard
-    * degenerates to the textbook condition). */
+  /** Beam search over one layer into `res`, left sorted ascending by
+    * distance at `res.keys/nodes(1 to count)`; returns the count.
+    * `pred`, when given, gates RESULT membership to live nodes whose id
+    * passes it — the frontier always explores through non-admissible
+    * nodes, which is what lets [[searchFiltered]] survive selective
+    * predicates; `null` admits everything, the classic loop (then `res`
+    * is seeded and never empty, so every guard degenerates to the
+    * textbook condition). */
   private def searchLayer(q: Array[Float], ep: Int, ef: Int, l: Int,
-                          admit: Int => Boolean = _ => true): Seq[(Double, Int)] = {
-    val visited = mutable.HashSet(ep)
+                          pred: Long => Boolean): Int = {
+    if (seen == null || seen.length < n) {
+      seen = new Array[Int](ids.length); epoch = 0
+      cand = new Hnsw.Heap; res = new Hnsw.Heap
+    }
+    if (epoch == Int.MaxValue) { java.util.Arrays.fill(seen, 0); epoch = 0 }
+    epoch += 1
+    seen(ep) = epoch
     val epDist = dist(q, ep)
-    // candidates: min-heap by dist; results: max-heap (worst first out)
-    val cand = mutable.PriorityQueue((-epDist, ep))(Ordering.by(_._1))
-    val res = mutable.PriorityQueue.empty[(Double, Int)](Ordering.by(_._1))
-    if (admit(ep)) res.enqueue((epDist, ep))
-    while (cand.nonEmpty) {
-      val (negD, c) = cand.dequeue()
-      if (res.size >= ef && -negD > res.head._1) cand.clear()
-      else neighbors(c)(l).foreach { n =>
-        if (visited.add(n)) {
-          val d = dist(q, n)
-          if (res.size < ef || d < res.head._1) {
-            cand.enqueue((-d, n))
-            if (admit(n)) {
-              res.enqueue((d, n))
-              if (res.size > ef) res.dequeue()
+    // candidates: nearest first out (keyed by -dist); results: worst first out
+    cand.clear(); res.clear()
+    cand.push(-epDist, ep)
+    if (pred == null || !deleted.get(ep) && pred(ids(ep))) res.push(epDist, ep)
+    while (cand.size > 0) {
+      val negD = cand.keys(1)
+      val c = cand.pop()
+      if (res.size >= ef && -negD > res.topKey) cand.clear()
+      else {
+        val nbrs = links(c)(l); val cnt = linkCount(c)(l)
+        var i = 0
+        while (i < cnt) {
+          val nb = nbrs(i)
+          if (seen(nb) != epoch) {
+            seen(nb) = epoch
+            val d = dist(q, nb)
+            if (res.size < ef || d < res.topKey) {
+              cand.push(-d, nb)
+              if (pred == null || !deleted.get(nb) && pred(ids(nb))) {
+                res.push(d, nb)
+                if (res.size > ef) res.pop()
+              }
             }
           }
+          i += 1
         }
       }
     }
-    res.toSeq.sortBy(_._1)
+    Hnsw.stableSort(res.keys, res.nodes, 1, res.size + 1)
+    res.size
+  }
+
+  private def descend(q: Array[Float]): Int = {
+    var ep = entryPoint
+    var l = maxLevel
+    while (l > 0) { ep = greedyClosest(q, ep, l); l -= 1 }
+    ep
   }
 
   /** k nearest (id, distance) pairs; efSearch ≥ k controls recall.
     * Synchronized with the mutation path: catalog maintenance now
     * inserts/tombstones concurrently with wire-server probes, and an
-    * unlocked read of the adjacency buffers during an insert could see
-    * torn state. Probes are sub-ms and driver-local, so one lock
-    * suffices; a read-write lock is the upgrade path if parallel probe
-    * throughput ever matters. */
+    * unlocked read of the adjacency arrays during an insert could see
+    * torn state (the search scratch is per instance too). Probes are
+    * sub-ms and driver-local, so one lock suffices; a read-write lock is
+    * the upgrade path if parallel probe throughput ever matters. */
   def search(q0: Array[Float], k: Int, efSearch: Int = 64): Seq[(Long, Double)] = synchronized {
     if (entryPoint < 0) return Seq.empty
     val q = prep(q0)
-    var ep = entryPoint
-    var l = maxLevel
-    while (l > 0) { ep = greedyClosest(q, ep, l); l -= 1 }
-    searchLayer(q, ep, math.max(efSearch, k), 0)
-      .filterNot { case (_, n) => deleted(n) }
-      .take(k).map { case (d, n) => (ids(n), d) }
+    val found = searchLayer(q, descend(q), math.max(efSearch, k), 0, null)
+    val out = List.newBuilder[(Long, Double)]
+    var taken = 0; var i = 1
+    while (i <= found && taken < k) {
+      val nd = res.nodes(i)
+      if (!deleted.get(nd)) { out += ((ids(nd), res.keys(i))); taken += 1 }
+      i += 1
+    }
+    out.result()
   }
 
   /** FILTERED k-NN: top-k among vectors whose id passes `pred` — the
@@ -220,22 +289,27 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
                      pred: Long => Boolean): Seq[(Long, Double)] = synchronized {
     if (entryPoint < 0) return Seq.empty
     val q = prep(q0)
-    var ep = entryPoint
-    var l = maxLevel
-    while (l > 0) { ep = greedyClosest(q, ep, l); l -= 1 }
-    searchLayer(q, ep, math.max(efSearch, k), 0,
-      n => !deleted(n) && pred(ids(n)))
+    val found = searchLayer(q, descend(q), math.max(efSearch, k), 0, pred)
+    List.tabulate(found)(i => (res.keys(i + 1), res.nodes(i + 1)))
       .sortBy { case (d, n) => (d, ids(n)) }
       .take(k).map { case (d, n) => (ids(n), d) }
+  }
+
+  /** Tombstones a live node; false when it already was one. */
+  private def tombstone(idx: Int): Boolean =
+    !deleted.get(idx) && { deleted.set(idx); nDeleted += 1; true }
+
+  /** The live node holding `id`, or -1. */
+  private def liveNode(id: Long): Int = {
+    val idx = idToIdx.getOrElse(id, -1)
+    if (idx >= 0 && !deleted.get(idx)) idx else -1
   }
 
   /** Tombstone delete (reference `hnsw_index.rs:33-36`); graph edges stay
     * as navigation waypoints until a rebuild. */
   def remove(id: Long): Boolean = synchronized {
-    idToIdx.get(id) match {
-      case Some(idx) => deleted.add(idx)
-      case None => false
-    }
+    val idx = idToIdx.getOrElse(id, -1)
+    idx >= 0 && tombstone(idx)
   }
 
   /** Insert-or-update for catalog-driven maintenance (reference
@@ -245,12 +319,10 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
     * node); same id + different vector → tombstone the old node, insert
     * the new one. */
   def upsert(id: Long, v0: Array[Float]): Unit = synchronized {
-    val v = prep(v0)
-    idToIdx.get(id).filterNot(deleted) match {
-      case Some(old) if java.util.Arrays.equals(vecs(old), v) => ()
-      case other =>
-        other.foreach(deleted.add)
-        insert(id, v0)
+    val old = liveNode(id)
+    if (old < 0 || !java.util.Arrays.equals(vecs(old), prep(v0))) {
+      if (old >= 0) tombstone(old)
+      insert(id, v0)
     }
   }
 
@@ -258,24 +330,20 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
     * exact-tuple delete whose id matches but whose vector does not must
     * leave the index untouched (the relation kept its tuple). */
   def removeMatching(id: Long, v0: Array[Float]): Boolean = synchronized {
-    val v = prep(v0)
-    idToIdx.get(id).filterNot(deleted) match {
-      case Some(idx) if java.util.Arrays.equals(vecs(idx), v) =>
-        deleted.add(idx); true
-      case _ => false
-    }
+    val idx = liveNode(id)
+    idx >= 0 && java.util.Arrays.equals(vecs(idx), prep(v0)) && tombstone(idx)
   }
 
   /** Fraction of nodes tombstoned — past a threshold the catalog
     * auto-rebuilds (tombstones degrade recall: search draws efSearch
     * candidates BEFORE filtering them). */
   def tombstoneRatio: Double = synchronized {
-    if (ids.isEmpty) 0.0 else deleted.size.toDouble / ids.length
+    if (n == 0) 0.0 else nDeleted.toDouble / n
   }
 
   def stats: Map[String, Any] = synchronized { Map(
     "size" -> size, "dim" -> dim, "metric" -> metric, "m" -> m,
-    "maxLevel" -> maxLevel, "tombstones" -> deleted.size,
+    "maxLevel" -> maxLevel, "tombstones" -> nDeleted,
     "tombstoneRatio" -> tombstoneRatio) }
 
   def save(path: String): Unit = synchronized {
@@ -286,10 +354,83 @@ final class Hnsw(val dim: Int, val metric: String = "cosine",
 }
 
 object Hnsw {
+  /** Binary max-heap of (key, node) pairs on primitive arrays, 1-based.
+    * It sifts exactly as `scala.collection.mutable.PriorityQueue` does
+    * under `Ordering.by(_._1)` (`java.lang.Double.compare` order), so
+    * equal keys leave it in the same order as from that queue. */
+  private final class Heap {
+    var keys = new Array[Double](64)
+    var nodes = new Array[Int](64)
+    var size = 0
+
+    def clear(): Unit = size = 0
+
+    def topKey: Double =
+      if (size > 0) keys(1) else throw new NoSuchElementException("queue is empty")
+
+    private def lt(a: Int, b: Int): Boolean =
+      java.lang.Double.compare(keys(a), keys(b)) < 0
+
+    private def swap(a: Int, b: Int): Unit = {
+      val k = keys(a); keys(a) = keys(b); keys(b) = k
+      val v = nodes(a); nodes(a) = nodes(b); nodes(b) = v
+    }
+
+    def push(key: Double, node: Int): Unit = {
+      size += 1
+      if (size == keys.length) {
+        keys = java.util.Arrays.copyOf(keys, 2 * size)
+        nodes = java.util.Arrays.copyOf(nodes, 2 * size)
+      }
+      keys(size) = key; nodes(size) = node
+      var k = size
+      while (k > 1 && lt(k / 2, k)) { swap(k, k / 2); k /= 2 }
+    }
+
+    /** Removes the top pair and returns its node. */
+    def pop(): Int = {
+      val top = nodes(1)
+      keys(1) = keys(size); nodes(1) = nodes(size)
+      size -= 1
+      var k = 1; var done = false
+      while (!done && size >= 2 * k) {
+        var j = 2 * k
+        if (j < size && lt(j, j + 1)) j += 1
+        if (lt(k, j)) { swap(k, j); k = j } else done = true
+      }
+      top
+    }
+  }
+
+  /** Stable sort of `keys(from until until)` ascending in
+    * `java.lang.Double.compare` order, moving `nodes` alongside. */
+  private def stableSort(keys: Array[Double], nodes: Array[Int], from: Int, until: Int): Unit = {
+    var i = from + 1
+    while (i < until) {
+      val key = keys(i)
+      // first position whose key is greater: equal keys stay in front
+      var lo = from; var hi = i
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (java.lang.Double.compare(keys(mid), key) > 0) hi = mid else lo = mid + 1
+      }
+      if (lo < i) {
+        val node = nodes(i)
+        System.arraycopy(keys, lo, keys, lo + 1, i - lo)
+        System.arraycopy(nodes, lo, nodes, lo + 1, i - lo)
+        keys(lo) = key; nodes(lo) = node
+      }
+      i += 1
+    }
+  }
+
+  /** Reads a graph [[Hnsw.save]] wrote. A file this build cannot read
+    * (another serialized layout, or not a graph) throws a
+    * `java.io.ObjectStreamException`. */
   def load(path: String): Hnsw = {
-    val ois = new java.io.ObjectInputStream(
-      new java.io.BufferedInputStream(new java.io.FileInputStream(path)))
-    try ois.readObject().asInstanceOf[Hnsw] finally ois.close()
+    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(path))
+    try new java.io.ObjectInputStream(in).readObject().asInstanceOf[Hnsw]
+    finally in.close()
   }
 
   /** The documented capacity of the driver-held graph (scaladoc above:

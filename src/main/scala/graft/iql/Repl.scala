@@ -393,7 +393,7 @@ object Storage {
     val idxLines = catalog.indexMeta.toSeq.flatMap { case (name, (rel, idCol, vecCol)) =>
       catalog.indexes.get((rel, vecCol)).map { idx =>
         idx.save(s"$dir/$name.hnsw")
-        s"$name\t$rel\t$idCol\t$vecCol"
+        s"$name\t$rel\t$idCol\t$vecCol\t${idx.metric}\t${idx.m}\t${idx.efConstruction}"
       }
     }
     java.nio.file.Files.write(d.resolve("indexes.txt"),
@@ -419,9 +419,21 @@ object Storage {
     if (java.nio.file.Files.exists(idxFile)) {
       new String(java.nio.file.Files.readAllBytes(idxFile)).split("\n")
         .filter(_.nonEmpty).foreach { line =>
-          val Array(name, rel, idCol, vecCol) = line.split("\t")
-          c.indexes((rel, vecCol)) = graft.index.Hnsw.load(s"$dir/$name.hnsw")
-          c.indexMeta(name) = (rel, idCol, vecCol)
+          // name, relation, id and vector columns, then metric, m and
+          // efConstruction (manifests from older builds stop at four)
+          val f = line.split("\t")
+          val Array(name, rel, idCol, vecCol) = f.take(4)
+          try {
+            c.indexes((rel, vecCol)) = graft.index.Hnsw.load(s"$dir/$name.hnsw")
+            c.indexMeta(name) = (rel, idCol, vecCol)
+          } catch {
+            // a graph this build cannot read (saved in an older layout,
+            // or damaged): rebuild it from the relation loaded above
+            case _: java.io.ObjectStreamException =>
+              if (f.length >= 7)
+                c.createIndex(rel, idCol, vecCol, f(4), f(5).toInt, f(6).toInt, name)
+              else c.createIndex(rel, idCol, vecCol, name = name)
+          }
         }
     }
     c

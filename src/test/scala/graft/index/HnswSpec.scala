@@ -94,6 +94,36 @@ class HnswSpec extends SparkSpec {
     assert(rows(r).map(_.head).contains(0L))
   }
 
+  test(".open rebuilds an index whose saved graph it cannot read") {
+    import spark.implicits._
+    val s = new graft.iql.Session(spark)
+    val vs = mkVecs(40, 4).map { case (id, v) => (id, v.toSeq) }
+    s.catalog.register("emb", vs.toDF("vec_id", "embedding"))
+    s.catalog.createIndex("emb", "vec_id", "embedding", "euclidean", 8, 50, "idx")
+    val want = s.catalog.indexByName("idx").get._1.search(vs(5)._2.toArray, 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft_kg_junk").toString
+    s.execute(s".save $dir")
+    // an older build's layout fails the same way: java.io.ObjectStreamException
+    val graph = java.nio.file.Paths.get(dir, "idx.hnsw")
+    java.nio.file.Files.write(graph, "not a graph".getBytes("UTF-8"))
+    val s2 = new graft.iql.Session(spark)
+    s2.execute(s".open $dir")
+    val rebuilt = s2.catalog.indexByName("idx").get._1
+    assert((rebuilt.metric, rebuilt.m, rebuilt.efConstruction) == ("euclidean", 8, 50))
+    assert(rebuilt.search(vs(5)._2.toArray, 3) == want)
+    val q0 = vs.head._2.mkString("[", ", ", "]")
+    val r = s2.execute(s"""?hnsw_nearest("idx", $q0, 3, Id, D)""")
+      .head.asInstanceOf[graft.iql.Repl.Table].df
+    assert(rows(r).map(_.head).contains(0L))
+    // a manifest without the graph's parameters rebuilds with the defaults
+    val manifest = java.nio.file.Paths.get(dir, "indexes.txt")
+    java.nio.file.Files.write(manifest, "idx\temb\tvec_id\tembedding".getBytes("UTF-8"))
+    java.nio.file.Files.write(graph, "not a graph".getBytes("UTF-8"))
+    val s3 = new graft.iql.Session(spark)
+    s3.execute(s".open $dir")
+    assert(s3.catalog.indexByName("idx").get._1.metric == "cosine")
+  }
+
   test("hnsw_nearest body predicate with literal and variable queries") {
     import spark.implicits._
     val s = new graft.iql.Session(spark)
