@@ -3,7 +3,12 @@ package graft.tools
 /** Microbench for driver-held HNSW insert/search throughput — the
   * reference's BENCHMARKS.md:161-162 rows (17,800 vec/s insert at 1k
   * vectors, 1.05 ms search; 7.36 ms at 10k) measured on the same shape:
-  * 128-dim cosine, incremental single-vector inserts. */
+  * 128-dim cosine, incremental single-vector inserts, uniform random
+  * vectors. On a 4-core VM it printed insert_1k 7,444 vec/s,
+  * insert_10k 2,146 vec/s, sharded_insert_10k_16shards 29,083 vec/s,
+  * search_1k 0.160 ms and search_10k 0.271 ms.
+  *
+  * Run: `sbt "runMain graft.tools.HnswThroughput"`. */
 object HnswThroughput {
   def main(a: Array[String]): Unit = {
     def insertRate(n: Int): Double = {
@@ -27,9 +32,10 @@ object HnswThroughput {
     }
     // the reference's 17,800 vec/s is a bulk rate on a 16-core box —
     // its own search takes 1.05 ms, so serial ef=200 inserts cannot run
-    // at 56 µs each; per core that rate is ~1.1k vec/s. The honest twin
-    // on our side is the SHARDED build (the q79/q92 production path:
-    // one sub-index per shard, built concurrently, probes fan out and
+    // at 56 µs each; per core that rate is ~1.1k vec/s, below one
+    // thread's serial rate here. The like-for-like bulk build on our
+    // side is the SHARDED one (the q79/q92 production path: one
+    // sub-index per shard, built concurrently, probes fan out and
     // merge) — measured here with one thread per shard.
     def shardedRate(n: Int, shards: Int): Double = {
       import scala.concurrent._
