@@ -2325,19 +2325,21 @@ class EngineSpec extends SparkSpec {
         |+dsum(D, sum<S>, count<S>) <- emp(I, D, S)
         |+dtop(D, top_k<2, I, S:desc>) <- emp(I, D, S)
         |+gtop(top_k<3, I, S:desc>) <- emp(I, D, S)
+        |+dcd(D, count_distinct<S>, min<S>, max<S>) <- emp(I, D, S)
         |+reach(X, Y) <- ed(X, Y)
         |+reach(X, Z) <- reach(X, Y), ed(Y, Z)
         |""".stripMargin
-    val queries = Seq("?dsum(D, S, C)", "?dtop(D, I, S)", "?gtop(I, S)", "?reach(X, Y)")
+    val queries = Seq("?dsum(D, S, C)", "?dtop(D, I, S)", "?gtop(I, S)",
+      "?dcd(D, N, L, H)", "?reach(X, Y)")
     def views(e: Engine): Seq[Set[Seq[Any]]] = queries.map(q => rows(e.run(q).last))
     def counters(e: Engine): Map[String, Long] = Map("maintainedCount" -> e.maintainedCount,
       "aggLocalRounds" -> e.aggLocalRounds, "rankLocalRides" -> e.rankLocalRides,
       "rankParquetRides" -> e.rankParquetRides,
       "supportParquetRounds" -> e.supportParquetRounds, "tcLocalRounds" -> e.tcLocalRounds)
-    // the first delete seeds the carried state (support table, prefix
-    // buffers); the compared round then deletes from each base relation
-    // on its own, since the agg and TC paths maintain one changed
-    // relation at a time
+    // the first delete seeds the carried state (support and pairs
+    // tables, prefix buffers); the compared round then deletes from each
+    // base relation on its own, since the agg and TC paths maintain one
+    // changed relation at a time
     val seedRound = Seq("-emp[(1, \"a\", 10)]")
     val round = Seq("-emp[(4, \"b\", 30)]", "-ed[(2, 3)]")
     val tiers = Seq(Engine.Tier.Auto, Engine.Tier.Carrier, Engine.Tier.Distributed)
@@ -2354,8 +2356,8 @@ class EngineSpec extends SparkSpec {
     (prog +: (seedRound ++ round)).foreach(fresh.run)
     val expected = views(fresh)
     tiers.foreach(t => assert(moved(t)._1 == expected, s"$t rows differ from a fresh engine"))
-    // every tier maintains all four views in both rounds, none recomputes...
-    assert(tiers.map(moved(_)._2("maintainedCount")).distinct == Seq(8L))
+    // every tier maintains all five views in both rounds, none recomputes...
+    assert(tiers.map(moved(_)._2("maintainedCount")).distinct == Seq(10L))
     // ...each through its own paths
     def ran(t: Engine.Tier): Set[String] =
       (moved(t)._2 - "maintainedCount").collect { case (k, n) if n > 0 => k }.toSet
