@@ -529,10 +529,11 @@ final class Engine(val catalog: Catalog,
     * support table, the cd pairs tables, the rank prefix buffer and a
     * big within_radius view. KEYED carriers hold a driver overlay of
     * per-key replacement row-sets (empty set = tombstone) over the
-    * immutable base — [[carrierOpen]]/[[carrierDirty]]/[[carrierCommit]]
-    * are the shared lifecycle; the RADIUS carrier is a bag filter
-    * (base ∖ rem ⊎ ins), so it keeps its two bags and shares only the
-    * base/fold/retire plumbing ([[radiusCarryRound]]). */
+    * immutable base; they are one of the three homes [[homeOf]] picks,
+    * read by [[homeDirty]] and written by [[homeCommit]]. The RADIUS
+    * carrier is a bag filter (base ∖ rem ⊎ ins): [[radiusCarryRound]]
+    * keeps its two bags and shares [[carrierOpen]] and [[carrierFold]]
+    * with the keyed carriers. */
   private final class Carrier(
       val tag: String, val colNames: Seq[String], val keyNames: Seq[String],
       var dir: String, var base: DataFrame,
@@ -548,6 +549,18 @@ final class Engine(val catalog: Catalog,
     val insBag = mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     def dirs: Seq[String] = dir +: prevDir.toSeq
   }
+
+  /** Fold `frame` into a fresh base write for `st` ([[writeBase]]); the
+    * displaced dir ages through the grace queue, so frames handed out
+    * earlier keep reading. The caller clears its overlay or bags. */
+  private def carrierFold(st: Carrier, frame: DataFrame): Unit = {
+    val (dir2, base2) = writeBase(st.tag, frame, st.colNames, st.keyNames)
+    st.prevDir.foreach(Engine.retireDir)
+    st.prevDir = Some(st.dir)
+    st.dir = dir2
+    st.base = base2
+    carrierFolds += 1
+  }
   /** Observability: over-cap rounds committed via the overlay. */
   private[graft] var supportParquetRounds: Long = 0L
   /** Observability: over-cap rank rounds committed via the overlay. */
@@ -558,32 +571,37 @@ final class Engine(val catalog: Catalog,
     * fuzz pins the cap low and asserts several fire mid-stream. */
   private[graft] var carrierFolds: Long = 0L
 
-  /** Transition `frame` into `view`'s `part` carrier: ONE
+  /** Write `frame` as a carrier base in a fresh scratch dir: ONE
     * range-partitioned key-SORTED parquet write (min/max row-group and
     * page stats make key-point scans pruned; an unkeyed radius base
-    * writes as-is), read back as the immutable `base`. `servedMarker`
-    * overrides the served identity when the caller serves a different
-    * frame object (cd pairs, radius). Replacing an existing carrier
-    * retires its dirs through the grace queue; a failed write lands the
-    * part in the view's [[ViewState.carrierNo]]. */
+    * writes as-is), read back as the immutable base. */
+  private def writeBase(tag: String, frame: DataFrame, colNames: Seq[String],
+      keyNames: Seq[String]): (String, DataFrame) = {
+    val dir = Engine.supportDir(tag)
+    val keyCols = keyNames.map(col)
+    val laidOut =
+      if (keyNames.isEmpty) frame
+      else frame.repartitionByRange(32, keyCols: _*)
+        .sortWithinPartitions(keyCols: _*)
+    laidOut.write.mode("overwrite").parquet(dir)
+    (dir, catalog.spark.read.parquet(dir).select(colNames.map(col): _*))
+  }
+
+  /** Transition `frame` into `view`'s `part` carrier ([[writeBase]]).
+    * `servedMarker` is the served identity when the caller serves a
+    * different frame object (cd pairs, radius). Replacing an existing
+    * carrier retires its dirs through the grace queue; a failed write
+    * lands the part in the view's [[ViewState.carrierNo]]. */
   private def carrierOpen(view: String, part: Part, frame: DataFrame,
-      keyNames: Seq[String], servedMarker: DataFrame = null): Option[Carrier] = {
+      keyNames: Seq[String], servedMarker: DataFrame): Option[Carrier] = {
     val vs = state(view)
-    if (limits.tier == Tier.Distributed || vs.carrierNo(part)) return None
+    if (vs.carrierNo(part)) return None
     try {
       val tag = s"$view-$part"
-      val dir = Engine.supportDir(tag)
-      val keyCols = keyNames.map(col)
-      val laidOut =
-        if (keyNames.isEmpty) frame
-        else frame.repartitionByRange(32, keyCols: _*)
-          .sortWithinPartitions(keyCols: _*)
-      laidOut.write.mode("overwrite").parquet(dir)
-      val base = catalog.spark.read.parquet(dir)
-        .select(frame.columns.map(col).toSeq: _*)
+      val (dir, base) = writeBase(tag, frame, frame.columns.toSeq, keyNames)
       vs.carriers.remove(part).foreach(_.dirs.foreach(Engine.retireDir))
       val st = new Carrier(tag, frame.columns.toSeq, keyNames, dir, base,
-        Option(servedMarker).getOrElse(frame), None)
+        servedMarker, None)
       st.litSchema = org.apache.spark.sql.types.StructType(
         frame.schema.fields.map(_.copy(nullable = true)))
       vs.carriers(part) = st
@@ -640,24 +658,120 @@ final class Engine(val catalog: Catalog,
     def ovAnti: DataFrame = sideOn(st.base,
       keyLit(st.overlay.keys, st.base, st.keyNames), st.keyNames, anti = true)
     if (math.max(st.overlay.size.toLong, st.overlayRows) > limits.carrierFoldCap) {
-      val dir2 = Engine.supportDir(st.tag)
-      val keyCols = st.keyNames.map(col)
-      ovAnti.union(ovLit).repartitionByRange(32, keyCols: _*)
-        .sortWithinPartitions(keyCols: _*)
-        .write.mode("overwrite").parquet(dir2)
-      st.prevDir.foreach(Engine.retireDir)
-      st.prevDir = Some(st.dir)
-      st.dir = dir2
-      st.base = spark.read.parquet(dir2)
-        .select(st.colNames.map(col): _*)
+      carrierFold(st, ovAnti.union(ovLit))
       st.overlay.clear(); st.overlayRows = 0L
-      carrierFolds += 1
     }
     val served =
       if (st.overlay.isEmpty) st.base.select(st.colNames.map(col): _*)
       else ovAnti.union(ovLit)
     st.served = served
     served
+  }
+
+  /** Where one keyed carried part of a view (agg support, cd pairs,
+    * rank buffer) lives this round: its driver-resident rows, its keyed
+    * [[Carrier]], or only its frame (the distributed commit). */
+  private sealed trait Home
+  private object Home {
+    case class Resident(rows: Array[org.apache.spark.sql.Row]) extends Home
+    case class Carried(st: Carrier) extends Home
+    case object FrameOnly extends Home
+  }
+
+  /** The one home decision for a keyed part. A resident copy or a
+    * carrier still serving `marker` (the frame object the view carries,
+    * `frame` itself unless the caller renamed it) keeps its home.
+    * Otherwise a part not yet marked [[ViewState.big]] collects up to
+    * `cap` rows and becomes resident; past the cap it is marked big and
+    * rides a new carrier. `Tier.Carrier` skips the resident probe for
+    * every part with a carrier form (a keyed one). `Tier.Distributed`, a
+    * denied carrier and an unkeyed part past the cap leave the frame
+    * only. */
+  private def homeOf(view: String, part: Part, frame: DataFrame,
+      keyNames: Seq[String], cap: Long, marker: DataFrame): Home = {
+    val vs = state(view)
+    val probeCap = limits.tier match {
+      case Tier.Distributed => return Home.FrameOnly
+      case Tier.Carrier if keyNames.nonEmpty => None
+      case _ => Some(cap)
+    }
+    vs.local.get(part).collect { case (f, rows) if f eq marker => Home.Resident(rows) }
+      .orElse(vs.carriers.get(part).filter(_.served eq marker).map(Home.Carried))
+      .getOrElse {
+        val fits = probeCap.filterNot(_ => vs.big(part)).flatMap { c =>
+          val got = Fixpoint.collectUpTo(frame, c)
+          if (got.isEmpty) vs.big += part
+          got
+        }
+        fits match {
+          case Some(rows) => vs.local(part) = (marker, rows); Home.Resident(rows)
+          case None if keyNames.isEmpty => Home.FrameOnly
+          case None => carrierOpen(view, part, frame, keyNames, marker)
+            .fold[Home](Home.FrameOnly)(Home.Carried)
+        }
+      }
+  }
+
+  /** A keyed row's normalized key: its `keyNames` columns by position in
+    * `frame`'s schema (carrier base and overlay rows share that order). */
+  private def rowKeyOf(frame: DataFrame,
+      keyNames: Seq[String]): org.apache.spark.sql.Row => Seq[Any] = {
+    val pos = keyNames.map(frame.schema.fieldIndex)
+    row => pos.map(p => SparkValues.key(row.get(p)))
+  }
+
+  /** The rows of `keys` in a keyed part's home: the resident rows
+    * filtered by key, the carrier's overlay plus one pruned base scan
+    * ([[carrierDirty]]), or a broadcast semi-join of the frame. None past
+    * `cap` rows or on a carrier IO failure; the caller then bails. */
+  private def homeDirty(home: Home, frame: DataFrame, keyNames: Seq[String],
+      keys: Iterable[Seq[Any]], cap: Int): Option[Array[org.apache.spark.sql.Row]] = {
+    val keyOf = rowKeyOf(frame, keyNames)
+    val got = home match {
+      case Home.Resident(rows) =>
+        val ks = keys.toSet
+        rows.filter(row => ks(keyOf(row)))
+      case Home.Carried(st) => return carrierDirty(st, keys.toSeq, cap, keyOf)
+      case Home.FrameOnly =>
+        sideOn(frame, keyLit(keys, frame, keyNames), keyNames, anti = false)
+          .limit(cap + 2).collect()
+    }
+    if (got.length > cap) None else Some(got)
+  }
+
+  /** Commit a keyed part's round: the rows of every key in `keys` are
+    * replaced by its rows in `fresh` (none: the key is gone). Resident:
+    * one literal frame of the untouched and fresh rows, which becomes the
+    * resident copy. Carrier: [[carrierCommit]]. Frame only: the untouched
+    * rows behind a broadcast anti-join, unioned with the fresh rows and
+    * materialized. Returns the part's new frame. */
+  private def homeCommit(view: String, part: Part, home: Home,
+      frame: DataFrame, keyNames: Seq[String], keys: Iterable[Seq[Any]],
+      fresh: Seq[org.apache.spark.sql.Row]): DataFrame = {
+    val vs = state(view)
+    val spark = catalog.spark
+    val keyOf = rowKeyOf(frame, keyNames)
+    val schema = org.apache.spark.sql.types.StructType(
+      frame.schema.fields.map(_.copy(nullable = true)))
+    vs.local.remove(part)
+    home match {
+      case Home.Resident(rows) =>
+        val ks = keys.toSet
+        val full = rows.filterNot(row => ks(keyOf(row))) ++ fresh
+        val out = spark.createDataFrame(java.util.Arrays.asList(full.toSeq: _*), schema)
+        vs.local(part) = (out, full)
+        out
+      case Home.Carried(st) =>
+        val byKey = fresh.groupBy(keyOf)
+        carrierCommit(st, keys.iterator.map(k => k -> byKey.getOrElse(k, Seq.empty)))
+      case Home.FrameOnly =>
+        val literal = spark.createDataFrame(
+          spark.sparkContext.parallelize(fresh,
+            Fixpoint.parallelizeParts(fresh.size.toLong)), schema)
+        Fixpoint.materialize(
+          sideOn(frame, keyLit(keys, frame, keyNames), keyNames, anti = true)
+            .union(literal)).df
+    }
   }
 
   /** One within_radius riding round over the carry (bag form of the
@@ -677,14 +791,17 @@ final class Engine(val catalog: Catalog,
       cols: Seq[String], remRanked: DataFrame,
       insRanked: DataFrame): Option[DataFrame] = {
     val vs = state(name)
-    if (limits.tier == Tier.Distributed || vs.carrierNo(Part.Radius)) return None
+    val smallCap = limits.tier match {
+      case Tier.Distributed => return None
+      case Tier.Carrier => 0L
+      case Tier.Auto => Engine.RadiusCarryMinRows
+    }
+    if (vs.carrierNo(Part.Radius)) return None
     val spark = catalog.spark
     def drop(): Unit =
       vs.carriers.remove(Part.Radius).foreach(_.dirs.foreach(Engine.retireDir))
     val carried = vs.carriers.get(Part.Radius).filter(_.served eq cached)
-    if (carried.isEmpty &&
-        collectMemoized(cached,
-          if (limits.tier == Tier.Carrier) 0L else Engine.RadiusCarryMinRows).isDefined)
+    if (carried.isEmpty && collectMemoized(cached, smallCap).isDefined)
       return None // small view: the corpus-pinned literal round serves
     val remRows = Fixpoint.collectUpTo(remRanked, 8192L).getOrElse {
       drop(); return None // over-cap delta: fall back
@@ -741,17 +858,10 @@ final class Engine(val catalog: Catalog,
         if (st.insBag.isEmpty) out else out.union(bagLit(st.insBag.toSeq))
       }
     if (st.remBag.size + st.insBag.size > limits.carrierFoldCap) {
-      // fold the bags into a fresh base write (amortized); the
-      // displaced dir ages through the grace queue
+      // fold the bags into a fresh base write (amortized)
       try {
-        val dir2 = Engine.supportDir(st.tag)
-        serveFrame().write.mode("overwrite").parquet(dir2)
-        st.prevDir.foreach(Engine.retireDir)
-        st.prevDir = Some(st.dir)
-        st.dir = dir2
-        st.base = spark.read.parquet(dir2).toDF(cols: _*)
+        carrierFold(st, serveFrame())
         st.remBag.clear(); st.insBag.clear()
-        carrierFolds += 1
       } catch { case scala.util.control.NonFatal(_) =>
         drop(); vs.carrierNo += Part.Radius; return None }
     }
@@ -899,23 +1009,8 @@ final class Engine(val catalog: Catalog,
     val prog = Parser.parseProgram(src)
     val results = Seq.newBuilder[DataFrame]
     prog.statements.foreach {
-      case InsertFacts(rel, rows) => catalog.insert(rel, rows)
-      case SessionFact(rel, row) =>
-        sessionFacts.getOrElseUpdate(rel, mutable.ArrayBuffer.empty) += row
-        invalidateDependents(rel)
-      case DeleteFacts(rel, rows) => catalog.delete(rel, rows)
-      case DropRelation(rel) => catalog.dropRelation(rel)
-      case RuleDef(rule) =>
-        if (rule.persistent) catalog.addRule(rule)
-        else if (!sessionRules.contains(rule)) { // dedup identical re-adds
-          sessionRules += rule
-          invalidateDependents(rule.head.rel)
-        }
-      case DeleteWhere(atom, body) => deleteWhere(atom, body)
-      case SchemaDecl(rel, fields) => catalog.declareSchema(rel, fields)
-      case TypeAlias(alias, base) => catalog.addTypeAlias(alias, base)
-      case Update(del, ins, body) => update(del, ins, body)
       case q: Query => results += evalQuery(q)
+      case other => runOne(other)
     }
     results.result()
   }
@@ -941,6 +1036,7 @@ final class Engine(val catalog: Catalog,
     results.result()
   }
 
+  /** Execute one non-query statement (a query is a no-op here). */
   private def runOne(st: Statement): Unit = st match {
     case InsertFacts(rel, rows) => catalog.insert(rel, rows)
     case SessionFact(rel, row) =>
@@ -950,7 +1046,7 @@ final class Engine(val catalog: Catalog,
     case DropRelation(rel) => catalog.dropRelation(rel)
     case RuleDef(rule) =>
       if (rule.persistent) catalog.addRule(rule)
-      else if (!sessionRules.contains(rule)) {
+      else if (!sessionRules.contains(rule)) { // dedup identical re-adds
         sessionRules += rule; invalidateDependents(rule.head.rel)
       }
     case DeleteWhere(atom, body) => deleteWhere(atom, body)
@@ -1430,25 +1526,6 @@ final class Engine(val catalog: Catalog,
       })
     }
 
-    /** Incremental view maintenance on monotone changes (reference: DD
-      * keeps every persistent rule's materialization up to date per
-      * update, `src/incremental.rs`; its BENCHMARKS.md headline is
-      * re-query-after-change ≪ recompute). Preconditions checked here,
-      * bail to full recomputation (`None`) when any fails:
-      *  - a cached materialization of `name` exists at some version v0
-      *    and the change log covers every version since (no trims/gaps),
-      *  - all changes are pure inserts into BASE relations `name`
-      *    depends on (rule-set changes and deletes invalidate),
-      *  - no changed relation is itself rule-derived, none is referenced
-      *    through a derived lower stratum, none is negated in the
-      *    dependency tree, and `name`'s SCC has no aggregates (inserts
-      *    are only monotone for positive join/filter/recursion trees).
-      * Non-recursive: delta rules — each rule re-derives with ONE
-      * changed-atom occurrence bound to the insert delta and the rest at
-      * full current state; union with the cache. Recursive (single-rel
-      * SCC): the same delta seeding, then the semi-naive loop CONTINUES
-      * from the cached fixpoint — inserting 100 edges into a million-pair
-      * closure only explores paths through the new edges. */
     /** Per-group DECREMENT/increment maintenance for sum/count views
       * (see the call site in [[tryMaintain]]'s aggregate branch).
       * Returns None when the shape is outside the subtractable contract.
@@ -1888,46 +1965,14 @@ final class Engine(val catalog: Catalog,
             combinedFreshSeed = Some(seeded)
             seeded
         }
-        val dirtyKeysDf = keyLit(dMap.keys, combined, keyNames)
-        // DRIVER-RESIDENT support mode (cap-gated): with the combined
-        // table's rows held on the driver (identity-keyed, collected
-        // once per carried frame), the dirty-row read is a map lookup
-        // and the commit below is a literal frame — the round's only
-        // support-sized Spark actions disappear. Beyond the cap the
-        // distributed semi/anti updates serve (the 100 TB shape), and
-        // the view stops probing.
-        val combinedLocal: Option[Array[org.apache.spark.sql.Row]] =
-          if (limits.tier != Tier.Auto || vs.big(Part.Support)) None
-          else vs.local.get(Part.Support).filter(_._1 eq combined).map(_._2)
-            .orElse {
-              val got = Fixpoint.collectUpTo(combined, 65536L)
-              got match {
-                case Some(rows) => vs.local(Part.Support) = (combined, rows)
-                case None => vs.big += Part.Support
-              }
-              got
-            }
-        // over-cap SCALE path: keyed parquet base + driver overlay (the
-        // shared [[Carrier]]) — the dirty read is overlay lookups plus
-        // one IN-pruned base scan for keys the overlay doesn't hold,
-        // never a view-sized pass
-        val pqState: Option[Carrier] =
-          if (combinedLocal.isDefined) None
-          else vs.carriers.get(Part.Support).filter(_.served eq combined)
-            .orElse(carrierOpen(name, Part.Support, combined, keyNames))
-        val dirtyCombined = combinedLocal match {
-          case Some(rows) => rows.filter(row =>
-            dMap.contains(keyIdx.map(i => SparkValues.key(row.get(i))).toSeq))
-          case None => pqState match {
-            case Some(st) =>
-              carrierDirty(st, dMap.keysIterator.toSeq, 2048,
-                row => keyIdx.map(i => SparkValues.key(row.get(i))))
-                .getOrElse(return None)
-            case None => sideOn(combined, dirtyKeysDf, keyNames, anti = false)
-              .limit(2050).collect()
-          }
-        }
-        if (dirtyCombined.length > 2048) return None
+        // the support table's home ([[homeOf]]): under the cap its rows
+        // sit on the driver, so the dirty read is a map lookup and the
+        // commit a literal frame; past it the keyed carrier reads overlay
+        // lookups plus one IN-pruned base scan, never a view-sized pass
+        val supportHome = homeOf(name, Part.Support, combined, keyNames,
+          65536L, combined)
+        val dirtyCombined = homeDirty(supportHome, combined, keyNames,
+          dMap.keys, 2048).getOrElse(return None)
 
         // ---- count_distinct: per-pair support math over the pairs
         // tables. Touched pairs = the signed bindings' (keys, value)
@@ -1938,11 +1983,10 @@ final class Engine(val catalog: Catalog,
         // pass (literal pair predicate), like the combined frame.
         val cdBorn = mutable.HashMap.empty[(Seq[Any], Int), Long]
         val cdDied = mutable.HashMap.empty[(Seq[Any], Int), Long]
-        // committed lazily on success: each thunk yields the new pairs
-        // frame plus its driver rows when the resident-copy mode built
-        // it as a literal (None = distributed anti∪literal materialize)
-        val cdAuxNew = Seq.newBuilder[(Int,
-          () => (DataFrame, Option[Array[org.apache.spark.sql.Row]]))]
+        // committed on success, after the support table: per cd column,
+        // the pairs table's home, frame, touched pairs and alive rows
+        val cdAuxNew = Seq.newBuilder[(Int, Home, DataFrame, Iterable[Seq[Any]],
+          Seq[org.apache.spark.sql.Row])]
         if (cdSpecsS.nonEmpty) {
           // __c sits last in the fused pair-grain rows
           val cPos = kLen + 1 + aggSpecs.length + 1 + nnSpecs.length
@@ -1994,104 +2038,33 @@ final class Engine(val catalog: Catalog,
                   cdSeeded += seeded
                   (seeded, seeded)
               }
-              // resident-copy mode for the pairs table — same contract
-              // as the combined frame above (identity-keyed, cap-gated)
-              val pairsLocal: Option[Array[org.apache.spark.sql.Row]] =
-                if (limits.tier != Tier.Auto || vs.big(Part.Pairs(i))) None
-                else vs.local.get(Part.Pairs(i)).filter(_._1 eq auxPRaw).map(_._2)
-                  .orElse {
-                    val got = Fixpoint.collectUpTo(auxP, 65536L)
-                    got match {
-                      case Some(rows) => vs.local(Part.Pairs(i)) = (auxPRaw, rows)
-                      case None => vs.big += Part.Pairs(i)
-                    }
-                    got
-                  }
+              // the pairs table's home, like the support table's above
               val pairNames = keyNames :+ "__v"
-              val touchedDf = keyLit(tMap.keys, auxP, pairNames)
-              // over-cap pairs tables ride the same [[Carrier]] as the
-              // combined frame (part Pairs(i)): touched-pair
-              // reads are overlay lookups + one IN-pruned base scan,
-              // commits mutate the overlay — no pairs-table-sized pass
-              // per round
-              val pqP: Option[Carrier] =
-                if (pairsLocal.isDefined) None
-                else vs.carriers.get(Part.Pairs(i))
-                  .filter(_.served eq auxPRaw)
-                  .orElse(carrierOpen(name, Part.Pairs(i), auxP, pairNames,
-                    servedMarker = auxPRaw))
-              val auxTouchedOpt = pairsLocal match {
-                case Some(rows) => Some(rows.filter { row =>
-                  val p: Seq[Any] = (0 to kLen).map(j => SparkValues.key(row.get(j)))
-                  tMap.contains(p)
-                })
-                case None => pqP match {
-                  case Some(st) =>
-                    carrierDirty(st, tMap.keysIterator.toSeq, 2048,
-                      row => (0 to kLen).map(j => SparkValues.key(row.get(j))))
-                  case None => Some(sideOn(auxP, touchedDf, pairNames,
-                    anti = false).limit(2050).collect())
-                }
-              }
-              val auxTouched = auxTouchedOpt.getOrElse(Array.empty)
-              if (auxTouchedOpt.isEmpty || auxTouched.length > 2048) false
-              else {
-                val sMap: Map[Seq[Any], Long] = auxTouched.map { row =>
-                  ((0 to kLen).map(j => SparkValues.key(row.get(j))): Seq[Any]) ->
-                    row.getLong(kLen + 1)
-                }.toMap
-                val alive = Seq.newBuilder[org.apache.spark.sql.Row]
-                var sane = true
-                tMap.foreach { case (p, dc) =>
-                  val s0 = sMap.getOrElse(p, 0L)
-                  val s1 = s0 + dc
-                  if (s1 < 0) sane = false // would need a phantom removal
-                  val key = p.take(kLen)
-                  if (s0 == 0L && s1 > 0L)
-                    cdBorn((key, i)) = cdBorn.getOrElse((key, i), 0L) + 1
-                  if (s0 > 0L && s1 <= 0L)
-                    cdDied((key, i)) = cdDied.getOrElse((key, i), 0L) + 1
-                  if (s1 > 0L)
-                    alive += org.apache.spark.sql.Row.fromSeq(p :+ s1)
-                }
-                if (!sane) false
-                else {
-                  val sp = catalog.spark
-                  val schema = org.apache.spark.sql.types.StructType(
-                    auxP.schema.fields.map(_.copy(nullable = true)))
-                  val aliveRows = alive.result()
-                  cdAuxNew += ((i, () => pairsLocal match {
-                    case Some(copy) =>
-                      val full = copy.filterNot { row =>
-                        val p: Seq[Any] = (0 to kLen).map(j => SparkValues.key(row.get(j)))
-                        tMap.contains(p)
-                      } ++ aliveRows
-                      (sp.createDataFrame(
-                        java.util.Arrays.asList(full.toSeq: _*), schema),
-                       Some(full))
-                    case None => pqP match {
-                      case Some(st) =>
-                        // O(delta) overlay commit — alive pairs replace,
-                        // dead pairs tombstone; base parquet immutable
-                        val newByKey = aliveRows.iterator.map(row =>
-                          ((0 to kLen).map(j => SparkValues.key(row.get(j))): Seq[Any]) -> row)
-                          .toMap
-                        val servedNew = carrierCommit(st,
-                          tMap.keysIterator.map(p => p -> newByKey.get(p).toSeq))
-                        supportParquetRounds += 1
-                        (servedNew, None)
-                      case None =>
-                        val aliveLit = sp.createDataFrame(
-                          sp.sparkContext.parallelize(aliveRows,
-                            Fixpoint.parallelizeParts(aliveRows.size.toLong)), schema)
-                        (Fixpoint.materialize(
-                          sideOn(auxP, touchedDf, pairNames, anti = true)
-                            .union(aliveLit)).df,
-                         None)
-                    }
-                  }))
-                  true
-                }
+              val pairsHome = homeOf(name, Part.Pairs(i), auxP, pairNames,
+                65536L, auxPRaw)
+              homeDirty(pairsHome, auxP, pairNames, tMap.keys, 2048) match {
+                case None => false
+                case Some(auxTouched) =>
+                  val sMap: Map[Seq[Any], Long] = auxTouched.map { row =>
+                    ((0 to kLen).map(j => SparkValues.key(row.get(j))): Seq[Any]) ->
+                      row.getLong(kLen + 1)
+                  }.toMap
+                  val alive = Seq.newBuilder[org.apache.spark.sql.Row]
+                  var sane = true
+                  tMap.foreach { case (p, dc) =>
+                    val s0 = sMap.getOrElse(p, 0L)
+                    val s1 = s0 + dc
+                    if (s1 < 0) sane = false // would need a phantom removal
+                    val key = p.take(kLen)
+                    if (s0 == 0L && s1 > 0L)
+                      cdBorn((key, i)) = cdBorn.getOrElse((key, i), 0L) + 1
+                    if (s0 > 0L && s1 <= 0L)
+                      cdDied((key, i)) = cdDied.getOrElse((key, i), 0L) + 1
+                    if (s1 > 0L)
+                      alive += org.apache.spark.sql.Row.fromSeq(p :+ s1)
+                  }
+                  if (sane) cdAuxNew += ((i, pairsHome, auxP, tMap.keys, alive.result()))
+                  sane
               }
             }
           }
@@ -2282,39 +2255,16 @@ final class Engine(val catalog: Catalog,
           }
           // n1 == 0: the group vanishes from view and support alike
         }
-        val spark = catalog.spark
-        val combSchema = org.apache.spark.sql.types.StructType(
-          combined.schema.fields.map(_.copy(nullable = true)))
         val rows = newRows.result()
-        // resident-copy commit: untouched rows + driver-merged
-        // replacements as ONE literal frame (no support-sized action,
-        // nothing to checkpoint); distributed commit otherwise
-        val (combinedOut, combinedOutRows) = combinedLocal match {
-          case Some(copy) =>
-            val full = copy.filterNot(row =>
-              dMap.contains(keyIdx.map(i => SparkValues.key(row.get(i))).toSeq)) ++ rows
-            (spark.createDataFrame(
-              java.util.Arrays.asList(full.toSeq: _*), combSchema), Some(full))
-          case None => pqState match {
-            case Some(st) =>
-              // O(delta) overlay commit: dirty groups become
-              // replacements (survivors) or tombstones (vanished); the
-              // base parquet never rewrites on the round path
-              // ([[carrierCommit]] folds past the cap, amortized)
-              val newByKey = rows.iterator.map(row =>
-                (keyIdx.map(i => SparkValues.key(row.get(i))): Seq[Any]) -> row).toMap
-              val servedNew = carrierCommit(st,
-                dMap.keysIterator.map(kk => kk -> newByKey.get(kk).toSeq))
-              supportParquetRounds += 1
-              (servedNew, None)
-            case None =>
-              val literal = spark.createDataFrame(
-                spark.sparkContext.parallelize(rows,
-                  Fixpoint.parallelizeParts(rows.size.toLong)), combSchema)
-              (Fixpoint.materialize(
-                sideOn(combined, dirtyKeysDf, keyNames, anti = true)
-                  .union(literal)).df, None)
-          }
+        // dirty groups become their survivors' rows or vanish; the
+        // resident home commits no support-sized action, the carrier
+        // home only its overlay ([[carrierCommit]] folds past its cap)
+        val combinedOut = homeCommit(name, Part.Support, supportHome,
+          combined, keyNames, dMap.keys, rows)
+        supportHome match {
+          case _: Home.Resident => aggLocalRounds += 1
+          case _: Home.Carried => supportParquetRounds += 1
+          case Home.FrameOnly => ()
         }
         // the superseded state retires with the update (combinedOut is
         // checkpoint-independent of `combined` once materialized). A
@@ -2330,11 +2280,6 @@ final class Engine(val catalog: Catalog,
         else
           graft.plans.Graveyard.buryAndDrain(Fixpoint.checkpointRddOf(combined))
         vs.support = Some((catalog.version, combinedOut))
-        combinedOutRows match {
-          case Some(full) =>
-            vs.local(Part.Support) = (combinedOut, full); aggLocalRounds += 1
-          case None => vs.local.remove(Part.Support)
-        }
         // a displaced STALE support table (left in place by an earlier
         // fallback round) was served too — same grace-window retirement,
         // unless its checkpoint still backs the CURRENT view, which must
@@ -2345,12 +2290,10 @@ final class Engine(val catalog: Catalog,
               graft.plans.Graveyard.buryAndDrain(Some(s)) } }
         // commit the updated pairs tables the same way
         val vNow = catalog.version
-        cdAuxNew.result().foreach { case (i, build) =>
-          val (out, localRows) = build()
-          localRows match {
-            case Some(rows) => vs.local(Part.Pairs(i)) = (out, rows)
-            case None => vs.local.remove(Part.Pairs(i))
-          }
+        cdAuxNew.result().foreach { case (i, home, auxP, touched, alive) =>
+          val out = homeCommit(name, Part.Pairs(i), home, auxP,
+            keyNames :+ "__v", touched, alive)
+          if (home.isInstanceOf[Home.Carried]) supportParquetRounds += 1
           vs.pairs.put(i, (vNow, out)).foreach { case (_, old) =>
             if (!(old eq out))
               Fixpoint.checkpointRddOf(old).foreach(_.unpersist(false))
@@ -2627,44 +2570,21 @@ final class Engine(val catalog: Catalog,
           restamp(); recordNamedDelta(name, v0, Nil, Nil)
           return Some(cached)
         }
-        // ---- buffer-row acquisition. Under the cap: the driver-
-        // resident copy (identity-memoized). OVER the cap: the keyed-
-        // parquet partial mode (see [[rankParquet]]) fetches ONLY the
-        // touched groups' rows — overlay lookups plus one IN-pruned
-        // base scan — and the merge below runs on that slice; every
-        // per-group invariant it reads (boundary, cum, tot) lives in
-        // the group's own rows, so the partial merge is exact. The
-        // ungrouped head stays full-copy (one group; over-cap means a
-        // genuinely huge single buffer — the distributed algebra's
-        // shape).
-        var pqR: Option[Carrier] =
-          if (groupIdx.isEmpty) None
-          else vs.carriers.get(Part.Rank).filter(_.served eq buf0)
-        if (pqR.isEmpty && groupIdx.nonEmpty && vs.big(Part.Rank))
-          pqR = carrierOpen(name, Part.Rank, buf0, groupNames)
-        val fullRows: Option[Array[org.apache.spark.sql.Row]] =
-          if (pqR.isDefined) None
-          else vs.local.get(Part.Rank).filter(_._1 eq buf0).map(_._2).orElse {
-            if (vs.big(Part.Rank)) None
-            else Fixpoint.collectUpTo(buf0,
-              if (limits.tier == Tier.Carrier && groupIdx.nonEmpty) 0L
-              else Engine.rankBufLocalCap).orElse {
-              // memoized so later rounds skip the wasted probe (a
-              // reseed clears it — the one event that can shrink it);
-              // the first over-cap round transitions to parquet NOW
-              vs.big += Part.Rank
-              if (groupIdx.nonEmpty) pqR = carrierOpen(name, Part.Rank, buf0, groupNames)
-              None
-            }
-          }
-        if (fullRows.isEmpty && pqR.isEmpty) return None // distributed algebra
-        val bufRows: Array[org.apache.spark.sql.Row] = fullRows.getOrElse {
-          val st = pqR.get
-          val touched = (remM.keySet ++ insM.keySet).iterator
-            .map(gkeyOf(_): Seq[Any]).toSeq.distinct
-          carrierDirty(st, touched, 65536,
-            r => gkeyOf(keyOf(r))).getOrElse(return None)
-        }
+        // ---- the touched groups' buffer rows from the buffer's home
+        // ([[homeOf]]): the driver-resident copy, or past the cap the
+        // keyed carrier's overlay lookups plus one IN-pruned base scan.
+        // The merge below runs on that slice only; every per-group
+        // invariant it reads (boundary, cum, tot) lives in the group's
+        // own rows, so the partial merge is exact. The ungrouped head
+        // has no carrier form (one group; over the cap it is a genuinely
+        // huge single buffer — the distributed algebra's shape).
+        val home = homeOf(name, Part.Rank, buf0, groupNames,
+          Engine.rankBufLocalCap, buf0)
+        if (home == Home.FrameOnly) return None // distributed algebra
+        val touched = (remM.keySet ++ insM.keySet).iterator
+          .map(gkeyOf(_): Seq[Any]).toSeq.distinct
+        val bufRows = homeDirty(home, buf0, groupNames, touched, 65536)
+          .getOrElse(return None)
         if (bufRows.exists(r => anomalous(r) || r.isNullAt(nc) || r.isNullAt(nc + 1)))
           return None
         def rankCmp(a: Vector[Any], b: Vector[Any]): Int = {
@@ -2757,7 +2677,9 @@ final class Engine(val catalog: Catalog,
             rows.toSeq.map(r => (keyOf(r), r.getLong(nc), r.getLong(nc + 1)))
               .groupBy(t3 => gkeyOf(t3._1))
           }
-        // commit: trimmed buffer + its top-k expansion, both literal
+        // ---- commit: each touched group's fresh buffer slice in rank
+        // order (its refilled rows, or its kept rows trimmed to the
+        // prefix capacity; none = the group is gone) replaces its rows
         val rowOrd = new Ordering[(Vector[Any], Long)] {
           def compare(a: (Vector[Any], Long), b: (Vector[Any], Long)): Int =
             rankCmp(a._1, b._1)
@@ -2765,138 +2687,66 @@ final class Engine(val catalog: Catalog,
         val keyOrd = new Ordering[Vector[Any]] {
           def compare(a: Vector[Any], b: Vector[Any]): Int = rankCmp(a, b)
         }
-        // ---- PARTIAL (over-cap) commit: each touched group's fresh
-        // buffer slice (or tombstone) lands in the driver overlay; the
-        // untouched groups stay in the immutable parquet base, the
-        // served buffer is base ANTI overlay-groups UNION overlay rows,
-        // and the served view is its LAZY top-k expansion (a query pays
-        // one window pass; the round itself runs no buffer-sized work).
-        pqR.foreach { st =>
-          def fresh(g: Vector[Any]): Seq[org.apache.spark.sql.Row] =
-            if (refillG(g))
-              refillRows.getOrElse(g, Seq.empty).sortBy(_._1)(keyOrd)
-                .map { case (key, n1, t) =>
-                  org.apache.spark.sql.Row.fromSeq(key ++ Seq(n1, t)) }
-            else {
-              val t = ntot(g)
-              kept.get(g).map(_.sorted(rowOrd).iterator.take(kdist.toInt)
-                  .map { case (key, n1) =>
-                    org.apache.spark.sql.Row.fromSeq(key ++ Seq(n1, t)) }
-                  .toSeq)
-                .getOrElse(Seq.empty)
-            }
-          val servedBuf = carrierCommit(st,
-            allG.iterator.map(g => (g: Seq[Any]) -> fresh(g)))
-          retireSuperseded(buf0)
-          vs.support = Some((catalog.version, servedBuf))
-          vs.local.remove(Part.Rank)
-          rankDecrementCount += 1
-          rankParquetRides += 1
-          // named delta: same touched-group diff as the full-copy mode
-          // below — bufRows here IS the touched groups' old rows
-          locally {
-            val touchedG: Set[Vector[Any]] =
-              (remM.keysIterator ++ insM.keysIterator).map(gkeyOf).toSet ++ refillG
-            val oldByG = mutable.HashMap
-              .empty[Vector[Any], mutable.ArrayBuffer[(Vector[Any], Long)]]
-            bufRows.foreach { r =>
-              val key = keyOf(r); val g = gkeyOf(key)
-              if (touchedG(g))
-                oldByG.getOrElseUpdate(g, mutable.ArrayBuffer.empty) +=
-                  ((key, r.getLong(nc)))
-            }
-            def servedSet(rows: Seq[(Vector[Any], Long)]): Set[Vector[Any]] = {
+        val slices: Seq[Seq[(Vector[Any], Long, Long)]] = allG.toSeq.map { g =>
+          if (refillG(g)) refillRows.getOrElse(g, Seq.empty).sortBy(_._1)(keyOrd)
+          else kept.get(g).map(_.sorted(rowOrd).iterator.take(kdist.toInt)
+            .map { case (key, n1) => (key, n1, ntot(g)) }.toSeq)
+            .getOrElse(Seq.empty)
+        }
+        // RESIDENT home: the served view is the literal top-k expansion of
+        // the new buffer (untouched groups' rows plus the fresh slices),
+        // duplicated per multiplicity — bounded (sum over groups of
+        // min(k, tot)), or a high-k many-group view would materialize the
+        // whole expansion as driver rows where the distributed expand()
+        // runs as a lazy executor-side explode. The CARRIER home serves
+        // the lazy expansion of base ANTI overlay-groups UNION overlay
+        // rows (a query pays one window pass; the round itself runs no
+        // buffer-sized work).
+        val servedLit: Option[DataFrame] = home match {
+          case Home.Resident(rows) =>
+            val untouched = rows.iterator.map(r => (keyOf(r), r))
+              .filterNot { case (key, _) => allG(gkeyOf(key)) }
+              .map { case (key, r) => (key, r.getLong(nc), r.getLong(nc + 1)) }
+              .toSeq.groupBy(t3 => gkeyOf(t3._1)).valuesIterator
+              .map(_.sortBy(_._1)(keyOrd))
+            val servedRows = mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+            (untouched ++ slices.iterator).foreach { group =>
               var start = 0L
-              val b = Set.newBuilder[Vector[Any]]
-              rows.sorted(rowOrd).foreach { case (key, n) =>
-                if (start < k) b += key
-                start += n
-              }
-              b.result()
-            }
-            val insB = Seq.newBuilder[org.apache.spark.sql.Row]
-            val remB = Seq.newBuilder[org.apache.spark.sql.Row]
-            touchedG.foreach { g =>
-              val oldSet = servedSet(oldByG.getOrElse(g, mutable.ArrayBuffer.empty).toSeq)
-              val newSet =
-                if (refillG(g))
-                  servedSet(refillRows.getOrElse(g, Seq.empty)
-                    .map(t3 => (t3._1, t3._2)))
-                else servedSet(kept.getOrElse(g, mutable.ArrayBuffer.empty).toSeq)
-              (oldSet -- newSet).foreach(key =>
-                remB += org.apache.spark.sql.Row.fromSeq(key))
-              (newSet -- oldSet).foreach(key =>
-                insB += org.apache.spark.sql.Row.fromSeq(key))
-            }
-            recordNamedDelta(name, v0, insB.result(), remB.result())
-          }
-          return Some(expand(servedBuf))
-        }
-        val outBufRows = mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-        val servedRows = mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-        // the served expansion is duplicated per multiplicity — bound it
-        // (sum over groups of min(k, tot)) or a high-k many-group view
-        // would materialize the whole expansion as driver rows where the
-        // distributed expand() runs as a lazy executor-side explode
-        object ServeCap extends scala.util.control.ControlThrowable
-        def emit(rows: Iterator[(Vector[Any], Long, Long)]): Unit = {
-          var start = 0L
-          rows.foreach { case (key, n1, t) =>
-            outBufRows += org.apache.spark.sql.Row.fromSeq(key ++ Seq(n1, t))
-            if (start < k) {
-              var j = math.min(n1, k - start)
-              if (servedRows.length + j > 262144L) throw ServeCap
-              while (j > 0L) {
-                servedRows += org.apache.spark.sql.Row.fromSeq(key); j -= 1
+              group.foreach { case (key, n1, _) =>
+                if (start < k) {
+                  var j = math.min(n1, k - start)
+                  if (servedRows.length + j > 262144L) return None // distributed
+                  while (j > 0L) {
+                    servedRows += org.apache.spark.sql.Row.fromSeq(key); j -= 1
+                  }
+                }
+                start += n1
               }
             }
-            start += n1
-          }
+            Some(spark.createDataFrame(java.util.Arrays.asList(servedRows.toSeq: _*),
+              StructType(named.schema.fields.map(_.copy(nullable = true)))))
+          case _ => None
         }
-        try allG.foreach { g =>
-          if (refillG(g))
-            // refilled slice replaces the group's kept rows wholesale —
-            // its __n/__tot are the fresh post-change values
-            refillRows.get(g).foreach { rows =>
-              emit(rows.sortBy(_._1)(new Ordering[Vector[Any]] {
-                def compare(a: Vector[Any], b: Vector[Any]): Int = rankCmp(a, b)
-              }).iterator)
-            }
-          else {
-            val t = ntot(g)
-            kept.get(g).map(_.sorted(rowOrd)).foreach { rows =>
-              emit(rows.iterator.take(kdist.toInt)
-                .map { case (key, n1) => (key, n1, t) })
-            }
-          }
-        } catch { case ServeCap => return None } // expansion too big: distributed
-        val bufSchema = StructType(buf0.schema.fields.map(_.copy(nullable = true)))
-        val servedSchema = StructType(named.schema.fields.map(_.copy(nullable = true)))
-        val bufDf = spark.createDataFrame(
-          java.util.Arrays.asList(outBufRows.toSeq: _*), bufSchema)
-        val servedDf = spark.createDataFrame(
-          java.util.Arrays.asList(servedRows.toSeq: _*), servedSchema)
+        val outBuf = homeCommit(name, Part.Rank, home, buf0, groupNames,
+          allG.toSeq, slices.flatten.map { case (key, n1, t) =>
+            org.apache.spark.sql.Row.fromSeq(key ++ Seq(n1, t)) })
         retireSuperseded(buf0)
-        vs.support = Some((catalog.version, bufDf))
-        vs.local(Part.Rank) = (bufDf, outBufRows.toArray)
+        vs.support = Some((catalog.version, outBuf))
         rankDecrementCount += 1
-        rankLocalRides += 1
+        if (servedLit.isDefined) rankLocalRides += 1 else rankParquetRides += 1
         // NAME the exact view-level delta: only TOUCHED groups (a delta
         // binding or a refill) can change their served top-k prefix —
-        // diff each group's old prefix expansion (from the carried
-        // buffer rows) against the new one (kept/refilled rows), at the
+        // diff each group's old prefix expansion (from its old buffer
+        // rows) against the new one (kept/refilled rows), at the
         // distinct-row level the stratum-diff consumer compares at.
-        // Pure driver math over the bounded buffer copy.
+        // Pure driver math over the touched slice.
         locally {
-          val touchedG: Set[Vector[Any]] =
-            (remM.keysIterator ++ insM.keysIterator).map(gkeyOf).toSet ++ refillG
           val oldByG = mutable.HashMap
             .empty[Vector[Any], mutable.ArrayBuffer[(Vector[Any], Long)]]
           bufRows.foreach { r =>
-            val key = keyOf(r); val g = gkeyOf(key)
-            if (touchedG(g))
-              oldByG.getOrElseUpdate(g, mutable.ArrayBuffer.empty) +=
-                ((key, r.getLong(nc)))
+            val key = keyOf(r)
+            oldByG.getOrElseUpdate(gkeyOf(key), mutable.ArrayBuffer.empty) +=
+              ((key, r.getLong(nc)))
           }
           def servedSet(rows: Seq[(Vector[Any], Long)]): Set[Vector[Any]] = {
             var start = 0L
@@ -2909,13 +2759,9 @@ final class Engine(val catalog: Catalog,
           }
           val insB = Seq.newBuilder[org.apache.spark.sql.Row]
           val remB = Seq.newBuilder[org.apache.spark.sql.Row]
-          touchedG.foreach { g =>
+          allG.zip(slices).foreach { case (g, slice) =>
             val oldSet = servedSet(oldByG.getOrElse(g, mutable.ArrayBuffer.empty).toSeq)
-            val newSet =
-              if (refillG(g))
-                servedSet(refillRows.getOrElse(g, Seq.empty)
-                  .map(t3 => (t3._1, t3._2)))
-              else servedSet(kept.getOrElse(g, mutable.ArrayBuffer.empty).toSeq)
+            val newSet = servedSet(slice.map(t3 => (t3._1, t3._2)))
             (oldSet -- newSet).foreach(key =>
               remB += org.apache.spark.sql.Row.fromSeq(key))
             (newSet -- oldSet).foreach(key =>
@@ -2923,7 +2769,7 @@ final class Engine(val catalog: Catalog,
           }
           recordNamedDelta(name, v0, insB.result(), remB.result())
         }
-        Some(servedDf)
+        Some(servedLit.getOrElse(expand(outBuf)))
       }
       localRide() match {
         case Some(df) => return Some(df)
@@ -3237,6 +3083,31 @@ final class Engine(val catalog: Catalog,
       } catch { case GlobalBail => None }
     }
 
+    /** Incremental view maintenance (reference: DD keeps every
+      * persistent rule's materialization up to date per update,
+      * `src/incremental.rs`; its BENCHMARKS.md headline is
+      * re-query-after-change ≪ recompute). Starts from the newest cached
+      * materialization of `name` at some version v0 and the change log
+      * since, and bails to full recomputation (`None`) when the log has
+      * a gap, a change carries no delta (opaque replaces, schema
+      * coercions), a derived relation was itself written, or a rule
+      * change lands inside the view's rule closure (rule changes outside
+      * it leave the view valid). A view whose closure the round does not
+      * reach is re-stamped and served as is. Otherwise it handles:
+      *  - inserts and deletes into base relations: delta rules bind one
+      *    changed occurrence at a time; recursive views continue the
+      *    semi-naive loop from the cached fixpoint, and deletes run DRed
+      *    (driver-local when small) or the affected-source TC pass;
+      *  - negation flips: an insert into a negated relation kills
+      *    derivations and a removal creates them, for plain heads and,
+      *    through dirty-group recomputation, for agg/rank heads;
+      *  - derived dependencies, positive or negated, through stratum
+      *    diffs: the lower view's named delta when its path recorded one,
+      *    else a bounded old-vs-new diff of its materialization;
+      *  - aggregate and rank heads through their carried state: per-group
+      *    decrement on the support and pairs tables, the rank prefix
+      *    buffer, the within_radius carry, the global-aggregate row
+      *    swap, or dirty-group recomputation. */
     private def tryMaintain(name: String): Option[DataFrame] = {
       if (!byHead.contains(name)) return None
       val (v0, cached) = cacheLatest(name).getOrElse(return None)

@@ -78,6 +78,43 @@ class TablesSpec extends SparkSpec {
       li.schema("l_quantity").dataType.typeName.startsWith("decimal"))
   }
 
+  test("a second load of one path starts no Spark job") {
+    import scala.jdk.CollectionConverters._
+    val dir = writeVariant(_.withColumn("ts", expr("timestamp_micros(us)")))
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    // jobs started under a fresh job group while `body` runs; a fence job
+    // started after it reaches the listener last, so once the fence is
+    // seen every job of the body has been counted
+    def jobsOf(body: => Unit): Int = {
+      val g = "tables-spec-" + java.util.UUID.randomUUID()
+      def inGroup(group: String)(f: => Unit): Unit = {
+        sc.setJobGroup(group, group)
+        try f finally sc.clearJobGroup()
+      }
+      inGroup(g)(body)
+      inGroup(g + "-fence")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(g + "-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(g + "-fence"), "the fence job never reached the listener")
+      groups.asScala.count(_ == g)
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf(Tables.load(spark, dir, "events")) >= 1,
+        "the first load should infer the schema with a Spark job")
+      assert(jobsOf(Tables.load(spark, dir, "events")) == 0,
+        "the second load re-inferred the schema")
+    } finally sc.removeSparkListener(listener)
+    checkContract(dir)
+  }
+
   test("non-events tables pass through untouched") {
     val dir = Files.createTempDirectory("graft_tables_spec_").toString
     import spark.implicits._
