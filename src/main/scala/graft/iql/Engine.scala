@@ -2687,7 +2687,8 @@ final class Engine(val catalog: Catalog,
         val keyOrd = new Ordering[Vector[Any]] {
           def compare(a: Vector[Any], b: Vector[Any]): Int = rankCmp(a, b)
         }
-        val slices: Seq[Seq[(Vector[Any], Long, Long)]] = allG.toSeq.map { g =>
+        val touchedG = allG.toSeq
+        val slices: Seq[Seq[(Vector[Any], Long, Long)]] = touchedG.map { g =>
           if (refillG(g)) refillRows.getOrElse(g, Seq.empty).sortBy(_._1)(keyOrd)
           else kept.get(g).map(_.sorted(rowOrd).iterator.take(kdist.toInt)
             .map { case (key, n1) => (key, n1, ntot(g)) }.toSeq)
@@ -2728,7 +2729,7 @@ final class Engine(val catalog: Catalog,
           case _ => None
         }
         val outBuf = homeCommit(name, Part.Rank, home, buf0, groupNames,
-          allG.toSeq, slices.flatten.map { case (key, n1, t) =>
+          touchedG, slices.flatten.map { case (key, n1, t) =>
             org.apache.spark.sql.Row.fromSeq(key ++ Seq(n1, t)) })
         retireSuperseded(buf0)
         vs.support = Some((catalog.version, outBuf))
@@ -2759,7 +2760,7 @@ final class Engine(val catalog: Catalog,
           }
           val insB = Seq.newBuilder[org.apache.spark.sql.Row]
           val remB = Seq.newBuilder[org.apache.spark.sql.Row]
-          allG.zip(slices).foreach { case (g, slice) =>
+          touchedG.zip(slices).foreach { case (g, slice) =>
             val oldSet = servedSet(oldByG.getOrElse(g, mutable.ArrayBuffer.empty).toSeq)
             val newSet = servedSet(slice.map(t3 => (t3._1, t3._2)))
             (oldSet -- newSet).foreach(key =>
