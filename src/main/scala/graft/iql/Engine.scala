@@ -2680,13 +2680,8 @@ final class Engine(val catalog: Catalog,
         // ---- commit: each touched group's fresh buffer slice in rank
         // order (its refilled rows, or its kept rows trimmed to the
         // prefix capacity; none = the group is gone) replaces its rows
-        val rowOrd = new Ordering[(Vector[Any], Long)] {
-          def compare(a: (Vector[Any], Long), b: (Vector[Any], Long)): Int =
-            rankCmp(a._1, b._1)
-        }
-        val keyOrd = new Ordering[Vector[Any]] {
-          def compare(a: Vector[Any], b: Vector[Any]): Int = rankCmp(a, b)
-        }
+        val keyOrd: Ordering[Vector[Any]] = (a, b) => rankCmp(a, b)
+        val rowOrd = keyOrd.on[(Vector[Any], Long)](_._1)
         val touchedG = allG.toSeq
         val slices: Seq[Seq[(Vector[Any], Long, Long)]] = touchedG.map { g =>
           if (refillG(g)) refillRows.getOrElse(g, Seq.empty).sortBy(_._1)(keyOrd)
