@@ -1854,10 +1854,10 @@ object SparkEntry {
     }),
 
     // --- IQL: GLOBAL aggregate retraction — a key-less sum/count view
-    //     has nowhere to hang a support table; the single view row IS
-    //     the carry, and a delete round is one delta-sized aggregate
-    //     plus arithmetic, never a base rescan (EngineSpec pins the
-    //     counter and the empty-view death) ----------------------------
+    //     rides the support table as one group: the first delete round
+    //     seeds it from the post-change body, the second decrements it
+    //     with one delta-sized ΔG pass, never a base rescan (EngineSpec
+    //     pins the counter and the empty-view death) -------------------
     "q195_iql_global_agg_retract" -> ((s, dir) => {
       val e = iqlEngine(s, dir)
       e.catalog.register("gemp4", T(s, dir, "orders").select(

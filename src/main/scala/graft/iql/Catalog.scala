@@ -440,7 +440,7 @@ final class Catalog(val spark: SparkSession) {
 
   /** Cells (queries × (dim + nprobe)) up to which a distributed
     * [[hnswSearchBatch]] bakes its queries into the plan as literals. */
-  @volatile private[graft] var batchLiteralCells: Long = 8192L
+  private val BatchLiteralCells = 8192L
 
   /** k-NN probe of an index → DataFrame(id, distance), joinable with the
     * base relation (the HnswScan node, reference `src/ir/mod.rs:361-376`). */
@@ -541,7 +541,7 @@ final class Catalog(val spark: SparkSession) {
           val literalCells = queries.length.toLong * (dim + nprobe)
           import org.apache.spark.sql.functions.{array, explode, struct, typedLit}
           val cand: DataFrame =
-            if (literalCells <= batchLiteralCells) {
+            if (literalCells <= BatchLiteralCells) {
               // small batch: (qi, qv, pc) bake into the plan as struct
               // literals under one per-row explode — no join, no
               // broadcast-exchange jobs (A/B: the broadcast carrier cost

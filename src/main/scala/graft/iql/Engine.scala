@@ -407,7 +407,8 @@ final class Engine(val catalog: Catalog,
     views.keys.filter(v => closure(v)(changedRel)).toSeq.foreach(evictAuxFor)
   }
   /** Observability: how many resolves were served by incremental
-    * maintenance instead of recomputation (tests assert on this). */
+    * maintenance instead of recomputation (tests assert on this). A view
+    * no change reaches is re-stamped, which is not counted. */
   private[graft] var maintainedCount: Long = 0L
   /** Observability: linear-TC maintenance rounds served by the
     * driver-local closure pass (under [[Engine.tcLocalClosureCap]]). */
@@ -434,9 +435,10 @@ final class Engine(val catalog: Catalog,
       * non-null-value count `__nn_i` — what a per-group DECREMENT needs
       * that the view alone doesn't carry (a group whose support hits 0
       * must VANISH, and a sum whose last non-null contributor left must
-      * go null; neither is decidable from the cached sum). The served
-      * view is a projection of this one materialized frame, so each
-      * round is one dirty collect + one map-only update pass. For a
+      * go null; neither is decidable from the cached sum). A key-less
+      * head is the one-group case. The served view is a projection of
+      * this one materialized frame, so each riding round is one dirty
+      * collect + one map-only update pass. For a
       * top_k view this slot holds the carried prefix buffer instead
       * ([[maintainRankBuffered]]). Version-stamped. */
     var support: Option[(Long, DataFrame)] = None
@@ -463,17 +465,11 @@ final class Engine(val catalog: Catalog,
       * (a transient IO failure must not pin a re-created view to the
       * O(view) commit for the engine's lifetime). */
     val carrierNo = mutable.HashSet.empty[Part]
-    /** NON-NULL contributor counts per sum column of a GLOBAL (key-less)
-      * sum view, version-stamped — decides the sum-goes-null transition
-      * the cached single row can't see (the grouped analogue carries
-      * `__nn` on the support table). Seeded from the post-change body on
-      * the first decrement round, then moved in lockstep with the count
-      * (deltas are null-free by the side-aggregate bail). */
-    var globalNN: Option[(Long, Map[Int, Long])] = None
     /** Exact VIEW-LEVEL delta surfaced by a maintenance path that can
-      * NAME its change (per-group decrement replacements, rank
-      * prefix-buffer merges, global-agg row swaps, dirty-group
-      * replacements): (fromVersion, toVersion, inserted view rows,
+      * NAME its change (per-group decrement replacements, key-less heads
+      * included, rank prefix-buffer merges, support-table seeds and
+      * dirty-group replacements, the last two from bounded old/new slice
+      * collects): (fromVersion, toVersion, inserted view rows,
       * removed view rows), driver-local and bounded. Consumed by the
       * stacked-view stratum-diff injection in [[IdbEvaluator.tryMaintain]]
       * — an upper view maintaining through a positive/negated DERIVED
@@ -497,7 +493,6 @@ final class Engine(val catalog: Catalog,
       def re(v: Long) = if (v == from) to else v
       support = support.map { case (v, df) => (re(v), df) }
       pairs.mapValuesInPlace { case (_, (v, df)) => (re(v), df) }
-      globalNN = globalNN.map { case (v, m) => (re(v), m) }
     }
   }
   private val views = mutable.HashMap.empty[String, ViewState]
@@ -886,7 +881,9 @@ final class Engine(val catalog: Catalog,
   }
   private def sideOn(big: DataFrame, small: DataFrame, names: Seq[String],
                      anti: Boolean): DataFrame = {
-    val cond = names.map(c => col(s"__b.`$c`") <=> col(s"__s.`$c`")).reduce(_ && _)
+    // key-less: `small` holds the empty key (one row) or nothing
+    val cond = names.map(c => col(s"__b.`$c`") <=> col(s"__s.`$c`"))
+      .reduceOption(_ && _).getOrElse(lit(true))
     big.alias("__b").join(broadcast(small.alias("__s")), cond,
       if (anti) "left_anti" else "left_semi")
   }
@@ -915,18 +912,18 @@ final class Engine(val catalog: Catalog,
       rem: Seq[org.apache.spark.sql.Row]): Unit =
     if (ins.length <= 4096 && rem.length <= 4096)
       state(view).namedDelta = Some((v0, catalog.version, ins, rem))
-  /** NAME the view-level delta of a round that can only change rows
-    * matching `dirtyPred`, when a stacked-view consumer asked for it:
-    * two bounded key-filtered collects (a filter scan each — no join,
-    * no shuffle) pin the exact old/new dirty slices; everything else is
+  /** NAME the view-level delta of a round that can only change the rows
+    * `dirty` keeps, when a stacked-view consumer asked for it: two
+    * bounded key-filtered collects (a filter or broadcast semi-join
+    * each) pin the exact old/new dirty slices; everything else is
     * provably unchanged. Gated on demand — an ordinary top-level round
     * must not pay the two extra jobs. */
   private def recordDirtySliceDelta(view: String, v0: Long,
-      before: DataFrame, after: DataFrame, dirtyPred: Column): Unit =
+      before: DataFrame, after: DataFrame, dirty: DataFrame => DataFrame): Unit =
     if (namedDeltaWanted(view)) {
       for {
-        oldRows <- Fixpoint.collectUpTo(before.where(dirtyPred), 4096L)
-        newRows <- Fixpoint.collectUpTo(after.where(dirtyPred), 4096L)
+        oldRows <- Fixpoint.collectUpTo(dirty(before), 4096L)
+        newRows <- Fixpoint.collectUpTo(dirty(after), 4096L)
       } {
         def keyed(rs: Array[org.apache.spark.sql.Row])
             : Map[Seq[Any], org.apache.spark.sql.Row] =
@@ -1505,7 +1502,6 @@ final class Engine(val catalog: Catalog,
         } else {
           (if (demand.isEmpty && cachingEnabled) tryMaintain(name) else None) match {
             case Some(df) =>
-              maintainedCount += 1
               memo(name) = df
               cachePut(name, df)
               df
@@ -1545,7 +1541,11 @@ final class Engine(val catalog: Catalog,
       *
       * Group death (support hits 0 → the row must vanish) and
       * sum-goes-null (last non-null contributor left) are decided from
-      * the carried [[ViewState.support]] table. Scale shape: the signed
+      * the carried [[ViewState.support]] table; a key-less head rides it
+      * as a one-group view. A round that finds the support table or a
+      * pairs table stale seeds them all from the post-change body and
+      * serves the seed's projection, as the rank buffer seeds. Scale
+      * shape on riding rounds: the signed
       * per-group delta ΔG is bounded-collected (≤1024 dirty groups —
       * beyond that dirty-group recomputation is the better plan
       * anyway); the view and support table then update in ONE map-only
@@ -1557,7 +1557,7 @@ final class Engine(val catalog: Catalog,
         deltaOf: Map[String, DataFrame], removedOf: Map[String, DataFrame],
         cached: DataFrame, v0: Long,
         tinyLiteralRound: Boolean): Option[DataFrame] = {
-      if (changedOccs.length != 1 || keyIdx.isEmpty) return None
+      if (changedOccs.length != 1) return None
       if (aggSpecs.isEmpty || !aggSpecs.forall { case (f, _) =>
         f == "sum" || f == "count" || f == "count_distinct" || f == "avg" ||
           f == "min" || f == "max" }) return None
@@ -1646,13 +1646,16 @@ final class Engine(val catalog: Catalog,
       // delete workload, where the seed amortizes — it seeds then, and
       // every later round rides the carried table O(delta). Small
       // literal-built bases (cheap seeds) and rounds with a live carried
-      // table are unaffected.
+      // table are unaffected. Grouped heads only: a key-less head's
+      // dirty-group alternative is a full recompute, which costs what
+      // the seed costs.
       val vs = state(name)
-      if (tinyLiteralRound) {
-        val carried = vs.support.exists(_._1 == v0) ||
-          cdSpecsS.exists { case (_, i) => vs.pairs.get(i).exists(_._1 == v0) }
-        if (!carried && seedDeferredOnce.add(name)) return None
-      }
+      // the support table and every pairs table ride at v0, or they all
+      // reseed together
+      val stale = !vs.support.exists(_._1 == v0) ||
+        cdSpecsS.exists { case (_, i) => !vs.pairs.get(i).exists(_._1 == v0) }
+      if (stale && tinyLiteralRound && keyIdx.nonEmpty && seedDeferredOnce.add(name))
+        return None
       val kLen = keyIdx.length
       val keyNames = keyIdx.map(i => s"c$i")
 
@@ -1661,12 +1664,182 @@ final class Engine(val catalog: Catalog,
           RuleCompiler.bindOccurrence(r, changedOccs.head, bound,
             (nm, ar) => resolve(nm, ar)),
           hnswFrame, catalog.statRows)
+      def release(df: DataFrame): Unit =
+        Fixpoint.checkpointRddOf(df).foreach(_.unpersist(false))
+      def argType(term: Term, b: DataFrame) =
+        try Some(b.select(RuleCompiler.term(term, b)).schema.head.dataType)
+        catch { case _: Throwable => None }
+      // TOP-2 per group for min/max columns over `b`'s bindings:
+      // per spec (keys, __b1_i = extremum, __k1_i = its binding count,
+      // __b2_i = runner-up, __k2_i = its count; missing group =
+      // all-null values). `specs` MUST share one argument expression —
+      // min<S> and max<S> then ride ONE (keys, value) grouped pass and
+      // one exchange (the windows share the partitioning; Spark adds a
+      // sort per direction, not a shuffle). No collect; used by the
+      // seed (full body) and the refill (key-filtered body). A key-less
+      // head takes one 1-row frame per spec instead.
+      def mmTop2Multi(b: DataFrame, specs: Seq[(String, Int)],
+                      onlyKeys: Option[DataFrame] = None): DataFrame = {
+        val i0 = specs.head._2
+        val keysX = keyIdx.map(j => RuleCompiler.term(r.head.args(j), b).as(s"c$j"))
+        val grain0 = b.select(keysX :+ RuleCompiler.term(numArgOf(i0), b).as("__v"): _*)
+          .where(col("__v").isNotNull)
+        // refill path: the broadcast key filter sits BELOW the
+        // aggregation, so the pass scans only the touched groups' rows
+        val grain1 = onlyKeys match {
+          case Some(kf) => sideOn(grain0, kf, keyNames, anti = false)
+          case None => grain0
+        }
+        val grain = grain1
+          .groupBy((keyNames :+ "__v").map(col): _*).agg(count(lit(1)).as("__k"))
+        if (keyNames.isEmpty) {
+          // key-less: the two best distinct values by TakeOrdered over
+          // the (value, count) grain, as the ungrouped rank buffer takes
+          // its prefix — never a one-partition window over the body.
+          // Over an empty grain the row holds nulls and __k2 = 0
+          return specs.map { case (f, i) =>
+            val asc = f == "min"
+            val two = count(lit(1)) === 2
+            val (b1, k1, b2, k2) =
+              if (asc) (min(col("__v")), min_by(col("__k"), col("__v")),
+                max(col("__v")), max_by(col("__k"), col("__v")))
+              else (max(col("__v")), max_by(col("__k"), col("__v")),
+                min(col("__v")), min_by(col("__k"), col("__v")))
+            grain.orderBy(if (asc) col("__v").asc else col("__v").desc).limit(2)
+              .agg(b1.as(s"__b1$i"), k1.as(s"__k1$i"), when(two, b2).as(s"__b2$i"),
+                when(two, k2).otherwise(lit(0L)).as(s"__k2$i"))
+          }.reduce(_ crossJoin _)
+        }
+        val ranked = specs.foldLeft(grain) { case (df, (f, i)) =>
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(keyNames.map(col): _*)
+            .orderBy(if (f == "min") col("__v").asc else col("__v").desc)
+          df.withColumn(s"__rn$i", row_number().over(w))
+        }
+        val aggs = specs.flatMap { case (_, i) => Seq(
+          max(when(col(s"__rn$i") === 1, col("__v"))).as(s"__b1$i"),
+          max(when(col(s"__rn$i") === 1, col("__k"))).as(s"__k1$i"),
+          max(when(col(s"__rn$i") === 2, col("__v"))).as(s"__b2$i"),
+          coalesce(max(when(col(s"__rn$i") === 2, col("__k"))), lit(0L))
+            .as(s"__k2$i")) }
+        ranked.where(specs.map(s => col(s"__rn${s._2}") <= 2).reduce(_ || _))
+          .groupBy(keyNames.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      }
+      // the final support-frame column order — seed, carried table,
+      // and the literal replacement rows must all agree on it
+      def supportCols: Seq[Column] =
+        cols.map(col) ++ Seq(col("__n")) ++
+          nnSpecs.map(i => col(s"__nn$i")) ++
+          decSpecs.map(i => col(s"__sum$i")) ++
+          mmSpecs.flatMap { case (_, i) => Seq(
+            coalesce(col(s"__k1$i"), lit(0L)).as(s"__k1$i"),
+            col(s"__b2$i"),
+            coalesce(col(s"__k2$i"), lit(0L)).as(s"__k2$i")) }
+      // ---- seed round: the support table and every pairs table are
+      // built together from ONE evaluation of the post-change body, and
+      // the round serves the support table's projection with no ΔG
+      // arithmetic (the rank buffer seeds the same way). The homes are
+      // decided here, so the first riding round reads them directly.
+      def seedRound(): Option[DataFrame] = {
+        val body0 = RuleCompiler.compileBody(r.body, (nm, ar) => resolve(nm, ar),
+          hnswFrame, catalog.statRows)
+        // a non-numeric sum/avg argument is outside the contract: no
+        // riding round could subtract it, so nothing seeds
+        if ((sumSpecs ++ avgSpecs).exists(i => argType(numArgOf(i), body0).exists(dt =>
+            !AnyValue.isAny(dt) && !dt.isInstanceOf[org.apache.spark.sql.types.NumericType])))
+          return None
+        // the top-2 passes and the pairs seeds read the body again:
+        // evaluate it once for all of them
+        val body =
+          if (mmSpecs.isEmpty && cdSpecsS.isEmpty) body0 else body0.localCheckpoint(true)
+        try {
+          val sKeys = keyIdx.map(i => RuleCompiler.term(r.head.args(i), body).as(s"c$i"))
+          def convOf(i: Int): Column = {
+            val c0 = RuleCompiler.term(numArgOf(i), body)
+            if (avgSpecs.contains(i) && argType(numArgOf(i), body).exists(AnyValue.isAny))
+              AnyValue.asDouble(c0)
+            else c0
+          }
+          val sAggs = r.head.args.zipWithIndex.collect {
+            case (Agg(f, arg), i) => aggFunc(f, arg, body).as(s"c$i")
+          } ++ Seq(count(lit(1)).as("__n")) ++ nnSpecs.map { i =>
+            count(convOf(i)).as(s"__nn$i")
+          } ++ decSpecs.map { i =>
+            coalesce(sum(convOf(i).cast(DecT)), lit(0L).cast(DecT))
+              .cast(DecT).as(s"__sum$i")
+          }
+          // a key-less `groupBy()` emits one row over an empty body:
+          // dropped, so an empty body serves the empty view
+          var seed0 = body.groupBy(sKeys: _*)
+            .agg(sAggs.head, sAggs.tail: _*).where(col("__n") > 0)
+          // graft the min/max top-2 triples on via a null-safe keyed
+          // join (left: a group of only-null values has no top-2 row);
+          // columns sharing one argument (min<S>, max<S>) fuse into
+          // one grain pass and one join
+          mmSpecs.groupBy { case (_, i) => numArgOf(i) }.values.foreach { specs =>
+            val outCols = specs.flatMap { case (_, i) =>
+              Seq(s"__b1$i", s"__k1$i", s"__b2$i", s"__k2$i") }
+            val t2 = mmTop2Multi(body, specs)
+              .toDF((keyNames.map(_ + "__t") ++ outCols): _*)
+            val cond = keyNames.map(k => seed0(k) <=> t2(k + "__t"))
+              .reduceOption(_ && _).getOrElse(lit(true))
+            seed0 = seed0.join(t2, cond, "left")
+              .drop((keyNames.map(_ + "__t") ++
+                specs.map { case (_, i) => s"__b1$i" }): _*)
+          }
+          val seeded = Fixpoint.materialize(seed0.select(supportCols: _*)).df
+          val pairNames = keyNames :+ "__v"
+          val pairsSeeded = cdSpecsS.map { case (arg, i) =>
+            i -> Fixpoint.materialize(body
+              .select(sKeys :+ RuleCompiler.term(arg, body).as("__v"): _*)
+              .where(col("__v").isNotNull)
+              .groupBy(pairNames.map(col): _*)
+              .agg(count(lit(1)).as("__s"))).df
+          }
+          // a displaced support table was served — grace-window
+          // retirement, unless its checkpoint still backs the CURRENT
+          // view, which must stay live
+          vs.support.foreach { case (_, old) =>
+            Fixpoint.checkpointRddOf(old).foreach { s =>
+              if (!Fixpoint.checkpointRddOf(cached).exists(_ eq s))
+                graft.plans.Graveyard.buryAndDrain(Some(s)) } }
+          val vNow = catalog.version
+          vs.support = Some((vNow, seeded))
+          homeOf(name, Part.Support, seeded, keyNames, 65536L, seeded)
+          pairsSeeded.foreach { case (i, p) =>
+            vs.pairs.put(i, (vNow, p)).foreach { case (_, old) => release(old) }
+            homeOf(name, Part.Pairs(i), p, pairNames, 65536L, p)
+          }
+          auxSupportSeeds += 1
+          cdPairsSeeds += pairsSeeded.length
+          aggDecrementCount += 1
+          val served = seeded.select(cols.map(col): _*)
+          // a stacked consumer reads the round's delta from the ΔG keys:
+          // the keys the changed tuples bind (every key of a key-less
+          // head, its one row)
+          if (namedDeltaWanted(name)) {
+            val dirtyOf: Option[DataFrame => DataFrame] =
+              if (kLen == 0) Some((df: DataFrame) => df)
+              else Seq(removedOf.get(changedRel), deltaOf.get(changedRel)).flatten
+                .map { b =>
+                  val bf = bindingsOf(b)
+                  bf.select(keyIdx.map(i => RuleCompiler.term(r.head.args(i), bf).as(s"c$i")): _*)
+                }.reduceOption(_ union _)
+                .flatMap(k => Fixpoint.collectUpTo(k.distinct(), 4096L))
+                .map(ks => (df: DataFrame) => sideOn(df, keyLit(ks.map(_.toSeq), df, keyNames),
+                  keyNames, anti = false))
+            dirtyOf.foreach(recordDirtySliceDelta(name, v0, named, served, _))
+          }
+          Some(served)
+        } finally if (!(body eq body0)) release(body)
+      }
+      if (stale) return seedRound()
 
       // the changed-rel frames are delta-sized by contract here — the
       // presence-checked exact removals and the anti-joined insert
       // delta. Collect each ONCE into a literal frame (bounded): every
-      // downstream consumer (ΔG pass, min/max nets, cd touched pass,
-      // old-state reconstruction) then binds a broadcastable literal
+      // downstream consumer (ΔG pass, min/max nets, cd touched pass)
+      // then binds a broadcastable literal
       // instead of re-executing the presence/anti-join plan — at scale
       // each re-execution was another (pruned) base scan. Over the cap
       // the frame stays lazy; the dirty-cap bails shortly after anyway.
@@ -1693,10 +1866,7 @@ final class Engine(val catalog: Catalog,
       }
 
       // ---- scratch lifecycle: one try/finally releases this round's
-      // scratch checkpoints (shared binding frames, the old-state body,
-      // fresh-but-uncommitted seeds) on EVERY bail path; `committed`
-      // marks the frames the commit path already handed off or released
-      // through its own superseded-state unpersists.
+      // shared binding frames on EVERY bail path.
       // Multi-cd views re-read the body bindings once per cd column
       // (their pair grains differ, so the fused single-cd collect can't
       // serve them) — those materialize each part's bindings ONCE,
@@ -1713,12 +1883,6 @@ final class Engine(val catalog: Catalog,
           bindingMats += m
           m
         })
-      var oldBck: Option[DataFrame] = None
-      var combinedFreshSeed: Option[DataFrame] = None
-      // freshly-seeded pairs tables: folded into the committed tables on
-      // success (released there), pure scratch on a bail
-      val cdSeeded = mutable.ArrayBuffer.empty[DataFrame]
-      var committed = false
       try {
 
         // signed per-binding contributions; aggregated once into ΔG
@@ -1735,8 +1899,7 @@ final class Engine(val catalog: Catalog,
               else if (decSpecs.contains(i)) {
                 // decimal-carried (f64 sum / avg): signed decimal delta
                 val c0 = RuleCompiler.term(numArgOf(i), bf)
-                val dt = try Some(bf.select(c0).schema.head.dataType)
-                  catch { case _: Throwable => None }
+                val dt = argType(numArgOf(i), bf)
                 val cd =
                   if (dt.exists(AnyValue.isAny)) AnyValue.asDouble(c0).cast(DecT)
                   else if (dt.forall(_.isInstanceOf[org.apache.spark.sql.types.NumericType]))
@@ -1746,8 +1909,7 @@ final class Engine(val catalog: Catalog,
                 coalesce(signed, lit(0L).cast(DecT)).as(s"__v$i")
               } else {
                 val c0 = RuleCompiler.term(numArgOf(i), bf)
-                val dt = try Some(bf.select(c0).schema.head.dataType)
-                  catch { case _: Throwable => None }
+                val dt = argType(numArgOf(i), bf)
                 val c =
                   if (dt.exists(AnyValue.isAny)) AnyValue.asLong(c0)
                   else if (dt.forall(_.isInstanceOf[org.apache.spark.sql.types.NumericType]))
@@ -1761,11 +1923,9 @@ final class Engine(val catalog: Catalog,
               // avg skips values its converter nulls out (any-typed
               // non-numerics) — count what the aggregate itself counts
               val cc =
-                if (avgSpecs.contains(i)) {
-                  val dt = try Some(bf.select(c0).schema.head.dataType)
-                    catch { case _: Throwable => None }
-                  if (dt.exists(AnyValue.isAny)) AnyValue.asDouble(c0) else c0
-                } else c0
+                if (avgSpecs.contains(i) && argType(numArgOf(i), bf).exists(AnyValue.isAny))
+                  AnyValue.asDouble(c0)
+                else c0
               when(cc.isNull, lit(0L)).otherwise(lit(sgn)).as(s"__nn$i")
             }
             // single-cd FUSION: aggregate at (keys, cd value) grain —
@@ -1790,9 +1950,12 @@ final class Engine(val catalog: Catalog,
             Seq(sum(col("__dn")).as("__dn")) ++
             nnSpecs.map(i => sum(col(s"__nn$i")).as(s"__nn$i")) ++
             (if (cdSpecsS.length == 1) Seq(sum(col("__c")).as("__c")) else Seq.empty)
+          // a key-less `groupBy()` emits one all-null row over an empty
+          // delta; it is no dirty group
           signedFrames.reduce(_ unionByName _)
             .groupBy(grain.map(col): _*)
             .agg(aggsOut.head, aggsOut.tail: _*)
+            .where(col("__dn").isNotNull)
         } catch { case SubBail => return None }
         // bounded dirty set; past the cap dirty-group recomputation is
         // the better plan anyway (pair grain under single-cd fusion)
@@ -1845,126 +2008,8 @@ final class Engine(val catalog: Catalog,
         // it. One frame means one dirty collect and one update pass per
         // round instead of separate view/support maintenance: a
         // maintenance round here is job-count-bound, not data-bound, and
-        // this halves the jobs. Carried forward when the version matches,
-        // else seeded from the pre-change body state (one grouped pass,
-        // head aggregates via the same aggFunc the evaluator uses).
-        // EXACT pre-change state of the changed rel (removedOf here is
-        // the exact netted map): what both seeds reconstruct against
-        val oldResolver: RuleCompiler.Resolver = (nm, ar) => {
-          val cur = resolve(nm, ar)
-          if (nm == changedRel) {
-            val mid = deltaLit match {
-              case Some(d) => Fixpoint.antiNullSafe(cur, d.toDF(cur.columns.toSeq: _*))
-              case None => cur
-            }
-            removedLit match {
-              case Some(rm) => mid.union(rm.toDF(cur.columns.toSeq: _*)).distinct()
-              case None => mid
-            }
-          } else cur
-        }
-        // the OLD-state body bindings, evaluated ONCE and shared by the
-        // combined seed and every cd pairs seed (each is a cheap grouped
-        // pass over the checkpoint instead of a full body re-evaluation);
-        // the finally block releases it on every path
-        lazy val oldB: DataFrame = {
-          val ck = RuleCompiler.compileBody(r.body, oldResolver,
-            hnswFrame, catalog.statRows).localCheckpoint(true)
-          oldBck = Some(ck)
-          ck
-        }
-        // TOP-2 per group for min/max columns over `b`'s bindings:
-        // per spec (keys, __b1_i = extremum, __k1_i = its binding count,
-        // __b2_i = runner-up, __k2_i = its count; missing group =
-        // all-null values). `specs` MUST share one argument expression —
-        // min<S> and max<S> then ride ONE (keys, value) grouped pass and
-        // one exchange (the windows share the partitioning; Spark adds a
-        // sort per direction, not a shuffle). No collect; used by the
-        // seed (full body) and the refill (key-filtered body).
-        def mmTop2Multi(b: DataFrame, specs: Seq[(String, Int)],
-                        onlyKeys: Option[DataFrame] = None): DataFrame = {
-          val i0 = specs.head._2
-          val keysX = keyIdx.map(j => RuleCompiler.term(r.head.args(j), b).as(s"c$j"))
-          val grain0 = b.select(keysX :+ RuleCompiler.term(numArgOf(i0), b).as("__v"): _*)
-            .where(col("__v").isNotNull)
-          // refill path: the broadcast key filter sits BELOW the
-          // aggregation, so the pass scans only the touched groups' rows
-          val grain1 = onlyKeys match {
-            case Some(kf) => sideOn(grain0, kf, keyNames, anti = false)
-            case None => grain0
-          }
-          val grain = grain1
-            .groupBy((keyNames :+ "__v").map(col): _*).agg(count(lit(1)).as("__k"))
-          val ranked = specs.foldLeft(grain) { case (df, (f, i)) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(keyNames.map(col): _*)
-              .orderBy(if (f == "min") col("__v").asc else col("__v").desc)
-            df.withColumn(s"__rn$i", row_number().over(w))
-          }
-          val aggs = specs.flatMap { case (_, i) => Seq(
-            max(when(col(s"__rn$i") === 1, col("__v"))).as(s"__b1$i"),
-            max(when(col(s"__rn$i") === 1, col("__k"))).as(s"__k1$i"),
-            max(when(col(s"__rn$i") === 2, col("__v"))).as(s"__b2$i"),
-            coalesce(max(when(col(s"__rn$i") === 2, col("__k"))), lit(0L))
-              .as(s"__k2$i")) }
-          ranked.where(specs.map(s => col(s"__rn${s._2}") <= 2).reduce(_ || _))
-            .groupBy(keyNames.map(col): _*).agg(aggs.head, aggs.tail: _*)
-        }
-        // the final support-frame column order — seed, carried table,
-        // and the literal replacement rows must all agree on it
-        def supportCols: Seq[Column] =
-          cols.map(col) ++ Seq(col("__n")) ++
-            nnSpecs.map(i => col(s"__nn$i")) ++
-            decSpecs.map(i => col(s"__sum$i")) ++
-            mmSpecs.flatMap { case (_, i) => Seq(
-              coalesce(col(s"__k1$i"), lit(0L)).as(s"__k1$i"),
-              col(s"__b2$i"),
-              coalesce(col(s"__k2$i"), lit(0L)).as(s"__k2$i")) }
-        // a STALE support entry (left in place by an earlier fallback
-        // round precisely because its checkpoint backed the served view
-        // then) is displaced by this round's commit and released there
-        val staleSupport = vs.support.filter(_._1 != v0)
-        val combined = vs.support match {
-          case Some((v, df)) if v == v0 => df
-          case _ =>
-            auxSupportSeeds += 1
-            val sKeys = keyIdx.map(i => RuleCompiler.term(r.head.args(i), oldB).as(s"c$i"))
-            def convOf(i: Int): Column = {
-              val c0 = RuleCompiler.term(numArgOf(i), oldB)
-              val dt = try Some(oldB.select(c0).schema.head.dataType)
-                catch { case _: Throwable => None }
-              if (avgSpecs.contains(i) && dt.exists(AnyValue.isAny))
-                AnyValue.asDouble(c0)
-              else c0
-            }
-            val sAggs = r.head.args.zipWithIndex.collect {
-              case (Agg(f, arg), i) => aggFunc(f, arg, oldB).as(s"c$i")
-            } ++ Seq(count(lit(1)).as("__n")) ++ nnSpecs.map { i =>
-              count(convOf(i)).as(s"__nn$i")
-            } ++ decSpecs.map { i =>
-              coalesce(sum(convOf(i).cast(DecT)), lit(0L).cast(DecT))
-                .cast(DecT).as(s"__sum$i")
-            }
-            var seed0 = oldB.groupBy(sKeys: _*)
-              .agg(sAggs.head, sAggs.tail: _*)
-            // graft the min/max top-2 triples on via a null-safe keyed
-            // join (left: a group of only-null values has no top-2 row);
-            // columns sharing one argument (min<S>, max<S>) fuse into
-            // one grain pass and one join
-            mmSpecs.groupBy { case (_, i) => numArgOf(i) }.values.foreach { specs =>
-              val outCols = specs.flatMap { case (_, i) =>
-                Seq(s"__b1$i", s"__k1$i", s"__b2$i", s"__k2$i") }
-              val t2 = mmTop2Multi(oldB, specs)
-                .toDF((keyNames.map(_ + "__t") ++ outCols): _*)
-              val cond = keyNames.map(k => seed0(k) <=> t2(k + "__t")).reduce(_ && _)
-              seed0 = seed0.join(t2, cond, "left")
-                .drop((keyNames.map(_ + "__t") ++
-                  specs.map { case (_, i) => s"__b1$i" }): _*)
-            }
-            val seeded = Fixpoint.materialize(seed0.select(supportCols: _*)).df
-            combinedFreshSeed = Some(seeded)
-            seeded
-        }
+        // this halves the jobs. Carried at v0 (a stale table seeded above).
+        val combined = vs.support.get._2
         // the support table's home ([[homeOf]]): under the cap its rows
         // sit on the driver, so the dirty read is a map lookup and the
         // commit a literal frame; past it the keyed carrier reads overlay
@@ -2023,21 +2068,8 @@ final class Engine(val catalog: Catalog,
               val tMap = touched.map { case (p, dc) =>
                 (p.map(SparkValues.key), dc)
               }.toMap
-              val (auxPRaw, auxP) = vs.pairs.get(i) match {
-                case Some((v, df)) if v == v0 =>
-                  (df, df.toDF((keyNames :+ "__v" :+ "__s"): _*))
-                case _ =>
-                  cdPairsSeeds += 1
-                  val seeded = Fixpoint.materialize(oldB
-                    .select(keyIdx.map(j =>
-                        RuleCompiler.term(r.head.args(j), oldB).as(s"c$j")) :+
-                      RuleCompiler.term(arg, oldB).as("__v"): _*)
-                    .where(col("__v").isNotNull)
-                    .groupBy((keyNames :+ "__v").map(col): _*)
-                    .agg(count(lit(1)).as("__s"))).df
-                  cdSeeded += seeded
-                  (seeded, seeded)
-              }
+              val auxPRaw = vs.pairs(i)._2
+              val auxP = auxPRaw.toDF((keyNames :+ "__v" :+ "__s"): _*)
               // the pairs table's home, like the support table's above
               val pairNames = keyNames :+ "__v"
               val pairsHome = homeOf(name, Part.Pairs(i), auxP, pairNames,
@@ -2273,21 +2305,9 @@ final class Engine(val catalog: Catalog,
         // runner collects a whole script's queries at the end) may still
         // hold lazy plans over it, so it ages through the
         // [[graft.plans.Graveyard]] grace window instead of being freed
-        // under a live reader. The fresh seed was never served — its
-        // rows were consumed by the materialize above — eager release.
-        if (combinedFreshSeed.exists(_ eq combined))
-          Fixpoint.checkpointRddOf(combined).foreach(_.unpersist(false))
-        else
-          graft.plans.Graveyard.buryAndDrain(Fixpoint.checkpointRddOf(combined))
+        // under a live reader.
+        graft.plans.Graveyard.buryAndDrain(Fixpoint.checkpointRddOf(combined))
         vs.support = Some((catalog.version, combinedOut))
-        // a displaced STALE support table (left in place by an earlier
-        // fallback round) was served too — same grace-window retirement,
-        // unless its checkpoint still backs the CURRENT view, which must
-        // stay live (that rare frame rides as a bounded carryover)
-        staleSupport.foreach { case (_, old) =>
-          Fixpoint.checkpointRddOf(old).foreach { s =>
-            if (!Fixpoint.checkpointRddOf(cached).exists(_ eq s))
-              graft.plans.Graveyard.buryAndDrain(Some(s)) } }
         // commit the updated pairs tables the same way
         val vNow = catalog.version
         cdAuxNew.result().foreach { case (i, home, auxP, touched, alive) =>
@@ -2295,17 +2315,10 @@ final class Engine(val catalog: Catalog,
             keyNames :+ "__v", touched, alive)
           if (home.isInstanceOf[Home.Carried]) supportParquetRounds += 1
           vs.pairs.put(i, (vNow, out)).foreach { case (_, old) =>
-            if (!(old eq out))
-              Fixpoint.checkpointRddOf(old).foreach(_.unpersist(false))
+            if (!(old eq out)) release(old)
           }
         }
-        // freshly-seeded pairs frames are folded into the committed
-        // tables above — release their checkpoint blocks (they were
-        // never cache entries, so the put-eviction above misses them)
-        cdSeeded.foreach(df =>
-          Fixpoint.checkpointRddOf(df).foreach(_.unpersist(false)))
         aggDecrementCount += 1
-        committed = true
         // NAME the exact view-level delta for stacked-view consumers:
         // per dirty group, the old view row (projection of the old
         // combined row) vs the new one — pure driver math over the
@@ -2333,16 +2346,7 @@ final class Engine(val catalog: Catalog,
         }
         Some(combinedOut.select(cols.map(col): _*))
 
-      } finally {
-        def release(df: DataFrame): Unit =
-          Fixpoint.checkpointRddOf(df).foreach(_.unpersist(false))
-        bindingMats.foreach(release)
-        oldBck.foreach(release)
-        if (!committed) {
-          combinedFreshSeed.foreach(release)
-          cdSeeded.foreach(release)
-        }
-      }
+      } finally bindingMats.foreach(release)
     }
 
     /** RANK-view (`top_k` / `top_k_threshold`) delete maintenance through
@@ -2933,152 +2937,6 @@ final class Engine(val catalog: Catalog,
       }
     }
 
-    /** GLOBAL (key-less) aggregate views under deletes: for heads made
-      * entirely of i64 sums and counts, the single view row IS the
-      * carry — a round is one delta-sized aggregate per change side plus
-      * a 1-row collect of the cached view, never a base rescan (the
-      * grouped analogue rides [[maintainAggSubtractable]]'s support
-      * table; a key-less head has nowhere to hang one). Requires a
-      * `count` column (emptiness is undecidable from sums alone — a
-      * global aggregate over an empty body is the EMPTY view, not a
-      * zero row) and bails on observed nulls, f64 sums (in-place f64
-      * subtraction drifts), min/max (a dead extremum needs a runner-up),
-      * avg, and count_distinct. */
-    private object GlobalBail extends scala.util.control.ControlThrowable
-
-    private def maintainGlobalAggDecrement(name: String, r: Rule,
-        cols: Seq[String],
-        aggSpecs: Seq[(String, Int)], changedOccs: Seq[Int],
-        deltaOf: Map[String, DataFrame], removedOf: Map[String, DataFrame],
-        cached: DataFrame, v0: Long): Option[DataFrame] = {
-      import org.apache.spark.sql.types.{LongType, StructType}
-      if (changedOccs.size != 1) return None
-      // EDB facts unioned into the head would be mistaken for the
-      // aggregate row by the single-row arithmetic — recompute
-      if (baseOf(name).isDefined) return None
-      val named = cached.toDF(cols: _*)
-      if (!aggSpecs.forall { case (f, i) =>
-        f == "count" || (f == "sum" && named.schema(i).dataType == LongType)
-      }) return None
-      val countIdx = aggSpecs.collectFirst { case ("count", i) => i }
-        .getOrElse(return None)
-      val sumArgOf: Map[Int, Term] = r.head.args.zipWithIndex.collect {
-        case (Agg("sum", t), i) => i -> t
-      }.toMap
-      if (r.body.exists { case Neg(a) =>
-        deltaOf.contains(a.rel) || removedOf.contains(a.rel); case _ => false })
-        return None
-      val changedRel = r.body(changedOccs.head) match {
-        case Pos(a) => a.rel; case _ => return None
-      }
-      val oldRows = cached.collect() // the view is ≤ 1 row by shape
-      if (oldRows.length > 1) return None
-      val old = oldRows.headOption
-      val oldN = old.map(_.getLong(countIdx)).getOrElse(0L)
-      // the aggregate's view of a sum arg — exactly what sum() compiled
-      // over (any-typed columns go through the numeric projection; its
-      // nulls are what the aggregate skipped)
-      def convOf(i: Int, b: DataFrame): Column = {
-        val c0 = RuleCompiler.term(sumArgOf(i), b)
-        val dt = try Some(b.select(c0).schema.head.dataType)
-          catch { case _: Throwable => None }
-        if (dt.exists(AnyValue.isAny)) AnyValue.asLong(c0)
-        else if (dt.forall(_.isInstanceOf[org.apache.spark.sql.types.NumericType]))
-          c0.cast("long")
-        else throw GlobalBail
-      }
-      // one delta-sized aggregate per change side: row count plus, per
-      // sum column, its total and its non-null contributor count (a
-      // null anywhere makes the subtraction inexact — bail)
-      val sumIdx = sumArgOf.keys.toSeq.sorted
-      def sideAgg(bound: DataFrame): Option[(Long, Map[Int, Long])] = {
-        val b = RuleCompiler.compileBody(r.body,
-          RuleCompiler.bindOccurrence(r, changedOccs.head, bound,
-            (nm, ar) => resolve(nm, ar)),
-          hnswFrame, catalog.statRows)
-        val aggs = count(lit(1)).as("__n") +: sumIdx.flatMap { i =>
-          val c = convOf(i, b)
-          Seq(coalesce(sum(c), lit(0L)).as(s"__s$i"), count(c).as(s"__c$i"))
-        }
-        val row = b.agg(aggs.head, aggs.tail: _*).collect().head
-        val n = row.getLong(0)
-        val sums = sumIdx.zipWithIndex.map { case (i, j) =>
-          i -> row.getLong(1 + 2 * j)
-        }.toMap
-        val nn = sumIdx.zipWithIndex.map { case (i, j) =>
-          i -> row.getLong(2 + 2 * j)
-        }
-        if (nn.exists(_._2 != n)) None else Some((n, sums))
-      }
-      val vs = state(name)
-      try {
-        val rm = removedOf.get(changedRel).map(f => sideAgg(f).getOrElse(return None))
-        val ins = deltaOf.get(changedRel).map(f => sideAgg(f).getOrElse(return None))
-        if (rm.isEmpty && ins.isEmpty) {
-          vs.restamp(v0, catalog.version); recordNamedDelta(name, v0, Nil, Nil)
-          return Some(cached)
-        }
-        val newN = oldN + ins.map(_._1).getOrElse(0L) - rm.map(_._1).getOrElse(0L)
-        if (newN < 0L) return None // contract breach → recompute
-        // NON-NULL CONTRIBUTOR counts per sum column — what decides the
-        // sum-goes-null transition (a sum whose last non-null
-        // contributor left must serve NULL, which the cached value alone
-        // can't see). Carried forward version-stamped; seeded from the
-        // CURRENT (post-change) body with one aggregate whose row count
-        // doubles as a consistency check. Deltas are null-free by the
-        // sideAgg bail, so nn moves in lockstep with n.
-        val nn: Map[Int, Long] = vs.globalNN
-          .filter(_._1 == v0).map { case (_, m) =>
-            m.map { case (i, v) => i -> (v + (newN - oldN)) }
-          }.getOrElse {
-            if (sumIdx.isEmpty) Map.empty[Int, Long]
-            else {
-              val b = RuleCompiler.compileBody(r.body,
-                (nm, ar) => resolve(nm, ar), hnswFrame, catalog.statRows)
-              val aggs = count(lit(1)).as("__n") +:
-                sumIdx.map(i => count(convOf(i, b)).as(s"__c$i"))
-              val row = b.agg(aggs.head, aggs.tail: _*).collect().head
-              if (row.getLong(0) != newN) return None // view out of sync
-              sumIdx.zipWithIndex.map { case (i, j) =>
-                i -> row.getLong(1 + j) }.toMap
-            }
-          }
-        if (nn.values.exists(v => v < 0L || v > newN)) return None
-        val spark = catalog.spark
-        val schema = StructType(named.schema.fields.map(_.copy(nullable = true)))
-        aggDecrementCount += 1
-        vs.globalNN = Some((catalog.version, nn))
-        if (newN == 0L) {
-          // view dies to empty: the old single row is the exact removal
-          recordNamedDelta(name, v0, Nil, old.toSeq)
-          return Some(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-        }
-        val vals = cols.indices.map { i =>
-          if (sumArgOf.contains(i)) {
-            if (nn(i) == 0L) null // no non-null contributors remain
-            else {
-              // a NULL old sum means zero non-null contributors then —
-              // its value contribution is exactly 0
-              val oldS = old.map(o =>
-                if (o.isNullAt(i)) 0L else o.getLong(i)).getOrElse(0L)
-              (oldS + ins.map(_._2(i)).getOrElse(0L) -
-                rm.map(_._2(i)).getOrElse(0L)): java.lang.Long
-            }
-          } else (newN: java.lang.Long) // non-sum head columns are counts
-        }
-        val newRow = org.apache.spark.sql.Row.fromSeq(vals)
-        // exact single-row swap for stacked-view consumers
-        old match {
-          case Some(o) if SparkValues.key(o.toSeq) == SparkValues.key(newRow.toSeq) =>
-            recordNamedDelta(name, v0, Nil, Nil)
-          case _ => recordNamedDelta(name, v0, Seq(newRow), old.toSeq)
-        }
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(Seq(newRow), 1), schema))
-      } catch { case GlobalBail => None }
-    }
-
     /** Incremental view maintenance (reference: DD keeps every
       * persistent rule's materialization up to date per update,
       * `src/incremental.rs`; its BENCHMARKS.md headline is
@@ -3101,9 +2959,9 @@ final class Engine(val catalog: Catalog,
       *    diffs: the lower view's named delta when its path recorded one,
       *    else a bounded old-vs-new diff of its materialization;
       *  - aggregate and rank heads through their carried state: per-group
-      *    decrement on the support and pairs tables, the rank prefix
-      *    buffer, the within_radius carry, the global-aggregate row
-      *    swap, or dirty-group recomputation. */
+      *    decrement on the support and pairs tables (a key-less head as
+      *    one group), the rank prefix buffer, the within_radius carry, or
+      *    dirty-group recomputation. */
     private def tryMaintain(name: String): Option[DataFrame] = {
       if (!byHead.contains(name)) return None
       val (v0, cached) = cacheLatest(name).getOrElse(return None)
@@ -3121,23 +2979,8 @@ final class Engine(val catalog: Catalog,
       // deletes on unknown tuples, replaces, schema coercions) invalidate
       if (changes.exists(c => c.rel == "*" || (c.delta == null && c.removed == null)))
         return None
-      // catalog-log view of the round; the downstream-visible
-      // changedRels/hasRemovals (defined after the stratum-diff
-      // injection below) may additionally carry positive DERIVED
-      // dependencies whose own delta was obtained by diffing
-      val hasRemovals0 = changes.exists(_.removed != null)
       val changedRels0 = changes.map(_.rel).toSet
       if (changedRels0.exists(byHead.contains)) return None // derived rel changed
-
-      // dependency closure of a relation through the rule graph
-      def depsOf(rel: String, seen: mutable.HashSet[String] = mutable.HashSet.empty): Set[String] = {
-        if (!seen.add(rel)) return Set.empty
-        val direct = byHead.getOrElse(rel, Seq.empty).flatMap(_.body.collect {
-          case Pos(a) => a.rel
-          case Neg(a) => a.rel
-        })
-        direct.toSet ++ direct.flatMap(d => depsOf(d, seen))
-      }
       val deps = depsOf(name) + name
       // a rule change whose head lies inside this view's closure means
       // derivations appeared or vanished in ways the delta algebra
@@ -3147,10 +2990,38 @@ final class Engine(val catalog: Catalog,
         // untouched: still valid. Re-stamp the carried maintenance state
         // alongside the view (cachePut moves it to the new version) —
         // stranded at v0 it would read stale on the next REAL round and
-        // force a full-body reseed of the buffer/support tables
+        // force a full-body reseed of the buffer/support tables. A
+        // re-stamp is not a maintenance round: `maintainedCount` stays
         views.get(name).foreach(_.restamp(v0, catalog.version))
         return Some(cached)
       }
+      val out = maintainReached(name, v0, cached, changes)
+      if (out.isDefined) maintainedCount += 1
+      out
+    }
+
+    /** Dependency closure of a relation through the rule graph. */
+    private def depsOf(rel: String,
+        seen: mutable.HashSet[String] = mutable.HashSet.empty): Set[String] = {
+      if (!seen.add(rel)) return Set.empty
+      val direct = byHead.getOrElse(rel, Seq.empty).flatMap(_.body.collect {
+        case Pos(a) => a.rel
+        case Neg(a) => a.rel
+      })
+      direct.toSet ++ direct.flatMap(d => depsOf(d, seen))
+    }
+
+    /** A [[tryMaintain]] round for a view the round's fact changes reach:
+      * `changes` holds them, each with a delta, since the view's cached
+      * version `v0`. */
+    private def maintainReached(name: String, v0: Long, cached: DataFrame,
+        changes: Seq[catalog.Change]): Option[DataFrame] = {
+      // catalog-log view of the round; the downstream-visible
+      // changedRels/hasRemovals (defined after the stratum-diff
+      // injection below) may additionally carry positive DERIVED
+      // dependencies whose own delta was obtained by diffing
+      val hasRemovals0 = changes.exists(_.removed != null)
+      val changedRels0 = changes.map(_.rel).toSet
       val scc = Stratifier.sccOf(rules).getOrElse(name, Set(name))
       // mutual recursion is maintained SCC-jointly, so every member's
       // cache must exist at the SAME version — mixed-version snapshots
@@ -3512,7 +3383,7 @@ final class Engine(val catalog: Catalog,
         // without bound
         val out = Fixpoint.materialize(clean.union(dirtyNew)).df
         // rows can only change inside the dirty groups
-        recordDirtySliceDelta(name, v0, cached.toDF(cols: _*), out, dirtyPred)
+        recordDirtySliceDelta(name, v0, cached.toDF(cols: _*), out, _.where(dirtyPred))
         Some(out)
       }
 
@@ -3963,13 +3834,7 @@ final class Engine(val catalog: Catalog,
               // subtractable round finds its version stale, seeds fresh,
               // and releases it then (view-aliasing checked at that
               // point, where the superseded view is provably dead).
-              if (hasRemovals) {
-                if (keyIdxAll.isEmpty)
-                  maintainGlobalAggDecrement(name, r, cols, aggSpecs,
-                    changedOccs, deltaOf, removedExactOf, cached, v0)
-                    .foreach(df => return Some(df))
-                return dirtyGroupMaintain(r, keyIdxAll)
-              }
+              if (hasRemovals) return dirtyGroupMaintain(r, keyIdxAll)
           }
         }
         if (changedOccs.length != 1 ||
@@ -4549,7 +4414,7 @@ final class Engine(val catalog: Catalog,
             val out = Fixpoint.materialize(
               cached.toDF(cols: _*).where(!dirtyPred).union(fresh)).df
             // rows can only change where the link predicate matches
-            recordDirtySliceDelta(name, v0, cached.toDF(cols: _*), out, dirtyPred)
+            recordDirtySliceDelta(name, v0, cached.toDF(cols: _*), out, _.where(dirtyPred))
             Some(out)
           }
           // Path order: on PROVABLY-SMALL inputs (every base relation in
@@ -5241,13 +5106,6 @@ final class Engine(val catalog: Catalog,
       } finally scc.foreach(inProgress -= _)
     }
 
-    /** Specialized transitive-closure fast path (reference
-      * `src/code_generator/mod.rs:424-1002`): detects
-      *   r(X,Y) <- e(X,Y);  r(X,Z) <- r(X,Y), e(Y,Z)   (or left-linear)
-      * over a non-recursive edge relation and routes to [[Fixpoint]]'s
-      * dedicated closure (driver-local BFS for small graphs, distributed
-      * semi-naive loop at scale). A position-0 demand constant becomes a
-      * seeded [[Fixpoint.boundReachability]] — the bound-TC fast path. */
     /** Matches the 2-rule linear-TC shape `r(X,Y) <- e(X,Y);
       * r(X,Z) <- r(X,Y), e(Y,Z)` (or left-linear) and returns the edge
       * relation name. Shared by the fast path and local maintenance. */
@@ -5273,6 +5131,13 @@ final class Engine(val catalog: Catalog,
       }
     }
 
+    /** Specialized transitive-closure fast path (reference
+      * `src/code_generator/mod.rs:424-1002`): detects
+      *   r(X,Y) <- e(X,Y);  r(X,Z) <- r(X,Y), e(Y,Z)   (or left-linear)
+      * over a non-recursive edge relation and routes to [[Fixpoint]]'s
+      * dedicated closure (driver-local BFS for small graphs, distributed
+      * semi-naive loop at scale). A position-0 demand constant becomes a
+      * seeded [[Fixpoint.boundReachability]] — the bound-TC fast path. */
     private def tcFastPath(scc: Set[String], sccRules: Seq[Rule]): Option[(String, DataFrame)] = {
       if (scc.size != 1) return None
       val rel = scc.head
@@ -5435,9 +5300,6 @@ final class Engine(val catalog: Catalog,
       case _ => throw new IllegalArgumentException(s"unknown aggregate $f")
     }
 
-    /** Semi-naive evaluation of one recursive component (handles mutual
-      * recursion). min/max aggregate heads route to the value-iteration
-      * evaluator; other aggregates inside a recursive SCC are rejected. */
     /** Driver-local fast path for small pure-positional recursive SCCs
       * (see [[LocalEval]]): derive the base parts normally, collect them
       * (bounded) together with the non-SCC body relations, solve the
@@ -5515,6 +5377,9 @@ final class Engine(val catalog: Catalog,
       out
     }
 
+    /** Semi-naive evaluation of one recursive component (handles mutual
+      * recursion). min/max aggregate heads route to the value-iteration
+      * evaluator; other aggregates inside a recursive SCC are rejected. */
     private def evalRecursiveScc(scc: Set[String], sccRules: Seq[Rule]): Unit = {
       val aggRules = sccRules.filter(_.head.args.exists(_.isInstanceOf[Agg]))
       if (aggRules.nonEmpty) return evalRecursiveAggScc(scc, sccRules, aggRules)

@@ -373,13 +373,28 @@ class HnswSpec extends SparkSpec {
     assert(catG.indexes.contains(("gvecs", "embedding")))
     assert(batchRows(catG, "gvecs", 64) == singleRows(catG, "gvecs", 64),
       "graph backend batch != per-query")
-    // r16: LARGE batches ride a broadcast (qi, qv, pc) frame instead of
-    // plan literals — force that carrier on the same small batch and
-    // pin row equality against the literal carrier's results
-    catD.batchLiteralCells = 0L
-    for (ef <- Seq(64, 16 * 16))
-      assert(batchRows(catD, "bvecs", ef) == singleRows(catD, "bvecs", ef),
-        s"broadcast-carrier batch != per-query at efSearch=$ef")
+    // LARGE batches ride a broadcast (qi, qv, pc) frame instead of plan
+    // literals: past 8,192 cells of queries × (dim + probed cells). At
+    // dim 8 the 64-cell quantizer probes 24 cells at efSearch 64 and all
+    // 64 at 256, so 300 queries take the broadcast carrier and chunks of
+    // 100 stay literal. Pin the one batch row-for-row against the chunks
+    val many = mkVecs(300, 8).map(_._2)
+    def rowsOf(df: org.apache.spark.sql.DataFrame, qiBase: Long): Seq[(Long, Long, Double)] =
+      df.collect().map(r => (qiBase + r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def joins(df: org.apache.spark.sql.DataFrame): Int = df.queryExecution.optimizedPlan
+      .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+    for (ef <- Seq(64, 16 * 16)) {
+      val batch = catD.hnswSearchBatch("bvecs", "embedding", many, 10, ef)
+      val chunks = many.grouped(100).toSeq
+        .map(catD.hnswSearchBatch("bvecs", "embedding", _, 10, ef))
+      assert(chunks.forall(joins(_) < joins(batch)),
+        s"300 queries should join a broadcast query frame at efSearch=$ef")
+      val broadcastRows = rowsOf(batch, 0L)
+      val chunkRows = chunks.zipWithIndex.flatMap { case (df, ci) => rowsOf(df, ci * 100L) }
+      assert(broadcastRows.sorted == chunkRows.sorted,
+        s"broadcast-carrier batch != literal chunks at efSearch=$ef")
+      assert(broadcastRows.map(_._1).distinct.size == many.size)
+    }
   }
 
   test("tombstone ratio past threshold auto-rebuilds the graph") {

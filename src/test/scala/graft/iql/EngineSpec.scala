@@ -401,11 +401,12 @@ class EngineSpec extends SparkSpec {
         |+ps(N, S) <- person(N, I), score(I, S)
         |""".stripMargin)
     assert(rows(e.run("?ps(N, S)").last) == Set(Seq("a", 10L)))
-    // unrelated relation: cache stays valid, no recompute
+    // unrelated relation: cache stays valid, no recompute; the view is
+    // re-stamped, which is not a maintenance round
     e.run("+other[(99)]")
     assert(rows(e.run("?ps(N, S)").last) == Set(Seq("a", 10L)))
     val c1 = e.maintainedCount
-    assert(c1 >= 1)
+    assert(c1 == 0)
     // insert into each side of the join
     e.run("+score[(2, 20)]")
     assert(rows(e.run("?ps(N, S)").last) == Set(Seq("a", 10L), Seq("b", 20L)))
@@ -2176,8 +2177,9 @@ class EngineSpec extends SparkSpec {
   }
 
   test("global sum goes NULL when its last non-null contributor is deleted") {
-    // the view's single row can't see the transition — the carried
-    // non-null contributor count (globalAggNN) decides it; serving 0
+    // the view's single row can't see the transition — the non-null
+    // contributor count `__nn` on the support table's one group decides
+    // it; serving 0
     // where a fresh recompute gives NULL was the round-12 review bug
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -2198,7 +2200,7 @@ class EngineSpec extends SparkSpec {
   test("session fact changes evict carried global-agg NN state") {
     // a session fact add invalidates the view WITHOUT bumping the
     // catalog version; the recomputed view re-caches at the same
-    // version, so a globalAggNN entry left behind would pass the next
+    // version, so a support table left behind would pass the next
     // delete round's version check with a PRE-session-change non-null
     // count — here it would say 0 non-null contributors remain and the
     // sum would wrongly serve NULL over a live session fact of 8
@@ -2212,7 +2214,8 @@ class EngineSpec extends SparkSpec {
       java.util.Arrays.asList(Row(1L, 5L), Row(2L, 6L), Row(3L, null)), schema))
     e.run("+sv(sum<S>, count<S>) <- snn(I, S)")
     assert(rows(e.run("?sv(S, C)").last) == Set(Seq(11L, 3L)))
-    // first decrement round seeds globalAggNN from the post-change body
+    // the first delete round seeds the support table from the post-change
+    // body
     e.run("-snn[(1, 5)]")
     assert(rows(e.run("?sv(S, C)").last) == Set(Seq(6L, 2L)))
     // session fact: adds a non-null contributor, invalidates the view,
@@ -2310,12 +2313,43 @@ class EngineSpec extends SparkSpec {
     e.run("-emp9[(1, 10)]") // seeds the support table
     e.run("?vt9(D, S, C)")
     assert(e.auxSupportSeeds == s0 + 1)
+    val m0 = e.maintainedCount
     e.run("+unrel9[(1)]") // untouched round for vt9
     e.run("?vt9(D, S, C)")
+    assert(e.maintainedCount == m0,
+      "a round whose changes cannot reach the view is a re-stamp, not a maintenance round")
     e.run("-emp9[(2, 20)]") // must RIDE, not reseed
     assert(rows(e.run("?vt9(D, S, C)").last) == Set(Seq(3L, 30L, 1L)))
     assert(e.auxSupportSeeds == s0 + 1,
       "unrelated change must not force a support reseed")
+  }
+
+  test("key-less aggregate heads ride the support table as one group under every tier") {
+    val prog =
+      """+kt[(1, 10), (2, 20), (3, 20), (4, 40)]
+        |+ks(sum<S>, count<S>) <- kt(I, S)
+        |+km(min<S>, max<S>, count_distinct<S>, avg<S>) <- kt(I, S)
+        |""".stripMargin
+    val queries = Seq("?ks(S, C)", "?km(L, H, N, A)")
+    // the last round empties the body, so both views must go empty
+    val rounds = Seq("-kt[(1, 10)]", "-kt[(4, 40)]", "+kt[(5, 5)]",
+      "-kt[(2, 20), (3, 20), (5, 5)]")
+    for (tier <- Seq(Engine.Tier.Auto, Engine.Tier.Carrier, Engine.Tier.Distributed)) {
+      val e = new Engine(new Catalog(spark), Engine.Limits(tier))
+      e.run(prog)
+      queries.foreach(e.run)
+      val d0 = e.aggDecrementCount
+      rounds.indices.foreach { n =>
+        e.run(rounds(n))
+        val fresh = new Engine(new Catalog(spark))
+        fresh.run(prog + rounds.take(n + 1).mkString("\n"))
+        queries.foreach(q => assert(rows(e.run(q).last) == rows(fresh.run(q).last),
+          s"$tier round $n: $q differs from a fresh engine"))
+      }
+      assert(e.aggDecrementCount == d0 + 2 * rounds.size,
+        s"$tier: every round of both views should decrement")
+      assert(queries.forall(q => rows(e.run(q).last).isEmpty))
+    }
   }
 
   test("a riding delete round stays within its Spark job budget, grouped and key-less") {
@@ -2415,8 +2449,9 @@ class EngineSpec extends SparkSpec {
     (prog +: (seedRound ++ round)).foreach(fresh.run)
     val expected = views(fresh)
     tiers.foreach(t => assert(moved(t)._1 == expected, s"$t rows differ from a fresh engine"))
-    // every tier maintains all five views in both rounds, none recomputes...
-    assert(tiers.map(moved(_)._2("maintainedCount")).distinct == Seq(10L))
+    // every tier maintains each of the five views once, by the statement
+    // that reaches it, and none recomputes (re-stamps are not counted)...
+    assert(tiers.map(moved(_)._2("maintainedCount")).distinct == Seq(5L))
     // ...each through its own paths
     def ran(t: Engine.Tier): Set[String] =
       (moved(t)._2 - "maintainedCount").collect { case (k, n) if n > 0 => k }.toSet

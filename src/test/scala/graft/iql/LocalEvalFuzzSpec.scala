@@ -123,8 +123,8 @@ class LocalEvalFuzzSpec extends SparkSpec {
       }
       // r14: the remaining aggregate head classes join the sampler —
       // min/max (top-2 carry), avg + count_distinct (pairs tables),
-      // GLOBAL sum/count (keyless: globalAggNN carry), and ungrouped
-      // within_radius (filter semantics)
+      // GLOBAL sum/count (key-less: one group on the support table),
+      // and ungrouped within_radius (filter semantics)
       if (rng.nextBoolean()) {
         sb.append("+mv(X, min<Y>, max<Y>) <- r(X, Y)\n"); queries += "?mv(X, Mn, Mx)"
       }
@@ -139,7 +139,7 @@ class LocalEvalFuzzSpec extends SparkSpec {
         sb.append("+wv(within_radius<1, X, Y>) <- r(X, Y)\n"); queries += "?wv(X, Y)"
       }
       // a droppable view for mid-stream RULE CHURN (dependency-scoped
-      // invalidation + the r13 globalAggNN session-change eviction):
+      // invalidation + the session-change eviction of carried state):
       // exact-clause removal, so no anonymous vars in the body
       val churnRule = "+cv(X, count<Y>) <- r(X, Y), !blk(X)"
       sb.append(churnRule).append('\n')

@@ -727,21 +727,33 @@ class MaintenanceFuzzSpec extends SparkSpec {
 
   test("global aggregate decrement equals fresh recomputation on random streams") {
     val rng = new Random(20260902L)
+    // key-less heads ride the support table as one group: i64 sum/count,
+    // avg with an f64 sum (F = X/4: quarters are exact in binary and in
+    // the decimal carry, so maintained and recomputed values agree bit
+    // for bit), count_distinct on the pairs table, min/max on the top-2
+    // carry
+    val heads = Seq(
+      "gv" -> ("+gv(sum<X>, count<X>) <- t(I, X, F)\n", "?gv(S, C)"),
+      "ga" -> ("+ga(avg<X>, sum<F>) <- t(I, X, F)\n", "?ga(A, S)"),
+      "gd" -> ("+gd(count_distinct<X>) <- t(I, X, F)\n", "?gd(N)"),
+      "gm" -> ("+gm(min<X>, max<X>) <- t(I, X, F)\n", "?gm(L, H)"))
+    val rule = heads.map(_._2._1).mkString
     (1 to 8).foreach { c =>
       var nextId = 0
       val live = scala.collection.mutable.ArrayBuffer.empty[String]
       def mkTuple(): String = {
         nextId += 1
-        s"($nextId, ${rng.nextInt(50)})"
+        val x = rng.nextInt(50)
+        s"($nextId, $x, ${x * 0.25})"
       }
       def insBatch(n: Int): String = (0 until n).map { _ =>
         val t = mkTuple(); live += t; t
       }.mkString(",")
-      val rule = "+gv(sum<X>, count<X>) <- t(I, X)\n"
       val e1 = new Engine(new Catalog(spark))
       e1.run(s"+t[${insBatch(6 + rng.nextInt(6))}]\n$rule")
-      e1.run("?gv(S, C)")
-      val d0 = e1.aggDecrementCount
+      heads.foreach { case (_, (_, q)) => e1.run(q) }
+      // decrement rounds per head: each query resolves only its own view
+      val decs = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
       (0 until 3 + rng.nextInt(3)).foreach { round =>
         val nDel = math.min(live.size, rng.nextInt(4))
         val dels = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -749,25 +761,29 @@ class MaintenanceFuzzSpec extends SparkSpec {
           val i = rng.nextInt(live.size)
           dels += live.remove(i)
         }
-        if (rng.nextBoolean()) dels += "(9999, 1)" // phantom
+        if (rng.nextBoolean()) dels += "(9999, 1, 0.25)" // phantom
         val stmts = Seq.newBuilder[String]
         if (dels.nonEmpty) stmts += s"-t[${dels.mkString(",")}]"
         if (rng.nextBoolean()) stmts += s"+t[${insBatch(1 + rng.nextInt(3))}]"
         val prog = stmts.result().mkString("\n")
         if (prog.nonEmpty) e1.run(prog)
-        val maintained = rows(e1.run("?gv(S, C)").last)
-        val expected =
-          if (live.isEmpty) Set.empty[Seq[Any]]
-          else {
-            val e2 = new Engine(new Catalog(spark))
-            e2.run(s"+t[${live.mkString(",")}]\n$rule")
-            rows(e2.run("?gv(S, C)").last)
-          }
-        assert(maintained == expected,
-          s"case $c round $round diverged; live=$live")
+        val e2 = if (live.isEmpty) None else {
+          val e = new Engine(new Catalog(spark))
+          e.run(s"+t[${live.mkString(",")}]\n$rule")
+          Some(e)
+        }
+        heads.foreach { case (h, (_, q)) =>
+          val d0 = e1.aggDecrementCount
+          val maintained = rows(e1.run(q).last)
+          decs(h) += e1.aggDecrementCount - d0
+          val expected = e2.fold(Set.empty[Seq[Any]])(e => rows(e.run(q).last))
+          assert(maintained == expected,
+            s"case $c round $round $h diverged; live=$live")
+        }
       }
-      assert(e1.aggDecrementCount > d0,
-        s"case $c never took the global decrement path")
+      heads.foreach { case (h, _) =>
+        assert(decs(h) > 0L, s"case $c $h never took the decrement path")
+      }
     }
   }
 
