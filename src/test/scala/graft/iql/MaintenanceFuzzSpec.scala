@@ -1274,6 +1274,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
     val limits = Engine.Limits(
       if (pinLegacyCommit) Engine.Tier.Distributed else Engine.Tier.Carrier)
     val rng = new Random(20260917L)
+    var overlayRounds = 0L
     (1 to 4).foreach { c =>
       val groups = Seq("a", "b", "c")
       var nextId = 0
@@ -1316,12 +1317,18 @@ class MaintenanceFuzzSpec extends SparkSpec {
       assert(e1.aggLocalRounds == 0L, "local mode must stay off under the flag")
       assert(e1.aggDecrementCount > decStart,
         s"case $c never took the subtractable decrement path")
+      // a seed round serves the seed and commits nothing, so only the
+      // riding rounds (decrements past the seeds) commit via the overlay
+      val riding = e1.aggDecrementCount - decStart - e1.auxSupportSeeds
       if (pinLegacyCommit)
         assert(e1.supportParquetRounds == 0L,
           "legacy run must not touch the parquet overlay path")
-      else
+      else if (riding > 0L)
         assert(e1.supportParquetRounds > 0L,
-          s"case $c never committed via the parquet overlay")
+          s"case $c rode $riding rounds, none via the parquet overlay")
+      overlayRounds += e1.supportParquetRounds
     }
+    if (!pinLegacyCommit)
+      assert(overlayRounds > 0L, "no case committed via the parquet overlay")
   }
 }
