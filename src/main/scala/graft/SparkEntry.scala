@@ -2028,11 +2028,12 @@ object SparkEntry {
       e.run("?avgm(D, A, C)").last // dirty-group maintained, not recomputed
     }),
 
-    // --- IQL: COUNT_DISTINCT DELTA-MERGE — insert-only batches maintain
-    //     the cd view through the auxiliary distinct-pairs table (new
-    //     pairs anti-join it, per-group increments merge by addition)
-    //     instead of per-dirty-group recomputation; two rounds so the
-    //     second rides the carried-forward table -----------------------
+    // --- IQL: COUNT_DISTINCT INSERTS — insert-only batches maintain the
+    //     cd view through its carried support and distinct-pairs tables
+    //     (a touched pair's binding support rises; a pair born raises
+    //     its group's distinct count) instead of per-dirty-group
+    //     recomputation; the first round seeds the tables from the
+    //     post-change body, the second rides them ----------------------
     "q143_iql_cd_merge" -> ((s, dir) => {
       val e = iqlEngine(s, dir)
       e.catalog.register("cemp", T(s, dir, "orders").select(
@@ -2046,7 +2047,7 @@ object SparkEntry {
       e.run("+cemp[(900000001, 0, 77), (900000002, 0, 77), (900000003, 1, 78)]")
       e.run("?cdm(D, C, S, N)")
       e.run("+cemp[(900000004, 0, 78), (900000005, 200, 1)]")
-      e.run("?cdm(D, C, S, N)").last // cd delta-merged, not recomputed
+      e.run("?cdm(D, C, S, N)").last // rides the pairs table, not recomputed
     }),
 
     // --- pipeline: corpus length distribution (exact discrete quantiles) ---------------------
@@ -4261,7 +4262,7 @@ object SparkEntry {
         |FROM aemp GROUP BY dept""".stripMargin,
 
     // the cd view after BOTH insert batches — counts must reflect the
-    // delta-merged pairs table, not a stale or double-counted state
+    // carried pairs table, not a stale or double-counted state
     "q143_iql_cd_merge" ->
       """WITH cemp AS (
         |SELECT o_orderkey AS id, o_custkey % 100 AS dept,

@@ -414,9 +414,6 @@ final class Engine(val catalog: Catalog,
     * driver-local closure pass (under [[Engine.tcLocalClosureCap]]). */
   private[graft] var tcLocalRounds: Long = 0L
 
-  /** Observability: count_distinct delta-merges served (tests pin the
-    * path, not just the result). */
-  private[graft] var cdMergedCount: Long = 0L
   /** Observability: rank riding rounds merged entirely driver-locally
     * (the cap-gated fast path; tests pin it). */
   private[graft] var rankLocalRides: Long = 0L
@@ -444,11 +441,12 @@ final class Engine(val catalog: Catalog,
     var support: Option[(Long, DataFrame)] = None
     /** COUNT_DISTINCT state by head column: the (group-keys, value)
       * binding pairs WITH their binding-support counts (`__s`) — what
-      * makes count_distinct maintenance O(delta) in both directions:
-      * inserts anti-join for genuinely-new pairs (per-group increments
-      * merge by addition) and bump supports of matched pairs; deletes
-      * decrement supports, and only a pair whose LAST binding goes
-      * (support hits 0) decrements the distinct count. Version-stamped. */
+      * makes count_distinct maintenance O(delta) in both directions.
+      * Seeded with [[support]] from the post-change body and updated
+      * only by [[maintainAggSubtractable]]: a round adds each touched
+      * pair's signed binding delta to its support, a pair BORN (support
+      * 0 → >0) raises its group's distinct count and a pair whose LAST
+      * binding goes (support hits 0) lowers it. Version-stamped. */
     val pairs = mutable.HashMap.empty[Int, (Long, DataFrame)]
     /** Driver-resident row copies of the support table, the pairs tables
       * and the rank buffer, valid only while their frame IS the live
@@ -1530,7 +1528,8 @@ final class Engine(val catalog: Catalog,
       * netted EXACT removal map (`Change.removedExact` — the lazy
       * presence semi-join [[Catalog.delete]] logs beside the free raw
       * literals), so no phantom decrements; (2)
-      * with a single occurrence of the single changed relation, a body
+      * with one changed occurrence in the body (relations the round
+      * changed outside the body do not matter), a body
       * binding determines the tuple at that occurrence — vanished
       * derivations are exactly the bindings through removed tuples, new
       * ones exactly those through inserts, and delete-then-reinsert
@@ -1553,7 +1552,7 @@ final class Engine(val catalog: Catalog,
       * rows), never a view-sized shuffle join. */
     private def maintainAggSubtractable(name: String, r: Rule,
         cols: Seq[String], aggSpecs: Seq[(String, Int)], keyIdx: Seq[Int],
-        changedOccs: Seq[Int], changedRels: Set[String],
+        changedOccs: Seq[Int],
         deltaOf: Map[String, DataFrame], removedOf: Map[String, DataFrame],
         cached: DataFrame, v0: Long,
         tinyLiteralRound: Boolean): Option[DataFrame] = {
@@ -1565,7 +1564,6 @@ final class Engine(val catalog: Catalog,
         case Pos(a) => a.rel
         case _ => return None
       }
-      if (changedRels != Set(changedRel)) return None
       if (r.body.exists { case Neg(a) => a.rel == changedRel; case _ => false })
         return None
       val named = cached.toDF(cols: _*)
@@ -3781,13 +3779,14 @@ final class Engine(val catalog: Catalog,
         // MERGEABLE-AGGREGATE maintenance (reference BENCHMARKS.md:91-93
         // — "re-query dept sums after +N rows" in single-digit ms): for a
         // single non-recursive rule whose aggregates are all decomposable
-        // (sum/count/min/max), aggregate ONLY the new body bindings and
-        // merge per group with the cached result. count_distinct merges
-        // too, against the auxiliary distinct-pairs table (below). avg is
-        // not insert-mergeable (avg·count re-multiplication is float-
-        // lossy vs recompute); multiple changed atoms in one rule would
-        // double-count delta×delta bindings — both fall through to
-        // DIRTY-GROUP maintenance instead of full recompute.
+        // (sum/count/min/max), an insert round aggregates ONLY the new
+        // body bindings and merges per group with the cached result.
+        // count_distinct has no stateless merge: its rounds ride the
+        // carried pairs tables (below). avg is not insert-mergeable
+        // (avg·count re-multiplication is float-lossy vs recompute);
+        // multiple changed atoms in one rule would double-count
+        // delta×delta bindings — both fall through to DIRTY-GROUP
+        // maintenance instead of full recompute.
         if (sccRules.length != 1 || isRecursive || changedRels(name))
           return None
         // EDB facts unioned into the head: the merge/decrement algebra
@@ -3800,9 +3799,6 @@ final class Engine(val catalog: Catalog,
         }
         val aggIdxSet = aggSpecs.map(_._2).toSet
         val keyIdxAll = cols.indices.filterNot(aggIdxSet)
-        val cdSpecs = r.head.args.zipWithIndex.collect {
-          case (Agg("count_distinct", arg), i) => (arg, i)
-        }
         // negation-driven binding changes: the merge/subtractable paths
         // bind the positive occurrence and can't see them — dirty-group
         // keys from the flipped negated occurrence instead (the carried
@@ -3814,14 +3810,19 @@ final class Engine(val catalog: Catalog,
         // (reference BENCHMARKS.md:91-93 shape) riding the carried
         // [[ViewState.support]] table instead of dirty-group
         // recomputation. Insert rounds that find a live support table
-        // route through the same path so the table stays current.
-        if (hasRemovals || views.get(name).exists(_.support.exists(_._1 == v0))) {
+        // route through the same path so the table stays current, and
+        // so does every round of a count_distinct view: its pairs tables
+        // ([[ViewState.pairs]]) are the only state that tells a new
+        // distinct value from a repeated one.
+        val cdHead = aggSpecs.exists(_._1 == "count_distinct")
+        if (hasRemovals || cdHead ||
+            views.get(name).exists(_.support.exists(_._1 == v0))) {
           // tiny-literal-delete rounds over big/unknown-size bases don't
           // amortize a first-round seed (see the gate in
           // maintainAggSubtractable); literal-built small bases and any
           // round with a carried table are unaffected
           maintainAggSubtractable(name, r, cols, aggSpecs, keyIdxAll,
-            changedOccs, changedRels, deltaOf, removedExactOf, cached, v0,
+            changedOccs, deltaOf, removedExactOf, cached, v0,
             tinyLiteralRound = tinyLiteralRound) match {
             case Some(df) => return Some(df)
             case None =>
@@ -3834,140 +3835,20 @@ final class Engine(val catalog: Catalog,
               // subtractable round finds its version stale, seeds fresh,
               // and releases it then (view-aliasing checked at that
               // point, where the superseded view is provably dead).
-              if (hasRemovals) return dirtyGroupMaintain(r, keyIdxAll)
+              if (hasRemovals || cdHead) return dirtyGroupMaintain(r, keyIdxAll)
           }
         }
         if (changedOccs.length != 1 ||
-            !aggSpecs.forall { case (f, _) =>
-              Set("sum", "count", "min", "max")(f) || f == "count_distinct" } ||
-            (cdSpecs.nonEmpty && keyIdxAll.isEmpty))
+            !aggSpecs.forall { case (f, _) => Set("sum", "count", "min", "max")(f) })
           return dirtyGroupMaintain(r, keyIdxAll)
 
-        val deltaAggDf: DataFrame = if (cdSpecs.isEmpty) {
-          // the delta aggregation stays LAZY: the local-merge collect
-          // below is its only execution in the common path (its emptiness
-          // check rides along) — materializing first would add a
-          // checkpoint + count job per re-query. Only the distributed
-          // fallback materializes it (the full_outer join reads it twice).
-          deltaDerive(r, changedOccs.head,
-            m => if (m == name) Some(cached) else None)
-        } else {
-          // COUNT_DISTINCT delta-merge: cd(key) can only GROW under
-          // inserts, by the number of genuinely-new distinct values —
-          // new pairs = the delta bindings' distinct (keys, value) pairs
-          // anti-joined against the auxiliary pairs table at v0. The
-          // per-key increments then merge by ADDITION (count semantics),
-          // riding the same column-wise merge as sum/count below. The
-          // aux table seeds from the pre-change body state on first use
-          // (the one changed rel resolves to current ∖ delta; every
-          // other rel is unchanged) and carries forward O(delta)-updated
-          // afterwards — the reference's arranged per-group multisets,
-          // as a maintained side table.
-          val changedRel = r.body(changedOccs.head) match {
-            case Pos(a) => a.rel
-            case _ => return dirtyGroupMaintain(r, keyIdxAll)
-          }
-          val groupTermIdx = r.head.args.zipWithIndex.collect {
-            case (t, i) if !t.isInstanceOf[Agg] => i
-          }
-          def bindingsOf(resolver: RuleCompiler.Resolver): DataFrame =
-            RuleCompiler.compileBody(r.body, resolver, hnswFrame, catalog.statRows)
-          // (keys, __v, __s): per-pair binding SUPPORT counts — what
-          // makes the pairs table decrementable under deletes (a pair
-          // leaves the distinct set only when its LAST binding goes)
-          def pairsOf(b: DataFrame, arg: Term): DataFrame =
-            b.select(groupTermIdx.map(i =>
-                RuleCompiler.term(r.head.args(i), b).as(s"c$i")) :+
-              RuleCompiler.term(arg, b).as("__v"): _*)
-              .where(col("__v").isNotNull) // count_distinct skips nulls
-              .groupBy((groupTermIdx.map(i => s"c$i") :+ "__v").map(col): _*)
-              .agg(count(lit(1)).as("__s"))
-          lazy val oldBindings = bindingsOf { (nm, ar) =>
-            val cur = resolve(nm, ar)
-            if (nm == changedRel)
-              Fixpoint.antiNullSafe(cur, deltaOf(changedRel).toDF(cur.columns.toSeq: _*))
-            else cur
-          }
-          val deltaB = Fixpoint.materialize(bindingsOf(
-            RuleCompiler.bindOccurrence(r, changedOccs.head, deltaOf(changedRel),
-              (nm, ar) => resolve(nm, ar)))).df
-          val keyCols = groupTermIdx.map(i => s"c$i")
-          var acc: DataFrame = {
-            val groups = groupTermIdx.map(i =>
-              RuleCompiler.term(r.head.args(i), deltaB).as(s"c$i"))
-            val nonCd = r.head.args.zipWithIndex.collect {
-              case (Agg(f, arg), i) if f != "count_distinct" =>
-                aggFunc(f, arg, deltaB).as(s"c$i")
-            }
-            val aggsAll = nonCd :+ count(lit(1)).as("__nb")
-            deltaB.groupBy(groups: _*)
-              .agg(aggsAll.head, aggsAll.tail: _*).drop("__nb")
-          }
-          val auxUpdates = Seq.newBuilder[(Int, DataFrame)]
-          val pairCols = keyCols :+ "__v"
-          cdSpecs.foreach { case (arg, i) =>
-            val aux = state(name).pairs.get(i) match {
-              case Some((v, df)) if v == v0 => df
-              case _ =>
-                cdPairsSeeds += 1
-                Fixpoint.materialize(pairsOf(oldBindings, arg)).df
-            }
-            val auxN = aux.toDF((pairCols :+ "__s"): _*)
-            val dpc = pairsOf(deltaB, arg).toDF((pairCols :+ "__c"): _*)
-            // pairs with NO aux row are genuinely new distinct values
-            // (cd increments); pairs with one bump its support
-            def pairCond(l: String, rr: String) =
-              pairCols.map(c => col(s"$l.$c") <=> col(s"$rr.$c")).reduce(_ && _)
-            // support upkeep: existing pairs add the delta's binding
-            // count, new pairs enter with theirs — one pass over the
-            // pairs table (the same cost class as the old append-union,
-            // which could not keep supports and so could not serve
-            // deletes). r15: the updated table and the new-pairs slice
-            // materialize in ONE tagged checkpoint (a __new flag on the
-            // union) instead of two — the new-pairs anti-join result was
-            // checkpointed separately only to be counted and unioned.
-            val newPairsRaw = dpc.alias("__d").join(auxN.alias("__a"),
-              pairCond("__d", "__a"), "left_anti")
-            val bumped = auxN.alias("__a").join(dpc.alias("__d"),
-                pairCond("__a", "__d"), "left")
-              .select(pairCols.map(c => col(s"__a.$c").as(c)) :+
-                (col("__a.__s") + coalesce(col("__d.__c"), lit(0L))).as("__s"): _*)
-            val tagged = Fixpoint.materialize(
-              bumped.withColumn("__new", lit(false))
-                .union(newPairsRaw.toDF((pairCols :+ "__s"): _*)
-                  .withColumn("__new", lit(true)))).df
-            val cnts = tagged.where(col("__new"))
-              .groupBy(keyCols.map(col): _*)
-              .agg(count(lit(1)).as(s"c$i"))
-            // null-safe left join: null group keys must still pick up
-            // their increment, exactly as the <=> merge below groups them
-            val dj = acc.alias("__l").join(cnts.alias("__r"),
-              keyCols.map(c => col(s"__l.$c") <=> col(s"__r.$c")).reduce(_ && _),
-              "left")
-            acc = dj.select(col("__l.*"),
-              coalesce(col(s"__r.c$i"), lit(0L)).as(s"c$i"))
-            auxUpdates += ((i, tagged.select((pairCols :+ "__s").map(col): _*)))
-          }
-          val vNow = catalog.version
-          auxUpdates.result().foreach { case (i, df) =>
-            // release the superseded pairs table's checkpoint blocks —
-            // the updated table is materialized independent of it, and
-            // leaving them persisted accumulates for the session under
-            // repeated maintenance (the TextAnalysis scratch leak class)
-            state(name).pairs.put(i, (vNow, df)).foreach { case (_, old) =>
-              if (!(old eq df))
-                Fixpoint.checkpointRddOf(old).foreach(_.unpersist(false))
-            }
-          }
-          cdMergedCount += 1
-          acc.select(cols.map(col): _*)
-        }
-        // merge functions per column: count_distinct increments add,
-        // exactly like count
-        val mergeSpecs = aggSpecs.map {
-          case ("count_distinct", i) => ("count", i)
-          case x => x
-        }
+        // the delta aggregation stays LAZY: the local-merge collect
+        // below is its only execution in the common path (its emptiness
+        // check rides along) — materializing first would add a
+        // checkpoint + count job per re-query. Only the distributed
+        // fallback materializes it (the full_outer join reads it twice).
+        val deltaAggDf = deltaDerive(r, changedOccs.head,
+          m => if (m == name) Some(cached) else None)
         // driver-local merge when both sides fit: one collect each, a
         // hash merge, and a parallelize — instead of a full_outer join +
         // checkpoint (the reference merges cached group states in-process,
@@ -4006,7 +3887,7 @@ final class Engine(val catalog: Catalog,
           newRows.foreach { r =>
             m.get(key(r)) match {
               case None => m(key(r)) = Array.tabulate(cols.length)(r.get)
-              case Some(acc) => mergeSpecs.foreach { case (f, i) =>
+              case Some(acc) => aggSpecs.foreach { case (f, i) =>
                 val (ov, nv) = (acc(i), r.get(i))
                 acc(i) = f match {
                   case "count" => addNum(if (ov == null) 0L else ov, if (nv == null) 0L else nv)
@@ -4068,7 +3949,7 @@ final class Engine(val catalog: Catalog,
           val oPresent = col("__op").isNotNull
           val nPresent = col("__np").isNotNull
           (if (!aggIdxSet(i)) coalesce(oc, nc)
-           else mergeSpecs.find(_._2 == i).get._1 match {
+           else aggSpecs.find(_._2 == i).get._1 match {
              case "count" => coalesce(oc, lit(0L)) + coalesce(nc, lit(0L))
              case "sum" => when(!oPresent, nc).when(!nPresent, oc)
                .when(oc.isNull && nc.isNull, lit(null))
@@ -4092,7 +3973,7 @@ final class Engine(val catalog: Catalog,
       // incremental retraction through recursive views,
       // `src/derived_relations.rs:1-60`, BENCHMARKS.md:69-71.
       if (isRecursive && scc.size == 1) tcEdgeRel(name, sccRules) match {
-        case Some(e1) if changedRels == Set(e1) && baseOf(name).isEmpty =>
+        case Some(e1) if (changedRels & depsOf(name)) == Set(e1) && baseOf(name).isEmpty =>
           val edgeDf = resolve(e1, 2)
           // prefer the raw literal batch over the exact anti-joined delta:
           // already-present tuples only re-derive pairs the closure set

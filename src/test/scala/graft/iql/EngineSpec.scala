@@ -484,6 +484,27 @@ class EngineSpec extends SparkSpec {
     assert(default.tcLocalRounds == 1L, "default engine left the driver-local pass")
   }
 
+  test("a TC round whose batch also writes an unrelated relation keeps the driver-local closure") {
+    val e = engine
+    e.run(
+      """+ed[(1, 2), (2, 3), (10, 11)]
+        |+other[(1), (2)]
+        |+r(X, Y) <- ed(X, Y)
+        |+r(X, Z) <- r(X, Y), ed(Y, Z)
+        |""".stripMargin)
+    assert(rows(e.run("?r(X, Y)").last).size == 4)
+    val t0 = e.tcLocalRounds
+    // `other` is outside the view's closure: only `ed` counts
+    e.run("+ed[(3, 4)]\n+other[(3)]")
+    assert(rows(e.run("?r(X, Y)").last) == Set(Seq(1L, 2L), Seq(1L, 3L), Seq(1L, 4L),
+      Seq(2L, 3L), Seq(2L, 4L), Seq(3L, 4L), Seq(10L, 11L)))
+    assert(e.tcLocalRounds == t0 + 1, "a mixed insert batch left the driver-local closure")
+    e.run("-ed[(2, 3)]\n-other[(1)]")
+    assert(rows(e.run("?r(X, Y)").last) ==
+      Set(Seq(1L, 2L), Seq(3L, 4L), Seq(10L, 11L)))
+    assert(e.tcLocalRounds == t0 + 2, "a mixed delete batch left the driver-local closure")
+  }
+
   test("negation-dependent maintenance: inserts into a negated rel kill, removals create") {
     val e = new Engine(new Catalog(spark))
     e.run(
@@ -1325,42 +1346,43 @@ class EngineSpec extends SparkSpec {
     assert(rows(e.run("?cd(D, C, S, N)").last) ==
       Set(Seq("eng", 2L, 40.0, 3L), Seq("ops", 1L, 5.0, 1L), Seq("qa", 1L, 8.0, 1L)))
     val before = e.maintainedCount
-    val cdBefore = e.cdMergedCount
+    val seeds0 = e.cdPairsSeeds
+    val dec0 = e.aggDecrementCount
+    val dirty0 = e.dirtyGroupMaintains
     // duplicate value into eng (cd must NOT grow), new value into ops,
-    // brand-new group
+    // brand-new group: the first round seeds the support and pairs
+    // tables from the post-change body
     e.run("""+emp[(6, "eng", 20.0), (7, "ops", 9.0), (8, "new", 1.0)]""")
     assert(rows(e.run("?cd(D, C, S, N)").last) ==
       Set(Seq("eng", 2L, 60.0, 4L), Seq("ops", 2L, 14.0, 2L),
         Seq("qa", 1L, 8.0, 1L), Seq("new", 1L, 1.0, 1L)))
     assert(e.maintainedCount == before + 1)
-    assert(e.cdMergedCount == cdBefore + 1,
-      "insert-only count_distinct should delta-merge, not dirty-group")
+    assert(e.cdPairsSeeds == seeds0 + 1 && e.aggDecrementCount == dec0 + 1,
+      "insert-only count_distinct should seed the pairs table, not dirty-group")
     // second round rides the carried-forward pairs table
     e.run("""+emp[(9, "eng", 20.0), (10, "eng", 99.0)]""")
     assert(rows(e.run("?cd(D, C, S, N)").last) ==
       Set(Seq("eng", 3L, 179.0, 6L), Seq("ops", 2L, 14.0, 2L),
         Seq("qa", 1L, 8.0, 1L), Seq("new", 1L, 1.0, 1L)))
-    assert(e.cdMergedCount == cdBefore + 2)
-    // a delete decrements through the subtractable path — the f64 sum
-    // rides the decimal-carried support sum (round 11; previously the
-    // double column forced dirty-group) and cd rides the pairs table
-    val dec0 = e.aggDecrementCount
+    assert(e.aggDecrementCount == dec0 + 2)
+    // a delete decrements on the same tables — the f64 sum rides the
+    // decimal-carried support sum and cd rides the pairs table
     e.run("""-emp(10, "eng", 99.0)""")
     assert(rows(e.run("?cd(D, C, S, N)").last) ==
       Set(Seq("eng", 2L, 80.0, 5L), Seq("ops", 2L, 14.0, 2L),
         Seq("qa", 1L, 8.0, 1L), Seq("new", 1L, 1.0, 1L)))
-    assert(e.cdMergedCount == cdBefore + 2)
-    assert(e.aggDecrementCount == dec0 + 1,
+    assert(e.aggDecrementCount == dec0 + 3,
       "f64-sum + cd delete should decrement on the carried tables")
-    // the support table is now LIVE, so the next insert also rides the
-    // subtractable path (keeping the carried tables current) instead of
-    // the delta-merge
+    // and so does the next insert: one seed serves the whole sequence
     e.run("""+emp[(11, "eng", 99.0)]""")
     assert(rows(e.run("?cd(D, C, S, N)").last) ==
       Set(Seq("eng", 3L, 179.0, 6L), Seq("ops", 2L, 14.0, 2L),
         Seq("qa", 1L, 8.0, 1L), Seq("new", 1L, 1.0, 1L)))
-    assert(e.aggDecrementCount == dec0 + 2,
+    assert(e.aggDecrementCount == dec0 + 4,
       "insert with a live support table should ride the subtractable path")
+    assert(e.cdPairsSeeds == seeds0 + 1, "the pairs table was seeded more than once")
+    assert(e.dirtyGroupMaintains == dirty0)
+    assert(e.maintainedCount == before + 4)
   }
 
   test("matCache stays bounded across many change/re-query rounds") {
@@ -2382,10 +2404,13 @@ class EngineSpec extends SparkSpec {
     e.run(
       """+jg_t[(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40), (5, "c", 50)]
         |+jk_t[(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40), (5, "c", 50)]
+        |+jc_t[(1, "a", 10), (2, "a", 20), (3, "b", 10)]
         |+jg(D, sum<S>, count<S>) <- jg_t(I, D, S)
         |+jk(sum<S>, count<S>) <- jk_t(I, D, S)
+        |+jc(D, count_distinct<S>) <- jc_t(I, D, S)
         |?jg(D, S, C)
         |?jk(S, C)
+        |?jc(D, C)
         |""".stripMargin)
     // the first delete of each base seeds the view's carried state; both
     // views are read after every statement, so each round's change log
@@ -2394,21 +2419,39 @@ class EngineSpec extends SparkSpec {
     both("-jg_t[(1, \"a\", 10)]")
     both("-jk_t[(1, \"a\", 10)]")
     sc.addSparkListener(listener)
-    val (grouped, keyless) = try {
+    val (grouped, keyless, cdInsert) = try {
       val d0 = e.aggDecrementCount
       val g = jobsOf(e.run("-jg_t[(3, \"b\", 30)]\n?jg(D, S, C)"))
       e.run("?jk(S, C)")
       val k = jobsOf(e.run("-jk_t[(3, \"b\", 30)]\n?jk(S, C)"))
       assert(e.aggDecrementCount == d0 + 2, "both rounds should decrement")
-      (g, k)
+      // one batch deleting from both bases: each view's round sees a
+      // change outside its closure, and both still decrement
+      val (d1, dirty1) = (e.aggDecrementCount, e.dirtyGroupMaintains)
+      e.run("-jg_t[(5, \"c\", 50)]\n-jk_t[(5, \"c\", 50)]")
+      e.run("?jg(D, S, C)")
+      e.run("?jk(S, C)")
+      assert(e.aggDecrementCount == d1 + 2 && e.dirtyGroupMaintains == dirty1,
+        "a two-base delete batch should decrement both views")
+      // read first, so the next round's change log holds only jc_t:
+      // its first insert seeds the count_distinct view's support and
+      // pairs tables, and the second rides them
+      e.run("?jc(D, C)")
+      e.run("+jc_t[(4, \"a\", 10)]\n?jc(D, C)")
+      val (d2, seeds2) = (e.aggDecrementCount, e.cdPairsSeeds)
+      val c = jobsOf(e.run("+jc_t[(5, \"b\", 30)]\n?jc(D, C)"))
+      assert(e.aggDecrementCount == d2 + 1 && e.cdPairsSeeds == seeds2,
+        "the count_distinct insert round should ride its pairs table")
+      (g, k, c)
     } finally sc.removeSparkListener(listener)
-    assert(rows(e.run("?jg(D, S, C)").last) ==
-      Set(Seq("a", 20L, 1L), Seq("b", 40L, 1L), Seq("c", 50L, 1L)))
-    assert(rows(e.run("?jk(S, C)").last) == Set(Seq(110L, 3L)))
-    // budgets: the job counts this round started with, before the
-    // key-less head rode the support table
+    assert(rows(e.run("?jg(D, S, C)").last) == Set(Seq("a", 20L, 1L), Seq("b", 40L, 1L)))
+    assert(rows(e.run("?jk(S, C)").last) == Set(Seq(60L, 2L)))
+    assert(rows(e.run("?jc(D, C)").last) == Set(Seq("a", 2L), Seq("b", 2L)))
+    // budgets: the job counts these rounds started with — for the
+    // delete rounds, before the key-less head rode the support table
     assert(grouped <= 9, s"grouped riding round started $grouped jobs")
     assert(keyless <= 9, s"key-less riding round started $keyless jobs")
+    assert(cdInsert <= 7, s"count_distinct riding insert round started $cdInsert jobs")
   }
 
   test("delete rounds serve the same rows under every tier, each by its own path") {

@@ -1072,8 +1072,10 @@ class MaintenanceFuzzSpec extends SparkSpec {
       e1.run(s"+t[$b0]\n$rule")
       e1.run("?v(G, C, S, M)")
       val allBatches = scala.collection.mutable.ArrayBuffer(b0)
-      val cdStart = e1.cdMergedCount
-      (0 until 2 + rng.nextInt(3)).foreach { round =>
+      val seedStart = e1.cdPairsSeeds
+      val decStart = e1.aggDecrementCount
+      val rounds = 2 + rng.nextInt(3)
+      (0 until rounds).foreach { round =>
         val b = batch(1 + rng.nextInt(4))
         allBatches += b
         e1.run(s"+t[$b]")
@@ -1083,7 +1085,10 @@ class MaintenanceFuzzSpec extends SparkSpec {
         assert(maintained == rows(e2.run("?v(G, C, S, M)").last),
           s"case $c round $round diverged on batches $allBatches")
       }
-      assert(e1.cdMergedCount > cdStart, s"case $c never took the cd delta-merge path")
+      // one seed round, then every round rides the carried pairs table
+      assert(e1.cdPairsSeeds == seedStart + 1 &&
+        e1.aggDecrementCount == decStart + rounds,
+        s"case $c did not ride the pairs table on every round")
     }
   }
 
